@@ -128,24 +128,50 @@ def phash_mismatch_reference(ids, ws, hs, fmts, pixels_of) -> int:
             continue
         px = pixels_of(int(i), int(w), int(h))
         a = np.uint64(avg_hash(px) & 0xFFFFFFFFFFFFFFFF)
-        b = np.uint64(avg_hash(((px >> 2) << 2) + 2) & 0xFFFFFFFFFFFFFFFF)
+        b = np.uint64(avg_hash(decoded_pixels(px, fmt)) & 0xFFFFFFFFFFFFFFFF)
         if bin(int(a ^ b)).count("1") > 4:
             bad += 1
     return bad
 
 
-def clip_reference(lon, lat, ws, hs, fences, poly_of) -> dict[int, int]:
-    """{row index: pixels inside its fence} for each image paired with a
-    fence (``poly_of[row]`` >= 0)."""
+def decoded_pixels(px: np.ndarray, fmt: str) -> np.ndarray:
+    """What decoding the stored bytes returns: the pixels themselves for
+    the lossless formats, ``((p >> 2) << 2) + 2`` for 'qb'."""
+    return ((px >> 2) << 2) + 2 if fmt == "qb" else px
+
+
+def decode_reference(ids, ws, hs, fmts, pixels_of) -> dict[str, tuple]:
+    """{image_id: (mean decoded pixel, decoded bytes)}."""
+    out = {}
+    for i, w, h, fmt in zip(ids, ws, hs, fmts):
+        px = decoded_pixels(pixels_of(int(i), int(w), int(h)), fmt)
+        out[f"img{int(i):012d}"] = (float(px.mean()), int(w) * int(h) * 3)
+    return out
+
+
+def check_decode(got: dict, ref: dict) -> str | None:
+    """Per image: decoded bytes exact, mean pixel within 1e-9."""
+    if set(got) != set(ref):
+        return f"decoded images differ: {sorted(set(got) ^ set(ref))[:5]}"
+    for i, (mean, nbytes) in ref.items():
+        gmean, gbytes = got[i]
+        if gbytes != nbytes or abs(gmean - mean) > 1e-9:
+            return f"{i}: decoded ({gmean}, {gbytes}), want ({mean}, {nbytes})"
+    return None
+
+
+def clip_reference(lon, lat, ws, hs, fences, rows, pids) -> dict:
+    """{(row index, fence id): pixels inside the fence} for each image /
+    fence pair of the join (``rows[k]`` paired with ``pids[k]``)."""
     out = {}
     boxes = [ring_boxes(r) for r in fences]
-    for row in np.nonzero(poly_of >= 0)[0]:
+    for row, pid in zip(rows.tolist(), pids.tolist()):
         w, h = int(ws[row]), int(hs[row])
         xs = (np.arange(w) - w / 2 + 0.5) * DEG_PER_PX
         ys = (h / 2 - np.arange(h) - 0.5) * DEG_PER_PX
         gx, gy = np.broadcast_arrays(lon[row] + xs[None, :], lat[row] + ys[:, None])
-        out[int(row)] = int(rect_parity(gx.ravel(), gy.ravel(),
-                                        boxes[poly_of[row]]).sum())
+        out[(row, pid)] = int(rect_parity(gx.ravel(), gy.ravel(),
+                                          boxes[pid]).sum())
     return out
 
 

@@ -136,15 +136,18 @@ def rect_rings(cx, cy, hx, hy, hole: bool, part: bool) -> list[np.ndarray]:
     return rings
 
 
-def big_layer_rings(seed: int, m: int, hot_polys: int) -> list[list[np.ndarray]]:
-    """``m`` seeded polygons; the first ``hot_polys`` sit on the images' hot
+HOT_POLYS = 3
+
+
+def big_layer_rings(seed: int, m: int) -> list[list[np.ndarray]]:
+    """``m`` seeded polygons; the first ``HOT_POLYS`` sit on the images' hot
     spot so the cell-keyed join sees one dense cell."""
     rng = np.random.default_rng([seed, 11])
     cx = rng.uniform(-170.0, 160.0, m)
     cy = rng.uniform(-75.0, 75.0, m)
     hx = rng.uniform(0.2, 2.0, m)
     hy = rng.uniform(0.2, 2.0, m)
-    hot = np.arange(m) < hot_polys
+    hot = np.arange(m) < HOT_POLYS
     cx = np.where(hot, fixtures.HOT_LON + rng.uniform(-0.3, 0.3, m), cx)
     cy = np.where(hot, fixtures.HOT_LAT + rng.uniform(-0.3, 0.3, m), cy)
     return [rect_rings(cx[j], cy[j], hx[j], hy[j], j % 4 == 0, j % 8 == 0)

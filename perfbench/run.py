@@ -1,6 +1,6 @@
 """Benchmark entry point.
 
-    python3 perfbench/run.py --workload spatial_kernels --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload spatial_kernels --seed 1 --seconds 40 --trace 0
 
 Runs one workload on local[nproc] from a single driver process as a closed
 loop with one client: a pass starts when the previous pass and its output
@@ -27,6 +27,7 @@ import traceback
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WARM_PASSES = 3
+SETUPS = 3
 MIN_PASSES = 3
 
 E2E_UNITS = {"setup_s": "s", "job_s": "s", "rows_per_s": "rows/s",
@@ -59,16 +60,14 @@ LAYER_UNITS = {
 }
 
 
-def process_start_epoch() -> float:
-    """Wall-clock time this process started (from /proc), so set-up time
-    includes interpreter start and imports."""
+def process_start_s() -> float:
+    """CLOCK_BOOTTIME reading at which this process started: its start
+    time in /proc/self/stat counts clock ticks since boot on that clock.
+    Set-up time therefore includes interpreter start and imports."""
     with open("/proc/self/stat") as f:
         stat = f.read()
     ticks = int(stat[stat.rindex(")") + 2:].split()[19])
-    with open("/proc/stat") as f:
-        btime = next(int(line.split()[1]) for line in f
-                     if line.startswith("btime"))
-    return btime + ticks / os.sysconf("SC_CLK_TCK")
+    return ticks / os.sysconf("SC_CLK_TCK")
 
 
 def box() -> tuple[int, str]:
@@ -128,7 +127,7 @@ def stop_spark(spark) -> None:
 
 
 def run(args) -> dict:
-    t_start = process_start_epoch()
+    t_start = process_start_s()
     sys.path.insert(0, ROOT)
     from spark_shp.session import get_spark
 
@@ -179,12 +178,21 @@ def run(args) -> dict:
     spark = None
     try:
         with PeakRss() as rss:
-            with tracer.span("setup"):
-                info = wl.setup(tracer)
-            with tracer.span("warmup"):
-                for _ in range(WARM_PASSES):
-                    checked_pass(timed=False)
-            setup_s = time.time() - t_start
+            # interpreter start and imports, then SETUPS rounds of input
+            # generation, references and warm-up; setup_s is the start-up
+            # time plus the median round. A traced run does not report
+            # setup_s and sets up once, leaving its time to the Spark layers.
+            started_s = time.clock_gettime(time.CLOCK_BOOTTIME) - t_start
+            rounds = []
+            for _ in range(1 if args.trace else SETUPS):
+                t0 = time.perf_counter()
+                with tracer.span("setup"):
+                    info = wl.setup(tracer)
+                with tracer.span("warmup"):
+                    for _ in range(WARM_PASSES):
+                        checked_pass(timed=False)
+                rounds.append(time.perf_counter() - t0)
+            setup_s = started_s + statistics.median(rounds)
 
             t_loop = time.perf_counter()
             i = 0
@@ -239,7 +247,8 @@ def run(args) -> dict:
         "run": run_id, "workload": args.workload, "seed": args.seed,
         "cpus": cpus, "driver_heap": heap,
         "input_checksum": info["input_checksum"],
-        "input_rows": wl.rows, "job_s_quartiles": [q1, q2, q3],
+        "input_rows": wl.rows, "started_s": started_s, "setup_rounds_s": rounds,
+        "job_s_quartiles": [q1, q2, q3],
         "timed_passes": len(timed), "passes": passes,
         "failures": failures, "end_to_end": e2e, "per_layer": layer}
     out_dir = os.path.join(os.getcwd(), ".perfbench", "out")

@@ -29,7 +29,7 @@ def test_generators_are_deterministic_per_seed(tmp_path):
     def inputs(seed):
         off = gen.id_offset(seed)
         lon, lat = gen.images_footprint_np(1000, off)
-        rings = gen.big_layer_rings(seed, 50, hot_polys=3)
+        rings = gen.big_layer_rings(seed, 50)
         dx, dy = gen.dims_np(seed, 100)
         px = gen.pixel_batch(np.arange(off, off + 6, dtype=np.int64))
         return gen.checksum(lon, lat, np.vstack([r for p in rings for r in p]),
@@ -95,6 +95,18 @@ def test_point_and_count_checks_reject_one_dropped_row():
     clip_ref = {("img1", 63): 40, ("img2", 63): 12}
     assert check.check_counts(dict(clip_ref), clip_ref, "clip") is None
     assert check.check_counts({("img1", 63): 40}, clip_ref, "clip")
+
+
+def test_decode_check_rejects_one_dropped_row():
+    ids = np.arange(3)
+    ref = check.decode_reference(ids, [16, 16, 32], [16, 32, 32],
+                                 ["raw", "png", "qb"], fixtures.image_pixels)
+    assert ref["img000000000002"][1] == 32 * 32 * 3
+    assert check.check_decode(dict(ref), ref) is None
+    assert check.check_decode({k: ref[k] for k in list(ref)[1:]}, ref)
+    mean, nbytes = ref["img000000000000"]
+    assert check.check_decode({**ref, "img000000000000": (mean + 0.5, nbytes)},
+                              ref)
 
 
 def test_lineage_summary_reads_back_a_dropped_row(tmp_path):

@@ -28,6 +28,22 @@ N_FENCES = 64
 TILE_LEVEL = 12
 JOIN_LEVEL = 6
 
+# spatial_kernels: footprints the numpy kernels see per pass; the traced
+# Spark query reads the first N_QUERY_IMAGES of them
+N_KERNEL_POINTS = 1_000_000
+N_QUERY_IMAGES = 250_000
+# traced spatial_kernels: the skewed join's input and polygon layer (above
+# AUTO_BROADCAST_MAX_POLYS), the kNN sample and its dim layer
+N_SKEW_IMAGES = 20_000
+N_BIG_POLYS = 4608
+N_KNN_POINTS = 200
+N_DIMS = 1000
+
+# worker_kernels: images with pixels, and the shapefile directory
+N_IMAGES = 600
+POINT_LAYERS, POINTS_PER_LAYER = 6, 100_000
+SHAPE_LAYERS, SHAPES_PER_LAYER = 4, 300
+
 
 def _timed(fn):
     t0 = time.perf_counter()
@@ -63,15 +79,16 @@ def partition_sizes(df) -> list[int]:
             .count().select("count").collect()]
 
 
-def _layer_time(tracer, name: str, fn, reps: int = 2) -> float:
-    """Median time of ``fn`` over ``reps`` traced runs after one untimed
-    run (which pays the plan's first compile)."""
+def _layer_time(tracer, name: str, fn):
+    """(median time of ``fn`` over two traced runs after one untimed run,
+    which pays the plan's first compile; the last run's output)."""
     fn()
     times = []
-    for _ in range(reps):
+    for _ in range(2):
         with tracer.span(name):
-            times.append(_timed(fn)[0])
-    return statistics.median(times)
+            t, out = _timed(fn)
+        times.append(t)
+    return statistics.median(times), out
 
 
 class Workload:
@@ -96,14 +113,8 @@ class FenceJoin(Workload):
     """North-star query: stored images table -> tile L12 -> broadcast inline
     PIP against the 64-fence layer -> per-fence count + approx tiles."""
 
-    def __init__(self, seed: int, work: str, cpus: int,
-                 n_images: int = 250_000, n_skew: int = 20_000,
-                 n_big_polys: int = 4608, n_knn_points: int = 200,
-                 n_dims: int = 1000):
+    def __init__(self, seed: int, work: str, cpus: int):
         self.seed, self.work, self.cpus = seed, work, cpus
-        self.n = n_images
-        self.n_skew, self.n_big = n_skew, n_big_polys
-        self.n_knn, self.n_dims = n_knn_points, n_dims
         self.offset = gen.id_offset(seed)
         self.root = os.path.join(work, "images")
         super().__init__()
@@ -111,7 +122,8 @@ class FenceJoin(Workload):
     def setup(self, spark, tracer) -> dict:
         with tracer.span("iceberg_layout.write"):
             t_write, _ = _timed(lambda: iceberg_layout.write_table(
-                gen.images_meta_df(spark, self.n, self.offset, 4 * self.cpus),
+                gen.images_meta_df(spark, N_QUERY_IMAGES, self.offset,
+                                   4 * self.cpus),
                 self.root))
         # one scan task per data file (4 per core), so the hot-cell rows
         # spread over tasks the way they do on a large table
@@ -120,7 +132,7 @@ class FenceJoin(Workload):
         spark.conf.set("spark.sql.files.maxPartitionBytes", str(biggest + 1))
         self.fences = fence_layer()
         self.fences_df = gen.polygons_df(spark, self.fences)
-        lon, lat = gen.images_footprint_np(self.n, self.offset)
+        lon, lat = gen.images_footprint_np(N_QUERY_IMAGES, self.offset)
         self.ref = check.fence_reference(lon, lat, self.fences)
         return {"write_s": t_write, "input_checksum": gen.checksum(lon, lat)}
 
@@ -159,8 +171,8 @@ class FenceJoin(Workload):
             return t.agg(F.min("tile_12"), F.max("tile_12")).collect()
 
         m["iceberg_layout.scan_s"] = _layer_time(tracer, "iceberg_layout.scan",
-                                                 scan_only)
-        scan_tile_s = _layer_time(tracer, "cells.tile_assign", scan_tile)
+                                                 scan_only)[0]
+        scan_tile_s = _layer_time(tracer, "cells.tile_assign", scan_tile)[0]
         m["iceberg_layout.scan_bytes"] = column_bytes(self.root,
                                                       ("lon_e7", "lat_e7"))
         m["cells.tile_assign_s"] = scan_tile_s - m["iceberg_layout.scan_s"]
@@ -193,12 +205,12 @@ class FenceJoin(Workload):
         from pyspark.sql import functions as F
         m: dict[str, float] = {}
         root = os.path.join(self.work, "skew_images")
-        skew_off = self.offset + self.n
+        skew_off = self.offset + N_QUERY_IMAGES
         iceberg_layout.write_table(gen.images_meta_df(
-            spark, self.n_skew, skew_off, 4 * self.cpus), root)
-        big = gen.big_layer_rings(self.seed, self.n_big, hot_polys=3)
+            spark, N_SKEW_IMAGES, skew_off, 4 * self.cpus), root)
+        big = gen.big_layer_rings(self.seed, N_BIG_POLYS)
         big_df = gen.polygons_df(spark, big)
-        lon, lat = gen.images_footprint_np(self.n_skew, skew_off)
+        lon, lat = gen.images_footprint_np(N_SKEW_IMAGES, skew_off)
         _, pid = check.layer_membership(lon, lat, big)
         ref = {int(p): int(c) for p, c in zip(*np.unique(pid, return_counts=True))}
 
@@ -231,16 +243,16 @@ class FenceJoin(Workload):
 
         # kNN: a sample of the skew table's points against seeded dims
         k, max_ring = 4, 2
-        sel = np.linspace(0, self.n_skew - 1, self.n_knn).astype(np.int64)
-        dx, dy = gen.dims_np(self.seed, self.n_dims)
+        sel = np.linspace(0, N_SKEW_IMAGES - 1, N_KNN_POINTS).astype(np.int64)
+        dx, dy = gen.dims_np(self.seed, N_DIMS)
         pts_df = spark.createDataFrame(pd.DataFrame(
             {"pid": sel, "lon": lon[sel], "lat": lat[sel]}))
         dims_df = spark.createDataFrame(pd.DataFrame(
-            {"did": np.arange(self.n_dims, dtype=np.int64),
+            {"did": np.arange(N_DIMS, dtype=np.int64),
              "dlon": dx, "dlat": dy}))
         args = (pts_df, dims_df, k, "lon", "lat", "dlon", "dlat", "did", "pid")
         kref = check.knn_reference(lon[sel], lat[sel], sel, dx, dy,
-                                   np.arange(self.n_dims), k)
+                                   np.arange(N_DIMS), k)
 
         def pairs(df):
             return {(int(r.pid), int(r.did)) for r in df.collect()}
@@ -256,7 +268,7 @@ class FenceJoin(Workload):
         # candidates: certified = k candidates, all within the ring's
         # guaranteed reach; the rest go to brute-force repair
         level = max(1, min(12, int(math.log(max(
-            1.0, self.n_dims * (2 * max_ring + 1) ** 2 / (8 * k)), 4))))
+            1.0, N_DIMS * (2 * max_ring + 1) ** 2 / (8 * k)), 4))))
         reach = (max_ring - 1) * min(360.0 / (1 << level), 170.0 / (1 << level))
         per = (spatial.knn_join_cells(*args, level=level, max_ring=max_ring,
                                       keep_dist=True)
@@ -264,8 +276,8 @@ class FenceJoin(Workload):
                                    F.max("_d2").alias("d2")))
         certified = per.where((F.col("n") >= k)
                               & (F.col("d2") <= reach * reach)).count()
-        m["spatial.knn_certified_ratio"] = certified / self.n_knn
-        m["spatial.knn_repair_points"] = self.n_knn - certified
+        m["spatial.knn_certified_ratio"] = certified / N_KNN_POINTS
+        m["spatial.knn_repair_points"] = N_KNN_POINTS - certified
         return m
 
     def scale_setup(self, spark) -> str:
@@ -273,7 +285,7 @@ class FenceJoin(Workload):
         while the full-width session is still up."""
         root = os.path.join(self.work, "images_scale")
         iceberg_layout.write_table(
-            gen.images_meta_df(spark, self.n // self.cpus, self.offset,
+            gen.images_meta_df(spark, N_QUERY_IMAGES // self.cpus, self.offset,
                                4 * self.cpus), root)
         return root
 
@@ -296,20 +308,18 @@ class SpatialKernels(Workload):
     query itself (:class:`FenceJoin`), its layers, the skewed join, kNN
     and weak scaling."""
 
-    def __init__(self, seed: int, work: str, cpus: int,
-                 n_points: int = 1_000_000):
-        # the Spark query reads the first 250k of these points
+    def __init__(self, seed: int, work: str, cpus: int):
         self.fence = FenceJoin(seed, work, cpus)
-        self.n = n_points
         self.offset = gen.id_offset(seed)
         super().__init__()
 
     @property
     def rows(self) -> int:
-        return self.n
+        return N_KERNEL_POINTS
 
     def setup(self, tracer) -> dict:
-        self.lon, self.lat = gen.images_footprint_np(self.n, self.offset)
+        self.lon, self.lat = gen.images_footprint_np(N_KERNEL_POINTS,
+                                                     self.offset)
         fences = fence_layer()
         # each fence's candidates (points in its bounding box) stand in for
         # the cell-cover join, which is the JVM's work, not a numpy kernel
@@ -391,71 +401,77 @@ class KernelCapture:
 
 class WorkerKernels(Workload):
     """The Python-worker half of shapefile ingest and raster clip, run in
-    process on the batches a worker would receive: per-file point decode,
+    process on the batches a worker receives: per-file point decode,
     per-layer polygon decode, tile ids, the clip kernel and the phash
     verify kernel. A traced run adds the Spark side of the same paths
     (ingest jobs, the checkpointed write and its resume, clip jobs)."""
 
     buckets_parent_steps = 9        # L12 tile -> L3 parent cell bucket
 
-    def __init__(self, seed: int, work: str, cpus: int,
-                 n_images: int = 600, point_layers: int = 6,
-                 points_per_layer: int = 20_000, shape_layers: int = 4,
-                 shapes_per_layer: int = 100, batch_rows: int = 200):
+    def __init__(self, seed: int, work: str, cpus: int):
         self.seed, self.work, self.cpus = seed, work, cpus
-        self.n = n_images
         self.offset = gen.id_offset(seed)
         self.shp_dir = os.path.join(work, "shp")
         self.img_root = os.path.join(work, "images")
-        self.layout = (point_layers, points_per_layer, shape_layers,
-                       shapes_per_layer)
-        self.batch_rows = batch_rows
         self.rng = np.random.default_rng([seed, 19])
         super().__init__()
 
     @property
     def rows(self) -> int:
-        pl, pp, sl, sp = self.layout
-        return pl * pp + sl * sp + self.n
+        return (POINT_LAYERS * POINTS_PER_LAYER
+                + SHAPE_LAYERS * SHAPES_PER_LAYER + N_IMAGES)
 
     def setup(self, tracer) -> dict:
-        import pandas as pd
-        pl, pp, sl, sp = self.layout
         with tracer.span("gen.shapefiles"):
-            self.truth = gen.write_shapefile_dir(self.shp_dir, self.seed,
-                                                 pl, pp, sl, sp)
+            self.truth = gen.write_shapefile_dir(
+                self.shp_dir, self.seed, POINT_LAYERS, POINTS_PER_LAYER,
+                SHAPE_LAYERS, SHAPES_PER_LAYER)
         self.files = {p: pathlib.Path(p).read_bytes() for p in
                       sorted(glob.glob(os.path.join(self.shp_dir, "*")))}
         self.shp_bytes = sum(len(b) for b in self.files.values())
         self.fences = fence_layer()
         self.edges = {j: geom.rings_to_edges(r)
                       for j, r in enumerate(self.fences)}
-        ids = np.arange(self.offset, self.offset + self.n, dtype=np.int64)
+        ids = np.arange(self.offset, self.offset + N_IMAGES, dtype=np.int64)
         meta = fixtures.images_meta(ids)
-        with tracer.span("gen.images"):
-            images = pd.concat(
-                [gen.pixel_batch(ids[k:k + self.batch_rows]).to_pandas()
-                 for k in range(0, self.n, self.batch_rows)],
-                ignore_index=True)
-        poly_of = np.full(self.n, -1, dtype=np.int64)
+        # the spatial join's output: one row per (image, fence) pair (the
+        # fences overlap, so an image can pair with two), in image order
         pi, pid = check.layer_membership(meta["lon"], meta["lat"], self.fences)
-        poly_of[pi] = pid
-        # the spatial join's output: each image inside a fence, with its id
-        joined = images.assign(poly_id=poly_of)[poly_of >= 0]
-        self.image_batches = _batches(images, self.batch_rows)
-        self.joined_batches = _batches(joined, self.batch_rows)
+        order = np.lexsort((pid, pi))
+        pi, pid = pi[order], pid[order]
+        # The traced run writes the images table from spark.range(n, 4 *
+        # cpus) (one file per partition) and scans it one task per file, so
+        # the clip and phash operators see one batch per range partition
+        # (far below maxRecordsPerBatch), and the broadcast join keeps that
+        # partitioning. The batches here are cut at the same bounds; the
+        # traced run checks that Spark's partitions have these sizes.
+        self.bounds = range_bounds(N_IMAGES, 4 * self.cpus)
+        with tracer.span("gen.images"):
+            self.image_batches = [gen.pixel_batch(ids[a:b]).to_pandas()
+                                  for a, b in self.bounds]
+        self.joined_batches = []
+        for img, (a, b) in zip(self.image_batches, self.bounds):
+            sel = (pi >= a) & (pi < b)
+            self.joined_batches.append(
+                img.iloc[pi[sel] - a].assign(poly_id=pid[sel])
+                .reset_index(drop=True))
         fmts = [fixtures.FMTS[i % 3] for i in ids.tolist()]
-        self.clip_ref = {(f"img{ids[r]:012d}", int(poly_of[r])): v
-                         for r, v in check.clip_reference(
+        self.clip_ref = {(f"img{ids[r]:012d}", p): v
+                         for (r, p), v in check.clip_reference(
                              meta["lon"], meta["lat"], meta["w"], meta["h"],
-                             self.fences, poly_of).items()}
+                             self.fences, pi, pid).items()}
         self.phash_ref = check.phash_mismatch_reference(
+            ids, meta["w"], meta["h"], fmts, fixtures.image_pixels)
+        self.decode_ref = check.decode_reference(
             ids, meta["w"], meta["h"], fmts, fixtures.image_pixels)
         self.points_ref = {name: (len(lon), len(lon) * (len(lon) + 1) // 2,
                                   float(lon.sum()), float(lat.sum()))
                            for name, (lon, lat) in self.truth["points"].items()}
+        self.shapes_ref = {k: (v["records"], v["nulls"], v["val_sum"])
+                           for k, v in self.truth["shapes"].items()}
         return {"input_checksum": gen.checksum(
-            ids, images["phash"].to_numpy(), *self.files.values())}
+            ids, *[b["phash"].to_numpy() for b in self.image_batches],
+            *self.files.values())}
 
     def run_pass(self, tracer):
         from spark_shp import cells, clip, ingest
@@ -511,9 +527,7 @@ class WorkerKernels(Workload):
         got = {base: (len(recs), sum(r["is_null"] for r in recs),
                       sum(int(float(r["properties"]["VAL"])) for r in recs))
                for base, recs in out["shapes"].items()}
-        want = {k: (v["records"], v["nulls"], v["val_sum"])
-                for k, v in self.truth["shapes"].items()}
-        err = check.check_counts(got, want, "shapefile decode")
+        err = check.check_counts(got, self.shapes_ref, "shapefile decode")
         if err:
             return err
         for base, b in out["buckets"].items():
@@ -538,29 +552,50 @@ class WorkerKernels(Workload):
         with tracer.span("iceberg_layout.write"):
             m["iceberg_layout.write_s"] = _timed(
                 lambda: iceberg_layout.write_table(
-                    gen.images_pixels_df(spark, self.n, self.offset,
+                    gen.images_pixels_df(spark, N_IMAGES, self.offset,
                                          4 * self.cpus), self.img_root))[0]
+        # one scan task per data file, as the in-process batches assume
+        biggest = max(f["bytes"] for f in
+                      iceberg_layout.table_stats(self.img_root)["files"])
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(biggest + 1))
         glob_pts = os.path.join(self.shp_dir, "pts*.shp")
         glob_shapes = os.path.join(self.shp_dir, "shape*")
         fences_df = gen.polygons_df(spark, self.fences)
         images = iceberg_layout.read_table(spark, self.img_root)
         joined = spatial.spatial_join(images, fences_df, "lon", "lat",
                                       level=JOIN_LEVEL, broadcast_cover=True)
+        for what, df, batches in (("images", images, self.image_batches),
+                                  ("joined", joined, self.joined_batches)):
+            want = sorted(len(b) for b in batches if len(b))
+            got = sorted(partition_sizes(df))
+            self._expect(None if got == want else
+                         f"{what} partitions {got}, in-process batches {want}")
 
         def points():
-            return (ingest.read_points_fast(spark, glob_pts)
-                    .agg(F.count(F.lit(1)), F.sum("lon")).collect())
+            return {r[0]: (int(r[1]), int(r[2]), float(r[3]), float(r[4]))
+                    for r in ingest.read_points_fast(spark, glob_pts)
+                    .groupBy("layer").agg(F.count(F.lit(1)), F.sum("rec_no"),
+                                          F.sum("lon"), F.sum("lat"))
+                    .collect()}
 
         def shapes():
-            return (ingest.read_shapefiles(spark, glob_shapes)
-                    .agg(F.count(F.lit(1))).collect())
+            return {r[0]: (int(r[1]), int(r[2]), int(r[3]))
+                    for r in ingest.read_shapefiles(spark, glob_shapes)
+                    .groupBy("layer").agg(
+                        F.count(F.lit(1)), F.sum(F.col("is_null").cast("int")),
+                        F.sum(F.col("properties")["VAL"].cast("double"))
+                        .cast("long"))
+                    .collect()}
 
         def decode():
-            return clip.decode_stats(images).agg(F.sum("bytes_decoded")).collect()
+            return {r[0]: (float(r[1]), int(r[2])) for r in
+                    clip.decode_stats(images)
+                    .select("image_id", "mean_px", "bytes_decoded").collect()}
 
         def clip_only():
-            return (clip.raster_vector_clip(joined, self.edges)
-                    .agg(F.sum("n_pixels")).collect())
+            return [tuple(r) for r in clip.raster_vector_clip(joined, self.edges)
+                    .select("image_id", "poly_id", "n_inside", "n_pixels")
+                    .collect()]
 
         def phash():
             return clip.phash_verify(images).where("NOT match").count()
@@ -568,16 +603,27 @@ class WorkerKernels(Workload):
         def scan():
             return images.agg(F.sum(F.length("bytes")), F.sum("lon")).collect()
 
+        out = {}
         for name, fn in (("ingest.read_points", points),
                          ("ingest.read_shapefiles", shapes),
                          ("iceberg_layout.scan", scan),
                          ("clip.decode", decode), ("clip.clip", clip_only),
                          ("clip.phash_verify", phash)):
-            m[name + "_s"] = _layer_time(tracer, name, fn)
-        pl, pp, sl, sp = self.layout
-        m["ingest.records"] = pl * pp + sl * sp
-        m["clip.pixels_tested"] = clip_only()[0][0]
-        m["clip.phash_mismatch"] = phash()
+            m[name + "_s"], out[name] = _layer_time(tracer, name, fn)
+        self._expect(check.check_points(out["ingest.read_points"],
+                                        self.points_ref))
+        self._expect(check.check_counts(out["ingest.read_shapefiles"],
+                                        self.shapes_ref, "spark shapefiles"))
+        m["ingest.records"] = sum(v[0] for k in ("ingest.read_points",
+                                                 "ingest.read_shapefiles")
+                                  for v in out[k].values())
+        self._expect(check.check_decode(out["clip.decode"], self.decode_ref))
+        rows = out["clip.clip"]
+        self._expect(check.check_counts({(i, int(p)): int(n)
+                                         for i, p, n, _ in rows},
+                                        self.clip_ref, "spark clip"))
+        m["clip.pixels_tested"] = sum(r[3] for r in rows)
+        m["clip.phash_mismatch"] = out["clip.phash_verify"]
         self._expect(None if m["clip.phash_mismatch"] == self.phash_ref else
                      f"spark phash mismatches {m['clip.phash_mismatch']}, "
                      f"reference {self.phash_ref}")
@@ -621,9 +667,9 @@ class WorkerKernels(Workload):
         return m
 
 
-def _batches(pdf, rows: int) -> list:
-    return [pdf.iloc[k:k + rows].reset_index(drop=True)
-            for k in range(0, len(pdf), rows)]
+def range_bounds(n: int, parts: int) -> list[tuple[int, int]]:
+    """Row bounds of the partitions of ``spark.range(n, numPartitions=parts)``."""
+    return [(i * n // parts, (i + 1) * n // parts) for i in range(parts)]
 
 
 WORKLOADS = {"spatial_kernels": SpatialKernels,
