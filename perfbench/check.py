@@ -52,6 +52,17 @@ def tile_xy(lon, lat, level: int = TILE_LEVEL):
     return ix, iy
 
 
+def cell_id_sum(lon, lat, level: int) -> int:
+    """Sum of the points' cell ids at ``level`` from the documented layout
+    ``morton(ix, iy) << 5 | level``: ix in the even bits and iy in the odd
+    bits, interleaved here one bit at a time."""
+    ix, iy = tile_xy(lon, lat, level)
+    m = np.zeros(len(ix), np.int64)
+    for b in range(level):
+        m |= ((ix >> b) & 1) << (2 * b) | ((iy >> b) & 1) << (2 * b + 1)
+    return int(((m << 5) | level).sum())
+
+
 # ---------------------------------------------------------------------------
 # fence_join
 # ---------------------------------------------------------------------------

@@ -2,12 +2,14 @@
 
     python3 perfbench/run.py --workload spatial_kernels --seed 1 --seconds 40 --trace 0
 
-Runs one workload on local[nproc] from a single driver process as a closed
-loop with one client: a pass starts when the previous pass and its output
-check have finished, until ``--seconds`` of timed passes have run. The last
-line of stdout is one JSON object: ``correct``, ``attempted``, ``failed``
-and ``metrics`` (the end-to-end metrics with ``--trace 0``, the per-layer
-metrics with ``--trace 1``). A run record with every pass's time, CPU
+Runs one workload from a single driver process as a closed loop with one
+client: a pass starts when the previous pass and its output check have
+finished, until ``--seconds`` of timed passes have run. A pass is spread
+over nproc worker processes, one task at a time each, as Spark's local[nproc]
+hands tasks to its Python workers. The last line of stdout is one JSON
+object: ``correct``, ``attempted``, ``failed`` and ``metrics`` (the
+end-to-end metrics with ``--trace 0``, the per-layer metrics with
+``--trace 1``). A run record with every pass's time, CPU
 seconds, load average and steal %, and (traced) every span, goes to
 ``.perfbench/out/`` under the current directory.
 """
@@ -109,11 +111,16 @@ def warm_python_workers(spark, cpus: int) -> None:
 def stop_spark(spark) -> None:
     """Stop the session, then end the gateway JVM and wait for it."""
     from pyspark import SparkContext
-    spark.stop()
     gw = SparkContext._gateway
     proc = getattr(gw, "proc", None)
-    if gw is not None:
-        gw.shutdown()
+    try:
+        spark.stop()
+        if gw is not None:
+            gw.shutdown()
+    except Exception:
+        # a signal that cut a gateway call leaves the gateway unusable;
+        # the JVM is still ended below
+        traceback.print_exc()
     if proc is not None:
         if proc.stdin:
             proc.stdin.close()     # the JVM exits on EOF of its stdin
@@ -132,6 +139,7 @@ def run(args) -> dict:
     from spark_shp.session import get_spark
 
     from perfbench import kernels
+    from perfbench.pool import TaskPool, remove_at_exit, start_server
     from perfbench.trace import HostWindow, PeakRss, Tracer, reap_descendants
     from perfbench.workloads import WORKLOADS
 
@@ -153,13 +161,15 @@ def run(args) -> dict:
         with HostWindow() as hw:
             t0 = time.perf_counter()
             try:
-                out = wl.run_pass(tracer)
+                done = pool.map(wl.tasks())
                 err = None
             except Exception:
-                out, err = None, traceback.format_exc()
+                done, err = None, traceback.format_exc()
             dt = time.perf_counter() - t0
         if err is None:
-            err = wl.check(out)
+            for task, _, start, end in done:
+                tracer.add(task[0], start, end)
+            err = wl.check({task: out for task, out, _, _ in done})
         if err:
             failures.append(err)
             print(f"# pass failed: {err}", file=sys.stderr)
@@ -175,19 +185,24 @@ def run(args) -> dict:
         layer["session.start_s"] = time.perf_counter() - t0
         return session
 
-    spark = None
+    spark = pool = None
     try:
         with PeakRss() as rss:
-            # interpreter start and imports, then SETUPS rounds of input
-            # generation, references and warm-up; setup_s is the start-up
-            # time plus the median round. A traced run does not report
-            # setup_s and sets up once, leaving its time to the Spark layers.
+            # interpreter start, imports and the pass workers' fork server,
+            # then SETUPS rounds of input generation, references, starting
+            # the pass workers and warm-up; setup_s is the start-up time
+            # plus the median round. A traced run does not report setup_s
+            # and sets up once, leaving its time to the Spark layers.
+            start_server()
             started_s = time.clock_gettime(time.CLOCK_BOOTTIME) - t_start
             rounds = []
             for _ in range(1 if args.trace else SETUPS):
+                if pool is not None:
+                    pool.close()
                 t0 = time.perf_counter()
                 with tracer.span("setup"):
                     info = wl.setup(tracer)
+                    pool = TaskPool(wl, cpus)
                 with tracer.span("warmup"):
                     for _ in range(WARM_PASSES):
                         checked_pass(timed=False)
@@ -206,6 +221,8 @@ def run(args) -> dict:
                     checked_pass(timed=True)
                 i += 1
             tracer.enabled = bool(args.trace)
+            pool.close()
+            pool = None
             timed = [p["s"] for p in passes if p["timed"]]
             job_s = statistics.median(timed)
             if args.trace:
@@ -235,10 +252,14 @@ def run(args) -> dict:
                                                           get_spark)
                     spark = None
     finally:
-        if spark is not None:
-            stop_spark(spark)
-        reap_descendants()
-        shutil.rmtree(work, ignore_errors=True)
+        try:
+            if pool is not None:
+                pool.close()
+            if spark is not None:
+                stop_spark(spark)
+        finally:
+            reap_descendants()
+            remove_at_exit(work)
 
     q1, q2, q3 = statistics.quantiles(timed, n=4)
     e2e = {"setup_s": setup_s, "job_s": job_s,

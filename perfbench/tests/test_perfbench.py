@@ -154,6 +154,28 @@ def test_trace_spans_nest_and_self_time_is_non_negative():
     assert selfs[by_name["b"]["id"]] == pytest.approx(dur["b"] - dur["c"])
 
 
+def test_self_time_counts_overlapping_children_once():
+    t = Tracer(True, "r3")
+    with t.span("pass"):
+        t0 = t.spans[0]["start"]
+        # tasks of two workers: [1, 3] and [2, 4] overlap, [6, 7] does not
+        for a, b in ((1, 3), (2, 4), (6, 7)):
+            t.add("task", t0 + a, t0 + b)
+        time.sleep(0.01)
+    t.spans[0]["end"] = t0 + 10
+    assert all(s["parent"] == 0 for s in t.spans[1:])
+    assert t.self_times()[0] == pytest.approx(10 - 3 - 1)
+
+
+def test_cell_id_reference_is_the_engine_layout_and_sees_a_dropped_row():
+    from spark_shp import cells
+    lon, lat = gen.images_footprint_np(5000, gen.id_offset(11))
+    for level in (3, 12):
+        ref = check.cell_id_sum(lon, lat, level)
+        assert ref == int(cells.cell_encode(lon, lat, level).sum())
+        assert ref != int(cells.cell_encode(lon[1:], lat[1:], level).sum())
+
+
 def test_disabled_tracer_records_nothing():
     t = Tracer(False, "r2")
     with t.span("x"):

@@ -39,20 +39,39 @@ class Tracer:
             rec["end"] = time.perf_counter()
             self._stack.pop()
 
+    def add(self, name: str, start: float, end: float) -> None:
+        """Record a finished span (a task another process ran, timed on
+        the same ``perf_counter`` clock) under the current span."""
+        if self.enabled:
+            self.spans.append({"id": len(self.spans), "name": name,
+                               "parent": self._stack[-1] if self._stack else None,
+                               "run": self.run_id, "start": start, "end": end})
+
     def count(self, name: str, value: float) -> None:
         if self.enabled:
             self.counts[name] = value
 
     def self_times(self) -> dict[int, float]:
         """Span duration minus the part of its interval covered by its
-        children (children of one span never overlap: one client thread)."""
-        child_time: dict[int, float] = {}
+        children. Children run by the worker processes overlap, so the
+        covered part is the union of the children's intervals."""
+        children: dict[int, list[tuple[float, float]]] = {}
         for s in self.spans:
             if s["parent"] is not None and s["end"] is not None:
-                child_time[s["parent"]] = (child_time.get(s["parent"], 0.0)
-                                           + s["end"] - s["start"])
-        return {s["id"]: (s["end"] - s["start"]) - child_time.get(s["id"], 0.0)
-                for s in self.spans if s["end"] is not None}
+                children.setdefault(s["parent"], []).append(
+                    (s["start"], s["end"]))
+        out = {}
+        for s in self.spans:
+            if s["end"] is None:
+                continue
+            covered, reach = 0.0, s["start"]
+            for a, b in sorted(children.get(s["id"], [])):
+                a, b = max(a, reach), min(b, s["end"])
+                if b > a:
+                    covered += b - a
+                    reach = b
+            out[s["id"]] = (s["end"] - s["start"]) - covered
+        return out
 
     def dump(self, path: str) -> None:
         selfs = self.self_times()
@@ -107,8 +126,8 @@ def tree_cpu_s(root_pid: int) -> float:
     return total / os.sysconf("SC_CLK_TCK")
 
 
-def _proc_table() -> dict[int, tuple[int, int]]:
-    """{pid: (parent pid, resident pages)} from one /proc scan."""
+def _proc_table() -> dict[int, int]:
+    """{pid: parent pid} from one /proc scan."""
     table = {}
     for name in os.listdir("/proc"):
         if not name.isdigit():
@@ -116,21 +135,19 @@ def _proc_table() -> dict[int, tuple[int, int]]:
         try:
             with open(f"/proc/{name}/stat") as f:
                 stat = f.read()
-            with open(f"/proc/{name}/statm") as f:
-                pages = int(f.read().split()[1])
-        except (OSError, IndexError, ValueError):
+        except OSError:
             continue
         # the command name may hold spaces; fields resume after its ')'
-        table[int(name)] = (int(stat[stat.rindex(")") + 2:].split()[1]), pages)
+        table[int(name)] = int(stat[stat.rindex(")") + 2:].split()[1])
     return table
 
 
-def descendants(root_pid: int, table=None) -> set[int]:
-    table = _proc_table() if table is None else table
+def descendants(root_pid: int) -> set[int]:
+    table = _proc_table()
     found, frontier = set(), [root_pid]
     while frontier:
         p = frontier.pop()
-        for c, (pp, _) in table.items():
+        for c, pp in table.items():
             if pp == p and c not in found:
                 found.add(c)
                 frontier.append(c)
@@ -138,13 +155,19 @@ def descendants(root_pid: int, table=None) -> set[int]:
 
 
 def tree_rss_mb(root_pid: int) -> float:
-    """RSS of a process and all its descendants (the driver JVM, and the
-    Python daemon and workers it forks, all descend from the benchmark
-    process)."""
-    table = _proc_table()
-    pids = descendants(root_pid, table) | {root_pid}
-    pages = sum(table[p][1] for p in pids if p in table)
-    return pages * os.sysconf("SC_PAGE_SIZE") / 2**20
+    """Resident memory of a process and all its descendants (the pass
+    workers; in a traced run also the driver JVM and the Python daemon and
+    workers it forks), summed as PSS: a page shared by several of them,
+    as a forked Python worker shares its daemon's, counts once."""
+    kb = 0
+    for pid in descendants(root_pid) | {root_pid}:
+        try:
+            with open(f"/proc/{pid}/smaps_rollup") as f:
+                kb += next(int(line.split()[1]) for line in f
+                           if line.startswith("Pss:"))
+        except (OSError, StopIteration):
+            continue
+    return kb / 1024
 
 
 def reap_descendants(timeout: float = 30.0) -> None:
@@ -178,8 +201,8 @@ def _is_zombie(pid: int) -> bool:
 
 
 class PeakRss:
-    """Background sampler of the process tree's RSS; ``peak_mb`` is the
-    largest sum seen."""
+    """Background sampler of the process tree's resident memory
+    (:func:`tree_rss_mb`); ``peak_mb`` is the largest sum seen."""
 
     def __init__(self, interval: float = 0.5):
         self.interval = interval

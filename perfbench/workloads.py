@@ -2,11 +2,11 @@
 check, and the extra layer measurements of a traced run.
 
 Each workload object is created per run. ``setup`` writes the generated
-input and computes the reference outputs once; ``run_pass`` executes one
-closed-loop pass and returns what ``check`` compares against the
-references; ``layers`` runs the workload's Spark paths for a traced run
-(each Spark pass builds a fresh plan, so Spark cannot reuse a finished
-shuffle) and measures per-layer times and counts.
+input and computes the reference outputs; a pass is the list ``tasks``,
+each run by a pass worker through ``run_task``, and ``check`` compares the
+tasks' results against the references; ``layers`` runs the workload's
+Spark paths for a traced run (each Spark pass builds a fresh plan, so Spark
+cannot reuse a finished shuffle) and measures per-layer times and counts.
 """
 
 from __future__ import annotations
@@ -95,9 +95,16 @@ class Workload:
     """Checks made by a traced run's layer measurements (the timed passes
     are checked by the run loop)."""
 
+    # what ``run_task`` reads; a pass worker receives only these, the
+    # references stay with the driver
+    task_attrs: tuple[str, ...] = ()
+
     def __init__(self):
         self.layer_checks = 0
         self.layer_failures: list[str] = []
+
+    def __getstate__(self) -> dict:
+        return {k: self.__dict__[k] for k in self.task_attrs}
 
     def _expect(self, err: str | None) -> None:
         self.layer_checks += 1
@@ -300,17 +307,21 @@ class FenceJoin(Workload):
 # ---------------------------------------------------------------------------
 
 class SpatialKernels(Workload):
-    """The numpy kernels of the spatial path, in process, on the images
-    footprint (fence_join's input, extended to 1M points): tile ids
-    (``cells.cell_encode`` L12) and the even-odd ray cast
-    (``geom.crossings_chunked``) of each fence's candidate points against
-    the 64-fence layer. A traced run adds the Spark side: the north-star
-    query itself (:class:`FenceJoin`), its layers, the skewed join, kNN
-    and weak scaling."""
+    """The numpy kernels of the spatial path on the images footprint
+    (fence_join's input, extended to 1M points), spread over the pass
+    workers one point range at a time, as Spark's tasks take partitions:
+    tile ids (``cells.cell_encode`` L12) of the range, then the even-odd
+    ray cast (``geom.crossings_chunked``) of each fence's candidate points
+    in the range against the 64-fence layer. A traced run adds the Spark
+    side: the north-star query itself (:class:`FenceJoin`), its layers,
+    the skewed join, kNN and weak scaling."""
+
+    task_attrs = ("lon", "lat", "chunks", "cands")
 
     def __init__(self, seed: int, work: str, cpus: int):
         self.fence = FenceJoin(seed, work, cpus)
         self.offset = gen.id_offset(seed)
+        self.cpus = cpus
         super().__init__()
 
     @property
@@ -321,32 +332,49 @@ class SpatialKernels(Workload):
         self.lon, self.lat = gen.images_footprint_np(N_KERNEL_POINTS,
                                                      self.offset)
         fences = fence_layer()
-        # each fence's candidates (points in its bounding box) stand in for
-        # the cell-cover join, which is the JVM's work, not a numpy kernel
-        self.cands = []
-        for rings in fences:
-            b = check.ring_boxes(rings)
-            idx = np.nonzero((self.lon >= b[:, 0].min()) & (self.lon <= b[:, 2].max())
-                             & (self.lat >= b[:, 1].min()) & (self.lat <= b[:, 3].max()))[0]
-            self.cands.append((idx, self.lon[idx], self.lat[idx],
-                               geom.rings_to_edges(rings)))
-        self.ref = check.fence_reference(self.lon, self.lat, fences)
+        boxes = [check.ring_boxes(rings) for rings in fences]
+        edges = [geom.rings_to_edges(rings) for rings in fences]
+        # 4 ranges per core, as Spark cuts its input; the hot cell's points
+        # are spread over all of them (16 per core took 1.6x longer: each
+        # range calls the ray cast once per fence)
+        self.chunks = range_bounds(N_KERNEL_POINTS, 4 * self.cpus)
+        # each fence's candidates in a range (points in its bounding box)
+        # stand in for the cell-cover join, which is the JVM's work, not a
+        # numpy kernel
+        self.cands, self.ref = [], {}
+        for c, (a, b) in enumerate(self.chunks):
+            lon, lat = self.lon[a:b], self.lat[a:b]
+            per = []
+            for f, bx in enumerate(boxes):
+                idx = np.nonzero((lon >= bx[:, 0].min()) & (lon <= bx[:, 2].max())
+                                 & (lat >= bx[:, 1].min()) & (lat <= bx[:, 3].max()))[0]
+                per.append((f, idx, lon[idx], lat[idx], edges[f]))
+            self.cands.append(per)
+            self.ref.update({(c, f): v for f, v in
+                             check.fence_reference(lon, lat, fences).items()})
         return {"input_checksum": gen.checksum(self.lon, self.lat)}
 
-    def run_pass(self, tracer):
+    def tasks(self) -> list[tuple]:
+        return [("spatial.partition", c) for c in range(len(self.chunks))]
+
+    def run_task(self, task):
         from spark_shp import cells
-        with tracer.span("cells.cell_encode"):
-            tile = cells.cell_encode(self.lon, self.lat, TILE_LEVEL)
+        c = task[1]
+        a, b = self.chunks[c]
+        tile = cells.cell_encode(self.lon[a:b], self.lat[a:b], TILE_LEVEL)
         out = {}
-        with tracer.span("geom.crossings_chunked"):
-            for f, (idx, px, py, edges) in enumerate(self.cands):
-                inside = idx[geom.crossings_chunked(px, py, edges) % 2 == 1]
-                if len(inside):
-                    out[f] = (len(inside), len(np.unique(tile[inside])))
+        for f, idx, px, py, edges in self.cands[c]:
+            inside = idx[geom.crossings_chunked(px, py, edges) % 2 == 1]
+            if len(inside):
+                out[(c, f)] = (len(inside), len(np.unique(tile[inside])))
         return out
 
-    def check(self, out) -> str | None:
-        return check.check_counts(out, self.ref, "fence point-in-polygon")
+    def check(self, results: dict) -> str | None:
+        got = {}
+        for out in results.values():
+            got.update(out)
+        return check.check_counts(got, self.ref,
+                                  "fence point-in-polygon per range")
 
     def layers(self, spark, tracer) -> dict:
         """The north-star Spark query on the same input, then its layers."""
@@ -384,7 +412,7 @@ class SpatialKernels(Workload):
 class KernelCapture:
     """Stands in for a DataFrame handed to a clip operator: it records the
     Arrow-batch function the operator passes to ``mapInPandas`` (and
-    serves its broadcast in process), so the benchmark runs exactly the
+    serves its broadcast locally), so the benchmark runs exactly the
     code a Python worker runs for that operator, without Spark."""
 
     def __init__(self):
@@ -400,13 +428,14 @@ class KernelCapture:
 
 
 class WorkerKernels(Workload):
-    """The Python-worker half of shapefile ingest and raster clip, run in
-    process on the batches a worker receives: per-file point decode,
-    per-layer polygon decode, tile ids, the clip kernel and the phash
-    verify kernel. A traced run adds the Spark side of the same paths
+    """The Python-worker half of shapefile ingest and raster clip, run by
+    the pass workers on the batches a Spark Python worker receives:
+    per-file point decode with tile ids and parent buckets, per-layer
+    polygon decode, the clip kernel and the phash verify kernel. A traced run adds the Spark side of the same paths
     (ingest jobs, the checkpointed write and its resume, clip jobs)."""
 
     buckets_parent_steps = 9        # L12 tile -> L3 parent cell bucket
+    task_attrs = ("files", "edges", "joined_batches", "image_batches")
 
     def __init__(self, seed: int, work: str, cpus: int):
         self.seed, self.work, self.cpus = seed, work, cpus
@@ -469,79 +498,80 @@ class WorkerKernels(Workload):
                            for name, (lon, lat) in self.truth["points"].items()}
         self.shapes_ref = {k: (v["records"], v["nulls"], v["val_sum"])
                            for k, v in self.truth["shapes"].items()}
+        self.bucket_ref = {
+            name: check.cell_id_sum(lon, lat,
+                                    TILE_LEVEL - self.buckets_parent_steps)
+            for name, (lon, lat) in self.truth["points"].items()}
         return {"input_checksum": gen.checksum(
             ids, *[b["phash"].to_numpy() for b in self.image_batches],
             *self.files.values())}
 
-    def run_pass(self, tracer):
+    def tasks(self) -> list[tuple]:
+        """One task per shape layer, per image batch and per point file,
+        as Spark's read and clip jobs cut them; the larger tasks first."""
+        shp = [p for p in self.files if p.endswith(".shp")]
+        return ([("ingest.shapes_kernel", p) for p in shp if "/shape" in p]
+                + [("clip.raster_vector_clip", i)
+                   for i in range(len(self.joined_batches))]
+                + [("clip.phash_verify", i)
+                   for i in range(len(self.image_batches))]
+                + [("ingest.points_kernel", p) for p in shp if "/pts" in p])
+
+    def run_task(self, task):
         from spark_shp import cells, clip, ingest
         from spark_shp.shp import parser
-        points = {}
-        with tracer.span("ingest.points_kernel"):
-            for path, blob in self.files.items():
-                if not (path.endswith(".shp") and "/pts" in path):
-                    continue
-                prj = self.files.get(path[:-4] + ".prj")
-                trans = (parser.projection_from_wkt(prj.decode("ascii"))
-                         if prj else None)
-                base = os.path.basename(path)[:-4]
-                # the per-file kernel of ingest.read_points_fast
-                points[base] = ingest._points_from_blob(blob, trans, base)
-        shapes = {}
-        with tracer.span("ingest.shapes_kernel"):
-            for path, blob in self.files.items():
-                if not (path.endswith(".shp") and "/shape" in path):
-                    continue
-                base = os.path.basename(path)[:-4]
-                dbf = parser.parse_dbf(self.files[path[:-4] + ".dbf"])
-                # the per-layer decode of ingest.read_shapefiles
-                shapes[base] = ingest.features_to_records(
-                    base, parser.combine(parser.parse_shp(blob), dbf))
-        with tracer.span("cells.cell_encode"):
-            buckets = {}
-            for base, pdf in points.items():
-                tile = cells.cell_encode(pdf["lon"].to_numpy(),
-                                         pdf["lat"].to_numpy(), TILE_LEVEL)
-                buckets[base] = cells.cell_parent(tile,
-                                                  self.buckets_parent_steps)
-        with tracer.span("clip.raster_vector_clip"):
+        kind, key = task
+        if kind == "ingest.points_kernel":
+            prj = self.files.get(key[:-4] + ".prj")
+            trans = (parser.projection_from_wkt(prj.decode("ascii"))
+                     if prj else None)
+            # the per-file kernel of ingest.read_points_fast, then the
+            # tile ids and parent buckets of the checkpointed write
+            pdf = ingest._points_from_blob(self.files[key], trans,
+                                           os.path.basename(key)[:-4])
+            lon, lat = pdf["lon"].to_numpy(), pdf["lat"].to_numpy()
+            bucket = cells.cell_parent(cells.cell_encode(lon, lat, TILE_LEVEL),
+                                       self.buckets_parent_steps)
+            return ((len(pdf), int(pdf["rec_no"].sum()), float(lon.sum()),
+                     float(lat.sum())), int(bucket.sum()))
+        if kind == "ingest.shapes_kernel":
+            dbf = parser.parse_dbf(self.files[key[:-4] + ".dbf"])
+            # the per-layer decode of ingest.read_shapefiles
+            recs = ingest.features_to_records(
+                os.path.basename(key)[:-4],
+                parser.combine(parser.parse_shp(self.files[key]), dbf))
+            return (len(recs), sum(r["is_null"] for r in recs),
+                    sum(int(float(r["properties"]["VAL"])) for r in recs))
+        if kind == "clip.raster_vector_clip":
             kernel = clip.raster_vector_clip(KernelCapture(), self.edges)
-            clipped = {(i, int(p)): int(n)
-                       for out in kernel(iter(self.joined_batches))
-                       for i, p, n in zip(out["image_id"], out["poly_id"],
-                                          out["n_inside"])}
-        with tracer.span("clip.phash_verify"):
-            kernel = clip.phash_verify(KernelCapture())
-            mismatch = sum(int((~out["match"]).sum())
-                           for out in kernel(iter(self.image_batches)))
-        return {"points": points, "shapes": shapes, "buckets": buckets,
-                "clipped": clipped, "phash_mismatch": mismatch}
+            return {(i, int(p)): int(n)
+                    for out in kernel(iter([self.joined_batches[key]]))
+                    for i, p, n in zip(out["image_id"], out["poly_id"],
+                                       out["n_inside"])}
+        kernel = clip.phash_verify(KernelCapture())
+        return sum(int((~out["match"]).sum())
+                   for out in kernel(iter([self.image_batches[key]])))
 
-    def check(self, out) -> str | None:
-        got = {base: (len(pdf), int(pdf["rec_no"].sum()),
-                      float(pdf["lon"].sum()), float(pdf["lat"].sum()))
-               for base, pdf in out["points"].items()}
-        err = check.check_points(got, self.points_ref)
-        if err:
-            return err
-        got = {base: (len(recs), sum(r["is_null"] for r in recs),
-                      sum(int(float(r["properties"]["VAL"])) for r in recs))
-               for base, recs in out["shapes"].items()}
-        err = check.check_counts(got, self.shapes_ref, "shapefile decode")
-        if err:
-            return err
-        for base, b in out["buckets"].items():
-            lon, lat = self.truth["points"][base]
-            ix, iy = check.tile_xy(lon, lat, TILE_LEVEL - self.buckets_parent_steps)
-            if len(np.unique(b)) != len(np.unique(ix * 4096 + iy)):
-                return f"{base}: {len(np.unique(b))} buckets, reference differs"
-        err = check.check_counts(out["clipped"], self.clip_ref, "clip")
-        if err:
-            return err
-        if out["phash_mismatch"] != self.phash_ref:
-            return (f"phash mismatches {out['phash_mismatch']}, "
-                    f"reference {self.phash_ref}")
-        return None
+    def check(self, results: dict) -> str | None:
+        points, buckets, shapes, clipped, mismatch = {}, {}, {}, {}, 0
+        for (kind, key), out in results.items():
+            if kind == "ingest.points_kernel":
+                base = os.path.basename(key)[:-4]
+                points[base], buckets[base] = out
+            elif kind == "ingest.shapes_kernel":
+                shapes[os.path.basename(key)[:-4]] = out
+            elif kind == "clip.raster_vector_clip":
+                clipped.update(out)
+            else:
+                mismatch += out
+        return (check.check_points(points, self.points_ref)
+                or check.check_counts(shapes, self.shapes_ref,
+                                      "shapefile decode")
+                or check.check_counts(buckets, self.bucket_ref,
+                                      "bucket id sums")
+                or check.check_counts(clipped, self.clip_ref, "clip")
+                or (None if mismatch == self.phash_ref else
+                    f"phash mismatches {mismatch}, reference {self.phash_ref}"))
 
     # -- traced-run layer measurements: the same paths through Spark -------
 
@@ -554,7 +584,7 @@ class WorkerKernels(Workload):
                 lambda: iceberg_layout.write_table(
                     gen.images_pixels_df(spark, N_IMAGES, self.offset,
                                          4 * self.cpus), self.img_root))[0]
-        # one scan task per data file, as the in-process batches assume
+        # one scan task per data file, as the pass tasks' batches assume
         biggest = max(f["bytes"] for f in
                       iceberg_layout.table_stats(self.img_root)["files"])
         spark.conf.set("spark.sql.files.maxPartitionBytes", str(biggest + 1))
@@ -569,7 +599,7 @@ class WorkerKernels(Workload):
             want = sorted(len(b) for b in batches if len(b))
             got = sorted(partition_sizes(df))
             self._expect(None if got == want else
-                         f"{what} partitions {got}, in-process batches {want}")
+                         f"{what} partitions {got}, pass batches {want}")
 
         def points():
             return {r[0]: (int(r[1]), int(r[2]), float(r[3]), float(r[4]))
