@@ -28,12 +28,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 HEADLINE = [
-    "pricing_summary", "revenue_by_nation", "window_top3_per_brand",
-    "asof_join_event_order",
     "tile_assign_events", "spatial_join_pairs", "knn_events_nations",
     "images_fence_join",
-    "dedup_exact", "minhash_signatures", "simhash16", "cosine_topk",
-    "dedup_embedding_near", "tumbling_window", "session_windows",
 ]
 
 N_IMAGES = int(os.environ.get("BENCH_IMAGES", "1000000"))

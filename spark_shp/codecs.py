@@ -211,7 +211,3 @@ def phash(pixels: np.ndarray) -> int:
     for b in bits:
         val = (val << np.uint64(1)) | np.uint64(bool(b))
     return int(val.astype(np.int64))
-
-
-def phash_batch(imgs: list[np.ndarray]) -> np.ndarray:
-    return np.array([phash(im) for im in imgs], dtype=np.int64)

@@ -34,13 +34,17 @@ def shoelace(ring: np.ndarray) -> float:
     """Signed doubled area, reference convention: positive == clockwise.
 
     ``ring``: (n, 2) float64 array of xy vertices (closed or open — the wrap
-    edge is included either way via np.roll; a closed ring's duplicate edge
-    contributes 0).
+    edge from the last vertex to the first is included either way; a closed
+    ring's duplicate edge contributes 0). Each term is added to its mirror,
+    the term that reversing the ring turns it into (negated), before the
+    sum: a reversed ring then sums exactly the negated pairs in the same
+    order, so its area is exactly the negation, sign included, even for
+    near-degenerate rings.
     """
     ring = np.asarray(ring, dtype=np.float64)
-    x, y = ring[:, 0], ring[:, 1]
-    xp, yp = np.roll(x, 1), np.roll(y, 1)
-    return float(np.sum((x - xp) * (y + yp)))
+    prev = np.concatenate((ring[-1:], ring[:-1]))       # vertex i - 1
+    t = (ring[:, 0] - prev[:, 0]) * (ring[:, 1] + prev[:, 1])
+    return float((t + np.concatenate((t[:1], t[:0:-1]))).sum()) / 2.0
 
 
 def is_clockwise(ring: np.ndarray) -> bool:

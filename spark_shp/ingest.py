@@ -139,19 +139,31 @@ def _geojson_geometry_strings(gtypes, coords) -> list:
                  for i in range(len(off3) - 1)]
     part_strs = [f"[{join(ring_strs[off2[i]:off2[i + 1]])}]"
                  for i in range(len(off2) - 1)]
+
+    def first(i, depth):
+        # index of feature i's first element `depth` levels down; an empty
+        # span on the way would otherwise index the NEXT feature's data
+        j = i
+        for off in (off1, off2, off3)[:depth]:
+            if off[j + 1] == off[j]:
+                raise ValueError(f"feature {i}: non-null {gtypes[i]} "
+                                 "geometry has no coordinates")
+            j = off[j]
+        return j
+
     out = []
     for i, t in enumerate(gtypes):
         if t is None or not coords[i].is_valid:
             out.append("null")
         elif t == "Point":
             out.append('{"type":"Point","coordinates":'
-                       + pt_strs[off3[off2[off1[i]]]] + "}")
+                       + pt_strs[first(i, 3)] + "}")
         elif t in ("MultiPoint", "LineString"):
             out.append('{"type":"%s","coordinates":%s}'
-                       % (t, ring_strs[off2[off1[i]]]))
+                       % (t, ring_strs[first(i, 2)]))
         elif t in ("MultiLineString", "Polygon"):
             out.append('{"type":"%s","coordinates":%s}'
-                       % (t, part_strs[off1[i]]))
+                       % (t, part_strs[first(i, 1)]))
         elif t == "MultiPolygon":
             out.append('{"type":"MultiPolygon","coordinates":[%s]}'
                        % join(part_strs[off1[i]:off1[i + 1]]))

@@ -1,7 +1,6 @@
 """Sixth query batch — analytics & raster-algebra operators that round out
-the engine's surface (all oracle-gated exact; registered past the driver's
-50-query window in registry._TAIL because each family keeps an in-window
-row):
+the engine's surface (all oracle-gated exact; none is in the query registry,
+which holds only the paper's spatial path):
 
   * chunk_documents     — sliding-window token chunking with overlap, the
                           RAG/pretraining chunker (text-pipeline family).

@@ -4,9 +4,8 @@ splitting with stratified sampling, benchmark-contamination detection via
 n-gram overlap, one-pass tile-pyramid rollups, and polygon shape metrics
 (area / perimeter / centroid) over the fence layer.
 
-All four are driver-oracle-checked (exact DuckDB twins); they park in
-registry._TAIL because their operator families (C6/C7 window+agg, shingle
-join, B1/B2 cells, B4-B6 geometry) keep in-window rows.
+All four have exact DuckDB twins; none is in the query registry
+(spark_shp.registry holds only the paper's spatial path).
 """
 
 from __future__ import annotations

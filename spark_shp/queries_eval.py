@@ -16,9 +16,8 @@ audio QA     — audio_clipping_detect: saturation / clipped-sample audit
                over REAL RIFF/WAV decode (counts, position checksum, and
                the max consecutive-clip run via gaps-and-islands).
 
-All oracle-gated exact (DuckDB twins, parked in registry._TAIL — each
-family keeps an in-window row: C5 via asof_join_event_order, C6/C7 via
-pricing/window rows, AV via the images/wav lineage).  Reference parity:
+All oracle-gated exact (DuckDB twins); none is in the query registry
+(spark_shp.registry holds only the paper's spatial path).  Reference parity:
 upstream shapefile-js is geometry ingest (SURVEY.md §2.A
 [RECONSTRUCTED]); these extend the §6 analytics/curation families.
 

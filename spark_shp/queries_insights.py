@@ -9,9 +9,8 @@ image QA      — GLCM texture features (Haralick contrast/energy) and a
                 truth — the decode path's bit-exactness proof) over REAL
                 decoded raw/png/qb bytes
 
-All oracle-gated exact (DuckDB twins) and parked in registry._TAIL — each
-operator family keeps an in-window row (B1/B3/B5 grids, B11 image decode,
-C6 stats).  Reference parity: upstream shapefile-js is geometry ingest
+All oracle-gated exact (DuckDB twins); none is in the query registry
+(spark_shp.registry holds only the paper's spatial path).  Reference parity: upstream shapefile-js is geometry ingest
 (SURVEY.md §2.A [RECONSTRUCTED]); these extend the §6 analytics family.
 """
 
@@ -19,7 +18,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from . import cells, fixtures
 
@@ -6322,4 +6321,86 @@ ORACLE_POT = _pot_sql("epoch_us(ts)").format(div="//")
 
 QUERIES.update({
     "pot_exceedances": (q_pot_exceedances, ORACLE_POT),
+})
+
+
+N_RS = 20
+
+
+def q_audio_resample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """3:2 linear-interpolation audio resampling (16 kHz -> 10.667 kHz
+    decimation, the sample-rate-normalization step of an audio curation
+    pipeline) kept EXACT: output sample j sits at input position 3j/2,
+    so even j copies an input sample and odd j is the midpoint of two --
+    storing DOUBLED values (r2 = 2*s[k] or s[k] + s[k+1]) keeps every
+    resampled amplitude an exact int64 at any aggregation order.  Each
+    task synthesizes a PCM stream from the shared integer formula,
+    round-trips it through the REAL RIFF container walk (riff.wav_encode
+    -> wav_decode -- the gate fails if the container path corrupts any
+    sample), then resamples in one vectorized gather.  The checksum
+    weights by output position, so a dropped/reordered sample flips it."""
+    import numpy as np
+    from . import riff
+
+    schema = T.StructType([
+        T.StructField("media_id", T.StringType()),
+        T.StructField("n_out", T.LongType()),
+        T.StructField("sum_abs_r2", T.LongType()),
+        T.StructField("pos_checksum", T.LongType()),
+    ])
+
+    def work(batches):
+        for pdf in batches:
+            rows = []
+            for i in pdf["id"].astype(int):
+                n = 100 + (i * 53) % 211
+                k = np.arange(n, dtype=np.int64)
+                s = ((i * 48271 + k * 16807) % 65536 - 32768).astype(np.int16)
+                wav, rate = riff.wav_decode(riff.wav_encode(s, 16000))
+                got = np.round(wav[:, 0].astype(np.float64)
+                               * 32768.0).astype(np.int64)
+                assert rate == 16000 and len(got) == n
+                j = np.arange((2 * n) // 3 + 2, dtype=np.int64)
+                t_num = 3 * j
+                keep = np.where(t_num % 2 == 0, t_num <= 2 * n - 2,
+                                t_num <= 2 * n - 3)
+                j = j[keep]; t_num = t_num[keep]
+                kk = t_num // 2
+                r2 = np.where(t_num % 2 == 0, 2 * got[kk],
+                              got[kk] + got[np.minimum(kk + 1, n - 1)])
+                rows.append((f"rs{i:03d}", len(j),
+                             int(np.abs(r2).sum()),
+                             int((r2 * (j + 1)).sum())))
+            yield pd.DataFrame(rows, columns=[f.name for f in schema])
+
+    return (spark.range(0, N_RS, numPartitions=4)
+            .mapInPandas(work, schema))
+
+
+ORACLE_RESAMPLE = f"""
+WITH ids AS (SELECT UNNEST(GENERATE_SERIES(0, {N_RS - 1})) AS i),
+lens AS (SELECT i, 100 + (i * 53) % 211 AS n FROM ids),
+out AS (
+  SELECT i, n, j, 3 * j AS t_num
+  FROM lens, GENERATE_SERIES(0, 300) g(j)
+  WHERE CASE WHEN (3 * j) % 2 = 0 THEN 3 * j <= 2 * n - 2
+             ELSE 3 * j <= 2 * n - 3 END),
+r AS (
+  SELECT i, j,
+         CASE WHEN t_num % 2 = 0
+              THEN 2 * (((i * 48271 + (t_num // 2) * 16807) % 65536) - 32768)
+              ELSE (((i * 48271 + (t_num // 2) * 16807) % 65536) - 32768)
+                 + (((i * 48271 + (t_num // 2 + 1) * 16807) % 65536) - 32768)
+         END AS r2
+  FROM out)
+SELECT printf('rs%03d', i) AS media_id,
+       COUNT(*) AS n_out,
+       CAST(SUM(ABS(r2)) AS BIGINT) AS sum_abs_r2,
+       CAST(SUM(r2 * (j + 1)) AS BIGINT) AS pos_checksum
+FROM r GROUP BY i
+"""
+
+
+QUERIES.update({
+    "audio_resample_stats": (q_audio_resample_stats, ORACLE_RESAMPLE),
 })

@@ -13,8 +13,8 @@ time series   — exact-integer TWAP, interval-union coverage, lead-lag
                 cross-correlation
 multimodal    — per-tile image mosaic checksums over real decoded bytes
 
-All oracle-gated exact (DuckDB twins) and parked in registry._TAIL — each
-operator family keeps an in-window row.  Reference parity: the upstream
+All oracle-gated exact (DuckDB twins); none is in the query registry
+(spark_shp.registry holds only the paper's spatial path).  Reference parity: the upstream
 shapefile-js surface is geometry ingest (SURVEY.md §2.A [RECONSTRUCTED]);
 these extend the engine's §6 training-data-pipeline family the brief
 requires on top of it.

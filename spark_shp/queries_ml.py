@@ -1,7 +1,7 @@
 """ML-loop query batch (round-3 continuation session 5) — the model-side
 operators a training-data pipeline runs AFTER curation (all oracle-gated
-exact; registered past the driver's 50-query window in registry._TAIL
-because each family keeps an in-window row):
+exact; none is in the query registry, which holds only the paper's
+spatial path):
 
   * kmeans_rounds        — two unrolled Lloyd iterations over the event
                            point cloud in exact quantized-integer geometry

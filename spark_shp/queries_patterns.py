@@ -1,7 +1,6 @@
 """Seventh query batch — spatio-temporal pattern mining, weighted graphs,
-and differential privacy (all oracle-gated exact; registered past the
-driver's 50-query window in registry._TAIL because each family keeps an
-in-window row):
+and differential privacy (all oracle-gated exact; none is in the query
+registry, which holds only the paper's spatial path):
 
   * convoy_pairs     — co-movement mining (flock/convoy detection): user
                        pairs co-located in the same coarse cell for >= 2

@@ -480,9 +480,8 @@ def q_scalar_functions_suite(spark, sf_dir):
     """C10 in ONE driver-gate row: string funcs + date_trunc + JSON
     extraction + numeric scalars over events. (The narrower
     string_functions / date_trunc_monthly / json_extract_events queries
-    remain registered for local diffcheck but sit in the registry tail —
-    the driver's CORRECTNESS window caps at 50 queries, and one wide row
-    keeps every C10 function family under the hard gate.)"""
+    stay in this module's QUERIES; one wide row covers every C10
+    function family. None of them is in the query registry.)"""
     e = _t(spark, sf_dir, "events").where(F.col("event_id") % 20 == 0)
     k = F.get_json_object(F.col("props"), "$.k").cast("int")
     return e.select(

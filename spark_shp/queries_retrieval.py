@@ -10,10 +10,8 @@ image QA    — global Otsu threshold from the exact pixel histogram and
               RLE run-count compressibility over REAL decoded bytes
 audio       — zero-crossing-rate windows over REAL RIFF/WAV decode
 
-All oracle-gated exact (DuckDB twins, parked in registry._TAIL — each
-family keeps an in-window row: C6 via pricing/rollup/cube, text via
-tfidf/token_stats, graph via triangle/pagerank lineage, B11 via
-images_phash_verify).  Reference parity: upstream shapefile-js is
+All oracle-gated exact (DuckDB twins); none is in the query registry
+(spark_shp.registry holds only the paper's spatial path).  Reference parity: upstream shapefile-js is
 geometry ingest (SURVEY.md §2.A [RECONSTRUCTED]); these extend the §6
 analytics/curation families.
 

@@ -3128,332 +3128,6 @@ def _oracle_zip_bundle() -> str:
 ORACLE_ZIP_BUNDLE = _oracle_zip_bundle()
 
 
-N_WAV = 24
-
-
-def q_wav_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal audio under the oracle gate: each task synthesizes a
-    PCM WAV from a deterministic integer formula (sample k of stream i =
-    ((i*48271 + k*16807) % 65536) - 32768), then decodes it through the
-    REAL RIFF container walk (riff.wav_decode — fmt/data chunk parse,
-    int16 → float) and reduces to integer stats DuckDB reproduces from
-    the same formula: sample count, sum |s|, and sign-change count. All
-    aggregation is in exact int64, so the row hashes must match
-    bit-for-bit if and only if the container decode is faithful."""
-    import numpy as np
-    from . import riff
-
-    schema = T.StructType([
-        T.StructField("media_id", T.StringType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("sum_abs", T.LongType()),
-        T.StructField("zero_crossings", T.LongType()),
-    ])
-
-    def work(batches):
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"].astype(int):
-                n = 120 + (i * 37) % 181
-                k = np.arange(n, dtype=np.int64)
-                s = ((i * 48271 + k * 16807) % 65536 - 32768).astype(np.int16)
-                wav, rate = riff.wav_decode(riff.wav_encode(s, 16000))
-                got = np.round(wav[:, 0].astype(np.float64)
-                               * 32768.0).astype(np.int64)
-                assert rate == 16000 and len(got) == n
-                zc = int(np.sum((got[1:] < 0) != (got[:-1] < 0)))
-                rows.append((f"wav{i:03d}", n, int(np.abs(got).sum()), zc))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
-
-    return (spark.range(0, N_WAV, numPartitions=4)
-            .mapInPandas(work, schema))
-
-
-ORACLE_WAV_STATS = f"""
-WITH ids AS (SELECT UNNEST(GENERATE_SERIES(0, {N_WAV - 1})) AS i),
-samp AS (
-  SELECT i, k, ((i * 48271 + k * 16807) % 65536) - 32768 AS s
-  FROM ids, GENERATE_SERIES(0, 300) g(k)
-  WHERE k < 120 + (i * 37) % 181),
-lagged AS (
-  SELECT i, s, LAG(s) OVER (PARTITION BY i ORDER BY k) AS prev
-  FROM samp)
-SELECT printf('wav%03d', i) AS media_id,
-       COUNT(*) AS n_samples,
-       CAST(SUM(ABS(s)) AS BIGINT) AS sum_abs,
-       CAST(SUM(CASE WHEN prev IS NOT NULL AND (s < 0) != (prev < 0)
-                     THEN 1 ELSE 0 END) AS BIGINT) AS zero_crossings
-FROM lagged
-GROUP BY i
-"""
-
-
-N_MJPEG = 12
-
-
-def q_mjpeg_video_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compressed VIDEO under the gate: per task, synthesize a short clip
-    of luma-dominant frames (the jpeg_decode_stats generator), encode as
-    a Motion-JPEG AVI (riff.avi_encode codec='MJPG' — every frame a full
-    JFIF image from the in-repo baseline JPEG encoder), decode through
-    the container walk + JPEG decoder, and assert the input_hint
-    invariants BY CONSTRUCTION: every frame ≥ 40 dB, dims/fps preserved,
-    stream smaller than a third of raw. Lossy ⇒ VALUES oracle (the
-    jpeg_decode_stats pattern); frame-exact container semantics are
-    separately gated by avi_frame_stats' DIB path."""
-    import numpy as np
-    from . import riff
-    from .codecs import psnr
-    from .queries_vision import _jpeg_qa_pixels
-
-    schema = T.StructType([
-        T.StructField("video_id", T.StringType()),
-        T.StructField("n_frames", T.LongType()),
-        T.StructField("all_psnr_ge_40", T.IntegerType()),
-        T.StructField("dims_fps_ok", T.IntegerType()),
-        T.StructField("compressed_3x", T.IntegerType()),
-    ])
-
-    def work(batches):
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"].astype(int):
-                nf = 4 + i % 3
-                w, h = 48 + (i % 3) * 8, 32 + (i % 2) * 8
-                frames = np.stack([_jpeg_qa_pixels(7 * i + t, w, h)
-                                   for t in range(nf)])
-                blob = riff.avi_encode(frames, fps=5, codec="MJPG")
-                dec, fps = riff.avi_decode(blob)
-                ok_psnr = int(all(psnr(frames[t], dec[t]) >= 40.0
-                                  for t in range(nf)))
-                ok_dims = int(dec.shape == frames.shape and fps == 5)
-                rows.append((f"mjpg{i:03d}", nf, ok_psnr, ok_dims,
-                             int(3 * len(blob) < frames.nbytes)))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
-
-    return (spark.range(0, N_MJPEG, numPartitions=4)
-            .mapInPandas(work, schema))
-
-
-ORACLE_MJPEG_STATS = f"""
-SELECT printf('mjpg%03d', i) AS video_id,
-       CAST(4 + i % 3 AS BIGINT) AS n_frames,
-       1 AS all_psnr_ge_40, 1 AS dims_fps_ok, 1 AS compressed_3x
-FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_MJPEG - 1})) AS i) t
-"""
-
-
-N_FLAC = 24
-
-
-def q_flac_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Compressed audio under the oracle gate (the JPEG sibling, but
-    LOSSLESS so the gate is bit-exact, not an invariant): each task
-    synthesizes a 16-bit PCM stream from a deterministic sawtooth
-    formula (sample k of stream i = (i*97 + k*31) % 4000 − 2000 —
-    locally linear, so the FIXED predictors genuinely compress it),
-    round-trips it through the REAL FLAC encode→decode
-    (spark_shp.flac: Rice-coded fixed-predictor subframes, CRC-8/16,
-    STREAMINFO MD5 verified on decode), asserts the stream actually
-    shrank, and reduces to integer stats DuckDB reproduces from the same
-    formula. A single corrupted sample anywhere fails the hash."""
-    import numpy as np
-    from . import flac
-
-    schema = T.StructType([
-        T.StructField("media_id", T.StringType()),
-        T.StructField("n_samples", T.LongType()),
-        T.StructField("sum_abs", T.LongType()),
-        T.StructField("zero_crossings", T.LongType()),
-    ])
-
-    def work(batches):
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"].astype(int):
-                n = 900 + (i * 53) % 700
-                k = np.arange(n, dtype=np.int64)
-                s = ((i * 97 + k * 31) % 4000 - 2000).astype(np.int16)
-                blob = flac.flac_encode(s, 16000)
-                assert len(blob) < 2 * n          # really compressed
-                got, rate = flac.flac_decode(blob)
-                got = got[:, 0]
-                assert rate == 16000 and len(got) == n
-                zc = int(np.sum((got[1:] < 0) != (got[:-1] < 0)))
-                rows.append((f"flac{i:03d}", n, int(np.abs(got).sum()),
-                             zc))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
-
-    return (spark.range(0, N_FLAC, numPartitions=4)
-            .mapInPandas(work, schema))
-
-
-ORACLE_FLAC_STATS = f"""
-WITH ids AS (SELECT UNNEST(GENERATE_SERIES(0, {N_FLAC - 1})) AS i),
-samp AS (
-  SELECT i, k, ((i * 97 + k * 31) % 4000) - 2000 AS s
-  FROM ids, GENERATE_SERIES(0, 1599) g(k)
-  WHERE k < 900 + (i * 53) % 700),
-lagged AS (
-  SELECT i, s, LAG(s) OVER (PARTITION BY i ORDER BY k) AS prev
-  FROM samp)
-SELECT printf('flac%03d', i) AS media_id,
-       COUNT(*) AS n_samples,
-       CAST(SUM(ABS(s)) AS BIGINT) AS sum_abs,
-       CAST(SUM(CASE WHEN prev IS NOT NULL AND (s < 0) != (prev < 0)
-                     THEN 1 ELSE 0 END) AS BIGINT) AS zero_crossings
-FROM lagged
-GROUP BY i
-"""
-
-
-N_RS = 20
-
-
-def q_audio_resample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """3:2 linear-interpolation audio resampling (16 kHz -> 10.667 kHz
-    decimation, the sample-rate-normalization step of an audio curation
-    pipeline) kept EXACT: output sample j sits at input position 3j/2,
-    so even j copies an input sample and odd j is the midpoint of two --
-    storing DOUBLED values (r2 = 2*s[k] or s[k] + s[k+1]) keeps every
-    resampled amplitude an exact int64 at any aggregation order.  Each
-    task synthesizes a PCM stream from the shared integer formula,
-    round-trips it through the REAL RIFF container walk (riff.wav_encode
-    -> wav_decode -- the gate fails if the container path corrupts any
-    sample), then resamples in one vectorized gather.  The checksum
-    weights by output position, so a dropped/reordered sample flips it."""
-    import numpy as np
-    from . import riff
-
-    schema = T.StructType([
-        T.StructField("media_id", T.StringType()),
-        T.StructField("n_out", T.LongType()),
-        T.StructField("sum_abs_r2", T.LongType()),
-        T.StructField("pos_checksum", T.LongType()),
-    ])
-
-    def work(batches):
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"].astype(int):
-                n = 100 + (i * 53) % 211
-                k = np.arange(n, dtype=np.int64)
-                s = ((i * 48271 + k * 16807) % 65536 - 32768).astype(np.int16)
-                wav, rate = riff.wav_decode(riff.wav_encode(s, 16000))
-                got = np.round(wav[:, 0].astype(np.float64)
-                               * 32768.0).astype(np.int64)
-                assert rate == 16000 and len(got) == n
-                j = np.arange((2 * n) // 3 + 2, dtype=np.int64)
-                t_num = 3 * j
-                keep = np.where(t_num % 2 == 0, t_num <= 2 * n - 2,
-                                t_num <= 2 * n - 3)
-                j = j[keep]; t_num = t_num[keep]
-                kk = t_num // 2
-                r2 = np.where(t_num % 2 == 0, 2 * got[kk],
-                              got[kk] + got[np.minimum(kk + 1, n - 1)])
-                rows.append((f"rs{i:03d}", len(j),
-                             int(np.abs(r2).sum()),
-                             int((r2 * (j + 1)).sum())))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
-
-    return (spark.range(0, N_RS, numPartitions=4)
-            .mapInPandas(work, schema))
-
-
-ORACLE_RESAMPLE = f"""
-WITH ids AS (SELECT UNNEST(GENERATE_SERIES(0, {N_RS - 1})) AS i),
-lens AS (SELECT i, 100 + (i * 53) % 211 AS n FROM ids),
-out AS (
-  SELECT i, n, j, 3 * j AS t_num
-  FROM lens, GENERATE_SERIES(0, 300) g(j)
-  WHERE CASE WHEN (3 * j) % 2 = 0 THEN 3 * j <= 2 * n - 2
-             ELSE 3 * j <= 2 * n - 3 END),
-r AS (
-  SELECT i, j,
-         CASE WHEN t_num % 2 = 0
-              THEN 2 * (((i * 48271 + (t_num // 2) * 16807) % 65536) - 32768)
-              ELSE (((i * 48271 + (t_num // 2) * 16807) % 65536) - 32768)
-                 + (((i * 48271 + (t_num // 2 + 1) * 16807) % 65536) - 32768)
-         END AS r2
-  FROM out)
-SELECT printf('rs%03d', i) AS media_id,
-       COUNT(*) AS n_out,
-       CAST(SUM(ABS(r2)) AS BIGINT) AS sum_abs_r2,
-       CAST(SUM(r2 * (j + 1)) AS BIGINT) AS pos_checksum
-FROM r GROUP BY i
-"""
-
-
-N_AVI = 12
-
-
-def q_avi_frame_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal video under the oracle gate: each task synthesizes an
-    uncompressed BI_RGB AVI whose pixel (f,y,x,c) of video i is
-    (i*7 + f*131 + y*17 + x*29 + c*13) % 256, decodes it through the REAL
-    RIFF/AVI walk (riff.avi_decode — hdrl/strf parse, movi frame gather,
-    bottom-up row flip, BGR→RGB, stride-padding strip), and reduces to a
-    position-and-channel-weighted int64 checksum that DuckDB reproduces:
-    wsum = Σ px · (((f·h + y)·w + x)·3 + c + 1). The weighting makes the
-    hash sensitive to frame order, row orientation, column order, and
-    channel order — a plain sum would pass even with a flipped decode.
-    Widths include stride-padded cases (w·3 not divisible by 4)."""
-    import numpy as np
-    from . import riff
-
-    schema = T.StructType([
-        T.StructField("media_id", T.StringType()),
-        T.StructField("n_frames", T.LongType()),
-        T.StructField("w", T.LongType()),
-        T.StructField("h", T.LongType()),
-        T.StructField("wsum", T.LongType()),
-    ])
-
-    def work(batches):
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"].astype(int):
-                nf = 2 + i % 3
-                w = 7 + (i % 4) * 3       # 7/10/13/16: strides 21/30/39/48
-                h = 6 + (i % 2) * 5
-                f, y, x, c = np.ogrid[0:nf, 0:h, 0:w, 0:3]
-                px = ((i * 7 + f * 131 + y * 17 + x * 29 + c * 13)
-                      % 256).astype(np.uint8)
-                dec, fps = riff.avi_decode(riff.avi_encode(px, fps=10))
-                assert fps == 10 and dec.shape == (nf, h, w, 3)
-                wgt = (((f * h + y) * w + x) * 3 + c + 1).astype(np.int64)
-                wsum = int((dec.astype(np.int64) * wgt).sum())
-                rows.append((f"avi{i:03d}", nf, w, h, wsum))
-            yield pd.DataFrame(rows, columns=[f.name for f in schema])
-
-    return (spark.range(0, N_AVI, numPartitions=4)
-            .mapInPandas(work, schema))
-
-
-ORACLE_AVI_STATS = f"""
-WITH ids AS (
-  SELECT i, 2 + i % 3 AS nf, 7 + (i % 4) * 3 AS w, 6 + (i % 2) * 5 AS h
-  FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_AVI - 1})) AS i) t),
-px AS (
-  SELECT i, nf, w, h,
-         ((i * 7 + f * 131 + y * 17 + x * 29 + c * 13) % 256)
-           * (((f * h + y) * w + x) * 3 + c + 1) AS term
-  FROM ids,
-       GENERATE_SERIES(0, 4) gf(f),
-       GENERATE_SERIES(0, 11) gy(y),
-       GENERATE_SERIES(0, 16) gx(x),
-       GENERATE_SERIES(0, 2) gc(c)
-  WHERE f < nf AND y < h AND x < w)
-SELECT printf('avi%03d', i) AS media_id,
-       CAST(nf AS BIGINT) AS n_frames,
-       CAST(w AS BIGINT) AS w,
-       CAST(h AS BIGINT) AS h,
-       CAST(SUM(term) AS BIGINT) AS wsum
-FROM px
-GROUP BY i, nf, w, h
-"""
-
-
 QUERIES: dict = {
     "shp_decode_points": (q_shp_decode_points, ORACLE_SHP_POINTS),
     "dbf_decode_types": (q_dbf_decode_types, ORACLE_DBF_TYPES),
@@ -3464,8 +3138,7 @@ QUERIES: dict = {
                                ORACLE_REPROJECT_FAMILIES),
     "shp_decode_index_join": (q_shp_decode_index_join,
                               ORACLE_DECODE_INDEX_JOIN),
-    # parked in registry._TAIL (A12 per-family variants; the combined
-    # shp_reproject_families row driver-gates all five)
+    # A12 per-family variants (shp_reproject_families combines five)
     "shp_webmerc_reproject": (q_shp_webmerc_reproject, ORACLE_SHP_WEBMERC),
     "shp_utm_reproject": (q_shp_utm_reproject, ORACLE_SHP_UTM),
     "shp_lcc_reproject": (q_shp_lcc_reproject, ORACLE_SHP_LCC),
@@ -3501,15 +3174,8 @@ QUERIES: dict = {
     "shp_oblique_stereo_reproject": (q_shp_oblique_stereo_reproject,
                                      ORACLE_SHP_OBLIQUE_STEREO),
     "shp_hom_reproject": (q_shp_hom_reproject, ORACLE_SHP_HOM),
-    # parked in registry._TAIL (A16-A18/A20 zip plumbing, pytest + diffcheck)
+    # A16-A18/A20 zip plumbing
     "shp_zip_bundle": (q_shp_zip_bundle, ORACLE_ZIP_BUNDLE),
-    # parked in registry._TAIL (multimodal RIFF decode under the gate;
-    # in-window image coverage via images_phash_verify/clip_coverage_stats)
-    "wav_decode_stats": (q_wav_decode_stats, ORACLE_WAV_STATS),
-    "flac_decode_stats": (q_flac_decode_stats, ORACLE_FLAC_STATS),
-    "mjpeg_video_stats": (q_mjpeg_video_stats, ORACLE_MJPEG_STATS),
-    "avi_frame_stats": (q_avi_frame_stats, ORACLE_AVI_STATS),
-    "audio_resample_stats": (q_audio_resample_stats, ORACLE_RESAMPLE),
     "images_phash_verify": (q_images_phash_verify, """
 SELECT * FROM (VALUES
   ('raw', CAST(40 AS BIGINT), 1, CAST(0 AS BIGINT)),

@@ -687,9 +687,8 @@ QUERIES: dict = {
     "images_tile_density": (q_images_tile_density, ORACLE_IMG_DENSITY),
     "images_hot_cell": (q_images_hot_cell, ORACLE_IMG_HOT),
     "images_fence_join": (q_images_fence_join, ORACLE_IMG_FENCE),
-    # parked in registry._TAIL (B9 family: range_join_counts in-window)
+    # B9 variant of range_join_counts
     "distance_join_events": (q_distance_join_events, ORACLE_DISTANCE_JOIN),
-    # parked in registry._TAIL (dedup family: minhash_lsh_pairs in-window)
     "images_phash_near_dup": (q_images_phash_near_dup,
                               ORACLE_PHASH_NEAR_DUP),
 }

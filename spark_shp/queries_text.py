@@ -1615,9 +1615,6 @@ QUERIES: dict = {
     "sliding_window": (q_sliding_window, ORACLE_SLIDING),
     "session_windows": (q_session_windows, ORACLE_SESSION),
     "event_dedup": (q_event_dedup, ORACLE_EVENT_DEDUP),
-    # parked in registry._TAIL (dedup family in-window rows:
-    # minhash_lsh_pairs / dedup_exact; scalar-regex via
-    # scalar_functions_suite)
     "dedup_clusters": (q_dedup_clusters, ORACLE_DEDUP_CLUSTERS),
     "dedup_survivors": (q_dedup_survivors, ORACLE_DEDUP_SURVIVORS),
     "pii_scrub": (q_pii_scrub, ORACLE_PII_SCRUB),

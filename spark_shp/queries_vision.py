@@ -15,10 +15,8 @@ graph       — fixed-point integer HITS hubs/authorities (bipartite
 (the t-closeness privacy audit lives in queries_insights next to
 k_anonymity/l_diversity)
 
-All oracle-gated exact (DuckDB twins, parked in registry._TAIL — each
-family keeps an in-window row: B11 via images_phash_verify, B4-B6 via
-polygon_cover/spatial_join, C6/C7 via pricing/window rows, graph via
-the pagerank/triangle lineage).  Reference parity: upstream
+All oracle-gated exact (DuckDB twins); none is in the query registry
+(spark_shp.registry holds only the paper's spatial path).  Reference parity: upstream
 shapefile-js is geometry ingest (SURVEY.md §2.A [RECONSTRUCTED]); these
 extend the §6 analytics/curation families.
 

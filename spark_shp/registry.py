@@ -1,468 +1,55 @@
 """Merged query registry — the single source for __spark_entry__.py and
 tests/bench. Each entry: name → (spark_fn(spark, sf_dir), duckdb_oracle|None).
 
-Registration ORDER is load-bearing: the driver's CORRECTNESS gate evaluates
-only the FIRST 50 registered queries (round-1 evidence: CORRECTNESS_r01.json
-contained exactly the first 50 names in registration order and none of the 8
-decode-layer queries that came after). Modules therefore merge decode-first
-(queries_shp → queries_spatial → queries_text → queries_rel), and _TAIL pins
-queries past the 50-query window: same-operator variants that duplicate an
-operator family already covered by an earlier in-window query, plus round-3
-additions (LCC/Albers reproject, zip-bundle e2e) whose operator families
-(A12, A16-A18) keep in-window rows. They stay registered:
-tools/diffcheck.py and pytest still verify them exactly, locally.
+Registration order is load-bearing: the CORRECTNESS gate of the
+``__spark_entry__`` contract evaluates only the first DRIVER_WINDOW
+registered queries, so the merge order (queries_shp, then queries_spatial)
+is pinned by EXPECTED_WINDOW. Queries past the window stay registered;
+tools/diffcheck.py and pytest check every one of them against its oracle.
 """
 
 from __future__ import annotations
 
-from . import (queries_analytics, queries_curation, queries_eval,
-               queries_insights, queries_mining, queries_ml,
-               queries_patterns, queries_rel, queries_retrieval, queries_shp,
-               queries_spatial, queries_text, queries_vision)
+from . import queries_shp, queries_spatial
 
-# Same-operator variants parked beyond the driver's 50-query window.
-# Each name's operator family keeps >=1 in-window row:
-#   knn_events_nations        -> B8 via knn_events_nations_cells (same
-#                                oracle; the cells variant stays in-window
-#                                because it exercises the certify-or-repair
-#                                scale path, the richer half of B8)
-#   revenue_by_nation         -> C3/C6 via semi/anti/outer + pricing_summary
-#   window_top3/lag_lead/ntile-> C7 via window_running_totals (C8 top-k via
-#                                images_hot_cell's orderBy+limit)
-#   union_parties             -> C9 via set_ops_nations
-#   sliding_window            -> C12 via tumbling/session/event_dedup
-#   string/date_trunc/json    -> C10 via scalar_functions_suite
-#   distinct_counts           -> C6 distinct via cell_hierarchy/sliding_window
-#   percentiles_exact         -> C6 via pricing/rollup/cube/pivot
-_TAIL = [
-    "spatial_join_chunked",   # B7 variant: driver evidence kept by
-                              #   spatial_join_pairs + spatial_join_agg
-                              #   (displaced r5 so jpeg_decode_stats gets a
-                              #   driver row - VERDICT r4 item 1)
-    "cell_ring_sum",          # B3 variant: cell_ring is exercised by
-                              #   knn_events_nations_cells' ring expansion;
-                              #   B2/B3 keep cell_hierarchy in-window
-                              #   (displaced r5 for semantic_dedup)
-    "distance_join_events",   # B9 variant: range_join_counts keeps B9
-                              #   in-window (displaced r5 for
-                              #   flac_decode_stats)
-    "event_dedup",            # C12 variant: tumbling/session windows stay
-                              #   in-window and user_session_features adds
-                              #   stateful C12 (displaced r5)
-    "shp_webmerc_reproject",  # A12: all five families driver-gated via the
-    "shp_utm_reproject",      #   combined shp_reproject_families row
-    "shp_lcc_reproject",      # A12 (same family)
-    "shp_albers_reproject",   # A12 (same family)
-    "shp_stereo_reproject",   # A12 (same family)
-    "shp_laea_reproject",     # A12 (same family)
-    "shp_merc3395_reproject",  # A12 (same family)
-    "shp_sinusoidal_reproject",  # A12 (same family)
-    "shp_mollweide_reproject",  # A12 (same family)
-    "shp_oblique_stereo_reproject",  # A12 (same family)
-    "shp_hom_reproject",      # A12 (same family — Hotine Oblique Mercator)
-    "shp_towgs84_reproject",  # A12 + TOWGS84 datum stage (in families row)
-    "shp_equalearth_reproject",  # A12 (same family — Equal Earth 2018)
-    "shp_krovak_datum_reproject",  # A12 + 3-param TOWGS84 branch
-    "shp_krovak_reproject",   # A12 (same family — Krovak S-JTSK)
-    "shp_cassini_reproject",  # A12 (same family — Cassini-Soldner)
-    "shp_aeqd_reproject",     # A12 (same family — Azimuthal Equidistant)
-    "shp_gnomonic_reproject",  # A12 (same family — Gnomonic)
-    "shp_ortho_reproject",    # A12 (same family — Orthographic)
-    "shp_cea_reproject",      # A12 (same family — Cyl. Equal Area/EASE)
-    "shp_polyconic_reproject",  # A12 (same family — American Polyconic)
-    "shp_bonne_reproject",    # A12 (same family — Bonne pseudoconic)
-    "shp_eckert4_reproject",  # A12 (same family — Eckert IV)
-    "shp_robinson_reproject",  # A12 (same family — Robinson table)
-    "shp_miller_reproject",   # A12 (same family — Miller Cylindrical)
-    "shp_vdg_reproject",      # A12 (same family — Van der Grinten I)
-    "images_phash_near_dup",  # dedup family via minhash_lsh_pairs/simhash
-    "images_tile_density",    # B5 tile-assign via tile_assign_events
-                              # (displaced r4 so shp_zip_bundle's A16-A18/
-                              # A20 ingest e2e gets a driver row — VERDICT
-                              # r3 item 1)
-    "wav_decode_stats",       # multimodal audio RIFF decode (exact oracle)
-    "mjpeg_video_stats",      # Motion-JPEG compressed video (invariants)
-    "avi_frame_stats",        # multimodal video RIFF decode (exact oracle)
-    "dedup_clusters",         # near-dup CC clustering (exact oracle)
-    "dedup_survivors",        # per-cluster best-quality survivor (exact)
-    "pii_scrub",              # PII redaction (exact oracle)
-    "corpus_split_stratified",  # hash split + stratified sample (C7 family)
-    "contamination_check",    # benchmark n-gram overlap (shingle-join family)
-    "tile_pyramid",           # one-shuffle multi-level rollup (B1/B2 family)
-    "polygon_metrics",        # shoelace area/perimeter/centroid (B4-B6 family)
-    "image_augment_checksums",  # flip/crop/rot90/resize exact (B11 family)
-    "trajectory_stats",       # per-user haversine path/displacement (C7+B)
-    "caption_tile_stats",     # caption-equality invariant per tile (B5+text)
-    "cell_compact_cover",     # quadtree cover compaction (B2/B4 family)
-    "ring_validity",          # self-intersection QA (B6/geom family)
-    "od_flows",               # origin->destination tile flow matrix (B5+C7)
-    "dedup_passages",         # passage-level keep-first dedup (dedup family)
-    "repetition_signals",     # Gopher repetition filters (quality family)
-    "focal_density",          # 5x5 stencil focal sum (B1/B3 grid family)
-    "hotspot_clusters",       # grid-DBSCAN via CC (B5 + graph family)
-    "tfidf_keywords",         # TF-IDF top-k keywords (text/quality family)
-    "spatial_autocorr",       # Moran's I / Geary's C (B1/B3 stats family)
-    "attribution_pairs",      # stream-stream interval join batch twin (C12)
-    "dedup_substring_spans",  # exact duplicated-substring spans, Lee et al.
-                              #   2022 method in equi-join gate form (r5;
-                              #   dedup family)
-    "semantic_dedup_kmeans",  # SemDeDup over exact-int Lloyd clusters (r5;
-                              #   dedup family keeps semantic_dedup in-window)
-    "funnel_stages",          # ordered conversion funnel (C7/agg family)
-    "cohort_retention",       # weekly cohort-retention matrix (C7/agg family)
-    "ohlc_hourly",            # OHLC time-series resample (C6/agg family)
-    "profile_orders",         # one-pass data-profiling report (C6 family)
-    "array_functions_suite",  # array HOF coverage (C10/C13 family)
-    "chunk_documents",        # RAG/pretraining token chunker (text family)
-    "pareto_frontier",        # 2-D skyline via running-max (C7/C8 family)
-    "gapfill_locf",           # hourly spine + LOCF fill (C5/C7 family)
-    "cell_morphology",        # raster erosion/boundary (B3 stencil family)
-    "map_algebra_cells",      # two-layer raster algebra (B1/B5 family)
-    "geohash_encode",         # canonical geohash interop (B1 family)
-    "decayed_cell_scores",    # recency-decayed heatmap (B5/agg family)
-    "bearing_histogram",      # 8-octant move histogram (trajectory family)
-    "scd2_intervals",         # SCD type-2 dimension build (C7 family)
-    "triangle_count",         # degree-oriented triangle census (graph family)
-    "markov_transitions",     # event-type transition matrix (C7 family)
-    "rfm_segments",           # RFM quintile segmentation (C6/C7 family)
-    "benford_first_digit",    # Benford data-quality audit (C6 family)
-    "seasonality_profile",    # dow x hod activity matrix (C6 family)
-    "inventory_balance",      # signed running balance per part (C7 family)
-    "hex_bin",                # hexagonal axial binning (B1/B5 family)
-    "hilbert_assign",         # Hilbert curve index profile (B1 family)
-    "pq_codes",               # product-quantization codes (ANN family)
-    "pagerank_fixedpoint",    # integer PageRank (graph family)
-    "user_entropy",           # behavioral entropy (C6/quality family)
-    "aspect_bucketing",       # aspect-ratio batch packing (B11/multimodal)
-    "staypoint_detect",       # trajectory stay-point mining (B5/C7 family)
-    "mixture_weights",        # domain-mixture sampling plan (text family)
-    "convex_hull_groups",     # per-group convex hull (B4-B6 geometry family)
-    "dedup_editdist",         # banded Levenshtein near-dup (dedup family)
-    "trajectory_densify",     # integer-lerp path resampling (B5/C7 family)
-    "kcore_decompose",        # bounded k-core peel (graph family)
-    "interval_coverage",      # per-customer interval union (C7 family)
-    "bfs_distance_cells",     # multi-source BFS distance transform (B3/graph)
-    "image_dup_clusters",     # image dedup groups + survivors (dedup/image)
-    "image_mosaic_tiles",     # per-tile thumbnail collage checksums (B11)
-    "bloom_prefilter",        # deterministic Bloom runtime filter (C11)
-    "cm_heavy_hitters",       # count-min heavy hitters (C11 family)
-    "twap_values",            # exact-integer time-weighted average (C6)
-    "trajectory_simplify",    # snap + run collapse, densify dual (B5)
-    "lm_bigram_score",        # corpus-LM quality scoring (text family)
-    "quadkey_encode",         # Bing quadkey interop (B1 family)
-    "geometric_median",       # fixed-iteration Weiszfeld 1-median (B)
-    "fence_overlap_pairs",    # polygon-overlay candidates (B4/B7)
-    "rect_union_area",        # Klee union-of-rectangles sweep (B4)
-    "phrase_pmi_mining",      # PMI collocations + greedy merges (text)
-    "event_lag_correlation",  # lead-lag Pearson r from int moments (C6)
-    "sequence_motifs",        # event-type trigram mining (C7 family)
-    "outlier_audit",          # Tukey-fence outliers, exact ranks (C6)
-    "knox_spacetime",         # Knox space-time interaction test (B/C6)
-    "trend_regression",       # per-group OLS from int moments (C6)
-    "gini_concentration",     # Gini skew/inequality audit (C6)
-    "changepoint_detect",     # exact-integer CUSUM change-point (C6)
-    "slope_aspect_raster",    # Horn gradients on the density grid (B3)
-    "wkt_point_ingest",       # WKT string-geometry interop (A-family)
-    "anova_f",                # one-way ANOVA from int moments (C6)
-    "mann_kendall",           # rank trend test, exact integer S (C6)
-    "association_rules",      # market-basket support/conf/lift (C6)
-    "distribution_drift",     # PSI + exact 1-D Wasserstein drift (C6)
-    "image_histogram_stats",  # pixel-value histograms, real decode (B11)
-    "dag_critical_path",      # layered-DAG longest path (graph family)
-    "tree_rollup",            # hierarchy subtree rollup, no recursion (C6)
-    "chisq_independence",     # contingency chi-square test (C6 stats)
-    "nearest_seed_zones",     # discrete Voronoi zoning (B1/B5 family)
-    "max_drawdown",           # running-peak DP vs pair brute force (C6)
-    "ks_test",                # two-sample KS, exact integer CDFs (C6)
-    "kaplan_meier",           # survival/churn curve, right-censored (C6)
-    "trajectory_crossings",   # exact segment-intersection overlay (B4-B7)
-    "theil_sen_slope",        # robust median-of-slopes trend (C6)
-    "hll_registers",          # HyperLogLog register sketch (C11 family)
-    "flow_direction_d8",      # D8 steepest-descent flow routing (B3)
-    "flow_accumulation",      # upstream counts over the D8 forest (B3)
-    "watershed_labels",       # drainage-basin labels, pointer doubling (B3)
-    "map_match_segments",     # nearest-road-segment snap, exact int argmin (B6/B9)
-    "sobel_edge_stats",       # Sobel gradient energy, real decode (B11)
-    "canny_edge_stats",       # full Canny (NMS + hysteresis), real decode
-    "image_blob_count",       # CC blob detection, real decode (B11)
-    "template_match_peaks",   # exact cross-correlation patch search (B11)
-    "viewshed_rays",          # line-of-sight visibility on the raster (B3/B10)
-    "zonal_stats",            # raster x vector zonal statistics (B4/B10)
-    "cost_distance_cells",    # weighted least-cost distance raster (B3)
-    "linear_reference",       # milepost binning along matched segments (B6/B9)
-    "burst_episodes",         # temporal burst detection, gaps-and-islands (C7)
-    "grad_orientation_hist",  # HOG-style octant histogram, real decode (B11)
-    "bpe_pair_counts",        # BPE tokenizer-training pair frequencies (text)
-    "vocab_growth",           # Heaps-law vocabulary growth curve (text)
-    "idw_interpolate",        # inverse-distance gap-fill raster (B3/B5)
-    "std_dev_ellipse",        # directional-distribution ellipse (B/C6 stats)
-    "codec_distortion",       # decode bit-exactness + qb SSE audit (B11)
-    "glcm_texture",           # Haralick co-occurrence texture QA (B11)
-    "emerging_hotspots",      # space-time-cube trend classes (B1/B3/C6)
-    "strahler_order",         # stream ordering over the D8 forest (B3)
-    "zipf_fit",               # rank-frequency power-law audit (text/C6)
-    "hist_equalize",          # histogram equalization, real decode (B11)
-    "ab_test_ztest",          # two-proportion experiment readout (C6)
-    "ewma_forecast",          # dyadic-weight exponential smoothing (C6/C7)
-    "k_anonymity",            # privacy equivalence-class audit (C6/quality)
-    "fk_integrity",           # referential-integrity orphan audit (C3/C6)
-    "ripley_k_bands",         # multi-distance point-pattern K (B/C6 stats)
-    "image_quadtree",         # quadtree homogeneity profile (B11/B2)
-    "runs_test",              # Wald-Wolfowitz randomness audit (C6 stats)
-    "seasonal_decompose",     # STL-lite trend/seasonal split (C6/C7)
-    "bootstrap_ci",           # Poisson-bootstrap CI, one-pass B=32 (C6)
-    "nation_distance_matrix",  # geodesic nearest-neighbor table (B/C6)
-    "image_dither",           # Bayer ordered halftoning, real decode (B11)
-    "item_cooccurrence",      # item-item CF recommender table (C3/C6)
-    "local_moran_quadrants",  # LISA cluster classification (B/C6 stats)
-    "getis_ord_hotspots",     # Gi* hotspot z-scores (B/C6 stats)
-    "welch_ttest",            # unequal-variance t across types (C6 stats)
-    "harris_corners",         # exact-integer Harris response (B11/CV)
-    "geofence_dwell",         # enter/exit dwell episodes (B5/C7)
-    "image_metadata_audit",   # header/catalog integrity scan (B11/A)
-    "antimeridian_pairs",     # +-180 seam distance correctness (B)
-    "video_scene_cuts",       # shot-boundary detection, real AVI (C12/AV)
-    "audio_silence_windows",  # RMS windowing / silence, real WAV (AV)
-    "image_colorfulness",     # Hasler-Susstrunk color QA (B11)
-    "gravity_model_fit",      # OD distance-decay calibration (B5/C6)
-    "spacetime_scan",         # Kulldorff cylinder scan (B/C6 stats)
-    "semivariogram",          # empirical variogram, kriging precursor (B)
-    "forecast_backtest",      # rolling EWMA eval, exact WAPE (C6/C7)
-    "degree_assortativity",   # degree-degree correlation (graph family)
-    "catchment_accessibility",  # 2SFCA accessibility histogram (B/C6)
-    "centroid_drift",         # weekly mean-center migration (B/C7)
-    "user_paths",             # top first-3-event Sankey paths (C7)
-    "control_chart",          # SPC 3-sigma rule, exact int test (C6)
-    "quadrat_test",           # CSR quadrat chi-square (B/C6 stats)
-    "sample_fidelity",        # sample-vs-population Wasserstein QA (C6)
-    "attribution_linear",     # multi-touch credit, exact shares (C7)
-    "boxcount_dimension",     # fractal box-counting dimension (B)
-    "interarrival_burstiness",  # Goh-Barabasi burstiness (C6/C7)
-    "abc_analysis",           # Pareto revenue classing (C6/C7)
-    "langid_confusion",       # classifier-eval confusion matrix (text)
-    "cover_level_invariance",  # PIP join resolution-independence (B4/B7)
-    "l_diversity",            # sensitive-value diversity audit (privacy)
-    "clark_evans",            # NN spatial randomness index (B stats)
-    "term_burst",             # trending-term detection (text/C6)
-    "home_location",          # modal-cell inference per user (B5/C7)
-    "region_covisitation",    # fence-pair co-visit matrix (B7+basket)
-    "percolation_sweep",      # largest-cluster share vs threshold (B/graph)
-    "calibration_bins",       # reliability diagram, exact bins (C6/ML)
-    "mad_outliers",           # robust median/MAD anomaly flags (C6)
-    "isolation_grid_anomalies",  # random-partition forest scoring (ML)
-    "image_curation_pipeline",  # decode->QA->dedup->tiles e2e (B11 flagship)
-    "pps_sample",             # deterministic PPS corpus sampling (text)
-    "soundex_blocking",       # phonetic blocking for record linkage (text)
-    "bm25_search",            # BM25 top-k retrieval ranking (text/IR)
-    "grouping_sets_sales",    # GROUPING SETS + GROUPING_ID (C6 family)
-    "link_prediction",        # common-neighbor/RA link scoring (graph)
-    "image_otsu_threshold",   # global Otsu binarization threshold (B11)
-    "image_rle_runs",         # RLE compressibility QA, real decode (B11)
-    "audio_zcr_windows",      # zero-crossing-rate windows, real WAV (AV)
-    "bpe_learn_merges",       # iterative BPE merge-learning loop (text)
-    "image_entropy",          # Shannon entropy bound, real decode (B11)
-    "range_frame_smoothing",  # RANGE-frame moving window (C7 family)
-    "geodesic_area",          # spherical-excess polygon area (B4/geo)
-    "audio_spectral_peak",    # quantized DFT-bin tone detection (AV)
-    "fellegi_sunter",         # record-linkage match-weight scoring (ER)
-    "lm_heldout_perplexity",  # held-out LM perplexity eval (text/ML)
-    "rank_correlation",       # Spearman rho + Kendall tau (C6 stats)
-    "trimmed_mean",           # exact two-phase trimmed mean (C6 robust)
-    "mutual_information",     # MI / entropy feature audit (C6/ML)
-    "text_curation_pipeline",  # lang->quality->dedup->split e2e (text)
-    "cdc_chunking",           # content-defined chunk dedup (storage/text)
-    "sketch_mergeability",    # DataSketches builtins + merge law (C11)
-    "audio_curation_pipeline",  # decode->features->filter->dedup e2e (AV)
-    "image_boxfilter",        # integral-image SAT box sums (B11/CV)
-    "image_median_denoise",   # 3x3 median filter, real decode (B11/CV)
-    "image_hash_family",      # aHash/dHash perceptual cascade (B11/dedup)
-    "image_ssim",             # block SSIM vs requantization (B11/CV QA)
-    "image_hough_lines",      # quantized Hough accumulator (B11/CV)
-    "kmeans_rounds",          # unrolled Lloyd k-means, exact ints (ANN/ML)
-    "label_spreading",        # semi-supervised majority propagation (graph)
-    "isotonic_calibration",   # PAVA via minimax identity (calibration/ML)
-    "diff_in_diff",           # 2x2 DiD estimator (experimentation)
-    "bpe_apply",              # tokenizer ENCODE, fixed merge ranks (text)
-    "readability_scores",     # Flesch reading-ease corpus audit (text)
-    "hillshade_raster",       # Horn hillshade rendering (B3 terrain)
-    "target_encoding",        # K-fold leakage-free encoder (ML features)
-    "cem_att",                # coarsened-exact-matching ATT (causal)
-    "merkle_diff",            # anti-entropy digest tree (storage/C11)
-    "merge_upsert",           # lakehouse MERGE INTO semantics (C1/C3)
-    "roc_auc",                # exact rank-based AUC per segment (ML eval)
-    "lift_gains",             # cumulative gains/lift deciles (ML eval)
-    "naive_bayes_lang",       # multinomial NB train/classify (ML/text)
-    "compaction_plan",        # small-file bin packing (storage/C1)
-    "zone_map_pruning",       # min/max skipping, layout contrast (C1)
-    "ivm_delta_agg",          # incremental view maintenance law (C6/C12)
-    "buffer_dissolve_cells",  # ring-dilate + dissolve union (B3/B4 GIS)
-    "contour_segments",       # marching-squares iso-lines (B3 terrain)
-    "viewshed_los",           # scan-line visibility (B3 terrain family)
-    "snap_nearest_edge",      # map-matching snap to nearest edge (B6/B7)
-    "kneser_ney_bigram",      # interpolated KN bigram LM (text/LM family)
-    "url_domain_stats",       # URL parse + domain blocklist curation (text)
-    "decision_stump",         # CART split gain by weighted Gini (ML)
-    "graph_modularity",       # Newman community quality (graph)
-    "audio_resample_stats",   # 3:2 linear-interp resample (multimodal)
-    "stream_static_enrich",   # stream-static broadcast join twin (C12)
-    "ols_two_features",       # 2-feature normal-equation OLS (ML/stats)
-    "dedup_incremental",      # daily-shard dedup vs existing index (text)
-    "t_closeness",            # distributional privacy audit (privacy trio)
-    "stem_collapse",          # suffix-stripping normalization (text)
-    "audio_autocorr_pitch",   # autocorrelation pitch detection (multimodal)
-    "knn_classifier",         # majority-vote k-NN classifier (ML/ANN)
-    "douglas_peucker",        # fixed-round DP simplification (B5/geometry)
-    "mann_whitney_u",         # rank-sum test, midranks + ties (stats)
-    "hits_scores",            # fixed-point integer HITS (graph)
-    "series_autocorr",        # hourly-series ACF at lags 1..3 (stats)
-    "image_bilinear_upsample",  # exact x4-int 2x bilinear (B11/image)
-    "image_moments",          # raw moments + orientation (B11/image)
-    "logistic_gd",            # fixed-step quantized-gradient logistic (ML)
-    "halfplane_clip_area",    # edge-local clamped-Green overlay clip (B4-B10)
-    "als_user_factors",       # ALS half-step: distributed ridge solve (ML)
-    "dedup_containment",      # substring-containment dedup (dedup family)
-    "wkt_polygon_ingest",     # WKT polygon decode, declarative (A-interop)
-    "text_encoding_audit",    # mojibake/control/zero-width QA (curation)
-    "exact_order_statistics",  # histogram-narrowing exact k-th (C6 family)
-    "detection_iou_match",    # greedy IoU box assignment (vision QA)
-    "map_match_roads",        # nearest-road-segment snap (B8/B9 family)
-    "idw_interpolation",      # inverse-distance-weighted surface (B-stats)
-    "nms_boxes",              # non-max suppression unroll (vision QA)
-    "video_motion_vectors",   # block-matching motion search (B11/video)
-    "tile_render_png",        # density tiles through real PNG (B5xB11)
-    "knn_events_nations",
-    "sliding_window",
-    "revenue_by_nation",
-    "window_top3_per_brand",
-    "window_lag_lead_gaps",
-    "window_ntile_quartiles",
-    "union_parties",
-    "string_functions",
-    "date_trunc_monthly",
-    "json_extract_events",
-    "distinct_counts",
-    "percentiles_exact",
-    "convoy_pairs",       # B5/B7 spatio-temporal co-movement mining
-    "sssp_roads",         # weighted SSSP (graph family; BFS in-window kin)
-    "betweenness_roads",  # Brandes sampled betweenness (graph family)
-    "dp_noisy_counts",    # discrete-Laplace DP release (privacy family)
-    "trajectory_alignment",  # DTW + Frechet sequence alignment (staged DP)
-    "image_pyramid_stats",  # mipmap block-sum pyramid (B11/image)
-    "image_wht_satd",     # 8x8 Walsh-Hadamard SATD blocks (B11/codec)
-    "image_white_balance",  # gray-world integer-gain ISP pass (B11/image)
-    "image_bayer_demosaic",  # RGGB CFA + bilinear reconstruction (B11/ISP)
-    "pit_join_scd2",      # point-in-time SCD-2 dimension join (C5 family)
-    "average_precision",  # exact AP / PR-curve eval (ML eval family)
-    "audio_clipping_detect",  # saturation audit, real WAV (AV family)
-    "image_brief_descriptor",  # BRIEF binary descriptors (B11/CV)
-    "rouge_lcs_pairs",    # ROUGE-L staged-LCS eval (ML eval/text family)
-    "rrf_fusion",         # reciprocal-rank fusion top-k (IR family)
-    "business_day_lag",   # business-day calendar spans (C6/C7 family)
-    "geodesic_waypoints",  # great-circle slerp densification (B/geo)
-    "unigram_lm_round",   # SentencePiece-style unigram EM round (text/LM)
-    "randomized_response",  # Warner local-DP release (privacy family)
-    "url_canonicalize",   # canonical-URL dedup keying (curation family)
-    "elias_gamma_postings",  # postings compression estimate (IR/storage)
-    "feistel_pseudonymize",  # format-preserving id pseudonym (privacy)
-    "image_shear_warp",   # affine NN warp checksum (B11/augment)
-    "matrix_profile_hourly",  # motif/discord matrix profile (C6/C7)
-    "rhumb_lines",        # loxodrome bearing + distance (B/geo)
-    "temporal_reachability",  # time-respecting diffusion (temporal graph)
-    "auction_clearing",   # double-auction clearing price (C6/market)
-    "cross_k_function",   # bivariate Ripley cross-K (B stats family)
-    "image_haar_dwt",     # one-level Haar wavelet bands (B11/transform)
-    "impossible_travel",  # velocity anomaly detector (security/B)
-    "lucas_kanade_flow",  # gradient optical flow, real AVI (B11/video)
-    "hmm_map_match",      # Newson-Krumm HMM map matching (B8/B9 flagship)
-    "kalman_filter_series",  # fixed-unroll Kalman smoothing (C6/C7 state)
-    "skyline_3d",         # bucket-pruned 3-D Pareto skyline (C7/C8)
-    "conformal_interval",  # split-conformal coverage audit (ML/C6)
-    "bradley_terry",      # pairwise-preference MM ranking (ML/eval)
-    "qa_token_f1",        # extractive-QA EM + token F1 (ML eval/text)
-    "image_seam_carve",   # seam-carving DP over real decode (B11/CV)
-    "ndcg_at_k",          # graded NDCG@5 ranking quality (ML eval/IR)
-    "cuped_adjustment",   # CUPED variance-reduction readout (experiment)
-    "ipf_raking",         # IPF / raking survey calibration (C6/stats)
-    "ransac_line",        # RANSAC consensus line fit + OLS refit (ML)
-    "polyline_encode",    # Google Encoded Polyline interop (B1/geo)
-    "stable_matching",    # Gale-Shapley deferred acceptance (market)
-    "tsp_greedy_tour",    # nearest-neighbor tour over hub cells (route)
-    "brier_decomposition",  # Murphy forecast-eval decomposition (ML)
-    "areal_interpolation",  # dasymetric fence->grid reallocation (GIS)
-    "cross_track_distance",  # great-circle XTD/ATD route adherence (geo)
-    "crossmodal_recall",  # image<->caption retrieval recall@k (B11/IR)
-    "sax_words",          # SAX time-series symbolization (C6/mining)
-    "dp_exponential_choice",  # exponential-mechanism DP pick (privacy)
-    "recsys_hitrate",     # leave-last-out recommender hit@k eval (ML)
-    "audio_agc_gain",     # AGC peak-normalization transform (AV)
-    "video_keyframes",    # per-chunk keyframe extraction, real AVI (AV)
-    "image_median_cut",   # Heckbert palette quantization (B11/CV)
-    "group_sequential_test",  # O'Brien-Fleming interim looks (experiment)
-    "chaikin_smooth",     # corner-cutting path smoothing (B5/geometry)
-    "split_leakage_audit",  # near-dup pairs straddling the split (ML)
-    "rayleigh_uniformity",  # circular time-of-day periodicity test (C6)
-    "image_color_pca",    # channel-covariance power iteration (B11/ML)
-    "rolling_regression",  # trailing-24h windowed OLS slope (C6/C7)
-    "nearest_event_join",  # bidirectional nearest-in-time join (C5)
-    "type_profile_similarity",  # hourly-profile cosine matrix (C6)
-    "ucb_allocation",     # UCB1 bandit arm selection (experiment/ML)
-    "l_moments",          # Hosking L-moment shape statistics (C6)
-    "gumbel_fit",         # block-maxima Gumbel fit + return levels (C6)
-    "pot_exceedances",    # peaks-over-threshold GPD tail fit (C6)
-    "mmr_rerank",         # maximal-marginal-relevance rerank (IR)
-    "image_histogram_match",  # CDF histogram transfer (B11/image)
-]
-
-_MERGED: dict = {}
-for mod in (queries_shp, queries_spatial, queries_text, queries_rel,
-            queries_curation, queries_analytics, queries_mining,
-            queries_insights, queries_retrieval, queries_vision,
-            queries_ml, queries_patterns, queries_eval):
-    overlap = set(_MERGED) & set(mod.QUERIES)
+ALL_QUERIES: dict = {}
+for mod in (queries_shp, queries_spatial):
+    overlap = set(ALL_QUERIES) & set(mod.QUERIES)
     if overlap:
         raise RuntimeError(f"duplicate query names: {overlap}")
-    _MERGED.update(mod.QUERIES)
+    ALL_QUERIES.update(mod.QUERIES)
 
-_missing = [n for n in _TAIL if n not in _MERGED]
-if _missing:
-    raise RuntimeError(f"_TAIL names not registered: {_missing}")
-
-ALL_QUERIES: dict = {n: _MERGED[n] for n in _MERGED if n not in _TAIL}
 DRIVER_WINDOW = 50
-if len(ALL_QUERIES) > DRIVER_WINDOW:
-    raise RuntimeError(
-        f"{len(ALL_QUERIES)} core queries exceed the driver's "
-        f"{DRIVER_WINDOW}-query CORRECTNESS window; move redundant "
-        f"variants to _TAIL")
 
-# The driver-visible window, pinned EXPLICITLY: module import order and
-# per-module registration order are load-bearing, and a count check alone
-# can't catch an accidental reorder that swaps a gated query out of the
-# window (ADVICE r2). Any intentional change must update this list.
+# The gated window, pinned EXPLICITLY: module and per-module
+# registration order are load-bearing, and a count check alone can't catch
+# an accidental reorder that swaps a gated query out of the window. Any
+# intentional change must update this list.
 EXPECTED_WINDOW = (
     "shp_decode_points", "dbf_decode_types", "shp_polygon_rings",
     "shp_polyline_parts", "shp_zm_semantics", "shp_reproject_families",
-    "shp_decode_index_join", "shp_zip_bundle", "flac_decode_stats",
+    "shp_decode_index_join", "shp_webmerc_reproject", "shp_utm_reproject",
+    "shp_lcc_reproject", "shp_albers_reproject", "shp_stereo_reproject",
+    "shp_laea_reproject", "shp_merc3395_reproject",
+    "shp_sinusoidal_reproject", "shp_mollweide_reproject",
+    "shp_krovak_reproject", "shp_krovak_datum_reproject",
+    "shp_cassini_reproject", "shp_bonne_reproject", "shp_eckert4_reproject",
+    "shp_robinson_reproject", "shp_miller_reproject", "shp_vdg_reproject",
+    "shp_towgs84_reproject", "shp_equalearth_reproject",
+    "shp_aeqd_reproject", "shp_gnomonic_reproject", "shp_ortho_reproject",
+    "shp_cea_reproject", "shp_polyconic_reproject",
+    "shp_oblique_stereo_reproject", "shp_hom_reproject", "shp_zip_bundle",
     "images_phash_verify", "clip_coverage_stats", "tile_assign_events",
-    "cell_hierarchy", "polygon_cover_nations", "spatial_join_pairs",
-    "spatial_join_agg", "knn_events_nations_cells", "range_join_counts",
-    "images_hot_cell", "images_fence_join", "dedup_exact", "token_stats",
-    "quality_score", "langid_heuristic", "minhash_signatures",
-    "minhash_lsh_pairs", "simhash16", "bigram_jaccard", "doc_fingerprint",
-    "cosine_topk", "ann_lsh_buckets", "ann_ivf_search",
-    "dedup_embedding_near", "tumbling_window", "session_windows",
-    "user_session_features", "semantic_dedup", "pricing_summary",
-    "semi_join_open_orders", "anti_join_no_orders", "outer_join_order_counts",
-    "window_running_totals", "rollup_sales", "cube_orders", "set_ops_nations",
-    "asof_join_event_order", "conditional_pivot", "scalar_functions_suite",
-    "approx_sketches", "jpeg_decode_stats",
+    "cell_hierarchy", "cell_ring_sum", "polygon_cover_nations",
+    "spatial_join_pairs", "spatial_join_agg", "spatial_join_chunked",
+    "knn_events_nations", "knn_events_nations_cells", "range_join_counts",
+    "images_tile_density", "images_hot_cell", "images_fence_join",
+    "distance_join_events",
 )
-if tuple(ALL_QUERIES) != EXPECTED_WINDOW:
+if tuple(ALL_QUERIES)[:DRIVER_WINDOW] != EXPECTED_WINDOW:
     raise RuntimeError(
         "driver-window query order drifted from EXPECTED_WINDOW: "
         f"{[(a, b) for a, b in zip(ALL_QUERIES, EXPECTED_WINDOW) if a != b][:5]}")
-
-ALL_QUERIES.update({n: _MERGED[n] for n in _TAIL})
 
 
 def queries():

@@ -1,6 +1,6 @@
-"""Driver-contract smoke tests: entry() runs and returns rows; every
-queries() entry has matching columns with its oracle_sql(); iceberg-layout
-round-trip."""
+"""Entry-contract smoke tests: entry() runs and returns rows; every
+queries() entry has an oracle_sql() twin and matches it on sf0.001;
+iceberg-layout round-trip."""
 
 import sys
 
@@ -24,6 +24,24 @@ def test_registry_shapes():
     # rows-only entries are the documented non-SQL-expressible ones
     rows_only = set(qs) - set(os_)
     assert rows_only == set()
+
+
+def test_every_query_matches_its_duckdb_oracle(spark):
+    """The oracle differential of the entry contract: every registered query
+    at sf0.001 equals its DuckDB oracle in column names, row count and
+    order-insensitive values (tools/diffcheck.py runs the same check)."""
+    import __spark_entry__ as em
+    from tools.diffcheck import compare, oracle_connection
+
+    sf_dir = "/root/testdata/sf0.001"
+    con = oracle_connection(sf_dir)
+    oracles = em.oracle_sql()
+    bad = {}
+    for name, fn in em.queries().items():
+        status, detail = compare(spark, con, sf_dir, fn, oracles.get(name))
+        if status != "ok":
+            bad[name] = f"{status}: {detail}"
+    assert not bad, bad
 
 
 def test_iceberg_layout_roundtrip(spark, tmp_path):

@@ -345,3 +345,26 @@ def test_geojson_sink_roundtrip(spark, tmp_path):
 
     a, b = canon(feats), canon(back)
     assert len(a) > 0 and a == b
+
+
+def test_geojson_strings_reject_typed_geometry_without_coordinates():
+    """A non-null typed feature whose rank-4 coordinates are empty at the
+    level its type unwraps must fail loudly and name the feature, not
+    serialize the next feature's coordinates in its place."""
+    import pyarrow as pa
+    import pytest
+
+    rank4 = pa.list_(pa.list_(pa.list_(pa.list_(pa.float64()))))
+    pt = [[[[1.5, 2.5]]]]
+    cases = [("Point", []), ("Point", [[]]), ("Point", [[[]]]),
+             ("LineString", []), ("MultiPoint", [[]]), ("Polygon", [])]
+    for gtype, empty in cases:
+        coords = pa.array([pt, empty, pt], type=rank4)
+        with pytest.raises(ValueError, match=r"feature 1\b"):
+            ingest._geojson_geometry_strings(["Point", gtype, "Point"],
+                                             coords)
+    ok = ingest._geojson_geometry_strings(
+        ["Point", "MultiPolygon", None],
+        pa.array([pt, [], None], type=rank4))
+    assert ok == ['{"type":"Point","coordinates":[1.5,2.5]}',
+                  '{"type":"MultiPolygon","coordinates":[]}', "null"]

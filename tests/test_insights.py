@@ -1607,7 +1607,7 @@ def test_graph_modularity_matches_definitional_sum(spark):
 def test_audio_resample_matches_sequential_lerp(spark):
     """Float linear interpolation at t = 3j/2 (×2 to compare against the
     doubled-int representation) must reproduce every gated stream stat."""
-    from spark_shp.queries_shp import N_RS, q_audio_resample_stats
+    from spark_shp.queries_insights import N_RS, q_audio_resample_stats
     exp = {}
     for i in range(N_RS):
         n = 100 + (i * 53) % 211

@@ -278,3 +278,86 @@ def test_decode_batch_grayscale_group():
     for o, r in zip(out, refs):
         assert np.array_equal(o, r)
         assert o.shape == (16, 16, 3)       # Y replicated to RGB
+
+
+def test_decode_batch_keeps_scan_table_bindings_apart():
+    """Two stream sets alike in frame, tables and restart cadence but
+    binding the chroma components to different Huffman tables in SOS
+    must not share one walker run: each decodes as the scalar path does."""
+    rng = np.random.default_rng(8)
+    qty = jpeg.quality_scale(jpeg._QT_LUMA, 90)
+    qtc = jpeg.quality_scale(jpeg._QT_CHROMA, 90)
+    head = jpeg._jfif_header(24, 24, qty, qtc, False, 0)
+    sos = bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0])
+    assert head.endswith(sos)
+    head_luma = head[:-len(sos)] + bytes([3, 1, 0x00, 2, 0x00, 3, 0x00,
+                                          0, 63, 0])
+
+    def luma_bound_blob(im):
+        ycc = im.astype(np.float64).reshape(-1, 3) @ jpeg._RGB2YCC_T
+        planes = [ycc[:, 0].reshape(1, 24, 24),
+                  ycc[:, 1].reshape(1, 24, 24) + 128.0,
+                  ycc[:, 2].reshape(1, 24, 24) + 128.0]
+        zzs = [jpeg._component_blocks(planes[0], qty),
+               jpeg._component_blocks(planes[1], qtc),
+               jpeg._component_blocks(planes[2], qtc)]
+        scan, = jpeg._entropy_encode(
+            zzs, [1, 1, 1], [(jpeg._ENC_DC_Y, jpeg._ENC_AC_Y)] * 3, 0, 9)
+        return head_luma + scan + b"\xFF\xD9"
+
+    blobs = []
+    for i in range(16):
+        im = np.clip(rng.normal(128, 45, (24, 24, 3)), 0,
+                     255).astype(np.uint8)
+        blobs += [jpeg.jpeg_encode(im, 90), luma_bound_blob(im)]
+    refs = [jpeg.jpeg_decode(b) for b in blobs]
+    out = jpeg.jpeg_decode_batch(blobs)
+    for o, r in zip(out, refs):
+        assert np.array_equal(o, r)
+
+
+def test_decode_batch_restart_without_rst_marker_matches_single():
+    """A DRI interval with no RST markers in the scan: the scalar path
+    resets the DC predictors at each interval and reads on; the walker
+    must do the same instead of indexing a segment that is not there."""
+    rng = np.random.default_rng(9)
+    blobs = []
+    for i in range(20):
+        im = np.clip(rng.normal(128, 45, (32, 40, 3)), 0,
+                     255).astype(np.uint8)
+        b = jpeg.jpeg_encode(im, 90)
+        k = b.index(b"\xFF\xDA")
+        blobs.append(b[:k] + jpeg._marker(0xDD, struct.pack(">H", 8))
+                     + b[k:])
+    refs = [jpeg.jpeg_decode(b) for b in blobs]
+    out = jpeg.jpeg_decode_batch(blobs)
+    for o, r in zip(out, refs):
+        assert np.array_equal(o, r)
+
+
+def test_decode_memory_is_bounded_by_the_scan_bytes():
+    """A 256x256 quality-95 noise image (about 144 KB of entropy-coded data)
+    decodes without one Python int per scan bit (57 MB here). The bound
+    follows the two phases: the bit windows (32 B per scan byte plus
+    fixed-size build chunks), then, once they are freed, the float IDCT and
+    colour planes (about 110 B per pixel). The output matches the
+    multi-stream walker, a separate Huffman decoder."""
+    import tracemalloc
+
+    i = np.arange(256 * 256 * 3, dtype=np.uint64)
+    px = ((i * np.uint64(2654435761) + np.uint64(12345)) % np.uint64(2**32)
+          >> np.uint64(24)).astype(np.uint8).reshape(256, 256, 3)
+    blob = jpeg.jpeg_encode(px, quality=95)
+    scan = len(jpeg._parse_stream(blob)[4])
+    assert scan > 100_000           # the scan, not the pixels, is large
+    jpeg.jpeg_decode(blob)          # fills the per-table Huffman LUT memo
+    tracemalloc.start()
+    try:
+        out = jpeg.jpeg_decode(blob)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    bound = max(40 * scan, 128 * 256 * 256) + 4e6
+    assert peak <= bound, f"peak {peak / 1e6:.1f} MB > {bound / 1e6:.1f} MB"
+    assert bound <= 57e6 / 4
+    assert np.array_equal(out, jpeg.jpeg_decode_batch([blob], min_batch=1)[0])

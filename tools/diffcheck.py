@@ -1,6 +1,8 @@
-"""Local mimic of the driver's oracle differential: run every queries() entry
-in Spark and its oracle_sql() in DuckDB on the same sf dir; compare row count,
-column names, and order-insensitive value multiset.
+"""Oracle differential of the query modules: run every query of every
+``spark_shp/queries_*.py`` module in Spark and its oracle SQL in DuckDB on the
+same sf dir; compare row count, column names, and order-insensitive value
+multiset. The registry's queries (the ``__spark_entry__`` contract) come
+first; the modules the registry does not merge are checked as well.
 
 Usage: python tools/diffcheck.py [sf_dir] [name_filter...]
 """
@@ -32,73 +34,100 @@ def canon(rows, cols):
     return sorted(tuple(norm_cell(r[i]) for i in order) for r in rows)
 
 
-def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    filters = sys.argv[2:]
-
+def oracle_connection(sf_dir: str):
+    """DuckDB connection with one view per input table of ``sf_dir``."""
     import duckdb
-    sys.path.insert(0, "/root/repo")
-    import __spark_entry__ as entrymod
-    from spark_shp.session import get_spark
-
-    spark = get_spark(cpus=16)
-    spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
                 f"read_parquet('{sf_dir}/{t}.parquet')")
+    return con
 
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+
+def every_query() -> dict:
+    """name -> (spark_fn, oracle_sql | None) over every ``queries_*`` module
+    of spark_shp: the registry's queries first, in registry order, then the
+    QUERIES of the modules the registry does not merge."""
+    import importlib
+    import pkgutil
+
+    import spark_shp
+    from spark_shp.registry import ALL_QUERIES
+
+    merged = dict(ALL_QUERIES)
+    for info in pkgutil.iter_modules(spark_shp.__path__):
+        if not info.name.startswith("queries_"):
+            continue
+        mod = importlib.import_module(f"spark_shp.{info.name}")
+        for name, entry in mod.QUERIES.items():
+            if merged.setdefault(name, entry) is not entry:
+                raise RuntimeError(f"duplicate query name: {name}")
+    return merged
+
+
+def compare(spark, con, sf_dir: str, fn, sql) -> tuple[str, str]:
+    """One query's differential: run ``fn`` in Spark and its oracle ``sql``
+    in DuckDB, compare column names, row count and the order-insensitive
+    value multiset. Returns (status, detail), status one of "ok", "FAIL"
+    and "rows" (no oracle)."""
+    try:
+        sdf = fn(spark, sf_dir)
+        scols = sdf.columns
+        srows = [tuple(r) for r in sdf.collect()]
+    except Exception as ex:
+        return "FAIL", f"spark error: {ex}"
+    if sql is None:
+        return "rows", f"{len(srows)} rows (no oracle)"
+    try:
+        rel = con.sql(sql)
+        ocols = [c.lower() for c in rel.columns]
+        orows = rel.fetchall()
+    except Exception as ex:
+        return "FAIL", f"duckdb error: {ex}"
+    scols_l = [c.lower() for c in scols]
+    problems = []
+    if sorted(scols_l) != sorted(ocols):
+        problems.append(f"cols {scols_l} vs {ocols}")
+    if len(srows) != len(orows):
+        problems.append(f"rowcount {len(srows)} vs {len(orows)}")
+    if not problems:
+        cs, co = canon(srows, scols_l), canon(orows, ocols)
+        if cs != co:
+            bad = next((i, a, b) for i, (a, b) in
+                       enumerate(zip(cs, co)) if a != b)
+            problems.append(f"values differ, first diff row "
+                            f"{bad[0]}: {bad[1]} vs {bad[2]}")
+    if problems:
+        return "FAIL", "; ".join(problems)
+    return "ok", f"{len(srows)} rows"
+
+
+def main():
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+    filters = sys.argv[2:]
+
+    sys.path.insert(0, "/root/repo")
+    from spark_shp.session import get_spark
+
+    spark = get_spark(cpus=16)
+    spark.sparkContext.setLogLevel("ERROR")
+    con = oracle_connection(sf_dir)
+
+    qs = every_query()
     if filters:
         qs = {k: v for k, v in qs.items()
               if any(f in k for f in filters)}
-    passed = failed = rows_only = 0
-    for name, fn in qs.items():
+    counts = {"ok": 0, "FAIL": 0, "rows": 0}
+    for name, (fn, sql) in qs.items():
         t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-        except Exception as ex:
-            print(f"FAIL  {name}: spark error: {ex}")
-            failed += 1
-            continue
-        sql = oracles.get(name)
-        if sql is None:
-            print(f"rows  {name}: {len(srows)} rows (no oracle) "
-                  f"[{time.time()-t0:.1f}s]")
-            rows_only += 1
-            continue
-        try:
-            rel = con.sql(sql)
-            ocols = [c.lower() for c in rel.columns]
-            orows = rel.fetchall()
-        except Exception as ex:
-            print(f"FAIL  {name}: duckdb error: {ex}")
-            failed += 1
-            continue
-        scols_l = [c.lower() for c in scols]
-        problems = []
-        if sorted(scols_l) != sorted(ocols):
-            problems.append(f"cols {scols_l} vs {ocols}")
-        if len(srows) != len(orows):
-            problems.append(f"rowcount {len(srows)} vs {len(orows)}")
-        if not problems:
-            cs, co = canon(srows, scols_l), canon(orows, ocols)
-            if cs != co:
-                bad = next((i, a, b) for i, (a, b) in
-                           enumerate(zip(cs, co)) if a != b)
-                problems.append(f"values differ, first diff row "
-                                f"{bad[0]}: {bad[1]} vs {bad[2]}")
-        if problems:
-            print(f"FAIL  {name}: {'; '.join(problems)}")
-            failed += 1
-        else:
-            print(f"ok    {name}: {len(srows)} rows [{time.time()-t0:.1f}s]")
-            passed += 1
-    print(f"\n{passed} ok, {failed} FAIL, {rows_only} rows-only")
+        status, detail = compare(spark, con, sf_dir, fn, sql)
+        counts[status] += 1
+        tail = "" if status == "FAIL" else f" [{time.time()-t0:.1f}s]"
+        print(f"{status:<6}{name}: {detail}{tail}")
+    print(f"\n{counts['ok']} ok, {counts['FAIL']} FAIL, "
+          f"{counts['rows']} rows-only")
     spark.stop()
-    return 1 if failed else 0
+    return 1 if counts["FAIL"] else 0
 
 
 if __name__ == "__main__":

@@ -16,9 +16,6 @@ from __future__ import annotations
 
 import sys
 
-TABLES = ("region nation customer supplier part orders lineitem events "
-          "documents embeddings").split()
-
 # canonical vocabulary both engines map into
 _DUCK = {
     "BOOLEAN": "bool",
@@ -62,24 +59,19 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     filters = sys.argv[2:]
 
-    import duckdb
     sys.path.insert(0, "/root/repo")
-    import __spark_entry__ as entrymod
     from spark_shp.session import get_spark
+    from tools.diffcheck import every_query, oracle_connection
 
     spark = get_spark(cpus=8)
     spark.sparkContext.setLogLevel("ERROR")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
-                f"read_parquet('{sf_dir}/{t}.parquet')")
+    con = oracle_connection(sf_dir)
 
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    qs = every_query()
     if filters:
         qs = {k: v for k, v in qs.items() if any(f in k for f in filters)}
     ok = bad = skipped = 0
-    for name, fn in qs.items():
-        sql = oracles.get(name)
+    for name, (fn, sql) in qs.items():
         if sql is None:
             skipped += 1
             continue
