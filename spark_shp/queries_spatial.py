@@ -455,18 +455,15 @@ def _bigpoly_edges_values_sql() -> str:
 
 
 def q_spatial_join_chunked(spark, sf_dir):
-    """B7 chunked distributed-inline path under the DRIVER gate: event
-    points PIP-joined to >MAX_INLINE_EDGES polygons (72- and 80-edge, one
-    with a hole) via edge-chunked cover rows + summed codegen crossings —
-    the route auto-picked for big many-edge layers, here forced explicitly
-    with chunk=16 (5 chunks/polygon). The oracle ray-casts the identical
-    edge table in SQL; even-odd hole semantics included."""
+    """B7 chunked refine on the distributed placement under the DRIVER
+    gate: event points PIP-joined to >MAX_INLINE_EDGES polygons (72- and
+    80-edge, one with a hole) via edge-chunked cover rows (2 chunks per
+    polygon) + summed codegen crossings. The oracle ray-casts the
+    identical edge table in SQL; even-odd hole semantics included."""
     pts = _event_points(spark, sf_dir)
     polys = _bigpoly_df(spark)
     j = spatial.spatial_join(pts, polys, "lon", "lat", level=LVL,
-                             broadcast_cover=False,
-                             distributed_inline_edges=16,
-                             distributed_chunked=True)
+                             broadcast_cover=False)
     return j.select("event_id", "poly_id")
 
 

@@ -6,13 +6,16 @@ Design (Spark-first, scale-first):
   inside whole-stage codegen, no Python in the hot path, pushdown-friendly.
 * ``spatial_join`` is the canonical two-stage plan: coarse equi-join on cell
   id (polygon side exploded to its cell cover, point side tile-assigned at
-  the same level) followed by exact ray-cast PIP refinement.  The polygon
-  cover is typically small → ``F.broadcast`` hint; AQE handles residual skew.
-  At 100 TB the equi-join on int64 cells is the only shuffle, and it
-  partitions by cell — spatial locality comes for free.
-* Exact PIP refinement runs as a grouped Arrow kernel (``applyInPandas`` by
-  poly_id): one vectorized numpy ray-cast per (polygon, candidate-point
-  batch) — no per-row Python.
+  the same level) followed by exact ray-cast PIP refinement.  At 100 TB the
+  equi-join on int64 cells is the only shuffle, and it partitions by cell —
+  spatial locality comes for free.
+* One cover builder (:func:`_cover_rows`) emits every cover row, carrying
+  its polygon's edges in flat padded columns, so the refine is the same
+  codegen SQL ray-cast whether the cover is built on the driver and
+  broadcast (small layers) or built distributed in one ``mapInPandas``
+  (big layers): a parity filter when every polygon fits one row, a summed
+  crossing count per (point, polygon) when wide polygons split into edge
+  chunks. No Python runs between the candidate join and the output.
 * ``knn_join`` ships two strategies: broadcast brute-force top-k (the RIGHT
   plan when the build side is a small dimension — Catalyst keeps it a single
   stage) and cell-ring expansion (the scale path when both sides are large).
@@ -36,9 +39,26 @@ def tile_assign(df: DataFrame, lon_col: str, lat_col: str, level: int,
     return df.withColumn(out_col, F.expr(cells.cell_sql(lon_col, lat_col, level)))
 
 
+# Widest edge table one cover row carries: the inline refine is one codegen
+# expression of this many padded edges (compile time + register pressure
+# grow with it); fence/nation layers sit at ≤ 12. Wider polygons split into
+# chunks of this many edges whose crossing counts are summed.
+MAX_INLINE_EDGES = 64
+
+# Auto-route threshold: polygon layers up to this many rows collect+broadcast
+# (cover rows ≈ polys × cells/poly, each ≤ ~2 KB with 64 padded edge cols —
+# well under Spark's broadcast comfort zone); bigger layers stay distributed.
+AUTO_BROADCAST_MAX_POLYS = 4096
+
+EDGE_FIELDS = ("x1", "y1", "x2", "y2")
+
+
+def _edge_cols(width: int) -> list[str]:
+    return [f"_ej{i}_{k}" for i in range(width) for k in EDGE_FIELDS]
+
+
 def _bbox_cover_np(xmin, ymin, xmax, ymax, level: int) -> np.ndarray:
     """All cell ids at ``level`` whose grid square intersects the bbox."""
-    n = 1 << level
     ix0, iy0 = cells.quantize(np.array([xmin]), np.array([ymin]), level)
     ix1, iy1 = cells.quantize(np.array([xmax]), np.array([ymax]), level)
     xs = np.arange(ix0[0], ix1[0] + 1, dtype=np.int64)
@@ -48,85 +68,92 @@ def _bbox_cover_np(xmin, ymin, xmax, ymax, level: int) -> np.ndarray:
             << cells.LEVEL_BITS) | level
 
 
-def polygon_cover(polys: DataFrame, level: int,
-                  refine: bool = True) -> DataFrame:
-    """B4: (poly_id, cell_id) cover — cells intersecting each polygon.
-
-    bbox cover, optionally refined by rejecting cells whose grid square
-    provably misses every part's bbox (cheap conservative refine; the exact
-    PIP stage downstream keeps correctness regardless of cover looseness).
-    """
-    schema = T.StructType([
-        T.StructField("poly_id", T.LongType()),
-        T.StructField("cell_id", T.LongType()),
-    ])
-
-    def cover(pdf_iter):
-        for pdf in pdf_iter:
-            out_p, out_c = [], []
-            for pid, bbox in zip(pdf["poly_id"], pdf["bbox"]):
-                cc = _bbox_cover_np(bbox["xmin"], bbox["ymin"],
-                                    bbox["xmax"], bbox["ymax"], level)
-                out_p.extend([pid] * len(cc))
-                out_c.extend(cc.tolist())
-            yield pd.DataFrame({"poly_id": out_p, "cell_id": out_c})
-
-    return polys.select("poly_id", "bbox").mapInPandas(cover, schema)
+def _polygon_edges(coords) -> np.ndarray:
+    """(m, 4) edge table of one polygon's (part, ring, point) coordinates.
+    Arrow hands the ragged nesting as object ndarrays, on which
+    np.asarray(dtype=float) is unreliable — stack the points explicitly."""
+    return geom.rings_to_edges(
+        [np.stack([np.asarray(p, dtype=np.float64) for p in ring])
+         for part in (coords if coords is not None else []) for ring in part])
 
 
-def _pip_refine(points_with_poly: DataFrame, polys: DataFrame,
-                lon_col: str, lat_col: str,
-                edges_by_poly: dict | None = None) -> DataFrame:
-    """Exact PIP filter of candidate (point, poly_id) pairs.
+def _cover_schema(width: int, chunked: bool) -> T.StructType:
+    keys = ["poly_id", "cell_id"] + (["chunk_no"] if chunked else [])
+    return T.StructType([T.StructField(c, T.LongType()) for c in keys]
+                        + [T.StructField(c, T.DoubleType())
+                           for c in _edge_cols(width)])
 
-    Runs SHUFFLE-FREE: a mapInPandas over whatever partitioning the
-    candidate join produced, grouping by poly_id only WITHIN each Arrow
-    batch (one vectorized ray-cast per polygon per batch) against the
-    broadcast edge dict. A groupBy(poly_id) refine would re-shuffle all
-    candidates and concentrate the hot cell's 30% of rows in one task —
-    this shape keeps the flagship plan at a single shuffle (the final agg)
-    and immune to polygon skew."""
-    if edges_by_poly is None:
-        geo = {r["poly_id"]: r["coordinates"]
-               for r in polys.select("poly_id", "coordinates").collect()}
-        # Polygon layer is small by contract here (broadcast path); ship the
-        # coordinate dict to executors once.
-        edges_by_poly = {pid: geom.rings_to_edges(
-            [np.asarray(ring, dtype=np.float64)
-             for poly in coords for ring in poly])
-            for pid, coords in geo.items()}
-    edges = edges_by_poly
-    spark = points_with_poly.sparkSession
-    bc = spark.sparkContext.broadcast(edges)
-    schema = points_with_poly.schema
 
-    def refine(batches):
+def _cover_rows(poly_ids, bboxes, edges, level: int, width: int,
+                chunked: bool) -> pd.DataFrame:
+    """The cover builder: one row per (polygon, cell of its bbox at
+    ``level``, edge chunk) with columns ``poly_id, cell_id, [chunk_no,]
+    _ej{i}_{x1,y1,x2,y2}`` for ``i < width``.
+
+    A polygon's edge table (``edges[i]``, from :func:`_polygon_edges`) is
+    padded with degenerate (0,0,0,0) edges — they never straddle a ray — to
+    ⌈E/width⌉ chunks of ``width`` edges. Without ``chunked`` every polygon
+    must fit one chunk: a wider one raises instead of emitting rows that a
+    per-row parity filter would get wrong. ``width=0`` carries no edges
+    (``edges`` is not read): the bare (poly_id, cell_id) cover."""
+    empty = np.zeros(0, dtype=np.int64)
+    pid_out, cell_out, chunk_out = [empty], [empty], [empty]
+    edge_out = [np.zeros((0, 4 * width))]
+    for i, (pid, bb) in enumerate(zip(poly_ids, bboxes)):
+        cc = _bbox_cover_np(bb["xmin"], bb["ymin"], bb["xmax"], bb["ymax"],
+                            level)
+        chunks = np.zeros((1, 0))
+        if width:
+            e = edges[i]
+            n_chunks = max(1, -(-len(e) // width))
+            if n_chunks > 1 and not chunked:
+                raise ValueError(f"polygon {pid}: {len(e)} edges > {width}")
+            pad = np.zeros((n_chunks * width, 4))
+            pad[: len(e)] = e
+            chunks = pad.reshape(n_chunks, width * 4)
+        n = len(chunks)
+        pid_out.append(np.full(len(cc) * n, pid, dtype=np.int64))
+        cell_out.append(np.repeat(cc, n))
+        chunk_out.append(np.tile(np.arange(n, dtype=np.int64), len(cc)))
+        edge_out.append(np.tile(chunks, (len(cc), 1)))
+    keys = {"poly_id": pid_out, "cell_id": cell_out}
+    if chunked:
+        keys["chunk_no"] = chunk_out
+    return pd.concat(
+        [pd.DataFrame({k: np.concatenate(v) for k, v in keys.items()}),
+         pd.DataFrame(np.concatenate(edge_out), columns=_edge_cols(width))],
+        axis=1)
+
+
+def _cover_df(polys: DataFrame, level: int, width: int,
+              chunked: bool) -> DataFrame:
+    """:func:`_cover_rows` over a distributed polygon layer, in one
+    mapInPandas (no driver collect)."""
+    def cover(batches):
         for pdf in batches:
-            if not len(pdf):
-                continue
-            keep = np.zeros(len(pdf), dtype=bool)
-            lon = pdf[lon_col].to_numpy()
-            lat = pdf[lat_col].to_numpy()
-            for pid, idx in pdf.groupby("poly_id").indices.items():
-                e = bc.value.get(pid)
-                if e is None or len(e) == 0:
-                    continue
-                keep[idx] = (geom.crossings_chunked(lon[idx], lat[idx], e)
-                             % 2) == 1
-            yield pdf[keep]
+            edges = ([_polygon_edges(c) for c in pdf["coordinates"]]
+                     if width else None)
+            yield _cover_rows(pdf["poly_id"], pdf["bbox"], edges, level,
+                              width, chunked)
 
-    return points_with_poly.mapInPandas(refine, schema)
+    cols = ["poly_id", "bbox"] + (["coordinates"] if width else [])
+    return polys.select(*cols).mapInPandas(cover,
+                                           _cover_schema(width, chunked))
 
 
-# Above this many edges per polygon the inline-SQL refine expression stops
-# being worth codegen'ing (compile time + register pressure) and the Arrow
-# kernel path wins; fence/nation layers sit at ≤ 12.
-MAX_INLINE_EDGES = 64
+def polygon_cover(polys: DataFrame, level: int) -> DataFrame:
+    """B4: (poly_id, cell_id) cover — every cell at ``level`` whose grid
+    square intersects the polygon's bbox."""
+    return _cover_df(polys, level, 0, False)
 
-# Auto-route threshold: polygon layers up to this many rows collect+broadcast
-# (cover rows ≈ polys × cells/poly, each ≤ ~2 KB with 64 padded edge cols —
-# well under Spark's broadcast comfort zone); bigger layers stay distributed.
-AUTO_BROADCAST_MAX_POLYS = 4096
+
+def polygon_cover_edges(polys: DataFrame, level: int,
+                        max_edges: int) -> DataFrame:
+    """Distributed (poly_id, cell_id, edge-columns) cover: like
+    polygon_cover but each row carries ``max_edges`` padded edge columns
+    of its polygon. A polygon with more edges spans several rows per cell,
+    one per edge chunk."""
+    return _cover_df(polys, level, max_edges, True).drop("chunk_no")
 
 
 def _inline_crossings_sum(max_e: int, lon_col: str, lat_col: str) -> str:
@@ -137,8 +164,8 @@ def _inline_crossings_sum(max_e: int, lon_col: str, lat_col: str) -> str:
     ``(y1 > py) != (y2 > py)``, same left-to-right float64 expression for the
     crossing x). Padding slots are degenerate edges (0,0,0,0): the straddle
     conjunct is false, so they contribute 0 crossings. Crossings are
-    ADDITIVE over any partition of the edge set — the chunked distributed
-    path sums this expression across edge chunks before taking parity.
+    ADDITIVE over any partition of the edge set — the chunked refine sums
+    this expression across edge chunks before taking parity.
     """
     terms = []
     for i in range(max_e):
@@ -158,273 +185,113 @@ def _inline_parity_predicate(max_e: int, lon_col: str, lat_col: str) -> str:
 
 
 def _probe_layer(polys: DataFrame) -> tuple[int, int]:
-    """(row count, max edges per polygon) in ONE aggregation job — the
-    auto-route probe for :func:`spatial_join`. Edge count is a pure SQL
-    aggregate over the ragged coordinates (Σ rings (len-1)), so the probe
-    never deserializes geometry into Python."""
-    ring_edges = F.aggregate(
-        F.flatten(F.col("coordinates")), F.lit(0),
-        lambda acc, ring: acc + F.size(ring) - F.lit(1))
+    """(row count, max edges per polygon) in ONE aggregation job, never
+    deserializing geometry into Python. A ring counts its edges as
+    :func:`geom.rings_to_edges` builds them: one per consecutive point
+    pair, plus the wrap edge when the first and last points differ (NaN
+    differs from itself there)."""
+    def ring_edges(ring):
+        first, last = F.get(ring, 0), F.get(ring, F.size(ring) - 1)
+        closed = (first == last) & ~F.exists(first, F.isnan)
+        return F.size(ring) - F.when(closed, 1).otherwise(0)
+
+    n_edges = F.aggregate(F.flatten(F.col("coordinates")), F.lit(0),
+                          lambda acc, ring: acc + ring_edges(ring))
     row = polys.agg(F.count(F.lit(1)).alias("n"),
-                    F.max(ring_edges).alias("max_e")).collect()[0]
+                    F.max(n_edges).alias("max_e")).collect()[0]
     return int(row["n"]), int(row["max_e"] or 0)
-
-
-def polygon_cover_edges(polys: DataFrame, level: int,
-                        max_edges: int) -> DataFrame:
-    """Distributed (poly_id, cell_id, edge-columns) cover: like
-    polygon_cover but each cover row carries its polygon's edge table
-    flattened into degenerate-padded columns, so the downstream candidate
-    join can refine with the inline-codegen parity predicate — no
-    Python stage, no broadcast of the polygon layer. Polygons with more
-    than ``max_edges`` edges raise (callers route those to the Arrow
-    refine)."""
-    cols = (["poly_id", "cell_id"]
-            + [f"_ej{i}_{k}" for i in range(max_edges)
-               for k in ("x1", "y1", "x2", "y2")])
-    schema = T.StructType(
-        [T.StructField("poly_id", T.LongType()),
-         T.StructField("cell_id", T.LongType())]
-        + [T.StructField(c, T.DoubleType()) for c in cols[2:]])
-
-    def cover(pdf_iter):
-        for pdf in pdf_iter:
-            out = []
-            for pid, bbox, coords in zip(pdf["poly_id"], pdf["bbox"],
-                                         pdf["coordinates"]):
-                # Arrow hands the ragged nesting as object ndarrays;
-                # np.asarray(obj_array, dtype=float) is unreliable on
-                # those — stack the point arrays explicitly
-                raw = coords if coords is not None else []
-                e = geom.rings_to_edges(
-                    [np.stack([np.asarray(p, dtype=np.float64)
-                               for p in ring])
-                     for poly in raw for ring in poly])
-                if len(e) > max_edges:
-                    raise ValueError(
-                        f"polygon {pid}: {len(e)} edges > {max_edges}; "
-                        "use the Arrow-refine path")
-                pad = np.zeros((max_edges, 4))
-                pad[: len(e)] = e
-                flat = pad.ravel()
-                cc = _bbox_cover_np(bbox["xmin"], bbox["ymin"],
-                                    bbox["xmax"], bbox["ymax"], level)
-                for c in cc.tolist():
-                    out.append((pid, c, *flat))
-            yield pd.DataFrame(out, columns=cols)
-
-    return (polys.select("poly_id", "bbox", "coordinates")
-            .mapInPandas(cover, schema))
-
-
-def polygon_cover_edges_chunked(polys: DataFrame, level: int,
-                                chunk_edges: int) -> DataFrame:
-    """Distributed (poly_id, chunk_no, cell_id, edge-columns) cover for
-    polygons of ANY edge count: each polygon's edge table splits into
-    ⌈E/chunk_edges⌉ degenerate-padded chunks and every cover cell carries
-    every chunk. Crossing counts are additive over the chunk partition, so
-    the downstream join refines by SUMming the inline crossings expression
-    per (point, polygon) and taking parity — arbitrarily large polygons
-    with no Python refine and no driver-side layer collect (the two things
-    the other >64-edge paths required)."""
-    cols = (["poly_id", "chunk_no", "cell_id"]
-            + [f"_ej{i}_{k}" for i in range(chunk_edges)
-               for k in ("x1", "y1", "x2", "y2")])
-    schema = T.StructType(
-        [T.StructField("poly_id", T.LongType()),
-         T.StructField("chunk_no", T.LongType()),
-         T.StructField("cell_id", T.LongType())]
-        + [T.StructField(c, T.DoubleType()) for c in cols[3:]])
-
-    def cover(pdf_iter):
-        for pdf in pdf_iter:
-            out = []
-            for pid, bbox, coords in zip(pdf["poly_id"], pdf["bbox"],
-                                         pdf["coordinates"]):
-                raw = coords if coords is not None else []
-                e = geom.rings_to_edges(
-                    [np.stack([np.asarray(p, dtype=np.float64)
-                               for p in ring])
-                     for poly in raw for ring in poly])
-                n_chunks = max(1, -(-len(e) // chunk_edges))
-                pad = np.zeros((n_chunks * chunk_edges, 4))
-                pad[: len(e)] = e
-                chunks = pad.reshape(n_chunks, chunk_edges * 4)
-                cc = _bbox_cover_np(bbox["xmin"], bbox["ymin"],
-                                    bbox["xmax"], bbox["ymax"], level)
-                for c in cc.tolist():
-                    for k in range(n_chunks):
-                        out.append((pid, k, c, *chunks[k]))
-            yield pd.DataFrame(out, columns=cols)
-
-    return (polys.select("poly_id", "bbox", "coordinates")
-            .mapInPandas(cover, schema))
 
 
 def spatial_join(points: DataFrame, polys: DataFrame, lon_col: str,
                  lat_col: str, level: int = 6,
                  broadcast_cover: bool | None = None,
-                 distributed_inline_edges: int | None = None,
-                 distributed_chunked: bool = False,
                  salt_hot: int = 0, salt_factor: int = 16) -> DataFrame:
     """B7: inner point-in-polygon join → points columns + ``poly_id``.
 
     Stage 1: tile-assign points at ``level`` (pure codegen SQL); equi-join
-    against the polygon layer's cell cover.
-    Stage 2: exact even-odd ray-cast refinement.
+    against the polygon layer's cell cover, whose rows carry their
+    polygon's edges (:func:`_cover_rows`).
+    Stage 2: exact even-odd ray-cast refinement as codegen SQL over those
+    edge columns — no Python stage on either placement.
 
-    ``broadcast_cover=None`` (default) AUTO-ROUTES: one cheap aggregation
-    over the polygon layer (count + max edges per polygon — layers are the
-    small side of this join by orders of magnitude, so the probe is not a
-    second scan of anything big) picks
-      * layer ≤ AUTO_BROADCAST_MAX_POLYS → broadcast path (inline codegen
-        refine when max_e ≤ MAX_INLINE_EDGES, Arrow kernel refine above);
-      * bigger layer, inline-able polygons → distributed-inline path (the
-        5.9x-at-192M plan; composes with salt_hot);
-      * bigger layer, >MAX_INLINE_EDGES polygons → CHUNKED
-        distributed-inline path (crossings are additive over edge chunks:
-        sum the inline crossings expression per (point, polygon), parity
-        at the end) — still zero Python refine and zero driver-side layer
-        collect, at the cost of one (rid, poly)-keyed count aggregation.
-    Callers with a known shape pass broadcast_cover explicitly and skip the
-    probe (every repeated-query site in queries_*.py does).
+    Placement (``broadcast_cover``):
+      * True — the layer is collected once, its cover built driver-side and
+        broadcast-joined: the north rule's "AQE-aware broadcast of small
+        polygon layers". ``salt_hot`` does not apply (no shuffle to skew).
+      * False — the cover is built distributed in one mapInPandas and the
+        candidate join shuffles on cell; ``salt_hot`` > 0 salts the
+        ``salt_hot`` densest point cells across ``salt_factor`` keys (B13).
+      * None (default) — one aggregation over the layer (count + max edges
+        per polygon, :func:`_probe_layer`) picks True for layers of at most
+        AUTO_BROADCAST_MAX_POLYS polygons, else False. Callers with a known
+        shape pass it explicitly and skip the probe.
 
-    Broadcast path (small polygon layer — the north rule's "AQE-aware
-    broadcast of small polygon layers"): the layer is collected ONCE; its
-    cover is computed driver-side in numpy and broadcast-joined WITH the
-    polygon's edge table flattened into padded columns, so the refine is a
-    plain codegen'd filter — the whole join is a single JVM stage with ZERO
-    Python and ZERO shuffles (scaling evidence: a mapInPandas refine here
-    oversubscribes a box 2× — task thread + Python worker per core — and
-    inverted the local[8]→local[32] scaling curve). Polygons with more than
-    MAX_INLINE_EDGES edges fall back to the Arrow kernel refine
-    (_pip_refine); for big polygon layers pass broadcast_cover=False to
-    build the cover distributed (polygon_cover) and let AQE pick the join
-    strategy.
+    Refine, picked from the layer's widest polygon (``max_e`` edges):
+      * max_e ≤ MAX_INLINE_EDGES — every cover row holds its whole polygon,
+        and the refine is a plain parity filter. On the broadcast placement
+        the join is ONE BroadcastHashJoin with the parity as its condition:
+        a single JVM stage, zero shuffles (a mapInPandas refine here
+        oversubscribes a box 2× — task thread + Python worker per core —
+        and inverted the local[8]→local[32] scaling curve).
+      * wider — polygons split into MAX_INLINE_EDGES-edge chunks, one cover
+        row per (cell, chunk); crossings are additive over the chunks, so
+        the crossing count is summed per (point row, polygon) and parity
+        taken at the end. A transient row id keeps duplicate point rows
+        apart through that aggregation.
     """
+    max_e = None
     if broadcast_cover is None:
-        n_polys, max_edges = _probe_layer(polys)
-        if n_polys <= AUTO_BROADCAST_MAX_POLYS:
-            broadcast_cover = True
-        else:
-            broadcast_cover = False
-            if distributed_inline_edges is None and max_edges > 0:
-                if max_edges <= MAX_INLINE_EDGES:
-                    distributed_inline_edges = max_edges
-                else:
-                    distributed_inline_edges = MAX_INLINE_EDGES
-                    distributed_chunked = True
-    pts = tile_assign(points, lon_col, lat_col, level, "_sj_cell")
-    if not broadcast_cover:
-        if distributed_inline_edges and distributed_chunked:
-            # chunked distributed-inline: cover rows carry ⌈E/chunk⌉ edge
-            # chunks per polygon; refine = SUM of the codegen crossings
-            # expression over a (row-id, poly) group, parity at the end.
-            # Crossings are additive over any edge partition, so this is
-            # exact for polygons of ANY size — no Python, no layer collect.
-            # The transient _sj_rid keeps duplicate point rows distinct
-            # through the aggregation (it never reaches the output).
-            max_e = distributed_inline_edges
-            cover = (polygon_cover_edges_chunked(polys, level, max_e)
-                     .withColumnRenamed("cell_id", "_sj_cell"))
-            pts_r = pts.withColumn("_sj_rid",
-                                   F.monotonically_increasing_id())
-            if salt_hot:
-                pts_s, hot = salt_hot_cells(pts_r, "_sj_cell",
-                                            top_n=salt_hot,
-                                            salt_factor=salt_factor)
-                cover_s = explode_salts(cover, "_sj_cell", hot,
-                                        salt_factor=salt_factor)
-                cand = pts_s.join(cover_s.drop("_sj_cell"), "_salted_cell")
-            else:
-                cand = pts_r.join(cover, "_sj_cell", "inner")
-            cross = F.expr(_inline_crossings_sum(max_e, lon_col, lat_col))
-            pt_cols = list(points.columns)
-            agg = (cand.withColumn("_cross", cross)
-                   .groupBy("_sj_rid", "poly_id")
-                   .agg(*[F.first(c).alias(c) for c in pt_cols],
-                        F.sum("_cross").alias("_crossings")))
-            return (agg.where(F.col("_crossings") % 2 == 1)
-                    .select(*pt_cols, "poly_id"))
-        if distributed_inline_edges:
-            # big layer, small polygons: distributed cover CARRIES the
-            # padded edge columns, candidate equi-join shuffles on cell,
-            # refine is the same inline codegen predicate — no Python
-            # stage and no layer broadcast anywhere. salt_hot composes
-            # B13: the 30%-hot cell otherwise lands its candidates in one
-            # shuffle partition of the cell-keyed join
-            max_e = distributed_inline_edges
-            cover = (polygon_cover_edges(polys, level, max_e)
-                     .withColumnRenamed("cell_id", "_sj_cell"))
-            drop = ["_sj_cell"] + [f"_ej{i}_{k}" for i in range(max_e)
-                                   for k in ("x1", "y1", "x2", "y2")]
-            if salt_hot:
-                pts_s, hot = salt_hot_cells(pts, "_sj_cell",
-                                            top_n=salt_hot,
-                                            salt_factor=salt_factor)
-                cover_s = explode_salts(cover, "_sj_cell", hot,
-                                        salt_factor=salt_factor)
-                cand = pts_s.join(cover_s.drop("_sj_cell"), "_salted_cell")
-                drop.append("_salted_cell")
-            else:
-                cand = pts.join(cover, "_sj_cell", "inner")
-            kept = cand.where(F.expr(_inline_parity_predicate(
-                max_e, lon_col, lat_col)))
-            return kept.drop(*drop)
-        cover = (polygon_cover(polys, level)
-                 .withColumnRenamed("cell_id", "_sj_cell"))
-        cand = pts.join(cover, "_sj_cell", "inner").drop("_sj_cell")
-        return _pip_refine(cand, polys, lon_col, lat_col)
-
-    rows = polys.select("poly_id", "bbox", "coordinates").collect()
-    if not rows:
-        # empty polygon layer → empty join result, same schema as output
-        return (points.limit(0)
-                .withColumn("poly_id", F.lit(None).cast("long")))
-    edges_by_poly = {
-        r["poly_id"]: geom.rings_to_edges(
-            [np.asarray(ring, dtype=np.float64)
-             for poly in (r["coordinates"] or []) for ring in poly])
-        for r in rows}
-    max_e = max((len(e) for e in edges_by_poly.values()), default=0)
+        n_polys, max_e = _probe_layer(polys)
+        broadcast_cover = n_polys <= AUTO_BROADCAST_MAX_POLYS
+    if broadcast_cover:
+        rows = polys.select("poly_id", "bbox", "coordinates").collect()
+        edges = [_polygon_edges(r["coordinates"]) for r in rows]
+        max_e = max(map(len, edges), default=0)
+    elif max_e is None:
+        max_e = _probe_layer(polys)[1]
     if max_e == 0:
-        # every polygon is edge-less (empty coordinates): no point can be
-        # inside, and the inline path would otherwise emit the unparseable
-        # predicate "() % 2 = 1"
+        # empty or edge-less layer: no point can be inside, and a zero-width
+        # refine would be the unparseable predicate "() % 2 = 1"
         return (points.limit(0)
                 .withColumn("poly_id", F.lit(None).cast("long")))
-    spark = points.sparkSession
 
-    cov_p, cov_c = [], []
-    for r in rows:
-        cc = _bbox_cover_np(r["bbox"]["xmin"], r["bbox"]["ymin"],
-                            r["bbox"]["xmax"], r["bbox"]["ymax"], level)
-        cov_p.extend([r["poly_id"]] * len(cc))
-        cov_c.extend(cc.tolist())
-    cov = {"poly_id": pd.array(cov_p, dtype="int64"),
-           "_sj_cell": pd.array(cov_c, dtype="int64")}
+    width = min(max_e, MAX_INLINE_EDGES)
+    chunked = max_e > MAX_INLINE_EDGES
+    pts = tile_assign(points, lon_col, lat_col, level, "_sj_cell")
+    if chunked:
+        pts = pts.withColumn("_sj_rid", F.monotonically_increasing_id())
+    if broadcast_cover:
+        cover = points.sparkSession.createDataFrame(
+            _cover_rows([r["poly_id"] for r in rows],
+                        [r["bbox"] for r in rows], edges, level, width,
+                        chunked),
+            _cover_schema(width, chunked))
+        cand = pts.join(F.broadcast(cover.withColumnRenamed(
+            "cell_id", "_sj_cell")), "_sj_cell")
+    else:
+        cover = (_cover_df(polys, level, width, chunked)
+                 .withColumnRenamed("cell_id", "_sj_cell"))
+        if salt_hot:
+            pts_s, hot = salt_hot_cells(pts, "_sj_cell", top_n=salt_hot,
+                                        salt_factor=salt_factor)
+            cover_s = explode_salts(cover, "_sj_cell", hot,
+                                    salt_factor=salt_factor)
+            cand = pts_s.join(cover_s.drop("_sj_cell"), "_salted_cell")
+        else:
+            cand = pts.join(cover, "_sj_cell")
 
-    if max_e > MAX_INLINE_EDGES:
-        cover = F.broadcast(spark.createDataFrame(pd.DataFrame(cov)))
-        cand = pts.join(cover, "_sj_cell", "inner").drop("_sj_cell")
-        return _pip_refine(cand, polys, lon_col, lat_col,
-                           edges_by_poly=edges_by_poly)
-
-    # inline path: pad each polygon's edge table to max_e with degenerate
-    # (0,0,0,0) edges and flatten to per-edge double columns on the cover
-    pad = {pid: np.vstack([e, np.zeros((max_e - len(e), 4))])
-           if len(e) < max_e else e for pid, e in edges_by_poly.items()}
-    for i in range(max_e):
-        for k, name in enumerate(("x1", "y1", "x2", "y2")):
-            cov[f"_ej{i}_{name}"] = pd.array(
-                [float(pad[p][i, k]) for p in cov_p], dtype="float64")
-    cover = F.broadcast(spark.createDataFrame(pd.DataFrame(cov)))
-    cand = pts.join(cover, "_sj_cell", "inner")
-    kept = cand.where(F.expr(_inline_parity_predicate(max_e, lon_col,
-                                                      lat_col)))
-    drop = ["_sj_cell"] + [f"_ej{i}_{n}" for i in range(max_e)
-                           for n in ("x1", "y1", "x2", "y2")]
-    return kept.drop(*drop)
+    pt_cols = list(points.columns)
+    if not chunked:
+        kept = cand.where(F.expr(_inline_parity_predicate(width, lon_col,
+                                                          lat_col)))
+        return kept.select(*pt_cols, "poly_id")
+    cross = F.expr(_inline_crossings_sum(width, lon_col, lat_col))
+    agg = (cand.withColumn("_cross", cross)
+           .groupBy("_sj_rid", "poly_id")
+           .agg(*[F.first(c).alias(c) for c in pt_cols],
+                F.sum("_cross").alias("_crossings")))
+    return (agg.where(F.col("_crossings") % 2 == 1)
+            .select(*pt_cols, "poly_id"))
 
 
 def knn_join_broadcast(points: DataFrame, dims: DataFrame, k: int,
@@ -556,12 +423,9 @@ def distance_join_cells(left: DataFrame, right: DataFrame, radius: float,
     ``r_`` (like :func:`spatial_join`'s pair output)."""
     import math as _math
 
-    from . import cells
-
     # cell must be at least radius wide in BOTH axes (lat span 170 is the
     # binding constraint) so candidates are confined to the 3x3 ring
-    level = max(0, min(cells.LEVEL_MAX if hasattr(cells, "LEVEL_MAX")
-                       else 24,
+    level = max(0, min(cells.MAX_LEVEL,
                        int(_math.floor(_math.log2(170.0 / radius)))))
     ixl, iyl = cells.quantize_sql(lon_l, lat_l, level)
     ixr, iyr = cells.quantize_sql(lon_r, lat_r, level)

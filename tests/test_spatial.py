@@ -122,7 +122,7 @@ def test_explain_spatial_join_inline_is_pure_jvm(spark, points_df):
                    "FlatMapGroupsInPandas"):
         assert banned not in plan, f"Python stage {banned} in inline join"
     assert "BroadcastHashJoin" in plan
-    # >64-edge layers must still fall back to the Arrow kernel
+    # >64-edge layers take the chunked crossing sum: still no Python
     import pandas as pd
     import math
     ring = [[math.cos(2 * math.pi * k / 100) * 5 + 10,
@@ -140,43 +140,47 @@ def test_explain_spatial_join_inline_is_pure_jvm(spark, points_df):
                                 schema)
     plan2 = (spatial.spatial_join(points_df, big, "lon", "lat", level=6)
              ._jdf.queryExecution().executedPlan().toString())
-    assert "MapInPandas" in plan2
+    for banned in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython",
+                   "FlatMapGroupsInPandas"):
+        assert banned not in plan2, f"Python stage {banned} in chunked join"
 
 
-def test_distributed_inline_join_matches_broadcast(spark, points_df):
-    """All three spatial-join strategies produce identical pairs: broadcast
-    inline, distributed + Arrow refine, distributed + inline edges."""
+def test_distributed_inline_join_matches_broadcast(spark, points_df,
+                                                   monkeypatch):
+    """Both placements and both refines produce identical pairs: broadcast
+    parity filter, distributed parity filter, and distributed chunked sum
+    (forced by a 4-edge chunk width on the same fences)."""
     polys = fixtures.fences_df(spark, 16).drop("layer", "name")
     want = {(r.pid, r.poly_id) for r in spatial.spatial_join(
         points_df, polys, "lon", "lat", level=6).select(
         "pid", "poly_id").collect()}
-    arrow = {(r.pid, r.poly_id) for r in spatial.spatial_join(
+    distributed = {(r.pid, r.poly_id) for r in spatial.spatial_join(
         points_df, polys, "lon", "lat", level=6,
         broadcast_cover=False).select("pid", "poly_id").collect()}
-    inline = {(r.pid, r.poly_id) for r in spatial.spatial_join(
-        points_df, polys, "lon", "lat", level=6, broadcast_cover=False,
-        distributed_inline_edges=16).select("pid", "poly_id").collect()}
-    assert want == arrow == inline and len(want) > 0
+    monkeypatch.setattr(spatial, "MAX_INLINE_EDGES", 4)
+    chunked = {(r.pid, r.poly_id) for r in spatial.spatial_join(
+        points_df, polys, "lon", "lat", level=6,
+        broadcast_cover=False).select("pid", "poly_id").collect()}
+    assert want == distributed == chunked and len(want) > 0
 
 
 def test_distributed_inline_join_salted_matches(spark, points_df):
-    """B13 composed with the distributed-inline join: salted == unsalted."""
+    """B13 composed with the distributed placement: salted == unsalted."""
     polys = fixtures.fences_df(spark, 16).drop("layer", "name")
     plain = {(r.pid, r.poly_id) for r in spatial.spatial_join(
-        points_df, polys, "lon", "lat", level=6, broadcast_cover=False,
-        distributed_inline_edges=16).select("pid", "poly_id").collect()}
+        points_df, polys, "lon", "lat", level=6,
+        broadcast_cover=False).select("pid", "poly_id").collect()}
     salted = {(r.pid, r.poly_id) for r in spatial.spatial_join(
         points_df, polys, "lon", "lat", level=6, broadcast_cover=False,
-        distributed_inline_edges=16, salt_hot=4,
-        salt_factor=8).select("pid", "poly_id").collect()}
+        salt_hot=4, salt_factor=8).select("pid", "poly_id").collect()}
     assert salted == plain and len(plain) > 0
 
 
 def test_auto_route_probe_and_paths(spark, points_df, monkeypatch):
-    """broadcast_cover=None auto-routes: small layer → broadcast inline
-    (no Python, BroadcastHashJoin); layer above the threshold with
-    inline-able polygons → distributed-inline (no broadcast of the layer,
-    still no Python refine). Results identical either way."""
+    """broadcast_cover=None auto-routes: small layer → broadcast placement
+    (no Python, BroadcastHashJoin); layer above the threshold →
+    distributed placement (no broadcast of the layer, still no Python
+    refine). Results identical either way."""
     polys = fixtures.fences_df(spark, 16).drop("layer", "name")
     n, max_e = spatial._probe_layer(polys)
     assert n == 16 and 4 <= max_e <= 16
@@ -195,9 +199,9 @@ def test_auto_route_probe_and_paths(spark, points_df, monkeypatch):
     monkeypatch.setattr(spatial, "AUTO_BROADCAST_MAX_POLYS", 4)
     auto_big = spatial.spatial_join(points_df, polys, "lon", "lat", level=6)
     plan2 = auto_big._jdf.queryExecution().executedPlan().toString()
-    # distributed-inline route: the cover is built by a MapInPandas stage
-    # (the broadcast route has none anywhere), and the parity refine stays
-    # a codegen Filter — no grouped-Python refine
+    # distributed placement: the cover is built by a MapInPandas stage
+    # (the broadcast placement has none anywhere), and the parity refine
+    # stays a codegen Filter — no grouped-Python refine
     assert "MapInPandas" in plan2
     assert "FlatMapGroupsInPandas" not in plan2
     got2 = {(r.pid, r.poly_id)
@@ -243,8 +247,8 @@ def _circle_layer(spark, n_edges=101, cx=10.0, cy=0.0, r=40.0, pid=0):
 
 
 def test_chunked_distributed_inline_matches_arrow(spark, points_df):
-    """Crossings are additive over edge chunks: the chunked
-    distributed-inline join must equal the Arrow-refine ground truth on a
+    """Crossings are additive over edge chunks: the chunked refine on the
+    distributed placement must equal the broadcast placement on a
     >64-edge polygon, with no Python refine stage and no layer collect."""
     big = _circle_layer(spark, n_edges=101)
     want = {(r.pid, r.poly_id) for r in spatial.spatial_join(
@@ -252,8 +256,7 @@ def test_chunked_distributed_inline_matches_arrow(spark, points_df):
         broadcast_cover=True).select("pid", "poly_id").collect()}
     assert len(want) > 0
     chunked = spatial.spatial_join(
-        points_df, big, "lon", "lat", level=6, broadcast_cover=False,
-        distributed_inline_edges=16, distributed_chunked=True)
+        points_df, big, "lon", "lat", level=6, broadcast_cover=False)
     got = {(r.pid, r.poly_id)
            for r in chunked.select("pid", "poly_id").collect()}
     assert got == want
@@ -262,7 +265,6 @@ def test_chunked_distributed_inline_matches_arrow(spark, points_df):
     # chunked + salted composes
     salted = spatial.spatial_join(
         points_df, big, "lon", "lat", level=6, broadcast_cover=False,
-        distributed_inline_edges=16, distributed_chunked=True,
         salt_hot=4, salt_factor=8)
     got_s = {(r.pid, r.poly_id)
              for r in salted.select("pid", "poly_id").collect()}
@@ -274,8 +276,9 @@ def test_chunked_distributed_inline_matches_arrow(spark, points_df):
 def test_auto_route_big_layer_many_edges_goes_chunked(spark, points_df,
                                                       monkeypatch):
     """Auto-route: a layer above the broadcast threshold whose polygons
-    exceed MAX_INLINE_EDGES must take the chunked path (round 1 fell back
-    to an Arrow refine that collected the whole layer driver-side)."""
+    exceed MAX_INLINE_EDGES must take the chunked distributed path (round 1
+    fell back to a Python refine that collected the whole layer
+    driver-side)."""
     big = _circle_layer(spark, n_edges=101)
     monkeypatch.setattr(spatial, "AUTO_BROADCAST_MAX_POLYS", 0)
     auto = spatial.spatial_join(points_df, big, "lon", "lat", level=6)
@@ -287,6 +290,62 @@ def test_auto_route_big_layer_many_edges_goes_chunked(spark, points_df,
     assert got == want and len(want) > 0
     plan = auto._jdf.queryExecution().executedPlan().toString()
     assert "FlatMapGroupsInPandas" not in plan
+
+
+def test_probe_layer_counts_wrap_edges(spark, monkeypatch):
+    """_probe_layer counts edges as geom.rings_to_edges builds them: an
+    open ring gets its wrap edge. It used to count Σ(len-1), so an open
+    4-vertex square probed as 3 edges and the distributed placement,
+    sized from the probe, rejected the polygon."""
+    square = [[0.0, 0.0], [0.0, 20.0], [20.0, 20.0], [20.0, 0.0]]
+    closed = [[40.0, 0.0], [40.0, 10.0], [50.0, 10.0], [40.0, 0.0]]
+    schema = T.StructType([
+        T.StructField("poly_id", T.LongType()),
+        T.StructField("coordinates", T.ArrayType(T.ArrayType(
+            T.ArrayType(T.ArrayType(T.DoubleType()))))),
+        T.StructField("bbox", T.StructType([
+            T.StructField(k, T.DoubleType())
+            for k in ("xmin", "ymin", "xmax", "ymax")])),
+    ])
+    polys = spark.createDataFrame(
+        [(0, [[square]], (0.0, 0.0, 20.0, 20.0)),
+         (1, [[closed], [square]], (0.0, 0.0, 50.0, 20.0))], schema)
+    assert spatial._probe_layer(polys) == (2, 7)
+    assert [len(geom.rings_to_edges([np.array(r)])) for r in
+            (square, closed)] == [4, 3]
+
+    gx, gy = np.meshgrid(np.arange(-1.25, 52, 2.5), np.arange(-1.25, 22, 2.5))
+    pts = spark.createDataFrame([(i, float(x), float(y)) for i, (x, y) in
+                                 enumerate(zip(gx.ravel(), gy.ravel()))],
+                                "pid bigint, lon double, lat double")
+    want = {(r.pid, r.poly_id) for r in spatial.spatial_join(
+        pts, polys, "lon", "lat", level=6,
+        broadcast_cover=True).select("pid", "poly_id").collect()}
+    monkeypatch.setattr(spatial, "AUTO_BROADCAST_MAX_POLYS", 0)
+    got = {(r.pid, r.poly_id) for r in spatial.spatial_join(
+        pts, polys, "lon", "lat", level=6).select(
+        "pid", "poly_id").collect()}
+    assert got == want and {p for _, p in want} == {0, 1}
+
+
+def test_polygon_cover_edges_splits_wide_polygons(spark):
+    """polygon_cover_edges keeps its (poly_id, cell_id, edge columns) rows
+    and spreads a polygon wider than max_edges over one row per edge
+    chunk in each cell, together holding exactly its edge table."""
+    big = _circle_layer(spark, n_edges=101)
+    cover = spatial.polygon_cover_edges(big, 3, 64)
+    assert cover.columns == (["poly_id", "cell_id"]
+                             + [f"_ej{i}_{k}" for i in range(64)
+                                for k in ("x1", "y1", "x2", "y2")])
+    rows = cover.collect()
+    cell_ids = {r.cell_id for r in rows}
+    assert len(rows) == 2 * len(cell_ids)
+    cell = rows[0].cell_id
+    got = np.vstack([np.array(r[2:]).reshape(64, 4) for r in rows
+                     if r.cell_id == cell])
+    got = got[np.any(got != 0, axis=1)]
+    ring = big.collect()[0].coordinates[0][0]
+    assert np.array_equal(got, geom.rings_to_edges([np.array(ring)]))
 
 
 def test_knn_exact_repairs_undersized_ring(spark, points_df):

@@ -30,17 +30,11 @@ WINDOW = 4          # layer window, in cells per axis
 SALT_HOT, SALT_FACTOR = 2, 4
 
 
-def routes(max_e: int) -> dict[str, dict]:
-    """spatial_join keyword sets forcing each route for a layer whose
-    widest polygon has ``max_e`` edges, each with and without salting."""
+def routes() -> dict[str, dict]:
+    """spatial_join keyword sets forcing each placement, each with and
+    without salting; the layer's widest polygon picks the refine."""
     base = {"broadcast": {"broadcast_cover": True},
-            "distributed_arrow": {"broadcast_cover": False},
-            "distributed_chunked": {"broadcast_cover": False,
-                                    "distributed_inline_edges": 16,
-                                    "distributed_chunked": True}}
-    if 0 < max_e <= spatial.MAX_INLINE_EDGES:
-        base["distributed_inline"] = {"broadcast_cover": False,
-                                      "distributed_inline_edges": max_e}
+            "distributed": {"broadcast_cover": False}}
     out = {}
     for name, kw in base.items():
         out[name] = kw
@@ -127,15 +121,12 @@ def test_spatial_join_routes_match_bruteforce(spark, kind):
         level, layer, pts = case
         polys = spark.createDataFrame(layer, LAYER_SCHEMA)
         points = spark.createDataFrame(pts, POINT_SCHEMA)
-        max_e = max((len(geom.rings_to_edges(
-            [np.array(r) for part in parts for r in part]))
-            for _, parts, _ in layer), default=0)
         joins: list[DataFrame] = [
             spatial.spatial_join(points, polys, "lon", "lat", level=level,
                                  **kw)
             .select(F.lit(name).alias("route"), "pid", "poly_id")
-            for name, kw in routes(max_e).items()]
-        got = {name: Counter() for name in routes(max_e)}
+            for name, kw in routes().items()]
+        got = {name: Counter() for name in routes()}
         for r in reduce(DataFrame.unionByName, joins).collect():
             got[r.route][(r.pid, r.poly_id)] += 1
         want = brute_pairs(layer, pts)
