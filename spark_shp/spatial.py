@@ -7,8 +7,8 @@ Design (Spark-first, scale-first):
 * ``spatial_join`` is the canonical two-stage plan: coarse equi-join on cell
   id (polygon side exploded to its cell cover, point side tile-assigned at
   the same level) followed by exact ray-cast PIP refinement.  At 100 TB the
-  equi-join on int64 cells is the only shuffle, and it partitions by cell —
-  spatial locality comes for free.
+  equi-join on int64 cells is the only shuffle (polygons of ≤ 64 edges),
+  and it partitions by cell — spatial locality comes for free.
 * One cover builder (:func:`_cover_rows`) emits every cover row, carrying
   its polygon's edges in flat padded columns, so the refine is the same
   codegen SQL ray-cast whether the cover is built on the driver and
@@ -50,11 +50,9 @@ MAX_INLINE_EDGES = 64
 # well under Spark's broadcast comfort zone); bigger layers stay distributed.
 AUTO_BROADCAST_MAX_POLYS = 4096
 
-EDGE_FIELDS = ("x1", "y1", "x2", "y2")
-
-
 def _edge_cols(width: int) -> list[str]:
-    return [f"_ej{i}_{k}" for i in range(width) for k in EDGE_FIELDS]
+    return [f"_ej{i}_{k}" for i in range(width)
+            for k in ("x1", "y1", "x2", "y2")]
 
 
 def _bbox_cover_np(xmin, ymin, xmax, ymax, level: int) -> np.ndarray:
