@@ -457,8 +457,8 @@ def _bigpoly_edges_values_sql() -> str:
 def q_spatial_join_chunked(spark, sf_dir):
     """B7 chunked refine on the distributed placement under the DRIVER
     gate: event points PIP-joined to >MAX_INLINE_EDGES polygons (72- and
-    80-edge, one with a hole) via edge-chunked cover rows (2 chunks per
-    polygon) + summed codegen crossings. The oracle ray-casts the
+    80-edge, one with a hole) via edge-chunked cover rows (up to 2 chunks
+    per cell) + summed codegen crossings. The oracle ray-casts the
     identical edge table in SQL; even-odd hole semantics included."""
     pts = _event_points(spark, sf_dir)
     polys = _bigpoly_df(spark)

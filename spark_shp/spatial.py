@@ -10,12 +10,13 @@ Design (Spark-first, scale-first):
   equi-join on int64 cells is the only shuffle (polygons of ≤ 64 edges),
   and it partitions by cell — spatial locality comes for free.
 * One cover builder (:func:`_cover_rows`) emits every cover row, carrying
-  its polygon's edges in flat padded columns, so the refine is the same
-  codegen SQL ray-cast whether the cover is built on the driver and
-  broadcast (small layers) or built distributed in one ``mapInPandas``
-  (big layers): a parity filter when every polygon fits one row, a summed
-  crossing count per (point, polygon) when wide polygons split into edge
-  chunks. No Python runs between the candidate join and the output.
+  in flat padded columns the edges of its polygon that a ray from its cell
+  can cross, so the refine is the same codegen SQL ray-cast whether the
+  cover is built on the driver and broadcast (small layers) or built
+  distributed in one ``mapInPandas`` (big layers): a parity filter when
+  every polygon fits one row, a summed crossing count per (point,
+  polygon) when wide polygons split into edge chunks. No Python runs
+  between the candidate join and the output.
 * ``knn_join`` ships two strategies: broadcast brute-force top-k (the RIGHT
   plan when the build side is a small dimension — Catalyst keeps it a single
   stage) and cell-ring expansion (the scale path when both sides are large).
@@ -45,25 +46,22 @@ def tile_assign(df: DataFrame, lon_col: str, lat_col: str, level: int,
 # chunks of this many edges whose crossing counts are summed.
 MAX_INLINE_EDGES = 64
 
-# Auto-route threshold: polygon layers up to this many rows collect+broadcast
-# (cover rows ≈ polys × cells/poly, each ≤ ~2 KB with 64 padded edge cols —
-# well under Spark's broadcast comfort zone); bigger layers stay distributed.
+# Auto-route bounds: a polygon layer is collected and its cover broadcast
+# when it has at most AUTO_BROADCAST_MAX_POLYS rows AND that cover — built
+# in pandas on the driver, then shipped to every executor — takes at most
+# AUTO_BROADCAST_MAX_BYTES. Every cover row carries edges (a wide polygon
+# one 64-edge chunk per row, ~2 KB), so a few wide polygons over many
+# cells can pass the row bound and still be hundreds of MB.
 AUTO_BROADCAST_MAX_POLYS = 4096
+AUTO_BROADCAST_MAX_BYTES = 32 << 20
+
+# Largest broadcast cover kept in the plan as a local relation (see
+# _local_cover_df); the fence layers' covers are a few hundred KB.
+COVER_LOCAL_MAX_BYTES = 1 << 20
 
 def _edge_cols(width: int) -> list[str]:
     return [f"_ej{i}_{k}" for i in range(width)
             for k in ("x1", "y1", "x2", "y2")]
-
-
-def _bbox_cover_np(xmin, ymin, xmax, ymax, level: int) -> np.ndarray:
-    """All cell ids at ``level`` whose grid square intersects the bbox."""
-    ix0, iy0 = cells.quantize(np.array([xmin]), np.array([ymin]), level)
-    ix1, iy1 = cells.quantize(np.array([xmax]), np.array([ymax]), level)
-    xs = np.arange(ix0[0], ix1[0] + 1, dtype=np.int64)
-    ys = np.arange(iy0[0], iy1[0] + 1, dtype=np.int64)
-    gx, gy = np.meshgrid(xs, ys, indexing="ij")
-    return (cells.morton(gx.ravel(), gy.ravel(), level)
-            << cells.LEVEL_BITS) | level
 
 
 def _polygon_edges(coords) -> np.ndarray:
@@ -88,32 +86,64 @@ def _cover_rows(poly_ids, bboxes, edges, level: int, width: int,
     ``level``, edge chunk) with columns ``poly_id, cell_id, [chunk_no,]
     _ej{i}_{x1,y1,x2,y2}`` for ``i < width``.
 
-    A polygon's edge table (``edges[i]``, from :func:`_polygon_edges`) is
-    padded with degenerate (0,0,0,0) edges — they never straddle a ray — to
-    ⌈E/width⌉ chunks of ``width`` edges. Without ``chunked`` every polygon
-    must fit one chunk: a wider one raises instead of emitting rows that a
-    per-row parity filter would get wrong. ``width=0`` carries no edges
-    (``edges`` is not read): the bare (poly_id, cell_id) cover."""
+    A cell carries only the edges of its polygon (``edges[i]``, from
+    :func:`_polygon_edges`) that a ray cast east from a point of the cell
+    can cross: those whose y-range meets the cell's row band and whose
+    east end reaches the cell's west side. Any other edge adds 0 to every
+    such point's crossing count, so parity is unchanged. The band and the
+    west side are widened by a quarter cell, because a point's cell comes
+    from float quantization, and are open at the clamped grid borders; an
+    edge with a NaN coordinate is always kept. The kept edges (east ends
+    descending, so each cell of a band keeps a prefix of the band's edges)
+    are padded with degenerate (0,0,0,0) edges — they never straddle a ray
+    — to ⌈k/width⌉ chunks of ``width`` edges, at least one. Without
+    ``chunked`` every cell must fit one chunk: a wider one raises instead
+    of emitting rows that a per-row parity filter would get wrong.
+    ``width=0`` carries no edges (``edges`` is not read): the bare
+    (poly_id, cell_id) cover."""
+    n = 1 << level
+    cw, ch = 360.0 / n, 170.0 / n
     empty = np.zeros(0, dtype=np.int64)
     pid_out, cell_out, chunk_out = [empty], [empty], [empty]
     edge_out = [np.zeros((0, 4 * width))]
     for i, (pid, bb) in enumerate(zip(poly_ids, bboxes)):
-        cc = _bbox_cover_np(bb["xmin"], bb["ymin"], bb["xmax"], bb["ymax"],
-                            level)
-        chunks = np.zeros((1, 0))
+        (ix0, ix1), (iy0, iy1) = cells.quantize(
+            np.array([bb["xmin"], bb["xmax"]]),
+            np.array([bb["ymin"], bb["ymax"]]), level)
+        xs = np.arange(ix0, ix1 + 1, dtype=np.int64)
+        n_chunks, table = np.ones(len(xs), dtype=np.int64), np.zeros((1, 0))
         if width:
             e = edges[i]
-            n_chunks = max(1, -(-len(e) // width))
-            if n_chunks > 1 and not chunked:
-                raise ValueError(f"polygon {pid}: {len(e)} edges > {width}")
-            pad = np.zeros((n_chunks * width, 4))
-            pad[: len(e)] = e
-            chunks = pad.reshape(n_chunks, width * 4)
-        n = len(chunks)
-        pid_out.append(np.full(len(cc) * n, pid, dtype=np.int64))
-        cell_out.append(np.repeat(cc, n))
-        chunk_out.append(np.tile(np.arange(n, dtype=np.int64), len(cc)))
-        edge_out.append(np.tile(chunks, (len(cc), 1)))
+            nan = np.isnan(e).any(axis=1)
+            east = np.where(nan, np.inf, np.fmax(e[:, 0], e[:, 2]))
+            order = np.argsort(-east, kind="stable")
+            e, east, nan = e[order], east[order], nan[order]
+            ylo = np.where(nan, -np.inf, np.minimum(e[:, 1], e[:, 3]))
+            yhi = np.where(nan, np.inf, np.maximum(e[:, 1], e[:, 3]))
+            west = np.where(xs == 0, -np.inf, -180.0 + (xs - 0.25) * cw)
+        for iy in range(iy0, iy1 + 1):
+            if width:
+                lo = -np.inf if iy == 0 else -85.0 + (iy - 0.25) * ch
+                hi = np.inf if iy == n - 1 else -85.0 + (iy + 1.25) * ch
+                in_band = (yhi > lo) & (ylo <= hi)
+                band = e[in_band]
+                # k[j]: the band's edges whose east end reaches cell j
+                k = np.searchsorted(-east[in_band], -west, side="right")
+                n_chunks = np.maximum(1, -(-k // width))
+                if n_chunks.max() > 1 and not chunked:
+                    raise ValueError(f"polygon {pid}: {k.max()} edges in "
+                                     f"a cell > {width}")
+                pad = np.zeros((n_chunks.max() * width, 4))
+                pad[: min(len(band), len(pad))] = band[: len(pad)]
+                table = pad.reshape(-1, 4 * width)
+            chunk = (np.arange(n_chunks.sum())
+                     - np.repeat(np.cumsum(n_chunks) - n_chunks, n_chunks))
+            ids = ((cells.morton(xs, np.full_like(xs, iy), level)
+                    << cells.LEVEL_BITS) | level)
+            pid_out.append(np.full(len(chunk), pid, dtype=np.int64))
+            cell_out.append(np.repeat(ids, n_chunks))
+            chunk_out.append(chunk)
+            edge_out.append(table[chunk])
     keys = {"poly_id": pid_out, "cell_id": cell_out}
     if chunked:
         keys["chunk_no"] = chunk_out
@@ -139,6 +169,25 @@ def _cover_df(polys: DataFrame, level: int, width: int,
                                            _cover_schema(width, chunked))
 
 
+def _local_cover_df(spark, pdf: pd.DataFrame,
+                    schema: T.StructType) -> DataFrame:
+    """A driver-built cover as a DataFrame. Spark keeps an Arrow-converted
+    pandas frame below ``spark.sql.execution.arrow.localRelationThreshold``
+    (48 MB by default) in the plan as a LocalRelation, and a
+    BroadcastHashJoin outside whole-stage codegen — wide cover rows exceed
+    ``spark.sql.codegen.maxFields`` — ships its build subtree, that
+    relation included, to every task of its stage (a 24 MB cover joined
+    with 200k points, local[4] on 4 vCPUs: 5.8 s against 0.95 s). Covers
+    above COVER_LOCAL_MAX_BYTES go through an RDD instead."""
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(COVER_LOCAL_MAX_BYTES))
+    try:
+        return spark.createDataFrame(pdf, schema)
+    finally:
+        spark.conf.set(key, old)
+
+
 def polygon_cover(polys: DataFrame, level: int) -> DataFrame:
     """B4: (poly_id, cell_id) cover — every cell at ``level`` whose grid
     square intersects the polygon's bbox."""
@@ -149,7 +198,8 @@ def polygon_cover_edges(polys: DataFrame, level: int,
                         max_edges: int) -> DataFrame:
     """Distributed (poly_id, cell_id, edge-columns) cover: like
     polygon_cover but each row carries ``max_edges`` padded edge columns
-    of its polygon. A polygon with more edges spans several rows per cell,
+    holding the edges of its polygon that a ray from its cell can cross
+    (:func:`_cover_rows`). A cell with more such edges spans several rows,
     one per edge chunk."""
     return _cover_df(polys, level, max_edges, True).drop("chunk_no")
 
@@ -182,12 +232,17 @@ def _inline_parity_predicate(max_e: int, lon_col: str, lat_col: str) -> str:
     return f"{_inline_crossings_sum(max_e, lon_col, lat_col)} % 2 = 1"
 
 
-def _probe_layer(polys: DataFrame) -> tuple[int, int]:
-    """(row count, max edges per polygon) in ONE aggregation job, never
-    deserializing geometry into Python. A ring counts its edges as
-    :func:`geom.rings_to_edges` builds them: one per consecutive point
-    pair, plus the wrap edge when the first and last points differ (NaN
-    differs from itself there)."""
+def _probe_layer(polys: DataFrame, level: int) -> tuple[int, int, int]:
+    """(row count, max edges per polygon, bytes of the cover at ``level``)
+    in ONE aggregation job, never deserializing geometry into Python.
+
+    A ring counts its edges as :func:`geom.rings_to_edges` builds them: one
+    per consecutive point pair, plus the wrap edge when the first and last
+    points differ (NaN differs from itself there). The cover size counts,
+    per polygon, its bbox cells at ``level`` times the chunks of its whole
+    edge table, each row 8 B per column of :func:`_cover_schema`: exactly
+    what :func:`_cover_rows` emits when every polygon fits one chunk, and
+    an upper bound when cells keep fewer edges than their polygon has."""
     def ring_edges(ring):
         first, last = F.get(ring, 0), F.get(ring, F.size(ring) - 1)
         closed = (first == last) & ~F.exists(first, F.isnan)
@@ -195,9 +250,21 @@ def _probe_layer(polys: DataFrame) -> tuple[int, int]:
 
     n_edges = F.aggregate(F.flatten(F.col("coordinates")), F.lit(0),
                           lambda acc, ring: acc + ring_edges(ring))
+    ix0, iy0 = cells.quantize_sql("bbox.xmin", "bbox.ymin", level)
+    ix1, iy1 = cells.quantize_sql("bbox.xmax", "bbox.ymax", level)
+    n_cells = F.expr(f"GREATEST(0, {ix1} - {ix0} + 1) "
+                     f"* GREATEST(0, {iy1} - {iy0} + 1)")
+    n_chunks = F.greatest(F.lit(1), F.ceil(n_edges / MAX_INLINE_EDGES))
     row = polys.agg(F.count(F.lit(1)).alias("n"),
-                    F.max(n_edges).alias("max_e")).collect()[0]
-    return int(row["n"]), int(row["max_e"] or 0)
+                    F.max(n_edges).alias("max_e"),
+                    F.sum(n_cells).alias("cells"),
+                    F.sum(n_cells * n_chunks).alias("chunk_rows")).collect()[0]
+    max_e = int(row["max_e"] or 0)
+    chunked = max_e > MAX_INLINE_EDGES
+    n_rows = int((row["chunk_rows"] if chunked else row["cells"]) or 0)
+    width = min(max_e, MAX_INLINE_EDGES)
+    return (int(row["n"]), max_e,
+            n_rows * 8 * len(_cover_schema(width, chunked)))
 
 
 def spatial_join(points: DataFrame, polys: DataFrame, lon_col: str,
@@ -219,34 +286,40 @@ def spatial_join(points: DataFrame, polys: DataFrame, lon_col: str,
       * False — the cover is built distributed in one mapInPandas and the
         candidate join shuffles on cell; ``salt_hot`` > 0 salts the
         ``salt_hot`` densest point cells across ``salt_factor`` keys (B13).
-      * None (default) — one aggregation over the layer (count + max edges
-        per polygon, :func:`_probe_layer`) picks True for layers of at most
-        AUTO_BROADCAST_MAX_POLYS polygons, else False. Callers with a known
-        shape pass it explicitly and skip the probe.
+      * None (default) — one aggregation over the layer (count, max edges
+        per polygon and cover size, :func:`_probe_layer`) picks True for
+        layers of at most AUTO_BROADCAST_MAX_POLYS polygons whose cover
+        takes at most AUTO_BROADCAST_MAX_BYTES, else False. Callers with a
+        known shape pass it explicitly and skip the probe.
 
     Refine, picked from the layer's widest polygon (``max_e`` edges):
-      * max_e ≤ MAX_INLINE_EDGES — every cover row holds its whole polygon,
-        and the refine is a plain parity filter. On the broadcast placement
-        the join is ONE BroadcastHashJoin with the parity as its condition:
-        a single JVM stage, zero shuffles (a mapInPandas refine here
-        oversubscribes a box 2× — task thread + Python worker per core —
-        and inverted the local[8]→local[32] scaling curve).
-      * wider — polygons split into MAX_INLINE_EDGES-edge chunks, one cover
-        row per (cell, chunk); crossings are additive over the chunks, so
+      * max_e ≤ MAX_INLINE_EDGES — every cover row holds all the edges its
+        cell needs, and the refine is a plain parity filter. On the
+        broadcast placement the join is ONE BroadcastHashJoin with the
+        parity as its condition: a single JVM stage, zero shuffles (a
+        mapInPandas refine here oversubscribes a box 2× — task thread +
+        Python worker per core — and inverted the local[8]→local[32]
+        scaling curve). The broadcast placement also takes this refine for
+        a wider layer when each cell's crossable edges fit one row.
+      * wider — a cell's edges split into MAX_INLINE_EDGES-edge chunks, one
+        cover row per (cell, chunk); crossings are additive over chunks, so
         the crossing count is summed per (point row, polygon) and parity
         taken at the end. A transient row id keeps duplicate point rows
-        apart through that aggregation.
+        apart through that aggregation. Neither a row id nor a second
+        aggregation is allowed on a stream, so a streaming ``points`` with
+        such a layer raises ValueError.
     """
     max_e = None
     if broadcast_cover is None:
-        n_polys, max_e = _probe_layer(polys)
-        broadcast_cover = n_polys <= AUTO_BROADCAST_MAX_POLYS
+        n_polys, max_e, cover_bytes = _probe_layer(polys, level)
+        broadcast_cover = (n_polys <= AUTO_BROADCAST_MAX_POLYS
+                           and cover_bytes <= AUTO_BROADCAST_MAX_BYTES)
     if broadcast_cover:
         rows = polys.select("poly_id", "bbox", "coordinates").collect()
         edges = [_polygon_edges(r["coordinates"]) for r in rows]
         max_e = max(map(len, edges), default=0)
     elif max_e is None:
-        max_e = _probe_layer(polys)[1]
+        max_e = _probe_layer(polys, level)[1]
     if max_e == 0:
         # empty or edge-less layer: no point can be inside, and a zero-width
         # refine would be the unparseable predicate "() % 2 = 1"
@@ -255,15 +328,32 @@ def spatial_join(points: DataFrame, polys: DataFrame, lon_col: str,
 
     width = min(max_e, MAX_INLINE_EDGES)
     chunked = max_e > MAX_INLINE_EDGES
+    if broadcast_cover:
+        pdf = _cover_rows([r["poly_id"] for r in rows],
+                          [r["bbox"] for r in rows], edges, level, width,
+                          chunked)
+        if chunked and not pdf["chunk_no"].any():
+            chunked = False
+            pdf = pdf.drop(columns="chunk_no")
+        if not chunked:
+            # the trailing slots that no row fills are padding: drop them,
+            # so narrow rows keep the join inside whole-stage codegen
+            cols = _edge_cols(width)
+            used = pdf[cols].to_numpy().reshape(
+                len(pdf), width, 4).any(axis=(0, 2)).nonzero()[0]
+            width = int(used[-1]) + 1 if len(used) else 1
+            pdf = pdf.drop(columns=cols[4 * width:])
+        cover = _local_cover_df(points.sparkSession, pdf,
+                                _cover_schema(width, chunked))
+    if chunked and points.isStreaming:
+        raise ValueError(
+            f"spatial_join on a stream needs every cell's crossable edges "
+            f"to fit one row of {MAX_INLINE_EDGES}; this layer has a "
+            f"polygon of {max_e} edges")
     pts = tile_assign(points, lon_col, lat_col, level, "_sj_cell")
     if chunked:
         pts = pts.withColumn("_sj_rid", F.monotonically_increasing_id())
     if broadcast_cover:
-        cover = points.sparkSession.createDataFrame(
-            _cover_rows([r["poly_id"] for r in rows],
-                        [r["bbox"] for r in rows], edges, level, width,
-                        chunked),
-            _cover_schema(width, chunked))
         cand = pts.join(F.broadcast(cover.withColumnRenamed(
             "cell_id", "_sj_cell")), "_sj_cell")
     else:

@@ -387,7 +387,10 @@ def geofence_alerts(stream: DataFrame, polys: DataFrame, level: int = 6,
     tile-assigned and PIP-joined against the (static) fence layer — the
     broadcast cell-cover equi-join + inline codegen ray-cast of
     spatial.spatial_join rides the micro-batch unchanged because every
-    stage is stateless — then watermarked tumbling counts per
+    stage is stateless (fences of at most spatial.MAX_INLINE_EDGES edges:
+    a wider fence needs the chunked refine's per-event aggregation, which
+    a stream cannot run, so spatial_join raises ValueError for it) — then
+    watermarked tumbling counts per
     (window, fence) emit the alert feed. Streaming state is keyed by
     (window, poly_id): bounded by fences x active windows, independent of
     event rate — the 100 TB/day geofence-alerting shape."""

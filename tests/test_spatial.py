@@ -182,7 +182,7 @@ def test_auto_route_probe_and_paths(spark, points_df, monkeypatch):
     distributed placement (no broadcast of the layer, still no Python
     refine). Results identical either way."""
     polys = fixtures.fences_df(spark, 16).drop("layer", "name")
-    n, max_e = spatial._probe_layer(polys)
+    n, max_e, _ = spatial._probe_layer(polys, 6)
     assert n == 16 and 4 <= max_e <= 16
 
     want = {(r.pid, r.poly_id) for r in spatial.spatial_join(
@@ -310,7 +310,7 @@ def test_probe_layer_counts_wrap_edges(spark, monkeypatch):
     polys = spark.createDataFrame(
         [(0, [[square]], (0.0, 0.0, 20.0, 20.0)),
          (1, [[closed], [square]], (0.0, 0.0, 50.0, 20.0))], schema)
-    assert spatial._probe_layer(polys) == (2, 7)
+    assert spatial._probe_layer(polys, 6)[:2] == (2, 7)
     assert [len(geom.rings_to_edges([np.array(r)])) for r in
             (square, closed)] == [4, 3]
 
@@ -329,23 +329,92 @@ def test_probe_layer_counts_wrap_edges(spark, monkeypatch):
 
 
 def test_polygon_cover_edges_splits_wide_polygons(spark):
-    """polygon_cover_edges keeps its (poly_id, cell_id, edge columns) rows
-    and spreads a polygon wider than max_edges over one row per edge
-    chunk in each cell, together holding exactly its edge table."""
+    """polygon_cover_edges keeps its (poly_id, cell_id, edge columns) rows.
+    Each cell carries, without repeats, every edge of its polygon that a
+    ray cast east from a point of the cell can cross (its y-range meets
+    the cell's band and its east end reaches the cell's west side); a cell
+    with more than max_edges of them spreads them over one row per edge
+    chunk."""
     big = _circle_layer(spark, n_edges=101)
-    cover = spatial.polygon_cover_edges(big, 3, 64)
-    assert cover.columns == (["poly_id", "cell_id"]
-                             + [f"_ej{i}_{k}" for i in range(64)
-                                for k in ("x1", "y1", "x2", "y2")])
-    rows = cover.collect()
-    cell_ids = {r.cell_id for r in rows}
-    assert len(rows) == 2 * len(cell_ids)
-    cell = rows[0].cell_id
-    got = np.vstack([np.array(r[2:]).reshape(64, 4) for r in rows
-                     if r.cell_id == cell])
-    got = got[np.any(got != 0, axis=1)]
-    ring = big.collect()[0].coordinates[0][0]
-    assert np.array_equal(got, geom.rings_to_edges([np.array(ring)]))
+    ring = np.array(big.collect()[0].coordinates[0][0])
+    edges = geom.rings_to_edges([ring])
+    rows_per_cell = []
+    for level in (1, 3):
+        cover = spatial.polygon_cover_edges(big, level, 64)
+        assert cover.columns == (["poly_id", "cell_id"]
+                                 + [f"_ej{i}_{k}" for i in range(64)
+                                    for k in ("x1", "y1", "x2", "y2")])
+        tables = {}
+        for r in cover.collect():
+            tables.setdefault(r.cell_id, []).append(
+                np.array(r[2:]).reshape(64, 4))
+        n = 1 << level
+        ix, iy = np.meshgrid(np.arange(n), np.arange(n), indexing="ij")
+        ix, iy = ix.ravel(), iy.ravel()
+        ids = (cells.morton(ix, iy, level) << cells.LEVEL_BITS) | level
+        for cell, t in tables.items():
+            got = np.vstack(t)
+            got = got[np.any(got != 0, axis=1)]
+            assert len(np.unique(got, axis=0)) == len(got)
+            assert all((edges == g).all(axis=1).any() for g in got)
+            j = int(np.nonzero(ids == cell)[0][0])
+            cx0 = -180.0 + ix[j] * 360.0 / n
+            cy0, cy1 = (-85.0 + iy[j] * 170.0 / n,
+                        -85.0 + (iy[j] + 1) * 170.0 / n)
+            must = edges[(np.maximum(edges[:, 1], edges[:, 3]) > cy0)
+                         & (np.minimum(edges[:, 1], edges[:, 3]) < cy1)
+                         & (np.maximum(edges[:, 0], edges[:, 2]) > cx0)]
+            assert all((got == m).all(axis=1).any() for m in must)
+            rows_per_cell.append(len(t))
+    assert max(rows_per_cell) == 2
+
+
+def test_cover_rows_keep_every_crossable_edge():
+    """Each cover row keeps only the edges a ray cast east from its cell can
+    cross. Summing geom.crossings over a point's cell rows must give the
+    parity of geom.points_in_polygon, for random star polygons of 3-300
+    edges (some vertices snapped to cell corners, some past the grid's
+    clamped borders) against a half-cell lattice, the vertices and random
+    points, at levels 2-7."""
+    rng = np.random.default_rng(7)
+    for _ in range(24):
+        level = int(rng.integers(2, 8))
+        w, h = 360.0 / (1 << level), 170.0 / (1 << level)
+        rings = []
+        for _ in range(3):
+            m = int(rng.integers(3, 300))
+            th = np.sort(rng.uniform(0, 2 * np.pi, m))
+            r = rng.uniform(2, 30) * rng.uniform(0.3, 1, m)
+            ring = np.stack([rng.uniform(-190, 190) + r * np.cos(th),
+                             rng.uniform(-90, 90) + r * np.sin(th)], 1)
+            snap = rng.random(m) < 0.3
+            ring[snap, 0] = np.round((ring[snap, 0] + 180) / w) * w - 180
+            ring[snap, 1] = np.round((ring[snap, 1] + 85) / h) * h - 85
+            rings.append(ring)
+        edges = [geom.rings_to_edges([r]) for r in rings]
+        max_e = max(map(len, edges))
+        width = min(max_e, spatial.MAX_INLINE_EDGES)
+        cover = spatial._cover_rows(
+            range(3), [dict(xmin=r[:, 0].min(), ymin=r[:, 1].min(),
+                            xmax=r[:, 0].max(), ymax=r[:, 1].max())
+                       for r in rings], edges, level, width, max_e > width)
+        gx, gy = np.meshgrid(np.arange(0, 361, w / 2) - 180,
+                             np.arange(0, 171, h / 2) - 85)
+        px = np.concatenate([gx.ravel(), *(r[:, 0] for r in rings),
+                             rng.uniform(-200, 200, 2000)])
+        py = np.concatenate([gy.ravel(), *(r[:, 1] for r in rings),
+                             rng.uniform(-100, 100, 2000)])
+        cell = cells.cell_encode(px, py, level)
+        tables = cover[spatial._edge_cols(width)].to_numpy().reshape(
+            len(cover), width, 4)
+        for pid, ring in enumerate(rings):
+            got = np.zeros(len(px), dtype=np.int64)
+            for c, t in zip(cover["cell_id"][cover["poly_id"] == pid],
+                            tables[cover["poly_id"] == pid]):
+                sel = cell == c
+                got[sel] += geom.crossings(px[sel], py[sel], t)
+            want = geom.points_in_polygon(px, py, [ring])
+            assert np.array_equal(got % 2 == 1, want)
 
 
 def test_knn_exact_repairs_undersized_ring(spark, points_df):
@@ -418,3 +487,71 @@ def test_distance_join_cells_empty_and_tiny_radius(spark):
     # only self-pairs at distance 0 survive a tiny radius
     assert sorted((r.l_id, r.r_id) for r in tiny.collect()) == [(0, 0),
                                                                 (1, 1)]
+
+
+def test_auto_route_bounds_the_broadcast_cover_bytes(spark, points_df,
+                                                     monkeypatch):
+    """The probe's cover size is the size of the rows _cover_rows builds,
+    8 B per column, on a single-chunk layer, and bounds it from above on a
+    chunked one, at two levels. The auto route broadcasts a layer whose
+    probed cover takes exactly AUTO_BROADCAST_MAX_BYTES and builds one a
+    byte bigger distributed: a few wide polygons over many cells pass the
+    polygon-count bound with a cover of any size."""
+    narrow = fixtures.fences_df(spark, 16).drop("layer", "name")
+    wide = _circle_layer(spark, n_edges=101).unionByName(_circle_layer(
+        spark, n_edges=300, cx=-60.0, cy=10.0, r=15.0, pid=1))
+    for polys in (narrow, wide):
+        rows = polys.collect()
+        edges = [spatial._polygon_edges(r["coordinates"]) for r in rows]
+        max_e = max(map(len, edges))
+        for level in (6, 7):
+            cover = spatial._cover_rows(
+                [r["poly_id"] for r in rows], [r["bbox"] for r in rows],
+                edges, level, min(max_e, spatial.MAX_INLINE_EDGES),
+                max_e > spatial.MAX_INLINE_EDGES)
+            n, probed_e, probed_bytes = spatial._probe_layer(polys, level)
+            assert (n, probed_e) == (len(rows), max_e)
+            if max_e > spatial.MAX_INLINE_EDGES:
+                assert cover.size * 8 <= probed_bytes
+            else:
+                assert cover.size * 8 == probed_bytes
+
+    def placement(bound):
+        monkeypatch.setattr(spatial, "AUTO_BROADCAST_MAX_BYTES", bound)
+        j = spatial.spatial_join(points_df, wide, "lon", "lat", level=6)
+        plan = j._jdf.queryExecution().executedPlan().toString()
+        pairs = {(r.pid, r.poly_id) for r in j.select("pid", "poly_id")
+                 .collect()}
+        return "MapInPandas" in plan, pairs
+
+    at_bound = spatial._probe_layer(wide, 6)[2]
+    (built_at, got_at), (built_over, got_over) = (placement(at_bound),
+                                                  placement(at_bound - 1))
+    assert (built_at, built_over) == (False, True)
+    assert got_at == got_over and {p for _, p in got_at} == {0, 1}
+
+
+def test_big_broadcast_cover_is_not_a_local_relation(spark, points_df,
+                                                     monkeypatch):
+    """A broadcast cover above COVER_LOCAL_MAX_BYTES reaches the plan
+    through an RDD, not as a LocalRelation that a BroadcastHashJoin outside
+    whole-stage codegen ships to every task; the pairs are the same and
+    the session's Arrow local-relation threshold is left as it was."""
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+    before = spark.conf.get(key)
+    polys = fixtures.fences_df(spark, 16).drop("layer", "name")
+
+    def join():
+        j = spatial.spatial_join(points_df, polys, "lon", "lat", level=6,
+                                 broadcast_cover=True)
+        plan = j._jdf.queryExecution().executedPlan().toString()
+        return ("LocalTableScan [poly_id" in plan,
+                {(r.pid, r.poly_id) for r in j.select("pid", "poly_id")
+                 .collect()})
+
+    local, want = join()
+    monkeypatch.setattr(spatial, "COVER_LOCAL_MAX_BYTES", 0)
+    rdd_local, got = join()
+    assert (local, rdd_local) == (True, False)
+    assert got == want and len(want) > 0
+    assert spark.conf.get(key) == before

@@ -356,6 +356,43 @@ def test_geofence_alerts_stream_equals_batch(spark, replay_dir):
     assert got == want and len(got) > 0
 
 
+def test_geofence_alerts_wide_fences(spark, replay_dir):
+    """Fences above MAX_INLINE_EDGES on a stream. A 101-edge circle, whose
+    cells each need one row of crossable edges, keeps the stateless parity
+    filter and equals the batch join. A 1000-edge circle has cells that
+    need the chunked refine, whose row id and per-event aggregation a
+    stream cannot run: building the alert stream raises a clear error
+    instead of returning a stream that fails when it starts."""
+    from test_spatial import _circle_layer
+
+    from spark_shp import fixtures, spatial
+
+    def spatialize(df):
+        return df.selectExpr("*", f"{fixtures.EVENT_LON_SQL} AS lon",
+                             f"{fixtures.EVENT_LAT_SQL} AS lat")
+
+    circle = _circle_layer(spark, n_edges=101)
+    got = sorted(
+        (r.window_start, r.poly_id, r.n_events)
+        for r in streaming.run_to_completion(streaming.geofence_alerts(
+            spatialize(streaming.events_stream(spark, replay_dir)), circle,
+            watermark=WM)))
+    ev = spatialize(spark.read.parquet(replay_dir)
+                    .withColumn("ts", F.col("ts").cast("timestamp_ltz")))
+    batch = (spatial.spatial_join(ev, circle, "lon", "lat", level=6,
+                                  broadcast_cover=False)
+             .groupBy(F.window("ts", "1 hour").alias("win"), "poly_id")
+             .agg(F.count(F.lit(1)).alias("n_events")))
+    want = sorted((r.win.start.replace(tzinfo=None), r.poly_id, r.n_events)
+                  for r in batch.collect())
+    assert got == want and len(got) > 0
+
+    with pytest.raises(ValueError, match="fit one row of 64"):
+        streaming.geofence_alerts(
+            spatialize(streaming.events_stream(spark, replay_dir)),
+            _circle_layer(spark, n_edges=1000), watermark=WM)
+
+
 def _session_features_equivalence(spark, replay_dir, make_stream_df):
     from spark_shp.queries_text import q_user_session_features
 
