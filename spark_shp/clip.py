@@ -10,10 +10,11 @@ per pixel; pixel (row y, col x) center maps to
     plon = lon + (x - w/2 + 0.5) * deg_per_px
     plat = lat + (h/2 - y - 0.5) * deg_per_px    (north-up)
 
-``clip_to_polygon`` zeroes pixels outside the polygon (even-odd PIP on the
-pixel-center lattice — same geom.crossings kernel as the spatial join, so
-clip semantics match join semantics exactly); ``clip_stats`` returns per-image
-coverage + mean of surviving pixels.
+``raster_vector_clip`` zeroes pixels outside the polygon (even-odd PIP on
+the pixel-center lattice by ``geom.scanline_parity``, which gives exactly
+the ``geom.crossings`` parity of every pixel center, so clip semantics
+match join semantics) and returns per-image coverage + mean of surviving
+pixels.
 """
 
 from __future__ import annotations
@@ -27,24 +28,14 @@ from . import codecs, geom
 DEG_PER_PX = 0.01
 
 
-def _pixel_lattice(w: int, h: int, lon: float, lat: float,
-                   deg_per_px: float = DEG_PER_PX):
-    xs = lon + (np.arange(w) - w / 2 + 0.5) * deg_per_px
-    ys = lat + (h / 2 - np.arange(h) - 0.5) * deg_per_px
-    gx, gy = np.meshgrid(xs, ys)   # (h, w)
-    return gx, gy
-
-
 def clip_pixels(pixels: np.ndarray, lon: float, lat: float,
                 edges: np.ndarray,
                 deg_per_px: float = DEG_PER_PX) -> tuple[np.ndarray, int]:
     """Zero pixels whose centers fall outside the polygon (edge table).
     Returns (clipped, n_inside)."""
     h, w, _ = pixels.shape
-    gx, gy = _pixel_lattice(w, h, lon, lat, deg_per_px)
-    inside = (geom.crossings_chunked(gx.ravel(), gy.ravel(), edges)
-              % 2 == 1)
-    mask = inside.reshape(h, w)
+    mask = geom.scanline_parity([lon], [lat], [w], [h], [0], {0: edges},
+                                deg_per_px).reshape(h, w)
     out = pixels.copy()
     out[~mask] = 0
     return out, int(mask.sum())
@@ -60,18 +51,48 @@ CLIP_SCHEMA = T.StructType([
 ])
 
 
+def _shape_groups(pdf: pd.DataFrame) -> list[tuple[tuple, np.ndarray]]:
+    """[((w, h, fmt), row indices)] of a batch: the rows of each image
+    shape, in row order."""
+    ws, hs = pdf["w"].to_numpy(), pdf["h"].to_numpy()
+    fmts = pdf["fmt"].to_numpy()
+    key = np.zeros(len(pdf), dtype=np.int64)
+    for col in (ws, hs, fmts):
+        vals, inv = np.unique(col, return_inverse=True)
+        key = key * len(vals) + inv
+    _, inv, counts = np.unique(key, return_inverse=True, return_counts=True)
+    groups = np.split(np.argsort(inv, kind="stable"), np.cumsum(counts)[:-1])
+    return [((int(ws[g[0]]), int(hs[g[0]]), fmts[g[0]]), g) for g in groups]
+
+
 def _decode_stack_u8(pdf: pd.DataFrame, idx: np.ndarray, w: int, h: int,
                      fmt: str) -> np.ndarray:
     """Decode a same-(w,h,fmt) group into ONE (n,h,w,3) uint8 stack — raw
     images as a single frombuffer over concatenated payloads; compressed
-    formats per stream (zlib is inherently per-stream), math on the stack."""
+    formats per stream (zlib is inherently per-stream), math on the stack.
+    A blob whose size disagrees with its row's w/h raises ValueError naming
+    the image."""
     blobs = pdf["bytes"].to_numpy()
+    ids = pdf["image_id"].to_numpy()
+
+    def bad(i, got):
+        return ValueError(f"image {ids[i]!r}: {fmt} blob holds {got}, "
+                          f"its row says {w}x{h}x3")
+
     if fmt == "raw":
-        flat = np.frombuffer(b"".join(bytes(blobs[i]) for i in idx),
-                             dtype=np.uint8)
+        raw = [bytes(blobs[i]) for i in idx]
+        for i, b in zip(idx, raw):
+            if len(b) != w * h * 3:
+                raise bad(i, f"{len(b)} bytes")
+        flat = np.frombuffer(b"".join(raw), dtype=np.uint8)
         return flat.reshape(len(idx), h, w, 3)
-    return np.stack([codecs.decode(bytes(blobs[i]), w, h, fmt)
-                     for i in idx])
+    out = np.empty((len(idx), h, w, 3), dtype=np.uint8)
+    for j, i in enumerate(idx):
+        px = codecs.decode(bytes(blobs[i]), w, h, fmt)
+        if px.shape != (h, w, 3):
+            raise bad(i, "x".join(map(str, px.shape)) + " pixels")
+        out[j] = px
+    return out
 
 
 def raster_vector_clip(images: DataFrame, poly_edges: dict[int, np.ndarray],
@@ -80,10 +101,10 @@ def raster_vector_clip(images: DataFrame, poly_edges: dict[int, np.ndarray],
     """B10: images already paired with a poly_id (e.g. via spatial_join) →
     clipped re-encoded bytes + coverage stats. ``poly_edges`` is broadcast.
 
-    Shape-grouped (VERDICT r2 wrong #2): each (w, h, fmt, poly) group
-    decodes as one stacked kernel and ray-casts ALL its pixel centers in a
-    single geom.crossings call — no per-row Python beyond the unavoidable
-    per-stream encode."""
+    Per Arrow batch, one ``geom.scanline_parity`` call masks every pixel
+    center of every image against its own polygon; each (w, h, fmt) group
+    then decodes as one stack and is clipped on the stack — no per-row
+    Python beyond the unavoidable per-stream encode."""
     spark = images.sparkSession
     bc = spark.sparkContext.broadcast(poly_edges)
 
@@ -93,42 +114,26 @@ def raster_vector_clip(images: DataFrame, poly_edges: dict[int, np.ndarray],
             if not n:
                 continue
             ids = pdf["image_id"].to_numpy()
-            lons = pdf["lon"].to_numpy(dtype=np.float64)
-            lats = pdf["lat"].to_numpy(dtype=np.float64)
-            all_pids = pdf[poly_col].to_numpy(dtype=np.int64)
+            ws = pdf["w"].to_numpy(dtype=np.int64)
+            hs = pdf["h"].to_numpy(dtype=np.int64)
+            pids = pdf[poly_col].to_numpy(dtype=np.int64)
+            masks = geom.scanline_parity(
+                pdf["lon"].to_numpy(dtype=np.float64),
+                pdf["lat"].to_numpy(dtype=np.float64),
+                ws, hs, pids, bc.value, deg_per_px)
+            starts = np.cumsum(ws * hs) - ws * hs
             out = [None] * n
-            # group at (w,h,fmt) so the decode stack amortizes; polys are
-            # subgrouped inside (a (w,h,fmt,poly) groupby fragments mixed
-            # batches into ~2-image groups and stacking never pays off)
-            for (w, h, fmt), idx in (
-                    pdf.groupby(["w", "h", "fmt"]).indices.items()):
-                w, h = int(w), int(h)
+            for (w, h, fmt), idx in _shape_groups(pdf):
                 px = _decode_stack_u8(pdf, idx, w, h, fmt)   # (k,h,w,3)
-                k = len(idx)
-                pids = all_pids[idx]
-                xs = (np.arange(w) - w / 2 + 0.5) * deg_per_px
-                ys = (h / 2 - np.arange(h) - 0.5) * deg_per_px
-                mask = np.zeros((k, h, w), dtype=bool)
-                for pid in np.unique(pids):
-                    edges = bc.value.get(int(pid))
-                    if edges is None or not len(edges):
-                        continue               # mask stays all-outside
-                    sel = np.nonzero(pids == pid)[0]
-                    gx, gy = np.broadcast_arrays(
-                        lons[idx[sel]][:, None, None] + xs[None, None, :],
-                        lats[idx[sel]][:, None, None] + ys[None, :, None])
-                    inside = (geom.crossings_chunked(
-                        np.ascontiguousarray(gx).ravel(),
-                        np.ascontiguousarray(gy).ravel(),
-                        edges) % 2 == 1)
-                    mask[sel] = inside.reshape(len(sel), h, w)
+                mask = masks[starts[idx][:, None]
+                             + np.arange(w * h)].reshape(len(idx), h, w)
                 clipped = px.copy()
                 clipped[~mask] = 0
                 n_in = mask.sum(axis=(1, 2)).astype(np.int64)
                 sums = clipped.sum(axis=(1, 2, 3), dtype=np.int64)
                 enc_fmt = "raw" if fmt == "qb" else fmt
                 for j, i in enumerate(idx):
-                    out[i] = (ids[i], int(pids[j]),
+                    out[i] = (ids[i], int(pids[i]),
                               codecs.encode(clipped[j], enc_fmt),
                               int(n_in[j]), w * h,
                               float(sums[j]) / (n_in[j] * 3)
@@ -162,9 +167,7 @@ def phash_verify(images: DataFrame) -> DataFrame:
             stored = pdf["phash"].to_numpy(dtype=np.int64)
             fmts = pdf["fmt"].to_numpy()
             out = [None] * n
-            for (w, h, fmt), idx in (
-                    pdf.groupby(["w", "h", "fmt"]).indices.items()):
-                w, h = int(w), int(h)
+            for (w, h, fmt), idx in _shape_groups(pdf):
                 px = _decode_stack_u8(pdf, idx, w, h, fmt)
                 k = len(idx)
                 gray = px.astype(np.float64).mean(axis=3)       # (k,h,w)
@@ -212,9 +215,7 @@ def decode_stats(images: DataFrame) -> DataFrame:
             ids = pdf["image_id"].to_numpy()
             fmts = pdf["fmt"].to_numpy()
             out = [None] * n
-            for (w, h, fmt), idx in (
-                    pdf.groupby(["w", "h", "fmt"]).indices.items()):
-                w, h = int(w), int(h)
+            for (w, h, fmt), idx in _shape_groups(pdf):
                 px = _decode_stack_u8(pdf, idx, w, h, fmt)
                 means = px.mean(axis=(1, 2, 3))
                 for j, i in enumerate(idx):

@@ -94,11 +94,13 @@ def crossings(px: np.ndarray, py: np.ndarray, edges: np.ndarray) -> np.ndarray:
 def crossings_chunked(px: np.ndarray, py: np.ndarray, edges: np.ndarray,
                       target_cells: int = 524288) -> np.ndarray:
     """:func:`crossings` over bounded point chunks. The kernel materializes
-    an (n_points, n_edges) float64 intermediate; on a stacked multi-image
-    lattice that intermediate leaves cache (measured 1.5 s vs 0.78 s for
-    1.2M points x 64 edges, 8.1 s vs 1.9 s x 352 edges) — chunk so each
-    pass's intermediate stays ~target_cells (≈4 MB) regardless of how many
-    images were stacked or how many edges the polygon has."""
+    an (n_points, n_edges) float64 intermediate; on many points that
+    intermediate leaves cache (measured 1.5 s vs 0.78 s for 1.2M points x
+    64 edges, 8.1 s vs 1.9 s x 352 edges) — chunk so each pass's
+    intermediate stays ~target_cells (≈4 MB) regardless of how many points
+    or edges there are. Called by the benchmark's ``spatial_kernels``
+    workload and ``perfbench/kernels.py`` (scattered points); the raster
+    clip uses :func:`scanline_parity`."""
     n = len(px)
     chunk = max(512, min(8192, target_cells // max(len(edges), 1)))
     if n <= chunk:
@@ -107,6 +109,81 @@ def crossings_chunked(px: np.ndarray, py: np.ndarray, edges: np.ndarray,
     for s in range(0, n, chunk):
         out[s:s + chunk] = crossings(px[s:s + chunk], py[s:s + chunk], edges)
     return out
+
+
+def scanline_parity(lon, lat, w, h, pids, poly_edges,
+                    step: float) -> np.ndarray:
+    """Even-odd mask of every pixel centre of a batch of images against
+    each image's polygon, by scanlines. Image k (``w[k]`` x ``h[k]``
+    pixels, centred at ``lon[k]``/``lat[k]``) has pixel centres
+
+        px = lon + ((x - w/2) + 0.5) * step
+        py = lat + ((h/2 - y) - 0.5) * step      (row y, column x)
+
+    and is tested against ``poly_edges[pids[k]]`` ((m, 4) x1,y1,x2,y2; a
+    missing poly id tests against no edges). Returns a flat bool array:
+    the images' row-major (h, w) masks back to back.
+
+    Exactly ``crossings(px, py, edges) % 2 == 1`` per pixel: every pixel
+    of a row shares ``py``, so per (image row, edge) the straddle test
+    and ``xin`` are computed once, as :func:`crossings` computes them; the
+    row's columns with ``px < xin`` are a prefix (``px`` is non-decreasing
+    in x), whose length is guessed arithmetically and then corrected
+    against the pixel centres themselves. A toggle at the prefix end and
+    a reverse cumulative count along the row give each pixel's crossing
+    parity. Work and memory scale with Σ (rows x the image's own edges)
+    plus the pixels."""
+    lon = np.asarray(lon, dtype=np.float64)
+    lat = np.asarray(lat, dtype=np.float64)
+    w = np.asarray(w, dtype=np.int64)
+    h = np.asarray(h, dtype=np.int64)
+    polys, poly_of = np.unique(np.asarray(pids, dtype=np.int64),
+                              return_inverse=True)
+    tables = [np.asarray(poly_edges.get(int(p), ()),
+                         dtype=np.float64).reshape(-1, 4) for p in polys]
+    e = np.concatenate(tables + [np.empty((0, 4))])
+    sizes = np.array([len(t) for t in tables], dtype=np.int64)
+    m = sizes[poly_of]                                  # edges of image k
+    first_edge = (np.cumsum(sizes) - sizes)[poly_of]
+    # ragged (image row, edge) pairs: h[k] * m[k] for image k
+    pairs = h * m
+    img = np.repeat(np.arange(len(w)), pairs)
+    local = np.arange(pairs.sum()) - np.repeat(np.cumsum(pairs) - pairs,
+                                               pairs)
+    row, edge = np.divmod(local, m[img])
+    edge += first_edge[img]
+    py = lat[img] + ((h[img] / 2 - row) - 0.5) * step
+    y1, y2 = e[edge, 1], e[edge, 3]
+    keep = (y1 > py) != (y2 > py)
+    img, row, edge, py, y1, y2 = (a[keep] for a in
+                                  (img, row, edge, py, y1, y2))
+    x1, x2 = e[edge, 0], e[edge, 2]
+    x0, wk = lon[img], w[img]
+    with np.errstate(invalid="ignore", over="ignore"):
+        xin = x1 + (py - y1) * (x2 - x1) / (y2 - y1)
+        # c = number of columns with px < xin
+        guess = np.ceil((xin - x0) / step + wk / 2 - 0.5)
+    c = np.clip(np.nan_to_num(guess), 0, wk).astype(np.int64)
+
+    def below(x):                                       # px[x] < xin
+        return x0 + ((x - wk / 2) + 0.5) * step < xin
+
+    while (fix := (c > 0) & ~below(c - 1)).any():
+        c -= fix
+    while (fix := (c < wk) & below(c)).any():
+        c += fix
+    # toggle the prefix's last pixel; parity = toggles at or after a
+    # pixel within its row (suffix count minus the suffix past row end)
+    row_w = np.repeat(w, h)
+    row_start = np.cumsum(row_w) - row_w
+    row_id = (np.cumsum(h) - h)[img] + row
+    hit = c > 0
+    n = int(row_w.sum())
+    toggles = np.bincount(row_start[row_id[hit]] + c[hit] - 1,
+                          minlength=n + 1)
+    after = np.cumsum(toggles[::-1])[::-1]
+    return ((after[:n] - np.repeat(after[row_start + row_w], row_w))
+            & 1).astype(bool)
 
 
 def rings_to_edges(rings: list[np.ndarray]) -> np.ndarray:

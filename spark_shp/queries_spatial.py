@@ -502,7 +502,7 @@ def _clip_fixture_rows():
 def q_clip_coverage_stats(spark, sf_dir):
     """B10 under the oracle gate: run the REAL decode→clip kernel
     (raster_vector_clip: codec decode, pixel-center lattice, even-odd
-    ray-cast with holes, re-encode) and emit the SQL-checkable half of its
+    scanline ray-cast with holes, re-encode) and emit the SQL-checkable half of its
     output — (image_id, poly_id, n_inside, n_pixels). The oracle recomputes
     the lattice PIP per pixel center with bit-identical float expressions;
     pixel VALUE invariants (zeroed outside, mean inside, PSNR) stay in
@@ -533,7 +533,8 @@ def _clip_oracle_sql() -> str:
     imgs = ",".join(
         f"('clip{i:03d}',{j},{lon!r},{lat!r},{w},{h})"
         for i, j, lon, lat, w, h in _clip_fixture_rows())
-    # pixel-center formulas mirror clip._pixel_lattice op-for-op:
+    # pixel-center formulas mirror geom.scanline_parity (the clip's
+    # kernel) op-for-op:
     # plon = lon + ((x - w/2) + 0.5) * deg ; plat = lat + ((h/2 - y) - 0.5) * deg
     return f"""
 WITH imgs AS (

@@ -1,0 +1,179 @@
+"""The scanline clip kernel (geom.scanline_parity) against the brute-force
+ray cast (geom.crossings % 2 on the meshgrid of the same pixel centres),
+and the clip operators' batch plumbing run without Spark: shape grouping
+and the check of each image blob against its row's w/h."""
+
+from types import SimpleNamespace
+
+import numpy as np
+import pandas as pd
+import pytest
+
+from spark_shp import clip, codecs, fixtures, geom
+
+STEP = clip.DEG_PER_PX
+
+
+def _brute_mask(lon, lat, w, h, edges, step=STEP):
+    xs = lon + (np.arange(w) - w / 2 + 0.5) * step
+    ys = lat + (h / 2 - np.arange(h) - 0.5) * step
+    gx, gy = np.meshgrid(xs, ys)
+    if edges is None or not len(edges):
+        return np.zeros(w * h, dtype=bool)
+    return geom.crossings(gx.ravel(), gy.ravel(), edges) % 2 == 1
+
+
+def _check_batch(lon, lat, w, h, pids, poly_edges, step=STEP):
+    got = geom.scanline_parity(lon, lat, w, h, pids, poly_edges, step)
+    assert got.dtype == bool and len(got) == int(np.sum(np.multiply(w, h)))
+    off = 0
+    for k in range(len(w)):
+        n = int(w[k]) * int(h[k])
+        want = _brute_mask(lon[k], lat[k], int(w[k]), int(h[k]),
+                           poly_edges.get(int(pids[k])), step)
+        assert np.array_equal(got[off:off + n], want), (k, lon[k], lat[k])
+        off += n
+
+
+def _coord(rng, centre, size, k, step):
+    """One vertex coordinate along an axis of an image of ``size`` pixels
+    centred at ``centre``: on the pixel-centre lattice, on the half-pixel
+    lattice (pixel sides), or anywhere, within a few pixels outside."""
+    i = int(rng.integers(-3, size + 3))
+    kind = k % 3
+    if kind == 0:
+        return centre + ((i - size / 2) + 0.5) * step
+    if kind == 1:
+        return centre + (i - size / 2) * step
+    return centre + rng.uniform(-size / 2 - 3, size / 2 + 3) * step
+
+
+def _random_polygon(rng, lon, lat, w, h, step=STEP):
+    """Edge table of a random multipart polygon around an image: random
+    rings (vertices snapped as ``_coord`` draws them) and axis-aligned
+    rectangles, the latter with a hole (horizontal and vertical edges)."""
+    rings = []
+    for _ in range(int(rng.integers(1, 4))):
+        snap = int(rng.integers(0, 3))
+        if rng.random() < 0.5:
+            x0, x1 = sorted(_coord(rng, lon, w, snap, step) for _ in "ab")
+            y0, y1 = sorted(_coord(rng, lat, h, snap, step) for _ in "ab")
+            rings.append(np.array([(x0, y0), (x0, y1), (x1, y1), (x1, y0)]))
+            mx, my = (x0 + x1) / 2, (y0 + y1) / 2
+            rings.append(np.array([(x0, y0), (mx, y0), (mx, my), (x0, my)]))
+        else:
+            n = int(rng.integers(3, 9))
+            rings.append(np.array(
+                [(_coord(rng, lon, w, snap + v, step),
+                  _coord(rng, lat, h, snap + 2 * v, step))
+                 for v in range(n)]))
+    return geom.rings_to_edges(rings)
+
+
+@pytest.mark.parametrize("centre_lon", [0.0, 0.003, 179.994, -179.996,
+                                        179.9999, -0.005, 37.25])
+def test_scanline_parity_matches_ray_cast(centre_lon):
+    rng = np.random.default_rng(int(abs(centre_lon) * 1000) + 17)
+    for _ in range(40):
+        k = int(rng.integers(1, 7))
+        # several image shapes per batch, with w or h of 1 now and then
+        w = rng.choice([1, 2, 3, 7, 16, 33], k)
+        h = rng.choice([1, 2, 5, 8, 16, 31], k)
+        lon = centre_lon + rng.integers(-4, 5, k) * STEP / 2
+        lat = rng.uniform(-60, 60) + rng.integers(-4, 5, k) * STEP / 2
+        poly_edges = {p: _random_polygon(rng, lon[p % k], lat[p % k],
+                                         int(w[p % k]), int(h[p % k]))
+                      for p in range(4)}
+        poly_edges[4] = np.empty((0, 4))             # empty edge table
+        # ids 0-4, and 5, which poly_edges does not hold
+        pids = rng.integers(0, 6, k)
+        _check_batch(lon, lat, w, h, pids, poly_edges)
+
+
+def test_scanline_parity_edge_cases():
+    # pixel-centre grid lines: a vertical edge through a column of pixel
+    # centres and horizontal edges through a row of them
+    lon, lat, w, h = 10.0, 20.0, 6, 4
+    xc = lon + ((np.arange(w) - w / 2) + 0.5) * STEP
+    yc = lat + ((h / 2 - np.arange(h)) - 0.5) * STEP
+    square = geom.rings_to_edges([np.array(
+        [(xc[1], yc[0]), (xc[4], yc[0]), (xc[4], yc[3]), (xc[1], yc[3])])])
+    far = square + [5.0, 5.0, 5.0, 5.0]              # edges off the image
+    edges = {0: square, 1: far}
+    _check_batch(np.full(4, lon), np.full(4, lat), np.array([w, w, 1, w]),
+                 np.array([h, h, h, 1]), np.array([0, 1, 0, 0]), edges)
+    # px < xin is strict: centres on the west edge are inside, centres
+    # on the east edge outside
+    mask = geom.scanline_parity([lon], [lat], [w], [h], [0], edges, STEP)
+    assert mask.reshape(h, w)[1].tolist() == [False, True, True, True,
+                                              False, False]
+    # no images, and images with no edges at all
+    assert len(geom.scanline_parity([], [], [], [], [], {}, STEP)) == 0
+    assert not geom.scanline_parity([lon], [lat], [3], [2], [7], {},
+                                    STEP).any()
+
+
+def test_clip_pixels_matches_ray_cast():
+    edges = geom.rings_to_edges(fixtures.fence_rings(0))
+    cx, cy, hx, hy = fixtures.fence_params(0)
+    px = np.arange(24 * 40 * 3, dtype=np.uint8).reshape(24, 40, 3)
+    clipped, n_in = clip.clip_pixels(px, cx - hx, cy + hy / 2, edges)
+    want = _brute_mask(cx - hx, cy + hy / 2, 40, 24, edges).reshape(24, 40)
+    assert n_in == int(want.sum()) > 0
+    assert np.array_equal(clipped, np.where(want[..., None], px, 0))
+
+
+class _Capture:
+    """Takes the place of the DataFrame a clip operator is given, and
+    hands back the Arrow-batch function it passes to mapInPandas."""
+    sparkSession = SimpleNamespace(sparkContext=SimpleNamespace(
+        broadcast=lambda v: SimpleNamespace(value=v)))
+
+    def select(self, *cols):
+        return self
+
+    def mapInPandas(self, fn, schema):
+        return fn
+
+
+def _batch(rows):
+    return pd.DataFrame(rows).assign(poly_id=0, phash=0)
+
+
+def _run(op, pdf):
+    fn = (op(_Capture(), {0: np.empty((0, 4))})
+          if op is clip.raster_vector_clip else op(_Capture()))
+    return list(fn(iter([pdf])))
+
+
+def test_shape_groups_match_pandas_groupby():
+    rows = [fixtures.image_row(i) for i in range(30)]
+    pdf = _batch(rows)
+    want = {k: v.tolist() for k, v in
+            pdf.groupby(["w", "h", "fmt"]).indices.items()}
+    got = {k: v.tolist() for k, v in clip._shape_groups(pdf)}
+    assert got == want
+
+
+@pytest.mark.parametrize("op", [clip.raster_vector_clip, clip.phash_verify,
+                                clip.decode_stats])
+def test_malformed_blob_names_its_image(op):
+    # two 4x4 raw blobs of 45 and 51 bytes: joined they hold exactly two
+    # images, so without a per-blob check the second decodes shifted
+    ok = np.arange(48, dtype=np.uint8)
+    raw = [{"image_id": "short", "bytes": ok[:45].tobytes()},
+           {"image_id": "long", "bytes": bytes(range(100, 151))}]
+    raw = [dict(r, w=4, h=4, fmt="raw", lon=0.0, lat=0.0) for r in raw]
+    with pytest.raises(ValueError, match="'short'"):
+        _run(op, _batch(raw))
+    # a png / qb stream of 8x8 pixels in a 4x4 row
+    big = np.full((8, 8, 3), 7, dtype=np.uint8)
+    for fmt in ("png", "qb"):
+        row = {"image_id": f"big_{fmt}", "bytes": codecs.encode(big, fmt),
+               "w": 4, "h": 4, "fmt": fmt, "lon": 0.0, "lat": 0.0}
+        with pytest.raises(ValueError, match=f"'big_{fmt}'"):
+            _run(op, _batch([row]))
+    # well-formed rows still run
+    good = dict(raw[0], image_id="good", w=8, h=8,
+                bytes=np.arange(192, dtype=np.uint8).tobytes())
+    assert len(pd.concat(_run(op, _batch([good])))) == 1

@@ -60,25 +60,42 @@ def test_decode_stats(images):
 
 
 def test_raster_vector_clip(spark, images):
-    """Clip vs independently computed pixel-lattice PIP."""
+    """Clip vs independently computed pixel-lattice PIP, with the images
+    where the fixture puts them (off fence 0) and moved onto fence 0's
+    outer and hole west edges."""
     edges = {0: geom.rings_to_edges(fixtures.fence_rings(0))}
-    subset = (images.limit(6)
-              .withColumn("poly_id", F.lit(0)))
-    out = {r.image_id: r for r in
-           clip.raster_vector_clip(subset, edges).collect()}
-    for r0 in subset.collect():
-        i = int(r0.image_id[3:])
-        px = fixtures.image_pixels(i, r0.w, r0.h)
-        got = out[r0.image_id]
-        clipped, n_in = clip.clip_pixels(
-            codecs.decode(bytes(r0.bytes), r0.w, r0.h, r0.fmt),
-            r0.lon, r0.lat, edges[0])
-        assert got.n_inside == n_in
-        assert got.n_pixels == r0.w * r0.h
-        # zeroed-outside invariant
-        fmt = "raw" if r0.fmt == "qb" else r0.fmt
-        dec = codecs.decode(bytes(got.clipped_bytes), r0.w, r0.h, fmt)
-        assert np.array_equal(dec, clipped)
+    cx, cy, hx, _ = fixtures.fence_params(0)
+    moved = (F.when(F.col("h") % 32 == 0, cx - hx).otherwise(cx - hx / 2)
+             + F.col("w") / 16 * 0.003)
+    for place in ("fixture", "fence edges"):
+        subset = (images.limit(6)
+                  .withColumn("poly_id", F.lit(0)))
+        if place != "fixture":
+            subset = (subset.withColumn("lon", moved)
+                      .withColumn("lat", cy + F.col("h") / 16 * 0.004))
+        out = {r.image_id: r for r in
+               clip.raster_vector_clip(subset, edges).collect()}
+        for r0 in subset.collect():
+            got = out[r0.image_id]
+            clipped, n_in = clip.clip_pixels(
+                codecs.decode(bytes(r0.bytes), r0.w, r0.h, r0.fmt),
+                r0.lon, r0.lat, edges[0])
+            assert got.n_inside == n_in
+            # the operator and clip_pixels share one kernel: check the
+            # count against the brute-force PIP of the pixel-centre
+            # meshgrid too
+            gx, gy = np.meshgrid(
+                r0.lon + (np.arange(r0.w) - r0.w / 2 + 0.5) * clip.DEG_PER_PX,
+                r0.lat + (r0.h / 2 - np.arange(r0.h) - 0.5) * clip.DEG_PER_PX)
+            assert got.n_inside == int(geom.points_in_polygon(
+                gx.ravel(), gy.ravel(), fixtures.fence_rings(0)).sum())
+            assert got.n_pixels == r0.w * r0.h
+            # zeroed-outside invariant
+            fmt = "raw" if r0.fmt == "qb" else r0.fmt
+            dec = codecs.decode(bytes(got.clipped_bytes), r0.w, r0.h, fmt)
+            assert np.array_equal(dec, clipped)
+            if place != "fixture":
+                assert 0 < got.n_inside < got.n_pixels
 
 
 def test_image_features_and_resize(spark, images):
