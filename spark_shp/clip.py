@@ -19,6 +19,9 @@ pixels.
 
 from __future__ import annotations
 
+import struct
+import zlib
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
@@ -65,33 +68,43 @@ def _shape_groups(pdf: pd.DataFrame) -> list[tuple[tuple, np.ndarray]]:
     return [((int(ws[g[0]]), int(hs[g[0]]), fmts[g[0]]), g) for g in groups]
 
 
+def _decode_one(blob: bytes, image_id, w: int, h: int,
+                fmt: str) -> np.ndarray:
+    """Decode one image blob to (h, w, 3) uint8. A blob that does not
+    decode, or decodes to another size than its row's w/h, raises
+    ValueError naming the image."""
+    try:
+        px = codecs.decode(blob, w, h, fmt)
+    except (ValueError, struct.error, zlib.error) as e:
+        raise ValueError(f"image {image_id!r}: {fmt} blob does not decode "
+                         f"as {w}x{h}x3: {e}") from e
+    if px.shape != (h, w, 3):
+        raise ValueError(f"image {image_id!r}: {fmt} blob holds "
+                         + "x".join(map(str, px.shape))
+                         + f" pixels, its row says {w}x{h}x3")
+    return px
+
+
 def _decode_stack_u8(pdf: pd.DataFrame, idx: np.ndarray, w: int, h: int,
                      fmt: str) -> np.ndarray:
     """Decode a same-(w,h,fmt) group into ONE (n,h,w,3) uint8 stack — raw
     images as a single frombuffer over concatenated payloads; compressed
     formats per stream (zlib is inherently per-stream), math on the stack.
-    A blob whose size disagrees with its row's w/h raises ValueError naming
+    A blob that does not decode to its row's w/h raises ValueError naming
     the image."""
     blobs = pdf["bytes"].to_numpy()
     ids = pdf["image_id"].to_numpy()
-
-    def bad(i, got):
-        return ValueError(f"image {ids[i]!r}: {fmt} blob holds {got}, "
-                          f"its row says {w}x{h}x3")
-
     if fmt == "raw":
         raw = [bytes(blobs[i]) for i in idx]
         for i, b in zip(idx, raw):
             if len(b) != w * h * 3:
-                raise bad(i, f"{len(b)} bytes")
+                raise ValueError(f"image {ids[i]!r}: raw blob holds "
+                                 f"{len(b)} bytes, its row says {w}x{h}x3")
         flat = np.frombuffer(b"".join(raw), dtype=np.uint8)
         return flat.reshape(len(idx), h, w, 3)
     out = np.empty((len(idx), h, w, 3), dtype=np.uint8)
     for j, i in enumerate(idx):
-        px = codecs.decode(bytes(blobs[i]), w, h, fmt)
-        if px.shape != (h, w, 3):
-            raise bad(i, "x".join(map(str, px.shape)) + " pixels")
-        out[j] = px
+        out[j] = _decode_one(bytes(blobs[i]), ids[i], w, h, fmt)
     return out
 
 
@@ -156,40 +169,38 @@ PHASH_SCHEMA = T.StructType([
 def phash_verify(images: DataFrame) -> DataFrame:
     """B12: recompute the 64-bit perceptual hash from decoded pixels and
     compare to the stored ``phash`` column (hamming ≤ 4 tolerated for the
-    lossy 'qb' format; exact for lossless)."""
+    lossy 'qb' format; exact for lossless).
+
+    Per Arrow batch every row decodes once and one ``codecs.phash_many``
+    call hashes them all. An image narrower or shorter than 8 px has no
+    phash and raises ValueError naming it."""
 
     def work(batches):
         for pdf in batches:
-            n = len(pdf)
-            if not n:
+            if not len(pdf):
                 continue
             ids = pdf["image_id"].to_numpy()
-            stored = pdf["phash"].to_numpy(dtype=np.int64)
+            ws = pdf["w"].to_numpy(dtype=np.int64)
+            hs = pdf["h"].to_numpy(dtype=np.int64)
             fmts = pdf["fmt"].to_numpy()
-            out = [None] * n
-            for (w, h, fmt), idx in _shape_groups(pdf):
-                px = _decode_stack_u8(pdf, idx, w, h, fmt)
-                k = len(idx)
-                gray = px.astype(np.float64).mean(axis=3)       # (k,h,w)
-                hh, ww = (h // 8) * 8, (w // 8) * 8
-                g = (gray[:, :hh, :ww]
-                     .reshape(k, 8, hh // 8, 8, ww // 8)
-                     .mean(axis=(2, 4)))                        # (k,8,8)
-                bits = (g > g.mean(axis=(1, 2), keepdims=True)).reshape(k, 64)
-                # MSB-first pack, identical to codecs.phash's shift loop
-                hashes = (np.packbits(bits, axis=1).copy()
-                          .view(">u8").reshape(k).astype(np.uint64)
-                          .view(np.int64))
-                xor = (hashes ^ stored[idx]).view(np.uint64)
-                ham = (np.unpackbits(xor.view(np.uint8))
-                       .reshape(k, 64).sum(axis=1).astype(np.int64))
-                for j, i in enumerate(idx):
-                    ok = (ham[j] == 0 if fmts[i] in ("raw", "png")
-                          else ham[j] <= 4)
-                    out[i] = (ids[i], int(stored[i]), int(hashes[j]),
-                              bool(ok), int(ham[j]))
-            yield pd.DataFrame(out,
-                               columns=[f.name for f in PHASH_SCHEMA])
+            pixels = [_decode_one(bytes(b), i, w, h, f) for b, i, w, h, f
+                      in zip(pdf["bytes"], ids, ws.tolist(), hs.tolist(),
+                             fmts)]
+            small = np.flatnonzero((ws < 8) | (hs < 8))
+            if len(small):
+                k = small[0]
+                raise ValueError(f"image {ids[k]!r} is {ws[k]}x{hs[k]} px: "
+                                 "phash needs at least 8x8")
+            computed = codecs.phash_many(pixels)
+            stored = pdf["phash"].to_numpy(dtype=np.int64)
+            ham = (np.unpackbits((computed ^ stored).view(np.uint8))
+                   .reshape(-1, 64).sum(axis=1, dtype=np.int64))
+            yield pd.DataFrame({
+                "image_id": ids, "phash_stored": stored,
+                "phash_computed": computed,
+                "match": np.where(np.isin(fmts, ("raw", "png")),
+                                  ham == 0, ham <= 4),
+                "hamming": ham})
 
     return (images.select("image_id", "bytes", "w", "h", "fmt", "phash")
             .mapInPandas(work, PHASH_SCHEMA))

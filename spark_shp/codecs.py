@@ -6,16 +6,31 @@ are fully self-implemented on numpy + stdlib zlib:
   * ``raw``  — C-order uint8 RGB bytes, lossless.
   * ``png``  — real RFC-2083 PNG (8-bit RGB, filter 0 rows, zlib IDAT),
                lossless; decoder handles all five standard row filters so it
-               can read PNGs from other writers too.
+               can read PNGs from other writers too, and rejects image data
+               whose inflated length does not fit its header.
   * ``qb``   — quantized-lossy: per-channel ``q = p // 4`` packed tight,
                reconstructed as ``q*4 + 2``; worst-case MSE ≤ 2.5 →
                PSNR ≥ 10·log10(255²/2.5) ≈ 44.2 dB ≥ 40 dB (BASELINE.json
                invariant), property-tested.
 
 phash (FIXTURES.md §1): 64-bit average-hash — grayscale = channel mean,
-8×8 block-mean downsample, bit b set iff block mean > global mean of the 64
-block means; bits packed MSB-first (bit 0 of the grid = most significant),
-folded to signed int64.  Deterministic, pure numpy.
+8×8 block-mean downsample over the top-left 8·⌊h/8⌋ × 8·⌊w/8⌋ crop, bit b
+set iff block mean > global mean of the 64 block means; bits packed
+MSB-first (bit 0 of the grid = most significant), folded to signed int64.
+An image narrower or shorter than 8 px has no 8×8 grid and raises
+ValueError.  ``phash_many`` evaluates the comparison in integers: with S_b
+the sum of the channel sums over block b (m = ⌊h/8⌋·⌊w/8⌋ pixels), block
+mean > global mean iff 64·S_b > ΣS.  That is the definition computed in
+float64 (channel mean /3, block mean /m, mean of the 64), which rounds:
+each block mean G_b carries a relative error ≤ γ_(m+1) and their mean M
+≤ γ_(m+64), γ_k = k·2⁻⁵³/(1 − k·2⁻⁵³) (every term is non-negative, and
+/64 is exact), so the float bit can differ from the exact one only where
+|G_b − M| ≤ γ_(m+64)·(G_b + M), i.e. times 192·m where
+|64·S_b − ΣS| ≤ γ_(m+64)·(64·S_b + ΣS).  An image
+with any such margin (always so for an exact tie, 64·S_b = ΣS, whose exact
+bit is 0 and whose float bit goes either way) is hashed in float64, so
+``phash`` equals the float definition bit for bit.  Up to 2048 px a side
+the bound is below 1, so only exact ties fall back.
 """
 
 from __future__ import annotations
@@ -45,39 +60,66 @@ def png_encode(pixels: np.ndarray) -> bytes:
             + _chunk(b"IEND", b""))
 
 
-def _unfilter(raw: np.ndarray, h: int, nbytes: int,
-              bpp: int = 3) -> np.ndarray:
-    """Undo PNG row filters. raw: (h, 1 + nbytes) uint8; ``bpp`` is the
-    bytes-per-pixel the Sub/Average/Paeth left-neighbor offset uses."""
-    out = np.zeros((h, nbytes), dtype=np.uint8)
-    for y in range(h):
-        f = int(raw[y, 0])
-        line = raw[y, 1:].astype(np.int32)
-        prev = out[y - 1].astype(np.int32) if y else np.zeros(nbytes,
-                                                              np.int32)
-        if f == 0:
-            res = line
-        elif f == 2:  # Up
-            res = (line + prev) & 0xFF
-        else:  # Sub / Average / Paeth need left-to-right recurrence
-            res = np.zeros(nbytes, dtype=np.int32)
-            for i in range(nbytes):
-                a = res[i - bpp] if i >= bpp else 0
-                b = prev[i]
-                c = prev[i - bpp] if i >= bpp else 0
-                if f == 1:
-                    res[i] = (line[i] + a) & 0xFF
-                elif f == 3:
-                    res[i] = (line[i] + ((a + b) >> 1)) & 0xFF
-                elif f == 4:
-                    pp = a + b - c
-                    pa, pb, pc = abs(pp - a), abs(pp - b), abs(pp - c)
-                    pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                    res[i] = (line[i] + pred) & 0xFF
-                else:
-                    raise ValueError(f"unknown PNG filter {f}")
-        out[y] = res.astype(np.uint8)
+def _unfilter(raw: np.ndarray, bpp: int = 3) -> np.ndarray:
+    """Undo PNG row filters. raw: (h, 1 + nbytes) uint8, each row's filter
+    byte first; ``bpp`` is the bytes-per-pixel the Sub/Average/Paeth
+    left-neighbor offset uses. Each run of None (0) and Up (2) rows is one
+    whole-array step (an Up row adds the row above it, so a run is a
+    uint8 cumulative sum down the rows, restarted at each None row); only
+    Sub, Average and Paeth rows are undone one row at a time."""
+    h, nbytes = raw.shape[0], raw.shape[1] - 1
+    filt = raw[:, 0]
+    if (filt > 4).any():
+        raise ValueError(f"unknown PNG filter {int(filt.max())}")
+    out = raw[:, 1:].copy()
+    start = 0
+    for y in np.flatnonzero((filt != 0) & (filt != 2)).tolist() + [h]:
+        up = filt[start:y] == 2
+        if up.any():
+            out[start:y] = _undo_up_run(out[start:y], up,
+                                        out[start - 1] if start else 0)
+        if y < h:
+            out[y] = _undo_left_row(int(filt[y]), out[y],
+                                    out[y - 1] if y else
+                                    np.zeros(nbytes, np.uint8), bpp)
+        start = y + 1
     return out
+
+
+def _undo_up_run(lines: np.ndarray, up: np.ndarray, prev) -> np.ndarray:
+    """Rows of a run of None/Up rows (``up`` marks the Up ones) below the
+    decoded row ``prev``: the cumulative sum of [0, prev, lines...] less
+    its value just above the run's last None row at or above each row."""
+    k = len(lines)
+    c = np.empty((k + 2, lines.shape[1]), np.uint8)
+    c[0], c[1], c[2:] = 0, prev, lines
+    c = np.cumsum(c, axis=0, dtype=np.uint8)
+    base = np.where(up, 0, np.arange(1, k + 1))
+    return c[2:] - c[np.maximum.accumulate(base)]
+
+
+def _undo_left_row(f: int, line: np.ndarray, prev: np.ndarray,
+                   bpp: int) -> np.ndarray:
+    """One Sub (1), Average (3) or Paeth (4) row: each byte depends on the
+    decoded byte ``bpp`` to its left, so Average and Paeth go byte by
+    byte; Sub is a cumulative sum per channel."""
+    if f == 1:
+        return np.cumsum(line.reshape(-1, bpp), axis=0,
+                         dtype=np.uint8).ravel()
+    line, prev = line.astype(np.int32), prev.astype(np.int32)
+    res = np.zeros(len(line), dtype=np.int32)
+    for i in range(len(line)):
+        a = res[i - bpp] if i >= bpp else 0
+        b = prev[i]
+        c = prev[i - bpp] if i >= bpp else 0
+        if f == 3:
+            res[i] = (line[i] + ((a + b) >> 1)) & 0xFF
+        else:
+            pp = a + b - c
+            pa, pb, pc = abs(pp - a), abs(pp - b), abs(pp - c)
+            pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
+            res[i] = (line[i] + pred) & 0xFF
+    return res.astype(np.uint8)
 
 
 # channel bytes per pixel per PNG color type (8-bit depth)
@@ -111,6 +153,8 @@ def png_decode(data: bytes) -> np.ndarray:
                 raise ValueError(f"only 8-bit PNGs supported (depth {depth})")
             if ctype not in _PNG_BPP:
                 raise ValueError(f"unsupported PNG color type {ctype}")
+            if interlace not in (0, 1):
+                raise ValueError(f"unknown PNG interlace method {interlace}")
         elif tag == b"PLTE":
             plte = np.frombuffer(payload, np.uint8).reshape(-1, 3)
         elif tag == b"IDAT":
@@ -118,26 +162,30 @@ def png_decode(data: bytes) -> np.ndarray:
         elif tag == b"IEND":
             break
         pos += 12 + ln
+    if w is None:
+        raise ValueError("PNG has no IHDR")
     bpp = _PNG_BPP[ctype]
     raw = np.frombuffer(zlib.decompress(bytes(idat)), dtype=np.uint8)
+    # (rows, columns) of each pass; a pass without both is not stored
+    passes = [((h - y0 + dy - 1) // dy, (w - x0 + dx - 1) // dx)
+              for x0, y0, dx, dy in (_ADAM7 if interlace else [(0, 0, 1, 1)])]
+    need = sum(ph * (1 + pw * bpp) for ph, pw in passes if pw)
+    if len(raw) != need:
+        raise ValueError(f"PNG image data inflates to {len(raw)} bytes; a "
+                         f"{w}x{h} image of {bpp} bytes per pixel needs "
+                         f"{need}")
     if interlace == 0:
-        px = _unfilter(raw.reshape(h, w * bpp + 1), h, w * bpp,
-                       bpp).reshape(h, w, bpp)
-    elif interlace == 1:
+        px = _unfilter(raw.reshape(h, 1 + w * bpp), bpp).reshape(h, w, bpp)
+    else:
         px = np.zeros((h, w, bpp), dtype=np.uint8)
         off = 0
-        for x0, y0, dx, dy in _ADAM7:
-            pw = (w - x0 + dx - 1) // dx
-            ph = (h - y0 + dy - 1) // dy
-            if pw <= 0 or ph <= 0:
+        for (x0, y0, dx, dy), (ph, pw) in zip(_ADAM7, passes):
+            if not (ph and pw):
                 continue
             n = ph * (1 + pw * bpp)
-            sub = _unfilter(raw[off:off + n].reshape(ph, pw * bpp + 1),
-                            ph, pw * bpp, bpp)
+            sub = _unfilter(raw[off:off + n].reshape(ph, 1 + pw * bpp), bpp)
             px[y0::dy, x0::dx] = sub.reshape(ph, pw, bpp)
             off += n
-    else:
-        raise ValueError(f"unknown PNG interlace method {interlace}")
     if ctype == 2:
         return px
     if ctype == 0:
@@ -145,6 +193,9 @@ def png_decode(data: bytes) -> np.ndarray:
     if ctype == 3:
         if plte is None:
             raise ValueError("palette PNG missing PLTE")
+        if px.max() >= len(plte):
+            raise ValueError(f"palette PNG index {px.max()} is past its "
+                             f"{len(plte)}-entry PLTE")
         return plte[px[:, :, 0]]
     if ctype == 4:
         return np.repeat(px[:, :, :1], 3, axis=2)
@@ -200,14 +251,46 @@ def psnr(a: np.ndarray, b: np.ndarray) -> float:
 
 def phash(pixels: np.ndarray) -> int:
     """64-bit average-hash of an (h, w, 3) uint8 image → signed int64."""
-    gray = np.asarray(pixels, dtype=np.float64).mean(axis=2)
+    return int(phash_many([pixels])[0])
+
+
+def phash_many(pixels) -> np.ndarray:
+    """64-bit average-hash of each (h, w, 3) uint8 image of ``pixels`` (a
+    sequence of images, or an (n, h, w, 3) stack) → int64[n].
+
+    One reshape-sum per image gives its integer 8x8 block sums S; bit b is
+    set iff 64·S_b > ΣS, which is the float definition's comparison
+    evaluated exactly. An image with a margin |64·S_b − ΣS| within the
+    float definition's rounding bound is hashed by that definition
+    instead (see the module docstring), so every hash equals it."""
+    n = len(pixels)
+    sums = np.empty((n, 64), dtype=np.int64)
+    block = np.empty((n, 1), dtype=np.int64)
+    for j, px in enumerate(pixels):
+        h, w = px.shape[:2]
+        bh, bw = h // 8, w // 8
+        if not (bh and bw):
+            raise ValueError(f"image {j} is {w}x{h} px: phash needs at "
+                             "least 8x8")
+        sums[j] = (px[:8 * bh, :8 * bw].reshape(8, bh, 8, 3 * bw)
+                   .sum(axis=(1, 3), dtype=np.int64).ravel())
+        block[j] = bh * bw
+    total = sums.sum(axis=1, keepdims=True)
+    margin = 64 * sums - total
+    bits = margin > 0
+    # 2·(m + 64)·2^-53 ≥ γ_(m+64), with room for the rounding of tol itself
+    tol = (block + 64) * 2.0 ** -52 * (64 * sums + total)
+    for j in np.flatnonzero((np.abs(margin) <= tol).any(axis=1)):
+        bits[j] = _phash_bits_float(pixels[j])
+    return (np.packbits(bits, axis=1).view(">u8").ravel()
+            .astype(np.uint64).view(np.int64))
+
+
+def _phash_bits_float(px: np.ndarray) -> np.ndarray:
+    """The 64 bits of the float64 definition: block means of the channel
+    mean, each against the mean of the 64 block means."""
+    gray = np.asarray(px, dtype=np.float64).mean(axis=2)
     h, w = gray.shape
-    # 8×8 block means; h/w are multiples of 8 for fixture images, but handle
-    # ragged edges by truncating to the largest multiple of 8.
     hh, ww = (h // 8) * 8, (w // 8) * 8
     g = gray[:hh, :ww].reshape(8, hh // 8, 8, ww // 8).mean(axis=(1, 3))
-    bits = (g > g.mean()).ravel()
-    val = np.uint64(0)
-    for b in bits:
-        val = (val << np.uint64(1)) | np.uint64(bool(b))
-    return int(val.astype(np.int64))
+    return (g > g.mean()).ravel()

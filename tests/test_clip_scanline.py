@@ -3,6 +3,8 @@ ray cast (geom.crossings % 2 on the meshgrid of the same pixel centres),
 and the clip operators' batch plumbing run without Spark: shape grouping
 and the check of each image blob against its row's w/h."""
 
+import struct
+import zlib
 from types import SimpleNamespace
 
 import numpy as np
@@ -173,7 +175,65 @@ def test_malformed_blob_names_its_image(op):
                "w": 4, "h": 4, "fmt": fmt, "lon": 0.0, "lat": 0.0}
         with pytest.raises(ValueError, match=f"'big_{fmt}'"):
             _run(op, _batch([row]))
+    # a png whose image data holds one row too few, one whose image data
+    # is not a zlib stream, and a palette png indexing past its palette
+    rgb = struct.pack(">IIBBBBB", 16, 16, 8, 2, 0, 0, 0)
+    pal = (struct.pack(">IIBBBBB", 16, 16, 8, 3, 0, 0, 0),
+           codecs._chunk(b"PLTE", bytes(6)))
+    for name, (ihdr, plte), rows in (
+            ("short_png", (rgb, b""), np.zeros((15, 1 + 16 * 3), np.uint8)),
+            ("corrupt_png", (rgb, b""), None),
+            ("palette_png", pal,
+             np.pad(np.full((16, 16), 5, np.uint8), ((0, 0), (1, 0))))):
+        idat = (b"not a zlib stream" if rows is None
+                else zlib.compress(rows.tobytes()))
+        blob = (codecs._PNG_SIG + codecs._chunk(b"IHDR", ihdr) + plte
+                + codecs._chunk(b"IDAT", idat) + codecs._chunk(b"IEND", b""))
+        row = {"image_id": name, "bytes": blob, "w": 16, "h": 16,
+               "fmt": "png", "lon": 0.0, "lat": 0.0}
+        with pytest.raises(ValueError, match=f"'{name}'"):
+            _run(op, _batch([row]))
     # well-formed rows still run
     good = dict(raw[0], image_id="good", w=8, h=8,
                 bytes=np.arange(192, dtype=np.uint8).tobytes())
     assert len(pd.concat(_run(op, _batch([good])))) == 1
+
+
+def test_phash_verify_rejects_images_under_8px():
+    # both hashed to 0 before, so a stored 0 "matched" whatever the pixels
+    rows = [{"image_id": name, "bytes": np.full(48, v, np.uint8).tobytes(),
+             "w": 4, "h": 4, "fmt": "raw", "lon": 0.0, "lat": 0.0}
+            for name, v in (("dark", 0), ("bright", 200))]
+    for row in rows:
+        with pytest.raises(ValueError, match=f"'{row['image_id']}' is 4x4"):
+            _run(clip.phash_verify, _batch([row]))
+
+
+def test_phash_verify_matches_per_row_reference():
+    """One batch of raw, png and qb rows of many shapes (tie images of
+    test_phash included), some stored hashes off by 1, 4 or 5 bits: each
+    output row is the row's own decode and float-definition hash."""
+    from tests.test_phash import TIE_ORIGINALS, TIE_QB, _float_phash
+
+    rows = []
+    for n, i in enumerate(list(range(24)) + list(TIE_ORIGINALS + TIE_QB)):
+        r = fixtures.image_row(i)
+        px = codecs.decode(r["bytes"], r["w"], r["h"], r["fmt"])
+        for fmt in ("raw", "png", "qb"):
+            flip = (0, 1, 4, 5)[(n + len(fmt)) % 4]
+            stored = np.int64(r["phash"]) ^ np.int64((1 << flip) - 1)
+            rows.append(dict(r, image_id=f"{i}_{fmt}", fmt=fmt,
+                             bytes=codecs.encode(px, fmt),
+                             phash=int(stored)))
+    pdf = pd.DataFrame(rows).assign(poly_id=0)
+    out = pd.concat(_run(clip.phash_verify, pdf)).reset_index(drop=True)
+    want = []
+    for r in rows:
+        got = _float_phash(codecs.decode(r["bytes"], r["w"], r["h"],
+                                         r["fmt"]))
+        ham = bin((got ^ r["phash"]) & (2 ** 64 - 1)).count("1")
+        want.append((r["image_id"], r["phash"], got,
+                     ham == 0 if r["fmt"] != "qb" else ham <= 4, ham))
+    assert list(out.columns) == [f.name for f in clip.PHASH_SCHEMA]
+    assert list(out.itertuples(index=False, name=None)) == want
+    assert 0 < int(out["match"].sum()) < len(out)

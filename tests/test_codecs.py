@@ -23,9 +23,47 @@ def test_png_roundtrip_exact():
     assert np.array_equal(out, p)
 
 
+def _filter_rows(px, filters):
+    """Filter each scanline of ``px`` (h, w, bpp) uint8 with its type in
+    ``filters`` (0 None, 1 Sub, 2 Up, 3 Average, 4 Paeth), predicting from
+    the source bytes as an encoder does → (h, 1 + w * bpp) PNG rows."""
+    h, w, bpp = px.shape
+    x = px.reshape(h, w * bpp).astype(np.int32)
+    pad = np.zeros((h, bpp), np.int32)
+    up = np.vstack([np.zeros((1, w * bpp), np.int32), x[:-1]])
+    left = np.hstack([pad, x[:, :-bpp]])
+    upleft = np.hstack([pad, up[:, :-bpp]])
+    p = left + up - upleft
+    pa, pb, pc = abs(p - left), abs(p - up), abs(p - upleft)
+    paeth = np.where((pa <= pb) & (pa <= pc), left,
+                     np.where(pb <= pc, up, upleft))
+    pred = np.stack([np.zeros_like(x), left, up, (left + up) // 2, paeth])
+    rows = (x - pred[filters, np.arange(h)]) % 256
+    return np.hstack([np.asarray(filters)[:, None], rows]).astype(np.uint8)
+
+
 def test_png_signature_and_foreign_filters():
     data = codecs.encode(_img(), "png")
     assert data[:8] == b"\x89PNG\r\n\x1a\n"
+    # hand-filtered PNGs of every 8-bit channel layout, each row with its
+    # own filter: runs of None/Up rows, every filter after every other,
+    # and each filter type as the first row (whose row above is zero)
+    rng = np.random.default_rng(11)
+    tail = [2, 2, 0, 2, 1, 2, 3, 2, 4, 4, 0, 1, 3, 0, 4, 2, 1, 1, 3, 3]
+    for ctype, bpp in ((0, 1), (2, 3), (4, 2), (6, 4)):
+        for first in range(5):
+            src = rng.integers(0, 256, (1 + len(tail), 7, bpp), np.uint8)
+            blob = _png_build(src, ctype,
+                              filters=lambda n: np.r_[first, tail][:n])
+            want = (np.repeat(src[:, :, :1], 3, axis=2) if ctype in (0, 4)
+                    else src[:, :, :3])
+            assert np.array_equal(codecs.png_decode(blob), want), (ctype,
+                                                                   first)
+    # Adam7: every pass filtered on its own, random filter per row
+    src = rng.integers(0, 256, (19, 23, 3), np.uint8)
+    blob = _png_build(src, 2, interlace=1,
+                      filters=lambda n: rng.integers(0, 5, n))
+    assert np.array_equal(codecs.png_decode(blob), src)
 
 
 def test_qb_psnr_at_least_40db():
@@ -65,9 +103,11 @@ def test_image_row_contract():
     assert f"({row['lon']:.3f},{row['lat']:.3f})" in row["caption"]
 
 
-def _png_build(px, ctype, palette=None, interlace=0):
+def _png_build(px, ctype, palette=None, interlace=0, filters=None):
     """Hand-build a PNG of any color type / interlace for decoder-interop
-    tests (the production encoder writes only RGB8 non-interlaced)."""
+    tests (the production encoder writes only RGB8 non-interlaced).
+    ``filters(n)`` gives the filter types of an image's (or an Adam7
+    pass's) n rows; None filters no row."""
     import struct
     import zlib
 
@@ -76,21 +116,16 @@ def _png_build(px, ctype, palette=None, interlace=0):
 
     h, w, bpp = px.shape
     ihdr = struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, interlace)
-    if interlace == 0:
-        raw = np.zeros((h, w * bpp + 1), dtype=np.uint8)
-        raw[:, 1:] = px.reshape(h, w * bpp)
-        payload = raw.tobytes()
-    else:
-        parts = []
-        for x0, y0, dx, dy in codecs._ADAM7:
-            sub = px[y0::dy, x0::dx]
-            if sub.size == 0:
-                continue
-            ph, pw, _ = sub.shape
-            raw = np.zeros((ph, pw * bpp + 1), dtype=np.uint8)
-            raw[:, 1:] = sub.reshape(ph, pw * bpp)
-            parts.append(raw.tobytes())
-        payload = b"".join(parts)
+    grid = codecs._ADAM7 if interlace else [(0, 0, 1, 1)]
+    parts = []
+    for x0, y0, dx, dy in grid:
+        sub = px[y0::dy, x0::dx]
+        if sub.size == 0:
+            continue
+        f = (np.zeros(len(sub), np.int64) if filters is None
+             else np.asarray(filters(len(sub))))
+        parts.append(_filter_rows(sub, f).tobytes())
+    payload = b"".join(parts)
     out = codecs._PNG_SIG + codecs._chunk(b"IHDR", ihdr)
     if palette is not None:
         out += codecs._chunk(b"PLTE", palette.astype(np.uint8).tobytes())
