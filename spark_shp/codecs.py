@@ -63,56 +63,36 @@ def png_encode(pixels: np.ndarray) -> bytes:
 def _unfilter(raw: np.ndarray, bpp: int = 3) -> np.ndarray:
     """Undo PNG row filters. raw: (h, 1 + nbytes) uint8, each row's filter
     byte first; ``bpp`` is the bytes-per-pixel the Sub/Average/Paeth
-    left-neighbor offset uses. Each run of None (0) and Up (2) rows is one
-    whole-array step (an Up row adds the row above it, so a run is a
-    uint8 cumulative sum down the rows, restarted at each None row); only
-    Sub, Average and Paeth rows are undone one row at a time."""
-    h, nbytes = raw.shape[0], raw.shape[1] - 1
+    left-neighbor offset uses. None (0) rows, the only ones
+    ``png_encode`` writes, are one whole-array copy; every other row is
+    undone in turn, top to bottom."""
     filt = raw[:, 0]
     if (filt > 4).any():
         raise ValueError(f"unknown PNG filter {int(filt.max())}")
     out = raw[:, 1:].copy()
-    start = 0
-    for y in np.flatnonzero((filt != 0) & (filt != 2)).tolist() + [h]:
-        up = filt[start:y] == 2
-        if up.any():
-            out[start:y] = _undo_up_run(out[start:y], up,
-                                        out[start - 1] if start else 0)
-        if y < h:
-            out[y] = _undo_left_row(int(filt[y]), out[y],
-                                    out[y - 1] if y else
-                                    np.zeros(nbytes, np.uint8), bpp)
-        start = y + 1
+    zero = np.zeros(out.shape[1], dtype=np.uint8)
+    for y in np.flatnonzero(filt).tolist():
+        prev = out[y - 1] if y else zero
+        if filt[y] == 2:
+            out[y] += prev
+        else:
+            out[y] = _undo_left_row(int(filt[y]), out[y], prev, bpp)
     return out
-
-
-def _undo_up_run(lines: np.ndarray, up: np.ndarray, prev) -> np.ndarray:
-    """Rows of a run of None/Up rows (``up`` marks the Up ones) below the
-    decoded row ``prev``: the cumulative sum of [0, prev, lines...] less
-    its value just above the run's last None row at or above each row."""
-    k = len(lines)
-    c = np.empty((k + 2, lines.shape[1]), np.uint8)
-    c[0], c[1], c[2:] = 0, prev, lines
-    c = np.cumsum(c, axis=0, dtype=np.uint8)
-    base = np.where(up, 0, np.arange(1, k + 1))
-    return c[2:] - c[np.maximum.accumulate(base)]
 
 
 def _undo_left_row(f: int, line: np.ndarray, prev: np.ndarray,
                    bpp: int) -> np.ndarray:
-    """One Sub (1), Average (3) or Paeth (4) row: each byte depends on the
-    decoded byte ``bpp`` to its left, so Average and Paeth go byte by
-    byte; Sub is a cumulative sum per channel."""
-    if f == 1:
-        return np.cumsum(line.reshape(-1, bpp), axis=0,
-                         dtype=np.uint8).ravel()
+    """One Sub (1), Average (3) or Paeth (4) row, byte by byte: each byte
+    depends on the decoded byte ``bpp`` to its left."""
     line, prev = line.astype(np.int32), prev.astype(np.int32)
     res = np.zeros(len(line), dtype=np.int32)
     for i in range(len(line)):
         a = res[i - bpp] if i >= bpp else 0
         b = prev[i]
         c = prev[i - bpp] if i >= bpp else 0
-        if f == 3:
+        if f == 1:
+            res[i] = (line[i] + a) & 0xFF
+        elif f == 3:
             res[i] = (line[i] + ((a + b) >> 1)) & 0xFF
         else:
             pp = a + b - c

@@ -1,8 +1,10 @@
+import pathlib
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout these tests sit in, not whichever copy is installed
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
 
 
 @pytest.fixture(scope="session")

@@ -2,10 +2,6 @@
 queries() entry has an oracle_sql() twin and matches it on sf0.001;
 iceberg-layout round-trip."""
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 
 def test_entry_returns_rows(spark):
     import __spark_entry__ as em
