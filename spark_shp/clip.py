@@ -1,8 +1,9 @@
 """Raster↔vector operators over the images table (SURVEY.md §2.B B10–B12).
 
-All Arrow-batched (mapInPandas) — decode, clip, stats, re-encode, and phash
-verification happen on numpy pixel arrays inside executor tasks; no per-row
-Python at the DataFrame boundary beyond the batch iterator.
+All Arrow-batched (mapInPandas) inside executor tasks. Every row decodes
+once, by one decoder (each blob is its own stream); the mask, counts, sums,
+hashes and output columns are numpy over the whole batch, so only the
+decode and re-encode of each image run per row.
 
 Footprint model: an image centered at (lon, lat) spans ``deg_per_px`` degrees
 per pixel; pixel (row y, col x) center maps to
@@ -24,7 +25,7 @@ import zlib
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, types as T
 
 from . import codecs, geom
 
@@ -54,58 +55,32 @@ CLIP_SCHEMA = T.StructType([
 ])
 
 
-def _shape_groups(pdf: pd.DataFrame) -> list[tuple[tuple, np.ndarray]]:
-    """[((w, h, fmt), row indices)] of a batch: the rows of each image
-    shape, in row order."""
-    ws, hs = pdf["w"].to_numpy(), pdf["h"].to_numpy()
-    fmts = pdf["fmt"].to_numpy()
-    key = np.zeros(len(pdf), dtype=np.int64)
-    for col in (ws, hs, fmts):
-        vals, inv = np.unique(col, return_inverse=True)
-        key = key * len(vals) + inv
-    _, inv, counts = np.unique(key, return_inverse=True, return_counts=True)
-    groups = np.split(np.argsort(inv, kind="stable"), np.cumsum(counts)[:-1])
-    return [((int(ws[g[0]]), int(hs[g[0]]), fmts[g[0]]), g) for g in groups]
-
-
-def _decode_one(blob: bytes, image_id, w: int, h: int,
-                fmt: str) -> np.ndarray:
-    """Decode one image blob to (h, w, 3) uint8. A blob that does not
-    decode, or decodes to another size than its row's w/h, raises
-    ValueError naming the image."""
-    try:
-        px = codecs.decode(blob, w, h, fmt)
-    except (ValueError, struct.error, zlib.error) as e:
-        raise ValueError(f"image {image_id!r}: {fmt} blob does not decode "
-                         f"as {w}x{h}x3: {e}") from e
-    if px.shape != (h, w, 3):
-        raise ValueError(f"image {image_id!r}: {fmt} blob holds "
-                         + "x".join(map(str, px.shape))
-                         + f" pixels, its row says {w}x{h}x3")
-    return px
-
-
-def _decode_stack_u8(pdf: pd.DataFrame, idx: np.ndarray, w: int, h: int,
-                     fmt: str) -> np.ndarray:
-    """Decode a same-(w,h,fmt) group into ONE (n,h,w,3) uint8 stack — raw
-    images as a single frombuffer over concatenated payloads; compressed
-    formats per stream (zlib is inherently per-stream), math on the stack.
-    A blob that does not decode to its row's w/h raises ValueError naming
-    the image."""
-    blobs = pdf["bytes"].to_numpy()
-    ids = pdf["image_id"].to_numpy()
-    if fmt == "raw":
-        raw = [bytes(blobs[i]) for i in idx]
-        for i, b in zip(idx, raw):
-            if len(b) != w * h * 3:
-                raise ValueError(f"image {ids[i]!r}: raw blob holds "
-                                 f"{len(b)} bytes, its row says {w}x{h}x3")
-        flat = np.frombuffer(b"".join(raw), dtype=np.uint8)
-        return flat.reshape(len(idx), h, w, 3)
-    out = np.empty((len(idx), h, w, 3), dtype=np.uint8)
-    for j, i in enumerate(idx):
-        out[j] = _decode_one(bytes(blobs[i]), ids[i], w, h, fmt)
+def _decode_rows(pdf: pd.DataFrame, ws: np.ndarray,
+                 hs: np.ndarray) -> list[np.ndarray]:
+    """Every row's blob decoded once to (h, w, 3) uint8, in row order (each
+    blob is its own stream). A blob that does not decode, or decodes to
+    another size than its row's w/h, raises ValueError naming the image."""
+    out = []
+    for blob, image_id, w, h, fmt in zip(pdf["bytes"], pdf["image_id"],
+                                         ws.tolist(), hs.tolist(), pdf["fmt"]):
+        try:
+            px = codecs.decode(bytes(blob), w, h, fmt)
+        except (ValueError, struct.error, zlib.error) as e:
+            raise ValueError(f"image {image_id!r}: {fmt} blob does not "
+                             f"decode as {w}x{h}x3: {e}") from e
+        if px.shape != (h, w, 3):
+            raise ValueError(f"image {image_id!r}: {fmt} blob holds "
+                             + "x".join(map(str, px.shape))
+                             + f" pixels, its row says {w}x{h}x3")
+        out.append(px)
     return out
+
+
+def _span_sums(values: np.ndarray, sizes: np.ndarray) -> np.ndarray:
+    """int64 sums of a flat array over consecutive spans of ``sizes``
+    elements, from one cumulative sum at the span offsets."""
+    c = np.concatenate(([0], np.cumsum(values, dtype=np.int64)))
+    return np.diff(c[np.concatenate(([0], np.cumsum(sizes)))])
 
 
 def raster_vector_clip(images: DataFrame, poly_edges: dict[int, np.ndarray],
@@ -115,43 +90,41 @@ def raster_vector_clip(images: DataFrame, poly_edges: dict[int, np.ndarray],
     clipped re-encoded bytes + coverage stats. ``poly_edges`` is broadcast.
 
     Per Arrow batch, one ``geom.scanline_parity`` call masks every pixel
-    center of every image against its own polygon; each (w, h, fmt) group
-    then decodes as one stack and is clipped on the stack — no per-row
-    Python beyond the unavoidable per-stream encode."""
+    center of every image against its own polygon; the rows' decoded
+    pixels, concatenated flat in the mask's order, are zeroed by it in one
+    operation, and ``n_inside`` and the pixel sums come from cumulative
+    sums at the image offsets. Only decode and re-encode run per row."""
     spark = images.sparkSession
     bc = spark.sparkContext.broadcast(poly_edges)
 
     def work(batches):
         for pdf in batches:
-            n = len(pdf)
-            if not n:
+            if not len(pdf):
                 continue
-            ids = pdf["image_id"].to_numpy()
             ws = pdf["w"].to_numpy(dtype=np.int64)
             hs = pdf["h"].to_numpy(dtype=np.int64)
             pids = pdf[poly_col].to_numpy(dtype=np.int64)
-            masks = geom.scanline_parity(
+            mask = geom.scanline_parity(
                 pdf["lon"].to_numpy(dtype=np.float64),
                 pdf["lat"].to_numpy(dtype=np.float64),
                 ws, hs, pids, bc.value, deg_per_px)
-            starts = np.cumsum(ws * hs) - ws * hs
-            out = [None] * n
-            for (w, h, fmt), idx in _shape_groups(pdf):
-                px = _decode_stack_u8(pdf, idx, w, h, fmt)   # (k,h,w,3)
-                mask = masks[starts[idx][:, None]
-                             + np.arange(w * h)].reshape(len(idx), h, w)
-                clipped = px.copy()
-                clipped[~mask] = 0
-                n_in = mask.sum(axis=(1, 2)).astype(np.int64)
-                sums = clipped.sum(axis=(1, 2, 3), dtype=np.int64)
-                enc_fmt = "raw" if fmt == "qb" else fmt
-                for j, i in enumerate(idx):
-                    out[i] = (ids[i], int(pids[i]),
-                              codecs.encode(clipped[j], enc_fmt),
-                              int(n_in[j]), w * h,
-                              float(sums[j]) / (n_in[j] * 3)
-                              if n_in[j] else 0.0)
-            yield pd.DataFrame(out, columns=[f.name for f in CLIP_SCHEMA])
+            n_px = ws * hs
+            px = np.concatenate([p.reshape(-1, 3)
+                                 for p in _decode_rows(pdf, ws, hs)])
+            px[~mask] = 0
+            n_in = _span_sums(mask, n_px)
+            sums = _span_sums(px.reshape(-1), 3 * n_px)
+            clipped = [codecs.encode(p.reshape(h, w, 3),
+                                     "raw" if f == "qb" else f)
+                       for p, w, h, f in zip(
+                           np.split(px, np.cumsum(n_px)[:-1]), ws.tolist(),
+                           hs.tolist(), pdf["fmt"])]
+            mean = np.divide(sums, 3 * n_in, out=np.zeros(len(pdf)),
+                             where=n_in > 0)
+            yield pd.DataFrame({
+                "image_id": pdf["image_id"].to_numpy(), "poly_id": pids,
+                "clipped_bytes": clipped, "n_inside": n_in, "n_pixels": n_px,
+                "mean_inside": mean})
 
     cols = ["image_id", "bytes", "w", "h", "fmt", "lon", "lat", poly_col]
     return images.select(*cols).mapInPandas(work, CLIP_SCHEMA)
@@ -183,9 +156,7 @@ def phash_verify(images: DataFrame) -> DataFrame:
             ws = pdf["w"].to_numpy(dtype=np.int64)
             hs = pdf["h"].to_numpy(dtype=np.int64)
             fmts = pdf["fmt"].to_numpy()
-            pixels = [_decode_one(bytes(b), i, w, h, f) for b, i, w, h, f
-                      in zip(pdf["bytes"], ids, ws.tolist(), hs.tolist(),
-                             fmts)]
+            pixels = _decode_rows(pdf, ws, hs)
             small = np.flatnonzero((ws < 8) | (hs < 8))
             if len(small):
                 k = small[0]
@@ -216,23 +187,24 @@ DECODE_STATS_SCHEMA = T.StructType([
 
 def decode_stats(images: DataFrame) -> DataFrame:
     """B11 exercise path: decode every image, emit pixel stats (also the
-    kernel the lineage bench uses for bytes-decoded metrics)."""
+    kernel the lineage bench uses for bytes-decoded metrics).
+
+    Per Arrow batch each row decodes once, and the pixel sums come from
+    one cumulative sum over the batch's decoded bytes."""
 
     def work(batches):
         for pdf in batches:
-            n = len(pdf)
-            if not n:
+            if not len(pdf):
                 continue
-            ids = pdf["image_id"].to_numpy()
-            fmts = pdf["fmt"].to_numpy()
-            out = [None] * n
-            for (w, h, fmt), idx in _shape_groups(pdf):
-                px = _decode_stack_u8(pdf, idx, w, h, fmt)
-                means = px.mean(axis=(1, 2, 3))
-                for j, i in enumerate(idx):
-                    out[i] = (ids[i], fmts[i], float(means[j]), h * w * 3)
-            yield pd.DataFrame(
-                out, columns=[f.name for f in DECODE_STATS_SCHEMA])
+            ws = pdf["w"].to_numpy(dtype=np.int64)
+            hs = pdf["h"].to_numpy(dtype=np.int64)
+            size = 3 * ws * hs
+            sums = _span_sums(np.concatenate(
+                [p.reshape(-1) for p in _decode_rows(pdf, ws, hs)]), size)
+            yield pd.DataFrame({
+                "image_id": pdf["image_id"].to_numpy(),
+                "fmt": pdf["fmt"].to_numpy(), "mean_px": sums / size,
+                "bytes_decoded": size})
 
     return (images.select("image_id", "bytes", "w", "h", "fmt")
             .mapInPandas(work, DECODE_STATS_SCHEMA))

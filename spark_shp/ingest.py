@@ -84,22 +84,6 @@ def features_to_records(layer: str, features: list[dict]) -> list[dict]:
     return rows
 
 
-def denormalize_rank4(geom_type: str | None, coords):
-    """Inverse of :func:`normalize_rank4`: rank-4 ragged coordinates →
-    GeoJSON geometry dict (None for null shapes)."""
-    if geom_type is None or coords is None:
-        return None
-    if geom_type == "Point":
-        return {"type": "Point", "coordinates": coords[0][0][0]}
-    if geom_type in ("MultiPoint", "LineString"):
-        return {"type": geom_type, "coordinates": coords[0][0]}
-    if geom_type in ("MultiLineString", "Polygon"):
-        return {"type": geom_type, "coordinates": coords[0]}
-    if geom_type == "MultiPolygon":
-        return {"type": geom_type, "coordinates": coords}
-    raise ValueError(f"unknown geometry type {geom_type}")
-
-
 def _ragged_level(arr):
     """pyarrow ListArray level → (child array, int64 offsets) — via
     list_value_length + cumsum, which is offset- and null-safe (a null
@@ -118,8 +102,11 @@ def _geojson_geometry_strings(gtypes, coords) -> list:
     coordinate float in the batch serializes in ONE ``json.dumps`` of the
     flat value buffer (C shortest-repr, identical bytes to the per-row
     encoder), then each nesting level is a string join over offset
-    spans. ``gtypes`` picks each feature's unwrap depth exactly as
-    :func:`denormalize_rank4` does."""
+    spans. ``gtypes`` picks each feature's unwrap depth, the inverse of
+    :func:`normalize_rank4`: a Point is the first point of the first ring
+    of the first part, a MultiPoint or LineString the first ring of the
+    first part, a MultiLineString or Polygon the first part, and a
+    MultiPolygon the whole rank-4 value; a null type or value is null."""
     import json
 
     lvl3, off1 = _ragged_level(coords)      # feature → parts
@@ -280,6 +267,14 @@ def read_shapefiles(spark: SparkSession, path_glob: str) -> DataFrame:
     return files.groupBy("base").applyInPandas(decode, GEOM_SCHEMA)
 
 
+POINTS_SCHEMA = T.StructType([
+    T.StructField("layer", T.StringType()),
+    T.StructField("rec_no", T.LongType()),
+    T.StructField("lon", T.DoubleType()),
+    T.StructField("lat", T.DoubleType()),
+])
+
+
 def read_points_fast(spark: SparkSession, path_glob: str,
                      on_unsupported_crs: str = "raise") -> DataFrame:
     """Scale-path ingest for point telemetry (the dominant 100 TB shape):
@@ -296,14 +291,6 @@ def read_points_fast(spark: SparkSession, path_glob: str,
     .prj names an unimplemented PROJECTION; ``"skip"`` drops that layer;
     ``"null"`` keeps its records with NULL coordinates — one bad sidecar
     in a mixed multi-layer directory need not abort the whole ingest."""
-    from pyspark.sql import functions as F, types as T
-
-    schema = T.StructType([
-        T.StructField("layer", T.StringType()),
-        T.StructField("rec_no", T.LongType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ])
     files = (spark.read.format("binaryFile").load(path_glob)
              .where(F.lower(F.col("path")).endswith(".shp"))
              .select("path", "content"))
@@ -349,7 +336,7 @@ def read_points_fast(spark: SparkSession, path_glob: str,
                 else:
                     yield _points_from_blob(bytes(content), trans, base)
 
-    return files.mapInPandas(decode, schema)
+    return files.mapInPandas(decode, POINTS_SCHEMA)
 
 
 def _prj_wkts(spark: SparkSession, path_glob: str) -> dict[str, str]:
@@ -398,104 +385,6 @@ def _points_from_blob(blob: bytes, trans, base: str) -> pd.DataFrame:
         y = np.array([p[1] for p in pts], dtype=np.float64)
     return pd.DataFrame({"layer": base, "rec_no": rec_no,
                          "lon": x, "lat": y})
-
-
-VERTICES_SCHEMA = T.StructType([
-    T.StructField("layer", T.StringType()),
-    T.StructField("rec_no", T.LongType()),
-    T.StructField("part_no", T.LongType()),
-    T.StructField("pt_no", T.LongType()),
-    T.StructField("x", T.DoubleType()),
-    T.StructField("y", T.DoubleType()),
-])
-
-
-def read_vertices_fast(spark: SparkSession, path_glob: str,
-                       on_unsupported_crs: str = "raise") -> DataFrame:
-    """Scale-path ingest for polyline/polygon/multipoint layers: flat
-    vertex table (layer, rec_no, part_no, pt_no, x, y) via the columnar
-    kernel (parser.parse_shp_vertices_columns); non-uniform files fall
-    back to the per-record parity path flattened in the same file order
-    (for Polygon, part_no is the raw file-order ring index — raw vertices
-    are what tile-assign/cover-building consume; A6 assembly semantics
-    stay on the GeoJSON path).
-
-    .prj sidecars resolve per layer path-stem exactly like
-    :func:`read_points_fast` (previously this path silently ignored them,
-    emitting projected meters where the GeoJSON path emitted degrees);
-    ``on_unsupported_crs`` has the same raise/skip semantics ("null" is
-    treated as "skip" here — NULL vertices carry no information)."""
-    from pyspark.sql import functions as F
-
-    files = (spark.read.format("binaryFile").load(path_glob)
-             .where(F.lower(F.col("path")).endswith(".shp"))
-             .select("path", "content"))
-    prjs = _prj_wkts(spark, path_glob)
-    bc_prjs = spark.sparkContext.broadcast(prjs)
-    _UNSUPPORTED = object()
-
-    def decode(batches):
-        from .shp import parser
-        cache: dict[str, object] = {}
-        for pdf in batches:
-            for path, content in zip(pdf["path"], pdf["content"]):
-                stem = path.rsplit(".", 1)[0]
-                base = stem.rsplit("/", 1)[-1]
-                if stem not in cache:
-                    wkt = bc_prjs.value.get(stem)
-                    try:
-                        cache[stem] = (parser.projection_from_wkt(wkt)
-                                       if wkt else None)
-                    except ValueError:
-                        if on_unsupported_crs == "raise":
-                            raise
-                        cache[stem] = _UNSUPPORTED
-                trans = cache[stem]
-                if trans is _UNSUPPORTED:
-                    continue
-                blob = bytes(content)
-                fast = parser.parse_shp_vertices_columns(blob, trans)
-                if fast is not None:
-                    rec_no, part_no, pt_no, x, y = fast
-                else:
-                    nos, ps, qs, xs, ys = [], [], [], [], []
-                    hdr = parser.parse_header(blob)
-                    parser._check_type(hdr["type"])
-                    for no, rt, payload in parser.record_scan(blob):
-                        g = parser.parse_record(rt, payload, trans)
-                        if g is None:
-                            continue
-                        t, c = g["type"], g["coordinates"]
-                        if t == "Point":
-                            parts = [[c]]
-                        elif t in ("MultiPoint", "LineString"):
-                            parts = [c]
-                        elif t in ("MultiLineString", "Polygon"):
-                            parts = c
-                        else:  # MultiPolygon: flatten back to ring order
-                            parts = [ring for poly in c for ring in poly]
-                        for p, pts in enumerate(parts):
-                            for q, pt in enumerate(pts):
-                                nos.append(no); ps.append(p); qs.append(q)
-                                xs.append(pt[0]); ys.append(pt[1])
-                    rec_no = np.array(nos, dtype=np.int64)
-                    part_no = np.array(ps, dtype=np.int64)
-                    pt_no = np.array(qs, dtype=np.int64)
-                    x = np.array(xs, dtype=np.float64)
-                    y = np.array(ys, dtype=np.float64)
-                yield pd.DataFrame({"layer": base, "rec_no": rec_no,
-                                    "part_no": part_no, "pt_no": pt_no,
-                                    "x": x, "y": y})
-
-    return files.mapInPandas(decode, VERTICES_SCHEMA)
-
-
-POINTS_SCHEMA = T.StructType([
-    T.StructField("layer", T.StringType()),
-    T.StructField("rec_no", T.LongType()),
-    T.StructField("lon", T.DoubleType()),
-    T.StructField("lat", T.DoubleType()),
-])
 
 
 def read_shp_sharded(spark: SparkSession, shp_path: str,

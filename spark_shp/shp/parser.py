@@ -207,130 +207,6 @@ def parse_shp_points_columns(buf: bytes, trans=None):
     return arr["rec_no"].astype(np.int64), x, y
 
 
-def parse_shp_vertices_columns(buf: bytes, trans=None):
-    """Columnar vertex decode for uniform PolyLine(3)/Polygon(5)/
-    MultiPoint(8) files: flat arrays (rec_no, part_no, pt_no, x, y) — the
-    shape spatial indexing consumes at scale (tile-assign per vertex,
-    cover building) — without per-record GeoJSON dict/list nesting.
-
-    ~15 small numpy ops per record + one concatenate for the coordinate
-    blocks, vs hundreds of Python ops per record on the parity path.
-    Returns None for any other layout (Point files → use
-    parse_shp_points_columns; Z/M, null shapes, irregular records → caller
-    falls back to parse_shp). part_no is the FILE-ORDER part index (for
-    Polygon that's the raw ring index, before A6 ring-assembly regroups
-    rings into polygons/holes — indexing wants raw vertices; assembly
-    semantics live in the parity path); pt_no counts within a part; both
-    0-based. MultiPoint is a single part 0.
-    """
-    import struct
-
-    if len(buf) < 100:
-        return None
-    header = parse_header(buf)
-    base = header["type"]
-    if base not in (3, 5, 8):
-        return None
-    be = struct.Struct(">ii").unpack_from
-    le3 = struct.Struct("<3i").unpack_from   # type, (bbox skipped), counts
-    le = struct.Struct("<i").unpack_from
-    # pass 1: record headers + counts only (3 cheap unpack_from per record);
-    # everything payload-sized is gathered vectorized in pass 2
-    recs, n = [], len(buf)
-    off = 100
-    while off + 12 <= n:
-        rec_no, content_words = be(buf, off)
-        content_len = content_words * 2
-        if content_len < 4 or off + 8 + content_len > n:
-            break  # corrupt or truncated header — same guard as record_scan
-        rec_type, = le(buf, off + 8)
-        if rec_type != base:
-            return None                      # null shape / mixed → parity
-        body = off + 12                      # past the 4-byte type
-        if base == 8:
-            if content_len < 40:
-                return None
-            n_parts, n_pts = 1, le(buf, body + 32)[0]
-            pts_off = body + 36
-            if content_len != 4 + 36 + 16 * n_pts:
-                return None                  # trailing M/Z → parity path
-            parts_off = -1
-        else:
-            if content_len < 44:
-                return None
-            n_parts, = le(buf, body + 32)
-            n_pts, = le(buf, body + 36)
-            parts_off = body + 40
-            pts_off = parts_off + 4 * n_parts
-            if n_parts <= 0 or content_len != 4 + 40 + 4 * n_parts + 16 * n_pts:
-                return None
-        recs.append((rec_no, n_parts, n_pts, parts_off, pts_off))
-        off += 8 + content_len
-    if not recs:
-        return None
-    ra = np.array(recs, dtype=np.int64)
-    rec_ids, n_parts_a, n_pts_a = ra[:, 0], ra[:, 1], ra[:, 2]
-    parts_offs, pts_offs = ra[:, 3], ra[:, 4]
-    raw = np.frombuffer(buf, np.uint8)
-
-    def gather(starts, lens):
-        """Vectorized ranges→bytes: one fancy-index gather, O(total).
-
-        When every (start, len) is 8- or 4-aligned — true for the parts
-        and coordinate tables of well-formed files, whose offsets and
-        sizes are all multiples of 4 — the gather runs on an int64/int32
-        view of the buffer: 4–8x fewer indices to materialize and move
-        (the round-1 residual lever, ~0.3 s per 38 MB at byte
-        granularity). Falls back to the byte gather otherwise."""
-        total = int(lens.sum())
-        for unit, code in ((8, "<u8"), (4, "<u4")):
-            if (not np.any(starts % unit)) and (not np.any(lens % unit)):
-                v = raw[: (len(raw) // unit) * unit].view(code)
-                lu = lens // unit
-                seg_starts = np.cumsum(lu) - lu
-                within = (np.arange(total // unit, dtype=np.int64)
-                          - np.repeat(seg_starts, lu))
-                out = v[np.repeat(starts // unit, lu) + within]
-                return out.view(np.uint8)
-        seg_starts = np.cumsum(lens) - lens
-        within = np.arange(total, dtype=np.int64) - np.repeat(seg_starts,
-                                                              lens)
-        return raw[np.repeat(starts, lens) + within]
-
-    # parts tables (polyline/polygon): batched validation, no per-record ops
-    if base != 8:
-        parts = gather(parts_offs, 4 * n_parts_a).view("<i4").astype(
-            np.int64)
-        bounds = np.cumsum(n_parts_a) - n_parts_a    # first part per record
-        if np.any(parts[bounds] != 0):
-            return None
-        d = np.diff(parts)
-        interior = np.ones(len(parts) - 1, dtype=bool)
-        interior[bounds[1:] - 1] = False             # diffs across records
-        if np.any(d[interior] <= 0):
-            return None
-        if np.any(parts >= np.repeat(n_pts_a, n_parts_a)):
-            return None
-        nxt = np.empty(len(parts), dtype=np.int64)
-        nxt[:-1] = parts[1:]
-        nxt[np.cumsum(n_parts_a) - 1] = n_pts_a      # last part ends at n_pts
-        sizes = nxt - parts
-    else:
-        sizes = n_pts_a.copy()
-    xy = gather(pts_offs, 16 * n_pts_a).view("<f8").reshape(-1, 2)
-    if trans is not None:
-        xy = trans(xy)
-    total_parts = int(n_parts_a.sum())
-    rec_no = np.repeat(rec_ids, n_pts_a)
-    part_idx = (np.arange(total_parts, dtype=np.int64)
-                - np.repeat(np.cumsum(n_parts_a) - n_parts_a, n_parts_a))
-    part_no = np.repeat(part_idx, sizes)
-    part_starts = np.repeat(np.cumsum(sizes) - sizes, sizes)
-    pt_no = np.arange(len(rec_no), dtype=np.int64) - part_starts
-    return (rec_no, part_no, pt_no,
-            np.ascontiguousarray(xy[:, 0]), np.ascontiguousarray(xy[:, 1]))
-
-
 # --- A12: .prj WKT → inverse transform --------------------------------------
 
 _R_MERC = 6378137.0

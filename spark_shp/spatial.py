@@ -17,9 +17,13 @@ Design (Spark-first, scale-first):
   every polygon fits one row, a summed crossing count per (point,
   polygon) when wide polygons split into edge chunks. No Python runs
   between the candidate join and the output.
-* ``knn_join`` ships two strategies: broadcast brute-force top-k (the RIGHT
-  plan when the build side is a small dimension — Catalyst keeps it a single
-  stage) and cell-ring expansion (the scale path when both sides are large).
+* kNN ships three functions: ``knn_join_broadcast``, brute-force top-k
+  over a broadcast build side (the RIGHT plan when it is a small dimension
+  — Catalyst keeps it a single stage); ``knn_join_cells``, cell-ring
+  expansion (the scale path when both sides are large, exact when each
+  point's k NNs lie within ``max_ring`` cells); and
+  ``knn_join_cells_exact``, the cell-ring join with a coverage check that
+  repairs uncovered points by brute force.
 
 Reference parity: ring-hole semantics of the PIP match shapefile-js's
 polygon assembly (geom.assemble_rings / even-odd parity; SURVEY §2.B B6).
@@ -539,7 +543,8 @@ def distance_join_cells(left: DataFrame, right: DataFrame, radius: float,
 
 def salt_hot_cells(df: DataFrame, cell_col: str, top_n: int = 8,
                    salt_factor: int = 16) -> tuple[DataFrame, DataFrame]:
-    """B13: detect the ``top_n`` densest cells (sampled count) and salt them.
+    """B13: detect the ``top_n`` densest cells (a full count of every row
+    per cell) and salt them.
 
     Returns (salted probe df with ``_salted_cell``, hot-cell lookup df).
     Build side must explode hot cells × salt_factor to match (see

@@ -1,7 +1,8 @@
 """The scanline clip kernel (geom.scanline_parity) against the brute-force
 ray cast (geom.crossings % 2 on the meshgrid of the same pixel centres),
-and the clip operators' batch plumbing run without Spark: shape grouping
-and the check of each image blob against its row's w/h."""
+and the clip operators' batch functions run without Spark: the check of
+each image blob against its row's w/h, and every output column against a
+per-row decode."""
 
 import struct
 import zlib
@@ -148,15 +149,6 @@ def _run(op, pdf):
     return list(fn(iter([pdf])))
 
 
-def test_shape_groups_match_pandas_groupby():
-    rows = [fixtures.image_row(i) for i in range(30)]
-    pdf = _batch(rows)
-    want = {k: v.tolist() for k, v in
-            pdf.groupby(["w", "h", "fmt"]).indices.items()}
-    got = {k: v.tolist() for k, v in clip._shape_groups(pdf)}
-    assert got == want
-
-
 @pytest.mark.parametrize("op", [clip.raster_vector_clip, clip.phash_verify,
                                 clip.decode_stats])
 def test_malformed_blob_names_its_image(op):
@@ -237,3 +229,72 @@ def test_phash_verify_matches_per_row_reference():
     assert list(out.columns) == [f.name for f in clip.PHASH_SCHEMA]
     assert list(out.itertuples(index=False, name=None)) == want
     assert 0 < int(out["match"].sum()) < len(out)
+
+
+def test_clip_and_decode_stats_match_per_row_reference():
+    """One batch of raw, png and qb rows, repeated and unique shapes (w or
+    h of 1 among them), against fences near the images, one far off and
+    one poly id that ``poly_edges`` does not hold: every output column of
+    ``raster_vector_clip`` and ``decode_stats``, dtypes included, is the
+    row's own decode masked by the meshgrid ray cast."""
+    rng = np.random.default_rng(23)
+    lon0, lat0 = 10.0, 20.0
+    x0, x1 = lon0 - 9 * STEP, lon0 + 7.5 * STEP
+    y0, y1 = lat0 - 6 * STEP, lat0 + 4.5 * STEP
+    poly_edges = {
+        0: _random_polygon(rng, lon0, lat0, 24, 16),
+        1: geom.rings_to_edges([np.array(
+            [(x0, y0), (x0, y1), (x1, y1), (x1, y0)])]),
+        2: geom.rings_to_edges([np.array(                # far off
+            [(50.0, 50.0), (50.0, 51.0), (51.0, 51.0), (51.0, 50.0)])]),
+    }
+    shapes = [(16, 16)] * 4 + [(24, 16), (33, 7), (1, 9), (12, 1), (1, 1)]
+    rows = []
+    for n, (w, h) in enumerate(shapes):
+        px = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
+        for fmt in ("raw", "png", "qb"):
+            k = len(rows)
+            rows.append({"image_id": f"{n}_{fmt}",
+                         "bytes": codecs.encode(px, fmt),
+                         "w": w, "h": h, "fmt": fmt,
+                         "lon": lon0 + int(rng.integers(-6, 7)) * STEP / 2,
+                         "lat": lat0 + int(rng.integers(-6, 7)) * STEP / 2,
+                         "poly_id": (0, 1, 0, 1, 2, 5)[k % 6]})
+    pdf = pd.DataFrame(rows).assign(phash=0)
+
+    clipped, stats = [], []
+    for r in rows:
+        w, h = r["w"], r["h"]
+        px = codecs.decode(r["bytes"], w, h, r["fmt"])
+        mask = _brute_mask(r["lon"], r["lat"], w, h,
+                           poly_edges.get(r["poly_id"])).reshape(h, w)
+        cut = np.where(mask[..., None], px, 0).astype(np.uint8)
+        n_in = int(mask.sum())
+        clipped.append((r["image_id"], r["poly_id"],
+                        codecs.encode(cut, "raw" if r["fmt"] == "qb"
+                                      else r["fmt"]),
+                        n_in, w * h,
+                        float(cut.sum(dtype=np.int64)) / (n_in * 3)
+                        if n_in else 0.0))
+        stats.append((r["image_id"], r["fmt"],
+                      float(px.sum(dtype=np.int64)) / px.size, px.size))
+
+    def frame(tuples, schema, dtypes):
+        want = pd.DataFrame(tuples, columns=[f.name for f in schema])
+        return want.astype(dict(zip(want.columns, dtypes)))
+
+    fn = clip.raster_vector_clip(_Capture(), poly_edges)
+    out = pd.concat(list(fn(iter([pdf])))).reset_index(drop=True)
+    want = frame(clipped, clip.CLIP_SCHEMA,
+                 (object, np.int64, object, np.int64, np.int64, np.float64))
+    pd.testing.assert_frame_equal(out, want, check_exact=True)
+    n_in, n_px = out["n_inside"], out["n_pixels"]
+    assert ((n_in > 0) & (n_in < n_px)).sum() >= 6
+    off = out["poly_id"].isin([2, 5])
+    assert off.sum() >= 6 and (n_in[off] == 0).all()
+    assert (out["mean_inside"][off] == 0.0).all()
+
+    out = pd.concat(_run(clip.decode_stats, pdf)).reset_index(drop=True)
+    want = frame(stats, clip.DECODE_STATS_SCHEMA,
+                 (object, object, np.float64, np.int64))
+    pd.testing.assert_frame_equal(out, want, check_exact=True)

@@ -171,39 +171,6 @@ def test_read_shp_sharded_matches_whole_file(spark, tmp_path):
     assert got[2] == (3, 3.0, 4.0)
 
 
-def test_read_vertices_fast_and_fallback(spark, tmp_path):
-    """Columnar vertex ingest == per-record fallback flattening, including
-    a file with a null shape (which forces the fallback path)."""
-    from spark_shp.shp import writer
-
-    d = tmp_path / "verts"
-    d.mkdir()
-    parts = [[[(float(r * 10 + p), float(q)) for q in range(3)]
-              for p in range(1 + r % 2)] for r in range(30)]
-    uni = [(writer.POLYLINE, ps) for ps in parts]
-    (d / "uni.shp").write_bytes(writer.write_shp(uni))
-    (d / "mix.shp").write_bytes(
-        writer.write_shp(uni[:5] + [(writer.NULL, None)] + uni[5:]))
-
-    rows = ingest.read_vertices_fast(spark, str(d) + "/*.shp").collect()
-    got_uni = sorted((r.rec_no, r.part_no, r.pt_no, r.x, r.y)
-                     for r in rows if r.layer == "uni")
-    want = sorted((r + 1, p, q, x, y)
-                  for r, ps in enumerate(parts)
-                  for p, pts in enumerate(ps)
-                  for q, (x, y) in enumerate(pts))
-    assert got_uni == want
-    # mixed file: same vertices, null contributes none, rec_no shifted by 1
-    # for records after the null
-    got_mix = sorted((r.rec_no, r.part_no, r.pt_no, r.x, r.y)
-                     for r in rows if r.layer == "mix")
-    want_mix = sorted((r + 1 if r < 5 else r + 2, p, q, x, y)
-                      for r, ps in enumerate(parts)
-                      for p, pts in enumerate(ps)
-                      for q, (x, y) in enumerate(pts))
-    assert got_mix == want_mix
-
-
 def test_points_fast_prj_sidecar_via_binaryfile(spark, tmp_path):
     """ADVICE r1: read_points_fast must load .prj through the binaryFile
     reader (scheme-agnostic), not os.path — and produce the SAME projected
@@ -289,37 +256,6 @@ def test_points_fast_unsupported_crs_modes(spark, tmp_path):
     assert nulled["good"] == (1.0, 2.0)
     bl, bt = nulled["bad"]
     assert (bl is None or bl != bl) and (bt is None or bt != bt)
-
-
-def test_vertices_fast_applies_prj_sidecar(spark, tmp_path):
-    """read_vertices_fast previously ignored .prj and emitted projected
-    meters where read_shapefiles emitted degrees — the two scale paths
-    must agree on a Web-Mercator polyline layer."""
-    import math
-
-    lonlats = [[(-73.9857, 40.7484), (2.3522, 48.8566)],
-               [(139.6917, 35.6895), (151.2093, -33.8688)]]
-    R = 6378137.0
-
-    def fwd(lon, lat):
-        return (math.radians(lon) * R,
-                math.log(math.tan(math.pi / 4 + math.radians(lat) / 2)) * R)
-
-    d = tmp_path / "vln"
-    d.mkdir()
-    (d / "lines.shp").write_bytes(writer.write_shp([
-        (writer.POLYLINE, [[fwd(*p) for p in part]]) for part in lonlats]))
-    (d / "lines.prj").write_text(writer.WEBMERC_WKT)
-    rows = sorted(ingest.read_vertices_fast(
-        spark, str(d) + "/*.shp").collect(),
-        key=lambda r: (r.rec_no, r.part_no, r.pt_no))
-    want = [(i + 1, 0, q, lon, lat)
-            for i, part in enumerate(lonlats)
-            for q, (lon, lat) in enumerate(part)]
-    assert len(rows) == len(want)
-    for r, (rec, p, q, lon, lat) in zip(rows, want):
-        assert (r.rec_no, r.part_no, r.pt_no) == (rec, p, q)
-        assert abs(r.x - lon) < 1e-9 and abs(r.y - lat) < 1e-9
 
 
 def test_geojson_sink_roundtrip(spark, tmp_path):

@@ -364,52 +364,6 @@ def test_fuzz_dbf_truncated(cut_tail, n_rows):
         assert r["NAME"] == f"r{i}" and r["QTY"] == float(i)
 
 
-def test_vertices_columns_matches_construction():
-    """Columnar vertex decode == the vertices the writer was given, in file
-    order, for polyline / polygon / multipoint; refuses mixed/Point/Z
-    files."""
-    import numpy as np
-    from spark_shp.shp import parser, writer
-
-    pl_parts = [[[(float(r * 10 + p), float(q)) for q in range(3 + p)]
-                 for p in range(1 + r % 3)] for r in range(20)]
-    blob = writer.write_shp([(writer.POLYLINE, parts) for parts in pl_parts])
-    out = parser.parse_shp_vertices_columns(blob)
-    assert out is not None
-    rec_no, part_no, pt_no, x, y = out
-    k = 0
-    for r, parts in enumerate(pl_parts):
-        for p, pts in enumerate(parts):
-            for q, (ex, ey) in enumerate(pts):
-                assert (rec_no[k], part_no[k], pt_no[k], x[k], y[k]) == \
-                    (r + 1, p, q, ex, ey)
-                k += 1
-    assert k == len(rec_no)
-
-    # polygon: raw file-order rings (outer + hole)
-    cw = [(0.0, 0.0), (0.0, 9.0), (9.0, 9.0), (9.0, 0.0), (0.0, 0.0)]
-    hole = [(2.0, 2.0), (7.0, 2.0), (7.0, 7.0), (2.0, 7.0), (2.0, 2.0)]
-    pblob = writer.write_shp([(writer.POLYGON, [cw, hole])])
-    rec_no, part_no, pt_no, x, y = parser.parse_shp_vertices_columns(pblob)
-    assert list(part_no) == [0] * 5 + [1] * 5
-    assert x[5] == 2.0 and y[9] == 2.0
-
-    # multipoint
-    mp = writer.write_shp([(writer.MULTIPOINT, [(1.0, 2.0), (3.0, 4.0)])])
-    rec_no, part_no, pt_no, x, y = parser.parse_shp_vertices_columns(mp)
-    assert list(x) == [1.0, 3.0] and list(part_no) == [0, 0]
-
-    # refusals → parity fallback territory
-    assert parser.parse_shp_vertices_columns(
-        writer.write_shp([(writer.POINT, (1.0, 2.0))])) is None
-    assert parser.parse_shp_vertices_columns(
-        writer.write_shp([(writer.POLYLINEZ,
-                           [[(1.0, 2.0, 5.0), (3.0, 4.0, 6.0)]])])) is None
-    assert parser.parse_shp_vertices_columns(
-        writer.write_shp([(writer.POLYLINE, [[(1.0, 2.0), (3.0, 4.0)]]),
-                          (writer.NULL, None)])) is None
-
-
 def test_utm_inverse_roundtrip():
     """A12 TM completion: forward-project with an independent Snyder forward
     implementation, decode through the WKT-driven inverse, recover lon/lat."""
@@ -485,9 +439,6 @@ def test_record_scan_negative_content_len_terminates():
     evil2 = good + (2).to_bytes(4, "big") + (-100).to_bytes(
         4, "big", signed=True) + (1).to_bytes(4, "little")
     assert len(list(parser.record_scan(evil2))) == 1
-    assert parser.parse_shp_vertices_columns(
-        writer.write_shp([(writer.POLYLINE, [[(0.0, 0.0), (1.0, 1.0)]])])[:100]
-        + evil[100:]) is None
 
 
 # --- A12: Lambert Conformal Conic / Albers inverses -------------------------
