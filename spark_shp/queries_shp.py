@@ -9,6 +9,7 @@ pytest.
 from __future__ import annotations
 
 import math
+from typing import Callable, NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
@@ -418,54 +419,26 @@ FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_PLZ - 1})) AS k) t
 """
 
 
-N_WM = 40
+# --- A12: .prj reprojection under the oracle gate ----------------------------
+# One table row (_FAMILIES, below) per projection family: a Point shapefile
+# of N_REPROJECT seeded points in the family's meters and its .prj WKT. The
+# engine decodes it through parser.projection_from_wkt; the row's oracle
+# replays the engine's inverse op for op in DuckDB, from the same
+# *_constants() float64 values, over the same points. Both sides round to 9
+# decimals: exp/atan/sin are not correctly rounded in every libm, so the last
+# ulp may differ between numpy and DuckDB; 1e-9 degrees (~0.1 µm) absorbs
+# that without weakening the check.
+
+N_REPROJECT = 40
+
+_WEBMERC_WKT = ('PROJCS["WGS 84 / Pseudo-Mercator",GEOGCS["WGS 84"],'
+                'PROJECTION["Mercator_1SP"],AUTHORITY["EPSG","3857"]]')
 
 
-def q_shp_webmerc_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 under the oracle gate: a Point shapefile in EPSG:3857 meters with
-    its .prj sidecar decodes through the engine's inverse-Mercator kernel;
-    the oracle applies the closed-form inverse in SQL. Both sides round to
-    9 decimals — exp/atan are not correctly-rounded in every libm, so the
-    last ulp may differ between numpy and DuckDB; 1e-9 degrees (~0.1 µm)
-    absorbs that without weakening the check."""
-    import numpy as np
-    from .hashing import u01
-    from .shp import parser, writer
-
-    i = np.arange(N_WM, dtype=np.int64)
-    xm = (u01(i * 19 + 1) - 0.5) * 40000000.0
-    ym = (u01(i * 19 + 2) - 0.5) * 38000000.0
-    blob = writer.write_shp([
-        (writer.POINT, (float(x), float(y))) for x, y in zip(xm, ym)])
-    wkt = ('PROJCS["WGS 84 / Pseudo-Mercator",GEOGCS["WGS 84"],'
-           'PROJECTION["Mercator_1SP"],AUTHORITY["EPSG","3857"]]')
-    schema = T.StructType([
-        T.StructField("rec_no", T.IntegerType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ])
-
-    def decode(batches):
-        trans = parser.projection_from_wkt(wkt)
-        for pdf in batches:
-            for content in pdf["content"]:
-                geoms = parser.parse_shp(bytes(content), trans)
-                yield pd.DataFrame(
-                    [(n + 1, round(g["coordinates"][0], 9),
-                      round(g["coordinates"][1], 9))
-                     for n, g in enumerate(geoms)],
-                    columns=["rec_no", "lon", "lat"])
-
-    files = spark.createDataFrame(pd.DataFrame({"content": [blob]}))
-    return files.mapInPandas(decode, schema)
-
-
-ORACLE_SHP_WEBMERC = f"""
-WITH src AS (
-  SELECT CAST(i + 1 AS INT) AS rec_no,
-         ({u01_sql('i * 19 + 1')} - 0.5) * 40000000.0 AS x,
-         ({u01_sql('i * 19 + 2')} - 0.5) * 38000000.0 AS y
-  FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_WM - 1})) AS i) t)
+def _oracle_webmerc_sql(f: _Family) -> str:
+    """The closed-form spherical inverse Mercator."""
+    return f"""
+WITH {_src_cte(f)}
 SELECT rec_no,
        ROUND(x / 6378137.0 * (180.0 / PI()), 9) AS lon,
        ROUND((2.0 * ATAN(EXP(y / 6378137.0)) - PI() / 2.0)
@@ -474,7 +447,6 @@ FROM src
 """
 
 
-N_UTM = 40
 _UTM_WKT = (
     'PROJCS["WGS 84 / UTM zone 33N",GEOGCS["WGS 84",DATUM["WGS_1984",'
     'SPHEROID["WGS 84",6378137,298.257223563]]],'
@@ -484,44 +456,7 @@ _UTM_WKT = (
     'PARAMETER["false_northing",0],UNIT["metre",1]]')
 
 
-def q_shp_utm_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 completion under the oracle gate: a Point shapefile in UTM 33N
-    meters with a Transverse_Mercator .prj decodes through the engine's
-    Snyder-series inverse (parser.make_inv_tmerc); the oracle evaluates the
-    SAME series in DuckDB SQL from the same tmerc_constants() float64
-    values. Both sides round to 9 decimals (~0.1 µm) to absorb libm
-    sin/cos/tan ulp differences — same policy as shp_webmerc_reproject."""
-    import numpy as np
-    from .hashing import u01
-    from .shp import parser, writer
-
-    i = np.arange(N_UTM, dtype=np.int64)
-    xm = 200000.0 + u01(i * 23 + 3) * 600000.0   # easting within the zone
-    ym = u01(i * 23 + 4) * 9300000.0             # equator → ~84°N
-    blob = writer.write_shp([
-        (writer.POINT, (float(x), float(y))) for x, y in zip(xm, ym)])
-    schema = T.StructType([
-        T.StructField("rec_no", T.IntegerType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ])
-
-    def decode(batches):
-        trans = parser.projection_from_wkt(_UTM_WKT)
-        for pdf in batches:
-            for content in pdf["content"]:
-                geoms = parser.parse_shp(bytes(content), trans)
-                yield pd.DataFrame(
-                    [(n + 1, round(g["coordinates"][0], 9),
-                      round(g["coordinates"][1], 9))
-                     for n, g in enumerate(geoms)],
-                    columns=["rec_no", "lon", "lat"])
-
-    files = spark.createDataFrame(pd.DataFrame({"content": [blob]}))
-    return files.mapInPandas(decode, schema)
-
-
-def _oracle_utm_sql() -> str:
+def _oracle_utm_sql(f: _Family) -> str:
     """Snyder inverse-TM series as DuckDB SQL, from the SAME float64
     constants the engine kernel uses (parser.tmerc_constants) and with the
     SAME operation order — the only divergence left is libm ulps."""
@@ -533,11 +468,7 @@ def _oracle_utm_sql() -> str:
         6378137.0, 298.257223563, 15.0, 0.0, 0.9996,
         500000.0, 0.0).items()}
     return f"""
-WITH src AS (
-  SELECT CAST(i + 1 AS INT) AS rec_no,
-         200000.0 + {u01_sql('i * 23 + 3')} * 600000.0 AS x,
-         {u01_sql('i * 23 + 4')} * 9300000.0 AS y
-  FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_UTM - 1})) AS i) t),
+WITH {_src_cte(f)},
 s1 AS (
   SELECT rec_no, x - {c['fe']} AS xx,
          ({c['m0']} + (y - {c['fn']}) / {c['k0']})
@@ -584,10 +515,6 @@ FROM s6
 """
 
 
-ORACLE_SHP_UTM = _oracle_utm_sql()
-
-
-N_LCC = 40
 # SPCS-83 California zone 5 style 2SP parameters (meters)
 _LCC_WKT = (
     'PROJCS["CA zone 5 style",GEOGCS["WGS 84",DATUM["WGS_1984",'
@@ -601,45 +528,7 @@ _LCC_WKT = (
     'PARAMETER["false_northing",500000],UNIT["metre",1]]')
 
 
-def q_shp_lcc_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 Lambert-Conformal-Conic (2SP State-Plane form) under the oracle
-    gate — the most common US/national-grid .prj family the engine
-    previously raised on (VERDICT r2 missing #1). Point shapefile in LCC
-    meters + .prj → engine's Snyder eq. 15-11/3-5 inverse
-    (parser.make_inv_lcc); the oracle evaluates the SAME series in DuckDB
-    from the same lcc_constants() float64 values; 9-decimal rounding
-    absorbs libm ulps (same policy as UTM/webmerc)."""
-    import numpy as np
-    from .hashing import u01
-    from .shp import parser, writer
-
-    i = np.arange(N_LCC, dtype=np.int64)
-    xm = 1700000.0 + u01(i * 37 + 3) * 600000.0
-    ym = 200000.0 + u01(i * 37 + 4) * 600000.0
-    blob = writer.write_shp([
-        (writer.POINT, (float(x), float(y))) for x, y in zip(xm, ym)])
-    schema = T.StructType([
-        T.StructField("rec_no", T.IntegerType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ])
-
-    def decode(batches):
-        trans = parser.projection_from_wkt(_LCC_WKT)
-        for pdf in batches:
-            for content in pdf["content"]:
-                geoms = parser.parse_shp(bytes(content), trans)
-                yield pd.DataFrame(
-                    [(n + 1, round(g["coordinates"][0], 9),
-                      round(g["coordinates"][1], 9))
-                     for n, g in enumerate(geoms)],
-                    columns=["rec_no", "lon", "lat"])
-
-    files = spark.createDataFrame(pd.DataFrame({"content": [blob]}))
-    return files.mapInPandas(decode, schema)
-
-
-def _oracle_lcc_sql() -> str:
+def _oracle_lcc_sql(f: _Family) -> str:
     """Snyder inverse-LCC as DuckDB SQL from the SAME float64 constants the
     engine kernel uses (parser.lcc_constants), same operation order."""
     from .shp.parser import lcc_constants
@@ -647,11 +536,7 @@ def _oracle_lcc_sql() -> str:
                        34.03, 35.47, 1.0, 2000000.0, 500000.0)
     c = {k: f"CAST({v!r} AS DOUBLE)" for k, v in cv.items()}
     return f"""
-WITH src AS (
-  SELECT CAST(i + 1 AS INT) AS rec_no,
-         1700000.0 + {u01_sql('i * 37 + 3')} * 600000.0 AS x,
-         200000.0 + {u01_sql('i * 37 + 4')} * 600000.0 AS y
-  FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_LCC - 1})) AS i) t),
+WITH {_src_cte(f)},
 s1 AS (
   SELECT rec_no, x - {c['fe']} AS xx,
          {c['rho0']} - (y - {c['fn']}) AS yr
@@ -674,10 +559,6 @@ FROM s3
 """
 
 
-ORACLE_SHP_LCC = _oracle_lcc_sql()
-
-
-N_ALB = 40
 # CONUS Albers (EPSG:5070-style parameters on WGS84)
 _ALBERS_WKT = (
     'PROJCS["CONUS Albers style",GEOGCS["WGS 84",DATUM["WGS_1984",'
@@ -691,43 +572,7 @@ _ALBERS_WKT = (
     'PARAMETER["false_northing",0],UNIT["metre",1]]')
 
 
-def q_shp_albers_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 Albers-Equal-Area under the oracle gate (the other half of the
-    US national-grid family): Point shapefile in CONUS-Albers meters →
-    engine's Snyder eq. 14-19/3-18 inverse (parser.make_inv_albers); the
-    oracle evaluates the SAME series in DuckDB from the same
-    albers_constants() float64 values; 9-decimal rounding policy."""
-    import numpy as np
-    from .hashing import u01
-    from .shp import parser, writer
-
-    i = np.arange(N_ALB, dtype=np.int64)
-    xm = (u01(i * 41 + 3) - 0.5) * 4000000.0
-    ym = u01(i * 41 + 4) * 3000000.0
-    blob = writer.write_shp([
-        (writer.POINT, (float(x), float(y))) for x, y in zip(xm, ym)])
-    schema = T.StructType([
-        T.StructField("rec_no", T.IntegerType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ])
-
-    def decode(batches):
-        trans = parser.projection_from_wkt(_ALBERS_WKT)
-        for pdf in batches:
-            for content in pdf["content"]:
-                geoms = parser.parse_shp(bytes(content), trans)
-                yield pd.DataFrame(
-                    [(n + 1, round(g["coordinates"][0], 9),
-                      round(g["coordinates"][1], 9))
-                     for n, g in enumerate(geoms)],
-                    columns=["rec_no", "lon", "lat"])
-
-    files = spark.createDataFrame(pd.DataFrame({"content": [blob]}))
-    return files.mapInPandas(decode, schema)
-
-
-def _oracle_albers_sql() -> str:
+def _oracle_albers_sql(f: _Family) -> str:
     """Snyder inverse-Albers as DuckDB SQL from the SAME float64 constants
     the engine kernel uses (parser.albers_constants). The q/qp ratio is
     clamped to [-1, 1] on both sides (np.clip / GREATEST+LEAST) before
@@ -737,11 +582,7 @@ def _oracle_albers_sql() -> str:
                           29.5, 45.5, 0.0, 0.0)
     c = {k: f"CAST({v!r} AS DOUBLE)" for k, v in cv.items()}
     return f"""
-WITH src AS (
-  SELECT CAST(i + 1 AS INT) AS rec_no,
-         ({u01_sql('i * 41 + 3')} - 0.5) * 4000000.0 AS x,
-         {u01_sql('i * 41 + 4')} * 3000000.0 AS y
-  FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_ALB - 1})) AS i) t),
+WITH {_src_cte(f)},
 s1 AS (
   SELECT rec_no, x - {c['fe']} AS xx,
          {c['rho0']} - (y - {c['fn']}) AS yr
@@ -764,10 +605,6 @@ FROM s3
 """
 
 
-ORACLE_SHP_ALBERS = _oracle_albers_sql()
-
-
-N_PST = 40
 # Antarctic Polar Stereographic (EPSG:3031-style on WGS84)
 _PST_WKT = (
     'PROJCS["Antarctic PS style",GEOGCS["WGS 84",DATUM["WGS_1984",'
@@ -779,43 +616,7 @@ _PST_WKT = (
     'PARAMETER["false_northing",0],UNIT["metre",1]]')
 
 
-def q_shp_stereo_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 Polar Stereographic (south aspect) under the oracle gate:
-    Point shapefile in Antarctic-PS meters → engine's Snyder
-    eq. 21-33/21-34 inverse (parser.make_inv_polar_stereo); the oracle
-    evaluates the SAME series in DuckDB from the same
-    polar_stereo_constants() float64 values; 9-decimal rounding policy."""
-    import numpy as np
-    from .hashing import u01
-    from .shp import parser, writer
-
-    i = np.arange(N_PST, dtype=np.int64)
-    xm = (u01(i * 43 + 3) - 0.5) * 4000000.0
-    ym = (u01(i * 43 + 4) - 0.5) * 4000000.0
-    blob = writer.write_shp([
-        (writer.POINT, (float(x), float(y))) for x, y in zip(xm, ym)])
-    schema = T.StructType([
-        T.StructField("rec_no", T.IntegerType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ])
-
-    def decode(batches):
-        trans = parser.projection_from_wkt(_PST_WKT)
-        for pdf in batches:
-            for content in pdf["content"]:
-                geoms = parser.parse_shp(bytes(content), trans)
-                yield pd.DataFrame(
-                    [(n + 1, round(g["coordinates"][0], 9),
-                      round(g["coordinates"][1], 9))
-                     for n, g in enumerate(geoms)],
-                    columns=["rec_no", "lon", "lat"])
-
-    files = spark.createDataFrame(pd.DataFrame({"content": [blob]}))
-    return files.mapInPandas(decode, schema)
-
-
-def _oracle_stereo_sql() -> str:
+def _oracle_stereo_sql(f: _Family) -> str:
     """Snyder inverse polar stereographic (south) as DuckDB SQL from the
     SAME float64 constants the engine kernel uses."""
     from .shp.parser import polar_stereo_constants
@@ -824,11 +625,7 @@ def _oracle_stereo_sql() -> str:
     c = {k: (f"CAST({v!r} AS DOUBLE)" if isinstance(v, float) else v)
          for k, v in cv.items()}
     return f"""
-WITH src AS (
-  SELECT CAST(i + 1 AS INT) AS rec_no,
-         ({u01_sql('i * 43 + 3')} - 0.5) * 4000000.0 AS x,
-         ({u01_sql('i * 43 + 4')} - 0.5) * 4000000.0 AS y
-  FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_PST - 1})) AS i) t),
+WITH {_src_cte(f)},
 s1 AS (
   SELECT rec_no, x - {c['fe']} AS xx, y - {c['fn']} AS yy
   FROM src),
@@ -847,10 +644,6 @@ FROM s2
 """
 
 
-ORACLE_SHP_STEREO = _oracle_stereo_sql()
-
-
-N_LAEA = 40
 # ETRS89-LAEA Europe (EPSG:3035-style oblique aspect)
 _LAEA_WKT = (
     'PROJCS["ETRS89-LAEA style",GEOGCS["WGS 84",DATUM["WGS_1984",'
@@ -862,44 +655,7 @@ _LAEA_WKT = (
     'PARAMETER["false_northing",3210000],UNIT["metre",1]]')
 
 
-def q_shp_laea_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 Lambert Azimuthal Equal Area (oblique, EPSG:3035 family — the
-    EU standard grid) under the oracle gate: Point shapefile in LAEA
-    meters → engine's Snyder eq. 24-26..24-29 inverse
-    (parser.make_inv_laea); the oracle evaluates the SAME math in DuckDB
-    from the same laea_constants() float64 values; 9-decimal rounding
-    policy."""
-    import numpy as np
-    from .hashing import u01
-    from .shp import parser, writer
-
-    i = np.arange(N_LAEA, dtype=np.int64)
-    xm = 2500000.0 + u01(i * 47 + 3) * 3500000.0
-    ym = 1400000.0 + u01(i * 47 + 4) * 3800000.0
-    blob = writer.write_shp([
-        (writer.POINT, (float(x), float(y))) for x, y in zip(xm, ym)])
-    schema = T.StructType([
-        T.StructField("rec_no", T.IntegerType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ])
-
-    def decode(batches):
-        trans = parser.projection_from_wkt(_LAEA_WKT)
-        for pdf in batches:
-            for content in pdf["content"]:
-                geoms = parser.parse_shp(bytes(content), trans)
-                yield pd.DataFrame(
-                    [(n + 1, round(g["coordinates"][0], 9),
-                      round(g["coordinates"][1], 9))
-                     for n, g in enumerate(geoms)],
-                    columns=["rec_no", "lon", "lat"])
-
-    files = spark.createDataFrame(pd.DataFrame({"content": [blob]}))
-    return files.mapInPandas(decode, schema)
-
-
-def _oracle_laea_sql() -> str:
+def _oracle_laea_sql(f: _Family) -> str:
     """Snyder inverse-LAEA (oblique) as DuckDB SQL from the SAME float64
     constants the engine kernel uses (parser.laea_constants), same
     operation order (x/d and d*y folded first, rho from the folded
@@ -910,11 +666,7 @@ def _oracle_laea_sql() -> str:
     c = {k: (f"CAST({v!r} AS DOUBLE)" if isinstance(v, float) else v)
          for k, v in cv.items()}
     return f"""
-WITH src AS (
-  SELECT CAST(i + 1 AS INT) AS rec_no,
-         2500000.0 + {u01_sql('i * 47 + 3')} * 3500000.0 AS x,
-         1400000.0 + {u01_sql('i * 47 + 4')} * 3800000.0 AS y
-  FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_LAEA - 1})) AS i) t),
+WITH {_src_cte(f)},
 s1 AS (
   SELECT rec_no, (x - {c['fe']}) / {c['d']} AS xd,
          {c['d']} * (y - {c['fn']}) AS yd
@@ -948,10 +700,6 @@ FROM s5
 """
 
 
-ORACLE_SHP_LAEA = _oracle_laea_sql()
-
-
-N_MERC = 40
 # EPSG:3395-style World Mercator (ellipsoidal 1SP — no pseudo-mercator
 # markers, so the dispatch must pick the ellipsoidal kernel)
 _MERC3395_WKT = (
@@ -964,44 +712,7 @@ _MERC3395_WKT = (
     'PARAMETER["false_northing",250000],UNIT["metre",1]]')
 
 
-def q_shp_merc3395_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 ellipsoidal Mercator (EPSG:3395 World-Mercator family) under
-    the oracle gate: Point shapefile in World-Mercator meters → engine's
-    Snyder eq. 7-10 inverse + conformal series (parser.make_inv_mercator
-    — NOT the spherical web-mercator kernel, which is ~20 km off in
-    latitude); the oracle evaluates the SAME math in DuckDB from the same
-    mercator_constants() float64 values; 9-decimal rounding policy."""
-    import numpy as np
-    from .hashing import u01
-    from .shp import parser, writer
-
-    i = np.arange(N_MERC, dtype=np.int64)
-    xm = (u01(i * 53 + 3) - 0.5) * 30000000.0
-    ym = (u01(i * 53 + 4) - 0.5) * 28000000.0
-    blob = writer.write_shp([
-        (writer.POINT, (float(x), float(y))) for x, y in zip(xm, ym)])
-    schema = T.StructType([
-        T.StructField("rec_no", T.IntegerType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ])
-
-    def decode(batches):
-        trans = parser.projection_from_wkt(_MERC3395_WKT)
-        for pdf in batches:
-            for content in pdf["content"]:
-                geoms = parser.parse_shp(bytes(content), trans)
-                yield pd.DataFrame(
-                    [(n + 1, round(g["coordinates"][0], 9),
-                      round(g["coordinates"][1], 9))
-                     for n, g in enumerate(geoms)],
-                    columns=["rec_no", "lon", "lat"])
-
-    files = spark.createDataFrame(pd.DataFrame({"content": [blob]}))
-    return files.mapInPandas(decode, schema)
-
-
-def _oracle_merc3395_sql() -> str:
+def _oracle_merc3395_sql(f: _Family) -> str:
     """Snyder inverse ellipsoidal Mercator as DuckDB SQL from the SAME
     float64 constants the engine kernel uses (parser.mercator_constants)."""
     from .shp.parser import mercator_constants
@@ -1010,11 +721,7 @@ def _oracle_merc3395_sql() -> str:
     c = {k: (f"CAST({v!r} AS DOUBLE)" if isinstance(v, float) else v)
          for k, v in cv.items()}
     return f"""
-WITH src AS (
-  SELECT CAST(i + 1 AS INT) AS rec_no,
-         ({u01_sql('i * 53 + 3')} - 0.5) * 30000000.0 AS x,
-         ({u01_sql('i * 53 + 4')} - 0.5) * 28000000.0 AS y
-  FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_MERC - 1})) AS i) t),
+WITH {_src_cte(f)},
 s1 AS (
   SELECT rec_no, x - {c['fe']} AS xx, y - {c['fn']} AS yy
   FROM src),
@@ -1032,10 +739,6 @@ FROM s2
 """
 
 
-ORACLE_SHP_MERC3395 = _oracle_merc3395_sql()
-
-
-N_SINU = 40
 # MODIS land-grid Sinusoidal (true sphere: SPHEROID[..., 0])
 _SINU_WKT = (
     'PROJCS["MODIS Sinusoidal style",GEOGCS["GCS_Undefined",'
@@ -1047,44 +750,7 @@ _SINU_WKT = (
     'PARAMETER["Central_Meridian",0.0],UNIT["Meter",1.0]]')
 
 
-def q_shp_sinusoidal_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 Sinusoidal (the MODIS land-product grid — a true sphere,
-    SPHEROID inverse-flattening 0, exercising the e=0 degeneracy under
-    the gate): Point shapefile in sinusoidal meters → engine's Snyder
-    eq. 25-5..25-11 inverse (parser.make_inv_sinusoidal); the oracle
-    evaluates the SAME math in DuckDB from the same tmerc_constants()
-    float64 values; 9-decimal rounding policy."""
-    import numpy as np
-    from .hashing import u01
-    from .shp import parser, writer
-
-    i = np.arange(N_SINU, dtype=np.int64)
-    xm = (u01(i * 59 + 3) - 0.5) * 30000000.0
-    ym = (u01(i * 59 + 4) - 0.5) * 17000000.0
-    blob = writer.write_shp([
-        (writer.POINT, (float(x), float(y))) for x, y in zip(xm, ym)])
-    schema = T.StructType([
-        T.StructField("rec_no", T.IntegerType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ])
-
-    def decode(batches):
-        trans = parser.projection_from_wkt(_SINU_WKT)
-        for pdf in batches:
-            for content in pdf["content"]:
-                geoms = parser.parse_shp(bytes(content), trans)
-                yield pd.DataFrame(
-                    [(n + 1, round(g["coordinates"][0], 9),
-                      round(g["coordinates"][1], 9))
-                     for n, g in enumerate(geoms)],
-                    columns=["rec_no", "lon", "lat"])
-
-    files = spark.createDataFrame(pd.DataFrame({"content": [blob]}))
-    return files.mapInPandas(decode, schema)
-
-
-def _oracle_sinusoidal_sql() -> str:
+def _oracle_sinusoidal_sql(f: _Family) -> str:
     """Snyder inverse Sinusoidal as DuckDB SQL from the SAME float64
     constants the engine kernel uses (parser.tmerc_constants at k0=1,
     lat0=0 — the rectifying series the sinusoidal inverse shares). On the
@@ -1096,11 +762,7 @@ def _oracle_sinusoidal_sql() -> str:
     c = {k: (f"CAST({v!r} AS DOUBLE)" if isinstance(v, float) else v)
          for k, v in cv.items()}
     return f"""
-WITH src AS (
-  SELECT CAST(i + 1 AS INT) AS rec_no,
-         ({u01_sql('i * 59 + 3')} - 0.5) * 30000000.0 AS x,
-         ({u01_sql('i * 59 + 4')} - 0.5) * 17000000.0 AS y
-  FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_SINU - 1})) AS i) t),
+WITH {_src_cte(f)},
 s1 AS (
   SELECT rec_no, x - {c['fe']} AS xx,
          (y - {c['fn']}) / ({c['a']} * {c['m_coef']}) AS mu
@@ -1120,10 +782,6 @@ FROM s2
 """
 
 
-ORACLE_SHP_SINUSOIDAL = _oracle_sinusoidal_sql()
-
-
-N_MOLL = 40
 _MOLL_WKT = (
     'PROJCS["World_Mollweide",GEOGCS["GCS_WGS_1984",'
     'DATUM["D_WGS_1984",SPHEROID["WGS_1984",6378137.0,298.257223563]],'
@@ -1134,55 +792,14 @@ _MOLL_WKT = (
     'PARAMETER["Central_Meridian",0.0],UNIT["Meter",1.0]]')
 
 
-def q_shp_mollweide_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 Mollweide (ESRI World_Mollweide / EPSG:54009 — the equal-area
-    world map family; PROJ treats it as spherical-only with R = semimajor):
-    Point shapefile in Mollweide meters → engine's Snyder eq. 31-4..31-7
-    closed-form inverse (parser.make_inv_mollweide); the oracle evaluates
-    the SAME math in DuckDB from the same mollweide_constants() float64
-    values; 9-decimal rounding policy."""
-    import numpy as np
-    from .hashing import u01
-    from .shp import parser, writer
-
-    i = np.arange(N_MOLL, dtype=np.int64)
-    xm = (u01(i * 61 + 3) - 0.5) * 34000000.0
-    ym = (u01(i * 61 + 4) - 0.5) * 17000000.0   # inside |y| < R*sqrt(2)
-    blob = writer.write_shp([
-        (writer.POINT, (float(x), float(y))) for x, y in zip(xm, ym)])
-    schema = T.StructType([
-        T.StructField("rec_no", T.IntegerType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ])
-
-    def decode(batches):
-        trans = parser.projection_from_wkt(_MOLL_WKT)
-        for pdf in batches:
-            for content in pdf["content"]:
-                geoms = parser.parse_shp(bytes(content), trans)
-                yield pd.DataFrame(
-                    [(n + 1, round(g["coordinates"][0], 9),
-                      round(g["coordinates"][1], 9))
-                     for n, g in enumerate(geoms)],
-                    columns=["rec_no", "lon", "lat"])
-
-    files = spark.createDataFrame(pd.DataFrame({"content": [blob]}))
-    return files.mapInPandas(decode, schema)
-
-
-def _oracle_mollweide_sql() -> str:
+def _oracle_mollweide_sql(f: _Family) -> str:
     """Snyder eq. 31-4..31-7 inverse Mollweide as DuckDB SQL from the SAME
     float64 constants the engine kernel uses (parser.mollweide_constants)."""
     from .shp.parser import mollweide_constants
     cv = mollweide_constants(6378137.0, 0.0, 0.0, 0.0)
     c = {k: f"CAST({v!r} AS DOUBLE)" for k, v in cv.items()}
     return f"""
-WITH src AS (
-  SELECT CAST(i + 1 AS INT) AS rec_no,
-         ({u01_sql('i * 61 + 3')} - 0.5) * 34000000.0 AS x,
-         ({u01_sql('i * 61 + 4')} - 0.5) * 17000000.0 AS y
-  FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_MOLL - 1})) AS i) t),
+WITH {_src_cte(f)},
 s1 AS (
   SELECT rec_no, x - {c['fe']} AS xx,
          ASIN(GREATEST(-1.0, LEAST(1.0, (y - {c['fn']}) / {c['rs2']})))
@@ -1201,10 +818,6 @@ FROM s2
 """
 
 
-ORACLE_SHP_MOLLWEIDE = _oracle_mollweide_sql()
-
-
-N_OBLQ = 40
 _RD_WKT = (
     'PROJCS["Amersfoort_RD_New",GEOGCS["GCS_Amersfoort",'
     'DATUM["D_Amersfoort",SPHEROID["Bessel_1841",6377397.155,299.15281]],'
@@ -1219,47 +832,7 @@ _RD_PARAMS = (6377397.155, 299.15281, 5.38763888888889, 52.1561605555556,
               0.9999079, 155000.0, 463000.0)
 
 
-def q_shp_oblique_stereo_reproject(spark: SparkSession,
-                                   sf_dir: str) -> DataFrame:
-    """A12 Oblique ("double") Stereographic — EPSG:28992 Amersfoort / RD
-    New, the Dutch national grid (ESRI alias Double_Stereographic; also
-    Romanian Stereo 70): Point shapefile in RD meters → engine's EPSG
-    Guidance Note 7-2 inverse (parser.make_inv_oblique_stereo, conformal
-    sphere + 4 fixed Newton steps on the isometric latitude, verified
-    3.5e-9° against the published EPSG worked example); the oracle unrolls
-    the SAME op sequence in DuckDB from the same oblique_stereo_constants()
-    float64 values; 9-decimal rounding policy."""
-    import numpy as np
-    from .hashing import u01
-    from .shp import parser, writer
-
-    i = np.arange(N_OBLQ, dtype=np.int64)
-    xm = u01(i * 67 + 3) * 300000.0            # RD-zone easting range
-    ym = 300000.0 + u01(i * 67 + 4) * 350000.0
-    blob = writer.write_shp([
-        (writer.POINT, (float(x), float(y))) for x, y in zip(xm, ym)])
-    schema = T.StructType([
-        T.StructField("rec_no", T.IntegerType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ])
-
-    def decode(batches):
-        trans = parser.projection_from_wkt(_RD_WKT)
-        for pdf in batches:
-            for content in pdf["content"]:
-                geoms = parser.parse_shp(bytes(content), trans)
-                yield pd.DataFrame(
-                    [(n + 1, round(g["coordinates"][0], 9),
-                      round(g["coordinates"][1], 9))
-                     for n, g in enumerate(geoms)],
-                    columns=["rec_no", "lon", "lat"])
-
-    files = spark.createDataFrame(pd.DataFrame({"content": [blob]}))
-    return files.mapInPandas(decode, schema)
-
-
-def _oracle_oblique_stereo_sql() -> str:
+def _oracle_oblique_stereo_sql(f: _Family) -> str:
     """EPSG 7-2 double-stereographic inverse as DuckDB SQL, op-for-op the
     numpy kernel's sequence (incl. the four FIXED Newton iterations on the
     isometric latitude), from the same shared float64 constants."""
@@ -1277,11 +850,7 @@ def _oracle_oblique_stereo_sql() -> str:
         f"it{k} AS (SELECT rec_no, lam, psi, {newton} FROM it{k - 1}),"
         for k in range(1, 5))
     return f"""
-WITH src AS (
-  SELECT CAST(i + 1 AS INT) AS rec_no,
-         {u01_sql('i * 67 + 3')} * 300000.0 AS x,
-         300000.0 + {u01_sql('i * 67 + 4')} * 350000.0 AS y
-  FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_OBLQ - 1})) AS i) t),
+WITH {_src_cte(f)},
 s1 AS (
   SELECT rec_no, x - {c['fe']} AS xx, y - {c['fn']} AS yy FROM src),
 s2 AS (
@@ -1310,10 +879,6 @@ FROM sel
 """
 
 
-ORACLE_SHP_OBLIQUE_STEREO = _oracle_oblique_stereo_sql()
-
-
-N_HOM = 40
 # Peninsular-Malaysia BRSO style (EPSG:3376 parameters on GRS80) — the
 # Hotine Oblique Mercator family (also Alaska zone 1, Swiss-style obliques)
 _HOM_PARAMS = (6378137.0, 298.257222101, 102.25, 4.0,
@@ -1331,45 +896,7 @@ _HOM_WKT = (
     'PARAMETER["false_northing",0],UNIT["metre",1]]')
 
 
-def q_shp_hom_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 Hotine Oblique Mercator (EPSG 9812 variant A; BRSO Malaysia
-    parameters — the family also covering Alaska zone 1 and Swiss-style
-    oblique aspects): Point shapefile in grid meters + .prj → engine's
-    EPSG 7-2 inverse (parser.make_inv_hom, verified 2.3e-8° against the
-    published Timbalai/RSO-Borneo worked example); the oracle replays the
-    SAME op sequence in DuckDB from the same hom_constants() float64
-    values; 9-decimal rounding policy."""
-    import numpy as np
-    from .hashing import u01
-    from .shp import parser, writer
-
-    i = np.arange(N_HOM, dtype=np.int64)
-    xm = 250000.0 + u01(i * 73 + 3) * 450000.0
-    ym = 200000.0 + u01(i * 73 + 4) * 450000.0
-    blob = writer.write_shp([
-        (writer.POINT, (float(x), float(y))) for x, y in zip(xm, ym)])
-    schema = T.StructType([
-        T.StructField("rec_no", T.IntegerType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ])
-
-    def decode(batches):
-        trans = parser.projection_from_wkt(_HOM_WKT)
-        for pdf in batches:
-            for content in pdf["content"]:
-                geoms = parser.parse_shp(bytes(content), trans)
-                yield pd.DataFrame(
-                    [(n + 1, round(g["coordinates"][0], 9),
-                      round(g["coordinates"][1], 9))
-                     for n, g in enumerate(geoms)],
-                    columns=["rec_no", "lon", "lat"])
-
-    files = spark.createDataFrame(pd.DataFrame({"content": [blob]}))
-    return files.mapInPandas(decode, schema)
-
-
-def _oracle_hom_sql() -> str:
+def _oracle_hom_sql(f: _Family) -> str:
     """EPSG 9812 Hotine-Oblique-Mercator inverse as DuckDB SQL, op-for-op
     the numpy kernel's sequence, from the same hom_constants() float64
     values."""
@@ -1380,11 +907,7 @@ def _oracle_hom_sql() -> str:
          if isinstance(v, float)}
     pi = f"CAST({math.pi!r} AS DOUBLE)"
     return f"""
-WITH src AS (
-  SELECT CAST(i + 1 AS INT) AS rec_no,
-         250000.0 + {u01_sql('i * 73 + 3')} * 450000.0 AS x,
-         200000.0 + {u01_sql('i * 73 + 4')} * 450000.0 AS y
-  FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_HOM - 1})) AS i) t),
+WITH {_src_cte(f)},
 s1 AS (
   SELECT rec_no,
          (x - {c['fe']}) * {c['cgc']} - (y - {c['fn']}) * {c['sgc']} AS vp,
@@ -1419,10 +942,6 @@ FROM s5
 """
 
 
-ORACLE_SHP_HOM = _oracle_hom_sql()
-
-
-N_KRO = 40
 _KRO_WKT = (
     'PROJCS["S-JTSK_Krovak_East_North",GEOGCS["GCS_S_JTSK",'
     'DATUM["D_S_JTSK",SPHEROID["Bessel_1841",6377397.155,299.1528128]],'
@@ -1437,45 +956,6 @@ _KRO_WKT = (
     'PARAMETER["Latitude_Of_Center",49.5],UNIT["Meter",1.0]]')
 _KRO_PARAMS = (6377397.155, 299.1528128, 24.83333333333333, 49.5,
                30.28813975277778, 78.5, 0.9999, 0.0, 0.0)
-
-
-def q_shp_krovak_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 Krovak (EPSG method 9819) — the Czech/Slovak S-JTSK national
-    grid (EPSG:5514 East-North axis convention, the axes shapefiles
-    actually carry): Point shapefile in Krovak meters -> engine inverse
-    (parser.make_inv_krovak: un-rotate the oblique Gaussian cone, four
-    fixed iterations on the sphere->ellipsoid latitude; the forward twin
-    reproduces the published EPSG GN7-2 worked example to ~2 cm, pinned in
-    pytest). The oracle unrolls the identical float64 op sequence in
-    DuckDB from the same krovak_constants(); 9-decimal rounding policy."""
-    import numpy as np
-    from .hashing import u01
-    from .shp import parser, writer
-
-    i = np.arange(N_KRO, dtype=np.int64)
-    xm = -880000.0 + u01(i * 71 + 5) * 420000.0    # EPSG:5514 easting range
-    ym = -1220000.0 + u01(i * 71 + 6) * 280000.0
-    blob = writer.write_shp([
-        (writer.POINT, (float(x), float(y))) for x, y in zip(xm, ym)])
-    schema = T.StructType([
-        T.StructField("rec_no", T.IntegerType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ])
-
-    def decode(batches):
-        trans = parser.projection_from_wkt(_KRO_WKT)
-        for pdf in batches:
-            for content in pdf["content"]:
-                geoms = parser.parse_shp(bytes(content), trans)
-                yield pd.DataFrame(
-                    [(n + 1, round(g["coordinates"][0], 9),
-                      round(g["coordinates"][1], 9))
-                     for n, g in enumerate(geoms)],
-                    columns=["rec_no", "lon", "lat"])
-
-    files = spark.createDataFrame(pd.DataFrame({"content": [blob]}))
-    return files.mapInPandas(decode, schema)
 
 
 def _datum_stage_sql(a: float, inv_f: float, p7, src_cte: str) -> str:
@@ -1528,8 +1008,8 @@ SELECT rec_no,
 FROM g7
 """
 
-def _oracle_krovak_sql(seed1: int = 5, seed2: int = 6,
-                       datum_p7=None) -> str:
+
+def _oracle_krovak_sql(f: _Family, datum_p7=None) -> str:
     """EPSG 9819 Krovak inverse as DuckDB SQL, op-for-op the numpy
     kernel's sequence (incl. the four FIXED latitude iterations), from the
     same shared krovak_constants() float64 values. With ``datum_p7`` the
@@ -1559,11 +1039,7 @@ kro AS (
   SELECT rec_no, DEGREES(lam) AS lon_s, DEGREES(phi) AS lat_s FROM sel),
 {_datum_stage_sql(_KRO_PARAMS[0], _KRO_PARAMS[1], datum_p7, 'kro')}"""
     return f"""
-WITH src AS (
-  SELECT CAST(i + 1 AS INT) AS rec_no,
-         -880000.0 + {u01_sql(f'i * 71 + {seed1}')} * 420000.0 AS x,
-         -1220000.0 + {u01_sql(f'i * 71 + {seed2}')} * 280000.0 AS y
-  FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_KRO - 1})) AS i) t),
+WITH {_src_cte(f)},
 s1 AS (
   SELECT rec_no, -(y - {c['fn']}) AS xs, -(x - {c['fe']}) AS ys FROM src),
 s2 AS (
@@ -1591,9 +1067,6 @@ it0 AS (
 {tail}"""
 
 
-ORACLE_SHP_KROVAK = _oracle_krovak_sql()
-
-
 # S-JTSK → WGS84 with the published 3-param TOWGS84 (the Czech national
 # transform EPSG:1622-class values) — exercises the 3-param Helmert
 # branch (rotations/scale zero) end-to-end through a non-TM projection
@@ -1604,49 +1077,6 @@ _KRO_DATUM_WKT = _KRO_WKT.replace(
     'TOWGS84[589.0,76.0,480.0]]')
 
 
-def q_shp_krovak_datum_reproject(spark: SparkSession,
-                                 sf_dir: str) -> DataFrame:
-    """A12 + datum, 3-param branch: the S-JTSK Krovak grid whose .prj
-    carries the published TOWGS84[589,76,480] — Krovak inverse (EPSG
-    9819) composed with the 3-param position-vector Helmert
-    (rotations/scale zero; ~120 m offset vs the bare-datum
-    shp_krovak_reproject fixture). Oracle: the shared Krovak iteration
-    stages feeding the shared Helmert stages, op-for-op."""
-    import numpy as np
-    from .hashing import u01
-    from .shp import parser, writer
-
-    i = np.arange(N_KRO, dtype=np.int64)
-    xm = -880000.0 + u01(i * 71 + 9) * 420000.0
-    ym = -1220000.0 + u01(i * 71 + 10) * 280000.0
-    blob = writer.write_shp([
-        (writer.POINT, (float(x), float(y))) for x, y in zip(xm, ym)])
-    schema = T.StructType([
-        T.StructField("rec_no", T.IntegerType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ])
-
-    def decode(batches):
-        trans = parser.projection_from_wkt(_KRO_DATUM_WKT)
-        for pdf in batches:
-            for content in pdf["content"]:
-                geoms = parser.parse_shp(bytes(content), trans)
-                yield pd.DataFrame(
-                    [(n + 1, round(g["coordinates"][0], 9),
-                      round(g["coordinates"][1], 9))
-                     for n, g in enumerate(geoms)],
-                    columns=["rec_no", "lon", "lat"])
-
-    files = spark.createDataFrame(pd.DataFrame({"content": [blob]}))
-    return files.mapInPandas(decode, schema)
-
-
-ORACLE_SHP_KROVAK_DATUM = _oracle_krovak_sql(
-    seed1=9, seed2=10, datum_p7=_KRO_DATUM_P7)
-
-
-N_CAS = 40
 _CAS_WKT = (
     'PROJCS["Cassini_Test_Grid",GEOGCS["GCS_Bessel",'
     'DATUM["D_Bessel",SPHEROID["Bessel_1841",6377397.155,299.1528128]],'
@@ -1659,45 +1089,7 @@ _CAS_WKT = (
 _CAS_PARAMS = (6377397.155, 299.1528128, 10.0, 50.0, 50000.0, 100000.0)
 
 
-def q_shp_cassini_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 Cassini-Soldner (EPSG method 9806 — Trinidad/Cyprus/Palestine
-    cadastral grids): Point shapefile in Cassini meters -> engine inverse
-    (parser.make_inv_cassini: TM rectifying-latitude machinery + the short
-    Cassini D-series; sub-mm truncation in the +-150 km band the
-    projection is used in). The oracle unrolls the identical float64 op
-    sequence in DuckDB from the same tmerc_constants(); 9-decimal
-    rounding policy."""
-    import numpy as np
-    from .hashing import u01
-    from .shp import parser, writer
-
-    i = np.arange(N_CAS, dtype=np.int64)
-    xm = -100000.0 + u01(i * 83 + 3) * 300000.0   # +-150 km of the CM (+FE)
-    ym = -50000.0 + u01(i * 83 + 4) * 350000.0
-    blob = writer.write_shp([
-        (writer.POINT, (float(x), float(y))) for x, y in zip(xm, ym)])
-    schema = T.StructType([
-        T.StructField("rec_no", T.IntegerType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ])
-
-    def decode(batches):
-        trans = parser.projection_from_wkt(_CAS_WKT)
-        for pdf in batches:
-            for content in pdf["content"]:
-                geoms = parser.parse_shp(bytes(content), trans)
-                yield pd.DataFrame(
-                    [(n + 1, round(g["coordinates"][0], 9),
-                      round(g["coordinates"][1], 9))
-                     for n, g in enumerate(geoms)],
-                    columns=["rec_no", "lon", "lat"])
-
-    files = spark.createDataFrame(pd.DataFrame({"content": [blob]}))
-    return files.mapInPandas(decode, schema)
-
-
-def _oracle_cassini_sql() -> str:
+def _oracle_cassini_sql(f: _Family) -> str:
     """Cassini-Soldner inverse as DuckDB SQL, op-for-op the numpy kernel
     (same tmerc_constants float64 values, k0 = 1)."""
     from .shp.parser import tmerc_constants
@@ -1705,11 +1097,7 @@ def _oracle_cassini_sql() -> str:
         _CAS_PARAMS[0], _CAS_PARAMS[1], _CAS_PARAMS[2], _CAS_PARAMS[3],
         1.0, _CAS_PARAMS[4], _CAS_PARAMS[5]).items()}
     return f"""
-WITH src AS (
-  SELECT CAST(i + 1 AS INT) AS rec_no,
-         -100000.0 + {u01_sql('i * 83 + 3')} * 300000.0 AS x,
-         -50000.0 + {u01_sql('i * 83 + 4')} * 350000.0 AS y
-  FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_CAS - 1})) AS i) t),
+WITH {_src_cte(f)},
 s1 AS (
   SELECT rec_no, x - {c['fe']} AS xx,
          ({c['m0']} + (y - {c['fn']})) / ({c['a']} * {c['m_coef']}) AS mu
@@ -1746,10 +1134,6 @@ FROM s6
 """
 
 
-ORACLE_SHP_CASSINI = _oracle_cassini_sql()
-
-
-N_BONNE = 40
 _BONNE_WKT = (
     'PROJCS["Bonne_Test_Grid",GEOGCS["GCS_International_1924",'
     'DATUM["D_International_1924",'
@@ -1763,45 +1147,7 @@ _BONNE_WKT = (
 _BONNE_PARAMS = (6378388.0, 297.0, 2.5, 45.0, 600000.0, 200000.0)
 
 
-def q_shp_bonne_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 Bonne pseudoconic (EPSG method 9827 — the classic atlas /
-    historic national projection family: France's Depôt de la Guerre,
-    Portugal, pre-LV03 Switzerland): Point shapefile in Bonne meters ->
-    engine inverse (parser.make_inv_bonne, Snyder eq. 19-12..19-14 with
-    the TM rectifying-latitude series).  The oracle unrolls the identical
-    float64 op sequence in DuckDB from the same bonne_constants();
-    9-decimal rounding policy."""
-    import numpy as np
-    from .hashing import u01
-    from .shp import parser, writer
-
-    i = np.arange(N_BONNE, dtype=np.int64)
-    xm = 100000.0 + u01(i * 89 + 3) * 1000000.0   # +-500 km about the CM
-    ym = -300000.0 + u01(i * 89 + 4) * 1000000.0  # +-500 km about phi1
-    blob = writer.write_shp([
-        (writer.POINT, (float(x), float(y))) for x, y in zip(xm, ym)])
-    schema = T.StructType([
-        T.StructField("rec_no", T.IntegerType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ])
-
-    def decode(batches):
-        trans = parser.projection_from_wkt(_BONNE_WKT)
-        for pdf in batches:
-            for content in pdf["content"]:
-                geoms = parser.parse_shp(bytes(content), trans)
-                yield pd.DataFrame(
-                    [(n + 1, round(g["coordinates"][0], 9),
-                      round(g["coordinates"][1], 9))
-                     for n, g in enumerate(geoms)],
-                    columns=["rec_no", "lon", "lat"])
-
-    files = spark.createDataFrame(pd.DataFrame({"content": [blob]}))
-    return files.mapInPandas(decode, schema)
-
-
-def _oracle_bonne_sql() -> str:
+def _oracle_bonne_sql(f: _Family) -> str:
     """Bonne inverse as DuckDB SQL, op-for-op the numpy kernel (same
     bonne_constants float64 values)."""
     from .shp.parser import bonne_constants
@@ -1809,11 +1155,7 @@ def _oracle_bonne_sql() -> str:
     cc = bonne_constants(a, inv_f, lon0, lat1, fe, fn)
     c = {k: f"CAST({v!r} AS DOUBLE)" for k, v in cc.items()}
     return f"""
-WITH src AS (
-  SELECT CAST(i + 1 AS INT) AS rec_no,
-         100000.0 + {u01_sql('i * 89 + 3')} * 1000000.0 AS x,
-         -300000.0 + {u01_sql('i * 89 + 4')} * 1000000.0 AS y
-  FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_BONNE - 1})) AS i) t),
+WITH {_src_cte(f)},
 s1 AS (
   SELECT rec_no, x - {c['fe']} AS xx, {c['am1s']} - (y - {c['fn']}) AS ay
   FROM src),
@@ -1844,9 +1186,6 @@ FROM s5
 """
 
 
-ORACLE_SHP_BONNE = _oracle_bonne_sql()
-
-N_ECK4 = 40
 _ECK4_WKT = (
     'PROJCS["World_Eckert_IV",GEOGCS["GCS_WGS_1984",'
     'DATUM["D_WGS_1984",SPHEROID["WGS_1984",6378137.0,298.257223563]],'
@@ -1857,52 +1196,12 @@ _ECK4_WKT = (
     'PARAMETER["Central_Meridian",10.0],UNIT["Meter",1.0]]')
 
 
-def q_shp_eckert4_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 Eckert IV (ESRI World_Eckert_IV / EPSG:54012 — the equal-area
-    world-map pseudocylindrical): Point shapefile in Eckert IV meters ->
-    engine inverse (parser.make_inv_eckert4, Snyder eq. 32-19..32-21
-    closed form).  The oracle unrolls the identical float64 op sequence
-    from the same eckert4_constants(); 9-decimal rounding policy."""
-    import numpy as np
-    from .hashing import u01
-    from .shp import parser, writer
-
-    i = np.arange(N_ECK4, dtype=np.int64)
-    xm = (u01(i * 101 + 3) - 0.5) * 2.0 * 10000000.0
-    ym = (u01(i * 101 + 4) - 0.5) * 2.0 * 7500000.0
-    blob = writer.write_shp([
-        (writer.POINT, (float(x), float(y))) for x, y in zip(xm, ym)])
-    schema = T.StructType([
-        T.StructField("rec_no", T.IntegerType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ])
-
-    def decode(batches):
-        trans = parser.projection_from_wkt(_ECK4_WKT)
-        for pdf in batches:
-            for content in pdf["content"]:
-                geoms = parser.parse_shp(bytes(content), trans)
-                yield pd.DataFrame(
-                    [(n + 1, round(g["coordinates"][0], 9),
-                      round(g["coordinates"][1], 9))
-                     for n, g in enumerate(geoms)],
-                    columns=["rec_no", "lon", "lat"])
-
-    files = spark.createDataFrame(pd.DataFrame({"content": [blob]}))
-    return files.mapInPandas(decode, schema)
-
-
-def _oracle_eckert4_sql() -> str:
+def _oracle_eckert4_sql(f: _Family) -> str:
     from .shp.parser import eckert4_constants
     cv = eckert4_constants(6378137.0, 10.0, 0.0, 0.0)
     c = {k: f"CAST({v!r} AS DOUBLE)" for k, v in cv.items()}
     return f"""
-WITH src AS (
-  SELECT CAST(i + 1 AS INT) AS rec_no,
-         ({u01_sql('i * 101 + 3')} - 0.5) * 2.0 * 10000000.0 AS x,
-         ({u01_sql('i * 101 + 4')} - 0.5) * 2.0 * 7500000.0 AS y
-  FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_ECK4 - 1})) AS i) t),
+WITH {_src_cte(f)},
 s1 AS (
   SELECT rec_no, x - {c['fe']} AS xx,
          ASIN(GREATEST(-1.0, LEAST(1.0, (y - {c['fn']}) / {c['cy']})))
@@ -1923,10 +1222,6 @@ FROM s3
 """
 
 
-ORACLE_SHP_ECK4 = _oracle_eckert4_sql()
-
-
-N_ROBIN = 40
 _ROBIN_WKT = (
     'PROJCS["World_Robinson",GEOGCS["GCS_WGS_1984",'
     'DATUM["D_WGS_1984",SPHEROID["WGS_1984",6378137.0,298.257223563]],'
@@ -1937,45 +1232,7 @@ _ROBIN_WKT = (
     'PARAMETER["Central_Meridian",-5.0],UNIT["Meter",1.0]]')
 
 
-def q_shp_robinson_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 Robinson (ESRI World_Robinson / EPSG:54030 — the NatGeo
-    world-map projection, DEFINED by Robinson's 5-degree table rather
-    than a formula): Point shapefile in Robinson meters -> engine
-    inverse (parser.make_inv_robinson: table-segment location on the
-    monotone PDFE column + exact piecewise-linear algebra).  The oracle
-    replays the segment CASE and interpolation from the same table
-    literals; 9-decimal rounding policy."""
-    import numpy as np
-    from .hashing import u01
-    from .shp import parser, writer
-
-    i = np.arange(N_ROBIN, dtype=np.int64)
-    xm = (u01(i * 103 + 3) - 0.5) * 2.0 * 14000000.0
-    ym = (u01(i * 103 + 4) - 0.5) * 2.0 * 8300000.0
-    blob = writer.write_shp([
-        (writer.POINT, (float(x), float(y))) for x, y in zip(xm, ym)])
-    schema = T.StructType([
-        T.StructField("rec_no", T.IntegerType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ])
-
-    def decode(batches):
-        trans = parser.projection_from_wkt(_ROBIN_WKT)
-        for pdf in batches:
-            for content in pdf["content"]:
-                geoms = parser.parse_shp(bytes(content), trans)
-                yield pd.DataFrame(
-                    [(n + 1, round(g["coordinates"][0], 9),
-                      round(g["coordinates"][1], 9))
-                     for n, g in enumerate(geoms)],
-                    columns=["rec_no", "lon", "lat"])
-
-    files = spark.createDataFrame(pd.DataFrame({"content": [blob]}))
-    return files.mapInPandas(decode, schema)
-
-
-def _oracle_robinson_sql() -> str:
+def _oracle_robinson_sql(f: _Family) -> str:
     from .shp.parser import (ROBINSON_PDFE, ROBINSON_PLEN, ROBINSON_XS,
                              ROBINSON_YS)
     a, lon0 = 6378137.0, -5.0
@@ -1995,11 +1252,7 @@ def _oracle_robinson_sql() -> str:
         f"CAST({ROBINSON_PLEN[k + 1] - ROBINSON_PLEN[k]!r} AS DOUBLE)"
         for k in range(18))
     return f"""
-WITH src AS (
-  SELECT CAST(i + 1 AS INT) AS rec_no,
-         ({u01_sql('i * 103 + 3')} - 0.5) * 2.0 * 14000000.0 AS x,
-         ({u01_sql('i * 103 + 4')} - 0.5) * 2.0 * 8300000.0 AS y
-  FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_ROBIN - 1})) AS i) t),
+WITH {_src_cte(f)},
 s1 AS (
   SELECT rec_no, x AS xx, y, ABS(y) / {ys} AS yy FROM src),
 s2 AS (
@@ -2015,10 +1268,6 @@ FROM s4
 """
 
 
-ORACLE_SHP_ROBIN = _oracle_robinson_sql()
-
-
-N_MILLER = 40
 _MILLER_WKT = (
     'PROJCS["World_Miller_Cylindrical",GEOGCS["GCS_WGS_1984",'
     'DATUM["D_WGS_1984",SPHEROID["WGS_1984",6378137.0,298.257223563]],'
@@ -2029,53 +1278,12 @@ _MILLER_WKT = (
     'PARAMETER["Central_Meridian",12.0],UNIT["Meter",1.0]]')
 
 
-def q_shp_miller_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 Miller Cylindrical (ESRI World_Miller_Cylindrical /
-    EPSG:54003 — the classic compromise world-map cylindrical): Point
-    shapefile in Miller meters -> engine inverse (parser.make_inv_miller,
-    Snyder eq. 33-3 closed form).  The oracle evaluates the identical
-    float64 sequence from the same miller_constants(); 9-decimal
-    rounding policy."""
-    import numpy as np
-    from .hashing import u01
-    from .shp import parser, writer
-
-    i = np.arange(N_MILLER, dtype=np.int64)
-    xm = (u01(i * 107 + 3) - 0.5) * 2.0 * 17000000.0
-    ym = (u01(i * 107 + 4) - 0.5) * 2.0 * 14000000.0
-    blob = writer.write_shp([
-        (writer.POINT, (float(x), float(y))) for x, y in zip(xm, ym)])
-    schema = T.StructType([
-        T.StructField("rec_no", T.IntegerType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ])
-
-    def decode(batches):
-        trans = parser.projection_from_wkt(_MILLER_WKT)
-        for pdf in batches:
-            for content in pdf["content"]:
-                geoms = parser.parse_shp(bytes(content), trans)
-                yield pd.DataFrame(
-                    [(n + 1, round(g["coordinates"][0], 9),
-                      round(g["coordinates"][1], 9))
-                     for n, g in enumerate(geoms)],
-                    columns=["rec_no", "lon", "lat"])
-
-    files = spark.createDataFrame(pd.DataFrame({"content": [blob]}))
-    return files.mapInPandas(decode, schema)
-
-
-def _oracle_miller_sql() -> str:
+def _oracle_miller_sql(f: _Family) -> str:
     from .shp.parser import miller_constants
     cv = miller_constants(6378137.0, 12.0, 0.0, 0.0)
     c = {k: f"CAST({v!r} AS DOUBLE)" for k, v in cv.items()}
     return f"""
-WITH src AS (
-  SELECT CAST(i + 1 AS INT) AS rec_no,
-         ({u01_sql('i * 107 + 3')} - 0.5) * 2.0 * 17000000.0 AS x,
-         ({u01_sql('i * 107 + 4')} - 0.5) * 2.0 * 14000000.0 AS y
-  FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_MILLER - 1})) AS i) t)
+WITH {_src_cte(f)}
 SELECT rec_no,
        ROUND(DEGREES({c['lam0']} + x / {c['a']}), 9) AS lon,
        ROUND(DEGREES(2.5 * ATAN(EXP(0.8 * y / {c['a']})) - {c['c58']}),
@@ -2084,10 +1292,6 @@ FROM src
 """
 
 
-ORACLE_SHP_MILLER = _oracle_miller_sql()
-
-
-N_VDG = 40
 _VDG_WKT = (
     'PROJCS["World_Van_der_Grinten_I",GEOGCS["GCS_WGS_1984",'
     'DATUM["D_WGS_1984",SPHEROID["WGS_1984",6378137.0,298.257223563]],'
@@ -2102,55 +1306,12 @@ _VDG_WKT = (
 _VDG_HALF = 0.65 * math.pi * 6378137.0
 
 
-def q_shp_vdg_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 Van der Grinten I (ESRI World_Van_der_Grinten_I / EPSG:54029
-    — the circular world map NatGeo used before Robinson): Point
-    shapefile in VdG meters -> engine inverse (parser.make_inv_vdg,
-    Snyder eq. 29-12..29-17 closed-form cubic).  The oracle unrolls the
-    identical float64 op sequence in DuckDB from the same
-    vdg_constants(); 9-decimal rounding policy."""
-    import numpy as np
-    from .hashing import u01
-    from .shp import parser, writer
-
-    i = np.arange(N_VDG, dtype=np.int64)
-    xm = (u01(i * 109 + 3) - 0.5) * 2.0 * _VDG_HALF
-    ym = (u01(i * 109 + 4) - 0.5) * 2.0 * _VDG_HALF
-    blob = writer.write_shp([
-        (writer.POINT, (float(x), float(y))) for x, y in zip(xm, ym)])
-    schema = T.StructType([
-        T.StructField("rec_no", T.IntegerType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ])
-
-    def decode(batches):
-        trans = parser.projection_from_wkt(_VDG_WKT)
-        for pdf in batches:
-            for content in pdf["content"]:
-                geoms = parser.parse_shp(bytes(content), trans)
-                yield pd.DataFrame(
-                    [(n + 1, round(g["coordinates"][0], 9),
-                      round(g["coordinates"][1], 9))
-                     for n, g in enumerate(geoms)],
-                    columns=["rec_no", "lon", "lat"])
-
-    files = spark.createDataFrame(pd.DataFrame({"content": [blob]}))
-    return files.mapInPandas(decode, schema)
-
-
-def _oracle_vdg_sql() -> str:
+def _oracle_vdg_sql(f: _Family) -> str:
     from .shp.parser import vdg_constants
     cv = vdg_constants(6378137.0, -7.0, 0.0, 0.0)
     c = {k: f"CAST({v!r} AS DOUBLE)" for k, v in cv.items()}
     return f"""
-WITH src AS (
-  SELECT CAST(i + 1 AS INT) AS rec_no,
-         ({u01_sql('i * 109 + 3')} - 0.5) * 2.0
-           * CAST({_VDG_HALF!r} AS DOUBLE) AS x,
-         ({u01_sql('i * 109 + 4')} - 0.5) * 2.0
-           * CAST({_VDG_HALF!r} AS DOUBLE) AS y
-  FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_VDG - 1})) AS i) t),
+WITH {_src_cte(f)},
 s1 AS (
   SELECT rec_no, x / {c['pr']} AS X, y / {c['pr']} AS Y FROM src),
 s2 AS (
@@ -2188,10 +1349,6 @@ FROM s7
 """
 
 
-ORACLE_SHP_VDG = _oracle_vdg_sql()
-
-
-N_EE = 40
 _EE_WKT = (
     'PROJCS["World_Equal_Earth",GEOGCS["GCS_Sphere_Authalic",'
     'DATUM["D_Sphere",SPHEROID["Authalic_Sphere",6371008.7714,0.0]],'
@@ -2203,46 +1360,7 @@ _EE_WKT = (
 _EE_PARAMS = (6371008.7714, 11.0, 0.0, 0.0)
 
 
-def q_shp_equalearth_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 Equal Earth (EPSG:8857 / ESRI:54035 — the 2018 equal-area
-    world projection, the Robinson successor): Point shapefile in Equal
-    Earth meters -> engine inverse (parser.make_inv_equalearth — FIXED
-    8-step Newton on the published Šavrič-Patterson-Jenny polynomial; the
-    equal-area Jacobian property is pinned numerically in pytest, which
-    would catch any wrong coefficient).  The oracle unrolls the identical
-    float64 Newton sequence in DuckDB from the same
-    equalearth_constants(); 9-decimal rounding policy."""
-    import numpy as np
-    from .hashing import u01
-    from .shp import parser, writer
-
-    i = np.arange(N_EE, dtype=np.int64)
-    xm = (u01(i * 89 + 3) - 0.5) * 33000000.0
-    ym = (u01(i * 89 + 4) - 0.5) * 16400000.0
-    blob = writer.write_shp([
-        (writer.POINT, (float(x), float(y))) for x, y in zip(xm, ym)])
-    schema = T.StructType([
-        T.StructField("rec_no", T.IntegerType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ])
-
-    def decode(batches):
-        trans = parser.projection_from_wkt(_EE_WKT)
-        for pdf in batches:
-            for content in pdf["content"]:
-                geoms = parser.parse_shp(bytes(content), trans)
-                yield pd.DataFrame(
-                    [(n + 1, round(g["coordinates"][0], 9),
-                      round(g["coordinates"][1], 9))
-                     for n, g in enumerate(geoms)],
-                    columns=["rec_no", "lon", "lat"])
-
-    files = spark.createDataFrame(pd.DataFrame({"content": [blob]}))
-    return files.mapInPandas(decode, schema)
-
-
-def _oracle_equalearth_sql() -> str:
+def _oracle_equalearth_sql(f: _Family) -> str:
     """Equal Earth fixed-Newton inverse as DuckDB SQL, op-for-op the
     numpy kernel's sequence, from the same equalearth_constants()."""
     from .shp.parser import _EE_ITERS, equalearth_constants
@@ -2263,11 +1381,7 @@ def _oracle_equalearth_sql() -> str:
           " + ((th * th) * (th * th) * (th * th))"
           " * (7.0 * {a3} + 9.0 * {a4} * (th * th)))").format(**c)
     return f"""
-WITH src AS (
-  SELECT CAST(i + 1 AS INT) AS rec_no,
-         ({u01_sql('i * 89 + 3')} - 0.5) * 33000000.0 AS x,
-         ({u01_sql('i * 89 + 4')} - 0.5) * 16400000.0 AS y0
-  FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_EE - 1})) AS i) t),
+WITH {_src_cte(f, "x", "y0")},
 it0 AS (
   SELECT rec_no, (x - {c['fe']}) AS xr,
          (y0 - {c['fn']}) / {c['a']} AS y,
@@ -2284,10 +1398,6 @@ FROM sel
 """
 
 
-ORACLE_SHP_EQUALEARTH = _oracle_equalearth_sql()
-
-
-N_TOW = 40
 # OSGB36 / British National Grid (EPSG:27700) in the GDAL-style WKT1 that
 # carries the published OSGB36→WGS84 position-vector TOWGS84 — the datum
 # path proj4 applies only when TOWGS84 is explicit in the WKT
@@ -2307,50 +1417,7 @@ _TOW_TM_PARAMS = (6377563.396, 299.3249646, -2.0, 49.0, 0.9996012717,
 _TOW_P7 = (446.448, -125.157, 542.06, 0.15, 0.247, 0.842, -20.489)
 
 
-def q_shp_towgs84_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 + datum stage: a Point shapefile in British National Grid
-    meters whose .prj carries the OSGB36 TOWGS84 decodes through the
-    engine's Snyder TM inverse AND the 7-param position-vector Helmert
-    shift (parser.make_datum_shift: geodetic→geocentric on Airy 1830 at
-    h=0, EPSG method 9606 rotation/scale, Bowring closed-form
-    geocentric→geodetic on WGS84 — ~110 m west of the projection-only
-    answer, the systematic offset VERDICT r3 'What's missing' #1 named).
-    The oracle unrolls the identical float64 op sequence in DuckDB from
-    the same tmerc_constants() + datum_constants(); 9-decimal rounding
-    policy."""
-    import numpy as np
-    from .hashing import u01
-    from .shp import parser, writer
-
-    i = np.arange(N_TOW, dtype=np.int64)
-    xm = 100000.0 + u01(i * 83 + 7) * 550000.0   # GB easting range
-    ym = u01(i * 83 + 8) * 1200000.0             # Scilly → Shetland
-    blob = writer.write_shp([
-        (writer.POINT, (float(x), float(y))) for x, y in zip(xm, ym)])
-    schema = T.StructType([
-        T.StructField("rec_no", T.IntegerType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ])
-
-    def decode(batches):
-        trans = parser.projection_from_wkt(_TOW_WKT)
-        for pdf in batches:
-            for content in pdf["content"]:
-                geoms = parser.parse_shp(bytes(content), trans)
-                yield pd.DataFrame(
-                    [(n + 1, round(g["coordinates"][0], 9),
-                      round(g["coordinates"][1], 9))
-                     for n, g in enumerate(geoms)],
-                    columns=["rec_no", "lon", "lat"])
-
-    files = spark.createDataFrame(pd.DataFrame({"content": [blob]}))
-    return files.mapInPandas(decode, schema)
-
-
-
-
-def _oracle_towgs84_sql() -> str:
+def _oracle_towgs84_sql(f: _Family) -> str:
     """TM inverse + TOWGS84 Helmert as DuckDB SQL, op-for-op the numpy
     composition projection_from_wkt builds (shift∘inv — including the
     engine's degrees→radians roundtrip between the two stages), from the
@@ -2359,11 +1426,7 @@ def _oracle_towgs84_sql() -> str:
     c = {k: f"CAST({v!r} AS DOUBLE)"
          for k, v in tmerc_constants(*_TOW_TM_PARAMS).items()}
     return f"""
-WITH src AS (
-  SELECT CAST(i + 1 AS INT) AS rec_no,
-         100000.0 + {u01_sql('i * 83 + 7')} * 550000.0 AS x,
-         {u01_sql('i * 83 + 8')} * 1200000.0 AS y
-  FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_TOW - 1})) AS i) t),
+WITH {_src_cte(f)},
 s1 AS (
   SELECT rec_no, x - {c['fe']} AS xx,
          ({c['m0']} + (y - {c['fn']}) / {c['k0']})
@@ -2411,10 +1474,6 @@ tm AS (
 {_datum_stage_sql(_TOW_TM_PARAMS[0], _TOW_TM_PARAMS[1], _TOW_P7, 'tm')}"""
 
 
-ORACLE_SHP_TOWGS84 = _oracle_towgs84_sql()
-
-
-N_AEQD = 40
 _AEQD_WKT = (
     'PROJCS["AEQD_Test_Sphere",GEOGCS["GCS_Sphere",'
     'DATUM["D_Sphere",SPHEROID["Sphere",6371000.0,0.0]],'
@@ -2427,45 +1486,7 @@ _AEQD_WKT = (
 _AEQD_PARAMS = (6371000.0, 30.0, 40.0, 20000.0, -10000.0)
 
 
-def q_shp_aeqd_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 Azimuthal Equidistant (spherical, oblique aspect — the ESRI
-    World_Azimuthal_Equidistant / ESRI:54032 family; aviation range-ring
-    and polar-research maps): Point shapefile in AEQD meters -> engine
-    inverse (parser.make_inv_aeqd, Snyder eq. 25-15/25-16/25-18; an
-    ellipsoidal SPHEROID raises rather than silently mis-decoding). The
-    oracle unrolls the identical float64 op sequence in DuckDB from the
-    same aeqd_constants(); 9-decimal rounding policy."""
-    import numpy as np
-    from .hashing import u01
-    from .shp import parser, writer
-
-    i = np.arange(N_AEQD, dtype=np.int64)
-    xm = -4.0e6 + u01(i * 89 + 7) * 8.0e6     # within ~5,700 km of center
-    ym = -4.0e6 + u01(i * 89 + 8) * 8.0e6
-    blob = writer.write_shp([
-        (writer.POINT, (float(x), float(y))) for x, y in zip(xm, ym)])
-    schema = T.StructType([
-        T.StructField("rec_no", T.IntegerType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ])
-
-    def decode(batches):
-        trans = parser.projection_from_wkt(_AEQD_WKT)
-        for pdf in batches:
-            for content in pdf["content"]:
-                geoms = parser.parse_shp(bytes(content), trans)
-                yield pd.DataFrame(
-                    [(n + 1, round(g["coordinates"][0], 9),
-                      round(g["coordinates"][1], 9))
-                     for n, g in enumerate(geoms)],
-                    columns=["rec_no", "lon", "lat"])
-
-    files = spark.createDataFrame(pd.DataFrame({"content": [blob]}))
-    return files.mapInPandas(decode, schema)
-
-
-def _oracle_aeqd_sql() -> str:
+def _oracle_aeqd_sql(f: _Family) -> str:
     """Spherical AEQD inverse as DuckDB SQL, op-for-op the numpy kernel
     (same aeqd_constants float64 values, incl. the ±1 clip before ASIN)."""
     from .shp.parser import aeqd_constants
@@ -2473,11 +1494,7 @@ def _oracle_aeqd_sql() -> str:
     c = {k: f"CAST({v!r} AS DOUBLE)"
          for k, v in aeqd_constants(a, lon0, lat0, fe, fn).items()}
     return f"""
-WITH src AS (
-  SELECT CAST(i + 1 AS INT) AS rec_no,
-         -4000000.0 + {u01_sql('i * 89 + 7')} * 8000000.0 AS xi,
-         -4000000.0 + {u01_sql('i * 89 + 8')} * 8000000.0 AS yi
-  FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_AEQD - 1})) AS i) t),
+WITH {_src_cte(f, "xi", "yi")},
 s1 AS (
   SELECT rec_no, xi - {c['fe']} AS x, yi - {c['fn']} AS y FROM src),
 s2 AS (
@@ -2496,10 +1513,6 @@ FROM s3
 """
 
 
-ORACLE_SHP_AEQD = _oracle_aeqd_sql()
-
-
-N_CEA = 40
 _CEA_WKT = (
     'PROJCS["WGS_1984_EASE_Grid_2_0_Global",GEOGCS["GCS_WGS_1984",'
     'DATUM["D_WGS_1984",SPHEROID["WGS_1984",6378137.0,298.257223563]],'
@@ -2512,45 +1525,7 @@ _CEA_WKT = (
 _CEA_PARAMS = (6378137.0, 298.257223563, 0.0, 30.0, 0.0, 0.0)
 
 
-def q_shp_cea_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 Lambert Cylindrical Equal Area (EPSG method 9835 — the NSIDC
-    EASE-Grid 2.0 family, EPSG:6933, sea-ice/soil-moisture remote-sensing
-    grids; Behrmann/Gall-Peters world maps): Point shapefile in CEA
-    meters -> engine inverse (parser.make_inv_cea: closed form + the
-    authalic 3-18 series shared with LAEA).  The oracle unrolls the
-    identical float64 op sequence from the same cea_constants();
-    9-decimal rounding policy."""
-    import numpy as np
-    from .hashing import u01
-    from .shp import parser, writer
-
-    i = np.arange(N_CEA, dtype=np.int64)
-    xm = -1.5e7 + u01(i * 97 + 9) * 3.0e7    # EASE-2.0 global x range
-    ym = -7.2e6 + u01(i * 97 + 10) * 1.44e7  # inside the ±86° y band
-    blob = writer.write_shp([
-        (writer.POINT, (float(x), float(y))) for x, y in zip(xm, ym)])
-    schema = T.StructType([
-        T.StructField("rec_no", T.IntegerType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ])
-
-    def decode(batches):
-        trans = parser.projection_from_wkt(_CEA_WKT)
-        for pdf in batches:
-            for content in pdf["content"]:
-                geoms = parser.parse_shp(bytes(content), trans)
-                yield pd.DataFrame(
-                    [(n + 1, round(g["coordinates"][0], 9),
-                      round(g["coordinates"][1], 9))
-                     for n, g in enumerate(geoms)],
-                    columns=["rec_no", "lon", "lat"])
-
-    files = spark.createDataFrame(pd.DataFrame({"content": [blob]}))
-    return files.mapInPandas(decode, schema)
-
-
-def _oracle_cea_sql() -> str:
+def _oracle_cea_sql(f: _Family) -> str:
     """CEA inverse as DuckDB SQL, op-for-op the numpy kernel (same
     cea_constants float64 values, incl. the ±1 clip before ASIN)."""
     from .shp.parser import cea_constants
@@ -2558,11 +1533,7 @@ def _oracle_cea_sql() -> str:
     cv = cea_constants(a, inv_f, lon0, sp1, fe, fn)
     c = {k: f"CAST({v!r} AS DOUBLE)" for k, v in cv.items()}
     return f"""
-WITH src AS (
-  SELECT CAST(i + 1 AS INT) AS rec_no,
-         -15000000.0 + {u01_sql('i * 97 + 9')} * 30000000.0 AS xi,
-         -7200000.0 + {u01_sql('i * 97 + 10')} * 14400000.0 AS yi
-  FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_CEA - 1})) AS i) t),
+WITH {_src_cte(f, "xi", "yi")},
 s1 AS (
   SELECT rec_no, xi - {c['fe']} AS x, yi - {c['fn']} AS y FROM src),
 s2 AS (
@@ -2578,10 +1549,6 @@ FROM s2
 """
 
 
-ORACLE_SHP_CEA = _oracle_cea_sql()
-
-
-N_POLY = 40
 _POLY_WKT = (
     'PROJCS["Polyconic_Test_Grid",GEOGCS["GCS_GRS_1980",'
     'DATUM["D_GRS_1980",SPHEROID["GRS_1980",6378137.0,298.257222101]],'
@@ -2595,46 +1562,7 @@ _POLY_PARAMS = (6378137.0, 298.257222101, -54.0, 20.0,
                 5000000.0, 10000000.0)
 
 
-def q_shp_polyconic_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 American Polyconic (EPSG method 9818 — Brazil's historic
-    national grids, classic USGS quadrangles): Point shapefile in
-    Polyconic meters -> engine inverse (parser.make_inv_polyconic:
-    Snyder 18-18..18-22 with POLY_ITERS fixed Newton steps — the Krovak
-    fixed-unroll rule; the fixture band φ∈[~6°,34°] converges by step 4
-    and stays clear of the 2/sin2φ equator singularity). The oracle
-    unrolls the identical float64 op sequence from the same
-    polyconic_constants(); 9-decimal rounding policy."""
-    import numpy as np
-    from .hashing import u01
-    from .shp import parser, writer
-
-    i = np.arange(N_POLY, dtype=np.int64)
-    xm = 5.0e6 - 5.0e5 + u01(i * 101 + 11) * 1.0e6
-    ym = 1.0e7 - 1.55e6 + u01(i * 101 + 12) * 3.1e6
-    blob = writer.write_shp([
-        (writer.POINT, (float(x), float(y))) for x, y in zip(xm, ym)])
-    schema = T.StructType([
-        T.StructField("rec_no", T.IntegerType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ])
-
-    def decode(batches):
-        trans = parser.projection_from_wkt(_POLY_WKT)
-        for pdf in batches:
-            for content in pdf["content"]:
-                geoms = parser.parse_shp(bytes(content), trans)
-                yield pd.DataFrame(
-                    [(n + 1, round(g["coordinates"][0], 9),
-                      round(g["coordinates"][1], 9))
-                     for n, g in enumerate(geoms)],
-                    columns=["rec_no", "lon", "lat"])
-
-    files = spark.createDataFrame(pd.DataFrame({"content": [blob]}))
-    return files.mapInPandas(decode, schema)
-
-
-def _oracle_polyconic_sql() -> str:
+def _oracle_polyconic_sql(f: _Family) -> str:
     """Polyconic inverse as DuckDB SQL, op-for-op the numpy kernel (same
     polyconic_constants float64 values, POLY_ITERS unrolled Newton
     rounds)."""
@@ -2663,11 +1591,7 @@ it{k} AS (
                 + (A - Ma) * (C * Mp - 2.0 / s2) - Mp) AS phi
   FROM h{k})""")
     return f"""
-WITH src AS (
-  SELECT CAST(i + 1 AS INT) AS rec_no,
-         4500000.0 + {u01_sql('i * 101 + 11')} * 1000000.0 AS xi,
-         8450000.0 + {u01_sql('i * 101 + 12')} * 3100000.0 AS yi
-  FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_POLY - 1})) AS i) t),
+WITH {_src_cte(f, "xi", "yi")},
 it0 AS (
   SELECT rec_no, xi - {c['fe']} AS x,
          ({c['m0a']} + (yi - {c['fn']}) / {c['a']}) AS A,
@@ -2688,10 +1612,6 @@ FROM fin
 """
 
 
-ORACLE_SHP_POLYCONIC = _oracle_polyconic_sql()
-
-
-N_GNOM = 40
 _GNOM_WKT = (
     'PROJCS["Gnomonic_Test_Sphere",GEOGCS["GCS_Sphere",'
     'DATUM["D_Sphere",SPHEROID["Sphere",6371000.0,0.0]],'
@@ -2704,44 +1624,7 @@ _GNOM_WKT = (
 _GNOM_PARAMS = (6371000.0, -60.0, 25.0, -15000.0, 25000.0)
 
 
-def q_shp_gnomonic_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 Gnomonic (spherical, oblique aspect — the great-circle
-    navigation projection; every straight line on the map is a geodesic):
-    Point shapefile in gnomonic meters -> engine inverse
-    (parser.make_inv_gnomonic, Snyder generic-azimuthal eq. 20-14/20-15
-    with c = arctan(rho/R)).  The oracle unrolls the identical float64 op
-    sequence in DuckDB from the same aeqd_constants(); round-9 policy."""
-    import numpy as np
-    from .hashing import u01
-    from .shp import parser, writer
-
-    i = np.arange(N_GNOM, dtype=np.int64)
-    xm = -4.0e6 + u01(i * 97 + 3) * 8.0e6     # c <= atan(5.66/6.37) ~ 42deg
-    ym = -4.0e6 + u01(i * 97 + 4) * 8.0e6
-    blob = writer.write_shp([
-        (writer.POINT, (float(x), float(y))) for x, y in zip(xm, ym)])
-    schema = T.StructType([
-        T.StructField("rec_no", T.IntegerType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ])
-
-    def decode(batches):
-        trans = parser.projection_from_wkt(_GNOM_WKT)
-        for pdf in batches:
-            for content in pdf["content"]:
-                geoms = parser.parse_shp(bytes(content), trans)
-                yield pd.DataFrame(
-                    [(n + 1, round(g["coordinates"][0], 9),
-                      round(g["coordinates"][1], 9))
-                     for n, g in enumerate(geoms)],
-                    columns=["rec_no", "lon", "lat"])
-
-    files = spark.createDataFrame(pd.DataFrame({"content": [blob]}))
-    return files.mapInPandas(decode, schema)
-
-
-def _oracle_gnom_sql() -> str:
+def _oracle_gnom_sql(f: _Family) -> str:
     """Spherical Gnomonic inverse as DuckDB SQL, op-for-op the numpy
     kernel (same aeqd_constants float64 values)."""
     from .shp.parser import aeqd_constants
@@ -2749,11 +1632,7 @@ def _oracle_gnom_sql() -> str:
     c = {k: f"CAST({v!r} AS DOUBLE)"
          for k, v in aeqd_constants(a, lon0, lat0, fe, fn).items()}
     return f"""
-WITH src AS (
-  SELECT CAST(i + 1 AS INT) AS rec_no,
-         -4000000.0 + {u01_sql('i * 97 + 3')} * 8000000.0 AS xi,
-         -4000000.0 + {u01_sql('i * 97 + 4')} * 8000000.0 AS yi
-  FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_GNOM - 1})) AS i) t),
+WITH {_src_cte(f, "xi", "yi")},
 s1 AS (
   SELECT rec_no, xi - {c['fe']} AS x, yi - {c['fn']} AS y FROM src),
 s2 AS (
@@ -2772,10 +1651,6 @@ FROM s3
 """
 
 
-ORACLE_SHP_GNOM = _oracle_gnom_sql()
-
-
-N_ORTHO = 40
 _ORTHO_WKT = (
     'PROJCS["Ortho_Test_Sphere",GEOGCS["GCS_Sphere",'
     'DATUM["D_Sphere",SPHEROID["Sphere",6371000.0,0.0]],'
@@ -2788,44 +1663,7 @@ _ORTHO_WKT = (
 _ORTHO_PARAMS = (6371000.0, 135.0, -20.0, 5000.0, -30000.0)
 
 
-def q_shp_ortho_reproject(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 Orthographic (spherical, oblique aspect — the satellite-view /
-    globe-thumbnail projection, ESRI World_From_Space family): Point
-    shapefile in orthographic meters -> engine inverse
-    (parser.make_inv_ortho, Snyder eq. 20-14/20-15 with c = arcsin(rho/R);
-    fixture points stay inside the valid hemisphere disc, rho <= 0.98 R).
-    The oracle unrolls the identical float64 op sequence; round-9."""
-    import numpy as np
-    from .hashing import u01
-    from .shp import parser, writer
-
-    i = np.arange(N_ORTHO, dtype=np.int64)
-    xm = -4.4e6 + u01(i * 101 + 5) * 8.8e6    # rho <= 6.22e6 < R
-    ym = -4.4e6 + u01(i * 101 + 6) * 8.8e6
-    blob = writer.write_shp([
-        (writer.POINT, (float(x), float(y))) for x, y in zip(xm, ym)])
-    schema = T.StructType([
-        T.StructField("rec_no", T.IntegerType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ])
-
-    def decode(batches):
-        trans = parser.projection_from_wkt(_ORTHO_WKT)
-        for pdf in batches:
-            for content in pdf["content"]:
-                geoms = parser.parse_shp(bytes(content), trans)
-                yield pd.DataFrame(
-                    [(n + 1, round(g["coordinates"][0], 9),
-                      round(g["coordinates"][1], 9))
-                     for n, g in enumerate(geoms)],
-                    columns=["rec_no", "lon", "lat"])
-
-    files = spark.createDataFrame(pd.DataFrame({"content": [blob]}))
-    return files.mapInPandas(decode, schema)
-
-
-def _oracle_ortho_sql() -> str:
+def _oracle_ortho_sql(f: _Family) -> str:
     """Spherical Orthographic inverse as DuckDB SQL, op-for-op the numpy
     kernel (same aeqd_constants float64 values, incl. the rho/R clip)."""
     from .shp.parser import aeqd_constants
@@ -2833,11 +1671,7 @@ def _oracle_ortho_sql() -> str:
     c = {k: f"CAST({v!r} AS DOUBLE)"
          for k, v in aeqd_constants(a, lon0, lat0, fe, fn).items()}
     return f"""
-WITH src AS (
-  SELECT CAST(i + 1 AS INT) AS rec_no,
-         -4400000.0 + {u01_sql('i * 101 + 5')} * 8800000.0 AS xi,
-         -4400000.0 + {u01_sql('i * 101 + 6')} * 8800000.0 AS yi
-  FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_ORTHO - 1})) AS i) t),
+WITH {_src_cte(f, "xi", "yi")},
 s1 AS (
   SELECT rec_no, xi - {c['fe']} AS x, yi - {c['fn']} AS y FROM src),
 s2 AS (
@@ -2857,55 +1691,177 @@ FROM s3
 """
 
 
-ORACLE_SHP_ORTHO = _oracle_ortho_sql()
+class _Family(NamedTuple):
+    """One projection family under the oracle gate. An axis is (seed
+    multiplier, seed offset, lo, span): with u = u01(i * multiplier +
+    offset) its i-th value is ``lo + u * span``, or ``(u - 0.5) * span``
+    when lo is None. ``oracle(family)`` is the DuckDB SQL of the expected
+    (rec_no, lon, lat)."""
+    fam: int | None      # id in shp_reproject_families; None: not in it
+    wkt: str
+    x: tuple
+    y: tuple
+    oracle: Callable[[_Family], str]
+
+    def shp(self) -> bytes:
+        """The family's Point shapefile."""
+        import numpy as np
+        from .hashing import u01
+        from .shp import writer
+
+        def axis(mult, off, lo, span):
+            u = u01(np.arange(N_REPROJECT, dtype=np.int64) * mult + off)
+            return (u - 0.5) * span if lo is None else lo + u * span
+
+        return writer.write_shp([(writer.POINT, (float(x), float(y)))
+                                 for x, y in zip(axis(*self.x),
+                                                 axis(*self.y))])
+
+
+def _src_cte(f: _Family, x: str = "x", y: str = "y") -> str:
+    """The ``src`` CTE of an oracle: (rec_no, x, y), the points of
+    :meth:`_Family.shp` recomputed in SQL."""
+    def axis(mult, off, lo, span):
+        u = u01_sql(f"i * {mult} + {off}")
+        span = f"CAST({span!r} AS DOUBLE)"
+        return (f"({u} - 0.5) * {span}" if lo is None
+                else f"CAST({lo!r} AS DOUBLE) + {u} * {span}")
+
+    return f"""src AS (
+  SELECT CAST(i + 1 AS INT) AS rec_no, {axis(*f.x)} AS {x},
+         {axis(*f.y)} AS {y}
+  FROM (SELECT UNNEST(GENERATE_SERIES(0, {N_REPROJECT - 1})) AS i) t)"""
+
+
+# query shp_<name>_reproject → its family, in registration order
+# (registry.EXPECTED_WINDOW pins it)
+_FAMILIES = {
+    # EPSG:3857 Pseudo-Mercator: the sphere, picked by its authority code
+    "webmerc": _Family(0, _WEBMERC_WKT, (19, 1, None, 4.0e7),
+                       (19, 2, None, 3.8e7), _oracle_webmerc_sql),
+    # UTM 33N: easting within the zone, equator → ~84°N
+    "utm": _Family(1, _UTM_WKT, (23, 3, 2.0e5, 6.0e5), (23, 4, 0.0, 9.3e6),
+                   _oracle_utm_sql),
+    "lcc": _Family(2, _LCC_WKT, (37, 3, 1.7e6, 6.0e5), (37, 4, 2.0e5, 6.0e5),
+                   _oracle_lcc_sql),
+    "albers": _Family(3, _ALBERS_WKT, (41, 3, None, 4.0e6),
+                      (41, 4, 0.0, 3.0e6), _oracle_albers_sql),
+    "stereo": _Family(4, _PST_WKT, (43, 3, None, 4.0e6),
+                      (43, 4, None, 4.0e6), _oracle_stereo_sql),
+    "laea": _Family(5, _LAEA_WKT, (47, 3, 2.5e6, 3.5e6),
+                    (47, 4, 1.4e6, 3.8e6), _oracle_laea_sql),
+    # ellipsoidal World Mercator: NOT the sphere (~20 km off in latitude)
+    "merc3395": _Family(6, _MERC3395_WKT, (53, 3, None, 3.0e7),
+                        (53, 4, None, 2.8e7), _oracle_merc3395_sql),
+    "sinusoidal": _Family(7, _SINU_WKT, (59, 3, None, 3.0e7),
+                          (59, 4, None, 1.7e7), _oracle_sinusoidal_sql),
+    # inside |y| < R*sqrt(2)
+    "mollweide": _Family(8, _MOLL_WKT, (61, 3, None, 3.4e7),
+                         (61, 4, None, 1.7e7), _oracle_mollweide_sql),
+    # EPSG:5514 East-North easting range
+    "krovak": _Family(11, _KRO_WKT, (71, 5, -8.8e5, 4.2e5),
+                      (71, 6, -1.22e6, 2.8e5), _oracle_krovak_sql),
+    # the 3-param TOWGS84 composition, ~120 m off the bare-datum fixture
+    "krovak_datum": _Family(
+        None, _KRO_DATUM_WKT, (71, 9, -8.8e5, 4.2e5), (71, 10, -1.22e6, 2.8e5),
+        lambda f: _oracle_krovak_sql(f, _KRO_DATUM_P7)),
+    # +-150 km of the central meridian (+FE)
+    "cassini": _Family(12, _CAS_WKT, (83, 3, -1.0e5, 3.0e5),
+                       (83, 4, -5.0e4, 3.5e5), _oracle_cassini_sql),
+    # +-500 km about the central meridian and phi1
+    "bonne": _Family(18, _BONNE_WKT, (89, 3, 1.0e5, 1.0e6),
+                     (89, 4, -3.0e5, 1.0e6), _oracle_bonne_sql),
+    "eckert4": _Family(19, _ECK4_WKT, (101, 3, None, 2.0e7),
+                       (101, 4, None, 1.5e7), _oracle_eckert4_sql),
+    "robinson": _Family(20, _ROBIN_WKT, (103, 3, None, 2.8e7),
+                        (103, 4, None, 1.66e7), _oracle_robinson_sql),
+    "miller": _Family(21, _MILLER_WKT, (107, 3, None, 3.4e7),
+                      (107, 4, None, 2.8e7), _oracle_miller_sql),
+    "vdg": _Family(22, _VDG_WKT, (109, 3, None, 2.0 * _VDG_HALF),
+                   (109, 4, None, 2.0 * _VDG_HALF), _oracle_vdg_sql),
+    # GB easting range, Scilly → Shetland
+    "towgs84": _Family(23, _TOW_WKT, (83, 7, 1.0e5, 5.5e5),
+                       (83, 8, 0.0, 1.2e6), _oracle_towgs84_sql),
+    "equalearth": _Family(24, _EE_WKT, (89, 3, None, 3.3e7),
+                          (89, 4, None, 1.64e7), _oracle_equalearth_sql),
+    # within ~5,700 km of the center
+    "aeqd": _Family(13, _AEQD_WKT, (89, 7, -4.0e6, 8.0e6),
+                    (89, 8, -4.0e6, 8.0e6), _oracle_aeqd_sql),
+    # c <= atan(5.66/6.37) ~ 42 deg
+    "gnomonic": _Family(16, _GNOM_WKT, (97, 3, -4.0e6, 8.0e6),
+                        (97, 4, -4.0e6, 8.0e6), _oracle_gnom_sql),
+    # rho <= 6.22e6 < R
+    "ortho": _Family(17, _ORTHO_WKT, (101, 5, -4.4e6, 8.8e6),
+                     (101, 6, -4.4e6, 8.8e6), _oracle_ortho_sql),
+    # EASE-Grid 2.0 global x range, inside the ±86° y band
+    "cea": _Family(14, _CEA_WKT, (97, 9, -1.5e7, 3.0e7),
+                   (97, 10, -7.2e6, 1.44e7), _oracle_cea_sql),
+    # phi in [~6°, 34°], clear of the 2/sin2phi equator singularity
+    "polyconic": _Family(15, _POLY_WKT, (101, 11, 4.5e6, 1.0e6),
+                         (101, 12, 8.45e6, 3.1e6), _oracle_polyconic_sql),
+    # the RD zone
+    "oblique_stereo": _Family(9, _RD_WKT, (67, 3, 0.0, 3.0e5),
+                              (67, 4, 3.0e5, 3.5e5),
+                              _oracle_oblique_stereo_sql),
+    "hom": _Family(10, _HOM_WKT, (73, 3, 2.5e5, 4.5e5),
+                   (73, 4, 2.0e5, 4.5e5), _oracle_hom_sql),
+}
+_REPROJECT_FAMILIES = sorted((f for f in _FAMILIES.values()
+                              if f.fam is not None), key=lambda f: f.fam)
+
+_REPROJECT_SCHEMA = T.StructType([
+    T.StructField("fam", T.IntegerType(), False),
+    T.StructField("rec_no", T.IntegerType()),
+    T.StructField("lon", T.DoubleType()),
+    T.StructField("lat", T.DoubleType()),
+])
+
+
+def _decode_families(spark: SparkSession, fams: list) -> DataFrame:
+    """Decode each family's Point shapefile through the engine's .prj
+    inverse (parser.projection_from_wkt → parser.parse_shp), rounded to 9
+    decimals → (fam, rec_no, lon, lat), fam being the family's position in
+    ``fams``: one mapInPandas over a frame of (fam, content, wkt) rows."""
+    def decode(batches):
+        from .shp import parser
+        for pdf in batches:
+            for fam, content, wkt in zip(pdf["fam"], pdf["content"],
+                                         pdf["wkt"]):
+                geoms = parser.parse_shp(bytes(content),
+                                         parser.projection_from_wkt(wkt))
+                yield pd.DataFrame(
+                    [(fam, n + 1, round(g["coordinates"][0], 9),
+                      round(g["coordinates"][1], 9))
+                     for n, g in enumerate(geoms)],
+                    columns=["fam", "rec_no", "lon", "lat"])
+
+    files = spark.createDataFrame(pd.DataFrame({
+        "fam": range(len(fams)),
+        "content": [f.shp() for f in fams],
+        "wkt": [f.wkt for f in fams]}))
+    return files.mapInPandas(decode, _REPROJECT_SCHEMA)
+
+
+def _q_reproject(f: _Family):
+    """The gate query of one family: (rec_no, lon, lat) of its points."""
+    return lambda spark, sf_dir: _decode_families(spark, [f]).drop("fam")
 
 
 def q_shp_reproject_families(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A12 — ALL twenty-five supported .prj projection families under ONE gated
-    row (the shp_zm_semantics consolidation pattern applied to CRS): each
-    family decodes its own Point shapefile + WKT through the engine's
-    inverse kernel, tagged with a family id, unioned. Driver-gates the
-    conic families (LCC 2SP, Albers), Polar Stereographic, LAEA
-    (EPSG:3035 EU grid), ellipsoidal Mercator (EPSG:3395), and Sinusoidal
-    (MODIS sphere), Mollweide (EPSG:54009 equal-area world), and
-    Oblique/Double Stereographic (EPSG:28992 Dutch RD), and Krovak (S-JTSK),
-    plus (r4) the OSGB36 British National Grid with its explicit TOWGS84
-    7-param datum stage, without widening the 50-query window.
+    """A12: the twenty-five families that have a gate query of their own
+    under ONE gated row, each tagged with its family id (the
+    shp_zm_semantics consolidation pattern applied to CRS), without
+    widening the 50-query window. The Krovak TOWGS84 composition has a
+    query but no family id; the Equirectangular .prj row has neither.
     Upstream anchor: proj4-based reprojection in lib/index.js:≈125-140
     [RECONSTRUCTED]."""
-    fams = [q_shp_webmerc_reproject, q_shp_utm_reproject,
-            q_shp_lcc_reproject, q_shp_albers_reproject,
-            q_shp_stereo_reproject, q_shp_laea_reproject,
-            q_shp_merc3395_reproject, q_shp_sinusoidal_reproject,
-            q_shp_mollweide_reproject, q_shp_oblique_stereo_reproject,
-            q_shp_hom_reproject, q_shp_krovak_reproject,
-            q_shp_cassini_reproject, q_shp_aeqd_reproject,
-            q_shp_cea_reproject, q_shp_polyconic_reproject,
-            q_shp_gnomonic_reproject, q_shp_ortho_reproject,
-            q_shp_bonne_reproject, q_shp_eckert4_reproject,
-            q_shp_robinson_reproject, q_shp_miller_reproject,
-            q_shp_vdg_reproject, q_shp_towgs84_reproject,
-            q_shp_equalearth_reproject]
-    out = None
-    for fam_id, fn in enumerate(fams):
-        d = fn(spark, sf_dir).select(
-            F.lit(fam_id).cast("int").alias("fam"), "rec_no", "lon", "lat")
-        out = d if out is None else out.unionByName(d)
-    return out
+    return _decode_families(spark, _REPROJECT_FAMILIES)
 
 
 ORACLE_REPROJECT_FAMILIES = "\nUNION ALL\n".join(
-    f"SELECT CAST({i} AS INT) AS fam, rec_no, lon, lat FROM ({sql}\n) f{i}"
-    for i, sql in enumerate([
-        ORACLE_SHP_WEBMERC, ORACLE_SHP_UTM, ORACLE_SHP_LCC,
-        ORACLE_SHP_ALBERS, ORACLE_SHP_STEREO, ORACLE_SHP_LAEA,
-        ORACLE_SHP_MERC3395, ORACLE_SHP_SINUSOIDAL, ORACLE_SHP_MOLLWEIDE,
-        ORACLE_SHP_OBLIQUE_STEREO, ORACLE_SHP_HOM, ORACLE_SHP_KROVAK,
-        ORACLE_SHP_CASSINI, ORACLE_SHP_AEQD, ORACLE_SHP_CEA,
-        ORACLE_SHP_POLYCONIC, ORACLE_SHP_GNOM, ORACLE_SHP_ORTHO,
-        ORACLE_SHP_BONNE, ORACLE_SHP_ECK4,
-        ORACLE_SHP_ROBIN, ORACLE_SHP_MILLER, ORACLE_SHP_VDG,
-        ORACLE_SHP_TOWGS84, ORACLE_SHP_EQUALEARTH]))
+    f"SELECT CAST({i} AS INT) AS fam, rec_no, lon, lat "
+    f"FROM ({f.oracle(f)}\n) f{i}"
+    for i, f in enumerate(_REPROJECT_FAMILIES))
 
 
 def q_shp_decode_index_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3138,42 +2094,9 @@ QUERIES: dict = {
                                ORACLE_REPROJECT_FAMILIES),
     "shp_decode_index_join": (q_shp_decode_index_join,
                               ORACLE_DECODE_INDEX_JOIN),
-    # A12 per-family variants (shp_reproject_families combines five)
-    "shp_webmerc_reproject": (q_shp_webmerc_reproject, ORACLE_SHP_WEBMERC),
-    "shp_utm_reproject": (q_shp_utm_reproject, ORACLE_SHP_UTM),
-    "shp_lcc_reproject": (q_shp_lcc_reproject, ORACLE_SHP_LCC),
-    "shp_albers_reproject": (q_shp_albers_reproject, ORACLE_SHP_ALBERS),
-    "shp_stereo_reproject": (q_shp_stereo_reproject, ORACLE_SHP_STEREO),
-    "shp_laea_reproject": (q_shp_laea_reproject, ORACLE_SHP_LAEA),
-    "shp_merc3395_reproject": (q_shp_merc3395_reproject,
-                               ORACLE_SHP_MERC3395),
-    "shp_sinusoidal_reproject": (q_shp_sinusoidal_reproject,
-                                 ORACLE_SHP_SINUSOIDAL),
-    "shp_mollweide_reproject": (q_shp_mollweide_reproject,
-                                ORACLE_SHP_MOLLWEIDE),
-    "shp_krovak_reproject": (q_shp_krovak_reproject, ORACLE_SHP_KROVAK),
-    "shp_krovak_datum_reproject": (q_shp_krovak_datum_reproject,
-                                   ORACLE_SHP_KROVAK_DATUM),
-    "shp_cassini_reproject": (q_shp_cassini_reproject,
-                              ORACLE_SHP_CASSINI),
-    "shp_bonne_reproject": (q_shp_bonne_reproject, ORACLE_SHP_BONNE),
-    "shp_eckert4_reproject": (q_shp_eckert4_reproject, ORACLE_SHP_ECK4),
-    "shp_robinson_reproject": (q_shp_robinson_reproject,
-                               ORACLE_SHP_ROBIN),
-    "shp_miller_reproject": (q_shp_miller_reproject, ORACLE_SHP_MILLER),
-    "shp_vdg_reproject": (q_shp_vdg_reproject, ORACLE_SHP_VDG),
-    "shp_towgs84_reproject": (q_shp_towgs84_reproject, ORACLE_SHP_TOWGS84),
-    "shp_equalearth_reproject": (q_shp_equalearth_reproject,
-                                 ORACLE_SHP_EQUALEARTH),
-    "shp_aeqd_reproject": (q_shp_aeqd_reproject, ORACLE_SHP_AEQD),
-    "shp_gnomonic_reproject": (q_shp_gnomonic_reproject, ORACLE_SHP_GNOM),
-    "shp_ortho_reproject": (q_shp_ortho_reproject, ORACLE_SHP_ORTHO),
-    "shp_cea_reproject": (q_shp_cea_reproject, ORACLE_SHP_CEA),
-    "shp_polyconic_reproject": (q_shp_polyconic_reproject,
-                                ORACLE_SHP_POLYCONIC),
-    "shp_oblique_stereo_reproject": (q_shp_oblique_stereo_reproject,
-                                     ORACLE_SHP_OBLIQUE_STEREO),
-    "shp_hom_reproject": (q_shp_hom_reproject, ORACLE_SHP_HOM),
+    # A12 per-family variants (shp_reproject_families combines 25 of them)
+    **{f"shp_{name}_reproject": (_q_reproject(f), f.oracle(f))
+       for name, f in _FAMILIES.items()},
     # A16-A18/A20 zip plumbing
     "shp_zip_bundle": (q_shp_zip_bundle, ORACLE_ZIP_BUNDLE),
     "images_phash_verify": (q_images_phash_verify, """

@@ -1127,21 +1127,19 @@ def aeqd_constants(a: float, lon0_deg: float, lat0_deg: float,
     }
 
 
-def make_inv_aeqd(a: float, inv_f: float, lon0_deg: float, lat0_deg: float,
-                  fe: float = 0.0, fn: float = 0.0):
-    """Spherical Azimuthal Equidistant inverse (Snyder eq. 25-15/25-16/
-    25-18, all aspects): c = ρ/R, φ = arcsin(cos c sin φ0 +
-    y sin c cos φ0 / ρ), λ = λ0 + atan2(x sin c, ρ cos φ0 cos c −
-    y sin φ0 sin c).  Sphere-only — the ellipsoidal oblique form is
-    geodesic-based (what PROJ does) and out of scope; an ellipsoidal
-    SPHEROID raises loudly rather than silently mis-decoding (the
-    Mercator-dispatch lesson).  Returns a vectorized (n,2) meters →
-    (n,2) lon/lat° fn."""
+def _make_inv_azimuthal(c_of, name: str, why: str, a: float, inv_f: float,
+                        lon0_deg: float, lat0_deg: float, fe: float,
+                        fn: float):
+    """The generic spherical azimuthal inverse (Snyder 1987 eq. 20-14/
+    20-15) given the angular distance c = ``c_of``(ρ/R): φ = arcsin(cos c
+    sin φ0 + y sin c cos φ0 / ρ), λ = λ0 + atan2(x sin c, ρ cos φ0 cos c −
+    y sin φ0 sin c). An ellipsoidal SPHEROID raises loudly rather than
+    silently sphere-decoding (the Mercator-dispatch lesson). Returns a
+    vectorized (n,2) meters → (n,2) lon/lat° fn."""
     if inv_f != 0.0:
         raise ValueError(
-            "Azimuthal_Equidistant: only the spherical form is supported "
-            f"(SPHEROID inverse flattening {inv_f!r} != 0); the "
-            "ellipsoidal oblique variant is geodesic-based")
+            f"{name}: only the spherical form is supported (SPHEROID "
+            f"inverse flattening {inv_f!r} != 0){why}")
     c = aeqd_constants(a, lon0_deg, lat0_deg, fe, fn)
     r, lam0, sin0, cos0 = c["r"], c["lam0"], c["sin0"], c["cos0"]
 
@@ -1149,7 +1147,7 @@ def make_inv_aeqd(a: float, inv_f: float, lon0_deg: float, lat0_deg: float,
         x = pts[:, 0] - fe
         y = pts[:, 1] - fn
         rho = np.sqrt(x * x + y * y)
-        cc = rho / r
+        cc = c_of(rho / r)
         sc, co = np.sin(cc), np.cos(cc)
         safe = np.where(rho == 0.0, 1.0, rho)
         phi = np.arcsin(np.clip(
@@ -1159,69 +1157,40 @@ def make_inv_aeqd(a: float, inv_f: float, lon0_deg: float, lat0_deg: float,
         return np.column_stack([np.degrees(lam), np.degrees(phi)])
 
     return inv
+
+
+def make_inv_aeqd(a: float, inv_f: float, lon0_deg: float, lat0_deg: float,
+                  fe: float = 0.0, fn: float = 0.0):
+    """Spherical Azimuthal Equidistant inverse (Snyder eq. 25-15/25-16/
+    25-18, all aspects): c = ρ/R. Sphere-only — the ellipsoidal oblique
+    form is geodesic-based (what PROJ does) and out of scope."""
+    return _make_inv_azimuthal(
+        lambda q: q, "Azimuthal_Equidistant",
+        "; the ellipsoidal oblique variant is geodesic-based",
+        a, inv_f, lon0_deg, lat0_deg, fe, fn)
 
 
 def make_inv_gnomonic(a: float, inv_f: float, lon0_deg: float,
                       lat0_deg: float, fe: float = 0.0, fn: float = 0.0):
-    """Spherical Gnomonic inverse (Snyder 1987 eq. 22-16 with the generic
-    azimuthal inverse 20-14/20-15: c = arctan(ρ/R)) — the great-circle
-    navigation projection (every straight line is a geodesic; ESRI
-    World_Gnomonic / proj ``+proj=gnom``).  Sphere-only by definition;
-    an ellipsoidal SPHEROID raises loudly (the Mercator-dispatch
-    lesson).  Shares :func:`aeqd_constants` (same constant set)."""
-    if inv_f != 0.0:
-        raise ValueError(
-            "Gnomonic: only the spherical form is supported (SPHEROID "
-            f"inverse flattening {inv_f!r} != 0)")
-    c = aeqd_constants(a, lon0_deg, lat0_deg, fe, fn)
-    r, lam0, sin0, cos0 = c["r"], c["lam0"], c["sin0"], c["cos0"]
-
-    def inv(pts: np.ndarray) -> np.ndarray:
-        x = pts[:, 0] - fe
-        y = pts[:, 1] - fn
-        rho = np.sqrt(x * x + y * y)
-        cc = np.arctan(rho / r)
-        sc, co = np.sin(cc), np.cos(cc)
-        safe = np.where(rho == 0.0, 1.0, rho)
-        phi = np.arcsin(np.clip(
-            co * sin0 + np.where(rho == 0.0, 0.0,
-                                 y * sc * cos0 / safe), -1.0, 1.0))
-        lam = lam0 + np.arctan2(x * sc, rho * cos0 * co - y * sin0 * sc)
-        return np.column_stack([np.degrees(lam), np.degrees(phi)])
-
-    return inv
+    """Spherical Gnomonic inverse (Snyder 1987 eq. 22-16: c = arctan(ρ/R))
+    — the great-circle navigation projection (every straight line is a
+    geodesic; ESRI World_Gnomonic / proj ``+proj=gnom``). Sphere-only by
+    definition."""
+    return _make_inv_azimuthal(np.arctan, "Gnomonic", "",
+                               a, inv_f, lon0_deg, lat0_deg, fe, fn)
 
 
 def make_inv_ortho(a: float, inv_f: float, lon0_deg: float,
                    lat0_deg: float, fe: float = 0.0, fn: float = 0.0):
-    """Spherical Orthographic inverse (Snyder 1987 eq. 20-14/20-15 with
-    c = arcsin(ρ/R)) — the satellite-view / globe-thumbnail projection
-    (ESRI World_From_Space family).  Valid for ρ ≤ R (one hemisphere);
-    the ρ/R ratio is clipped into asin's domain so boundary roundoff
-    cannot NaN.  Sphere-only: the EPSG 9840 ellipsoidal variant raises
-    loudly rather than silently sphere-decoding."""
-    if inv_f != 0.0:
-        raise ValueError(
-            "Orthographic: only the spherical form is supported (SPHEROID "
-            f"inverse flattening {inv_f!r} != 0); EPSG 9840 ellipsoidal "
-            "Orthographic is out of scope")
-    c = aeqd_constants(a, lon0_deg, lat0_deg, fe, fn)
-    r, lam0, sin0, cos0 = c["r"], c["lam0"], c["sin0"], c["cos0"]
-
-    def inv(pts: np.ndarray) -> np.ndarray:
-        x = pts[:, 0] - fe
-        y = pts[:, 1] - fn
-        rho = np.sqrt(x * x + y * y)
-        cc = np.arcsin(np.clip(rho / r, -1.0, 1.0))
-        sc, co = np.sin(cc), np.cos(cc)
-        safe = np.where(rho == 0.0, 1.0, rho)
-        phi = np.arcsin(np.clip(
-            co * sin0 + np.where(rho == 0.0, 0.0,
-                                 y * sc * cos0 / safe), -1.0, 1.0))
-        lam = lam0 + np.arctan2(x * sc, rho * cos0 * co - y * sin0 * sc)
-        return np.column_stack([np.degrees(lam), np.degrees(phi)])
-
-    return inv
+    """Spherical Orthographic inverse (c = arcsin(ρ/R)) — the satellite-
+    view / globe-thumbnail projection (ESRI World_From_Space family).
+    Valid for ρ ≤ R (one hemisphere); ρ/R is clipped into asin's domain so
+    boundary roundoff cannot NaN. The EPSG 9840 ellipsoidal variant
+    raises."""
+    return _make_inv_azimuthal(
+        lambda q: np.arcsin(np.clip(q, -1.0, 1.0)), "Orthographic",
+        "; EPSG 9840 ellipsoidal Orthographic is out of scope",
+        a, inv_f, lon0_deg, lat0_deg, fe, fn)
 
 
 def hom_constants(a: float, inv_f: float, lonc_deg: float, lat0_deg: float,
@@ -1628,323 +1597,201 @@ def projection_from_wkt(wkt) -> "callable | None":
     return f
 
 
+class _Prj:
+    """What a projection row reads from its .prj, once it has matched:
+    PARAMETERs, spheroid, and the origin, scale and false E/N most rows
+    share (false E/N converted from the linear unit to meters)."""
+
+    def __init__(self, wkt: str, unit: float):
+        self.wkt, self.params = wkt, _wkt_params(wkt)
+        self.a, self.inv_f = _wkt_spheroid(wkt)
+        self.lon0 = self.get("central_meridian", "longitude_of_center")
+        self.lat0 = self.get("latitude_of_origin", "latitude_of_center")
+        self.k0 = self.get("scale_factor", default=1.0)
+        self.fe = self.get("false_easting") * unit
+        self.fn = self.get("false_northing") * unit
+
+    def get(self, *names: str, default=0.0):
+        """The first of ``names`` the WKT sets, else ``default``."""
+        return next((self.params[n] for n in names if n in self.params),
+                    default)
+
+    def parallels(self) -> tuple[float, float]:
+        """Conic standard parallels; a 1SP conic has one, at the origin
+        latitude when unset."""
+        sp1 = self.get("standard_parallel_1", default=self.lat0)
+        return sp1, self.get("standard_parallel_2", default=sp1)
+
+
+# EPSG:3857 as a code. Bare digits are no marker: any number may hold them
+# (a TOWGS84 term, a false easting of 385700).
+_EPSG_3857 = re.compile(
+    r'AUTHORITY\[\s*"EPSG"\s*,\s*"?3857"?\s*\]|EPSG:3857(?!\d)', re.I)
+
+
+def _inv_mercator(w: _Prj):
+    # Real EPSG:3857 WKTs always carry a marker (authority code,
+    # Pseudo/Web-Mercator name, Auxiliary_Sphere projection, or a sphere
+    # PROJ4 extension) — those decode on the sphere. A plain Mercator_1SP/2SP
+    # on a true ellipsoid is the EPSG:3395 World Mercator family: the sphere
+    # approximation is off by up to ~20 km in latitude, so it gets the
+    # ellipsoidal inverse.
+    if (_EPSG_3857.search(w.wkt)
+            or re.search(r"Pseudo[-_ ]?Mercator|Web[_ ]?Mercator"
+                         r"|Auxiliary[_ ]?Sphere"
+                         r"|Popular[_ ]?Visualisation", w.wkt, re.I)
+            or re.search(r"\+nadgrids=@null|\+b=6378137", w.wkt)):
+        return _inv_webmerc
+    return make_inv_mercator(
+        w.a, w.inv_f, w.get("central_meridian"), w.k0,
+        w.get("standard_parallel_1", "latitude_of_true_scale", default=None),
+        w.fe, w.fn)
+
+
+def _inv_polar_stereo(w: _Prj):
+    lat_ts = w.get("standard_parallel_1", "latitude_of_standard_parallel",
+                   "latitude_of_origin", default=90.0)
+    # south aspect: negative standard parallel / origin, or an explicit
+    # South_Pole projection name
+    south = lat_ts < 0.0 or bool(re.search(r"South[_ ]?Pole", w.wkt, re.I))
+    return make_inv_polar_stereo(
+        w.a, w.inv_f, w.get("central_meridian", "longitude_of_origin",
+                            "straight_vertical_longitude_from_pole"),
+        lat_ts, w.k0, w.fe, w.fn, south)
+
+
+def _inv_stereo(w: _Prj):
+    if abs(w.lat0) >= 89.999999:        # plain name with a polar origin
+        return make_inv_polar_stereo(w.a, w.inv_f, w.get("central_meridian"),
+                                     w.lat0, w.k0, w.fe, w.fn, w.lat0 < 0.0)
+    return make_inv_oblique_stereo(w.a, w.inv_f, w.lon0, w.lat0, w.k0,
+                                   w.fe, w.fn)
+
+
+def _inv_eqc(w: _Prj):
+    a, lon0, fe, fn = w.a, w.get("central_meridian"), w.fe, w.fn
+    cos1 = math.cos(math.radians(
+        w.get("standard_parallel_1", "latitude_of_origin")))
+
+    def inv_eqc(pts: np.ndarray) -> np.ndarray:
+        # spherical Plate-Carrée (Snyder eq. 12-5/12-6): the form web map
+        # servers and global rasters actually emit
+        lon = lon0 + np.degrees((pts[:, 0] - fe) / (a * cos1))
+        lat = np.degrees((pts[:, 1] - fn) / a)
+        return np.column_stack([lon, lat])
+
+    return inv_eqc
+
+
+def _inv_hom(w: _Prj):
+    azi = w.get("azimuth", default=90.0)
+    return make_inv_hom(
+        w.a, w.inv_f, w.get("longitude_of_center", "central_meridian"),
+        w.get("latitude_of_center", "latitude_of_origin"),
+        azi, w.get("rectified_grid_angle", default=azi), w.k0, w.fe, w.fn,
+        "B" if re.search(r"Azimuth[_ ]?Center", w.wkt, re.I) else "A")
+
+
+def _sphere(make):
+    """Builder of a spherical-only family: R = semi-major axis."""
+    return lambda w: make(w.a, w.lon0, w.fe, w.fn)
+
+
+def _origin(make):
+    """Builder of a family set by its origin and false E/N alone."""
+    return lambda w: make(w.a, w.inv_f, w.lon0, w.lat0, w.fe, w.fn)
+
+
+# One row per family: (accepted PROJECTION names, inverse builder). A name
+# matches whole and case-insensitively, its words joined by "_", " " or
+# nothing; a name that only starts with one of these
+# (Transverse_Mercator_South_Orientated) is another projection: refused.
+_PROJECTIONS = [(re.compile("|".join(
+    r"[_ ]?".join(map(re.escape, n.split())) for n in names), re.I), build)
+    for names, build in [
+    (("Lambert Conformal Conic", "Lambert Conformal Conic 1SP",
+      "Lambert Conformal Conic 2SP"), lambda w: make_inv_lcc(
+        w.a, w.inv_f, w.lon0, w.lat0, *w.parallels(), w.k0, w.fe, w.fn)),
+    (("Polar Stereographic", "Polar Stereographic Variant A",
+      "Polar Stereographic Variant B", "Stereographic North Pole",
+      "Stereographic South Pole"), _inv_polar_stereo),
+    (("Oblique Stereographic", "Double Stereographic", "Stereographic"),
+     _inv_stereo),
+    (("Equirectangular", "Equidistant Cylindrical", "Plate Carree"),
+     _inv_eqc),
+    (("Lambert Azimuthal Equal Area",), lambda w: make_inv_laea(
+        w.a, w.inv_f, w.get("longitude_of_center", "central_meridian"),
+        w.get("latitude_of_center", "latitude_of_origin"), w.fe, w.fn)),
+    (("Albers", "Albers Conic Equal Area", "Albers Equal Area"),
+     lambda w: make_inv_albers(w.a, w.inv_f, w.lon0, w.lat0,
+                               *w.parallels(), w.fe, w.fn)),
+    (("Cassini", "Cassini Soldner"), _origin(make_inv_cassini)),
+    (("Bonne",), lambda w: make_inv_bonne(
+        w.a, w.inv_f, w.lon0,
+        w.get("standard_parallel_1", "latitude_of_origin", default=45.0),
+        w.fe, w.fn)),
+    (("Krovak", "Krovak North Orientated"), lambda w: make_inv_krovak(
+        w.a, w.inv_f, w.get("longitude_of_center", "central_meridian"),
+        w.get("latitude_of_center", "latitude_of_origin"),
+        w.get("azimuth", default=30.28813975277778),
+        w.get("pseudo_standard_parallel_1", default=78.5),
+        w.get("scale_factor", default=0.9999), w.fe, w.fn)),
+    (("Hotine Oblique Mercator", "Hotine Oblique Mercator Azimuth Center",
+      "Hotine Oblique Mercator Azimuth Natural Origin", "Oblique Mercator"),
+     _inv_hom),
+    (("Transverse Mercator",), lambda w: make_inv_tmerc(
+        w.a, w.inv_f, w.lon0, w.lat0, w.k0, w.fe, w.fn)),
+    (("Sinusoidal",), lambda w: make_inv_sinusoidal(
+        w.a, w.inv_f, w.lon0, w.fe, w.fn)),
+    (("Eckert IV",), _sphere(make_inv_eckert4)),
+    (("Robinson",), _sphere(make_inv_robinson)),
+    (("Mollweide",), _sphere(make_inv_mollweide)),
+    (("Miller", "Miller Cylindrical"), _sphere(make_inv_miller)),
+    (("Equal Earth",), _sphere(make_inv_equalearth)),
+    (("Van der Grinten", "Van der Grinten I"), _sphere(make_inv_vdg)),
+    (("Lambert Cylindrical Equal Area", "Cylindrical Equal Area"),
+     lambda w: make_inv_cea(
+         w.a, w.inv_f, w.lon0,
+         w.get("standard_parallel_1", "latitude_of_origin"), w.fe, w.fn)),
+    (("Polyconic", "American Polyconic"), _origin(make_inv_polyconic)),
+    # the spherical azimuthals raise on an ellipsoid
+    (("Gnomonic",), _origin(make_inv_gnomonic)),
+    (("Orthographic",), _origin(make_inv_ortho)),
+    (("Azimuthal Equidistant",), _origin(make_inv_aeqd)),
+    (("Mercator", "Mercator 1SP", "Mercator 2SP", "Mercator Auxiliary Sphere",
+      "Mercator Variant A", "Mercator Variant B"), _inv_mercator),
+]]
+
+
 def _projection_only_from_wkt(wkt) -> "callable | None":
     """WKT string → inverse-transform fn to WGS84 lon/lat, or None (identity).
 
-    Recognizes Pseudo-Mercator (EPSG:3857 — sphere, dispatched on the
-    authority/name markers real 3857 WKTs carry), ellipsoidal Mercator
-    1SP/2SP (EPSG:3395 World Mercator family), Sinusoidal (MODIS grid,
-    sphere or ellipsoid), Transverse-Mercator / Gauss–Krüger (UTM,
-    State-Plane TM zones — ellipsoidal Snyder-series inverse with
-    WKT-supplied central meridian / origin / scale / false E-N /
-    spheroid), Lambert Conformal
-    Conic (1SP and 2SP — State Plane / national grids), Albers Equal Area
-    Conic (1SP/2SP), Lambert Azimuthal Equal Area (oblique — ETRS89-LAEA
-    EPSG:3035 — and both polar aspects), Polar Stereographic (north/south
-    aspects — Arctic/Antarctic grids; generic oblique Stereographic still
-    raises), and
-    geographic CRSes (passthrough). Malformed / non-WKT content → None, matching the
-    reference's proj4 try/catch → no transform. A *well-formed* PROJCS whose
-    PROJECTION the engine lacks raises instead of silently decoding
-    projected meters as degrees — that failure corrupted coordinates
-    silently in round 1 (VERDICT 'What's missing' #1)."""
+    The PROJECTION name picks a row of ``_PROJECTIONS``, which reads
+    the parameters it needs; raw coordinates convert from the PROJCS linear
+    unit to meters (US State Plane zones ship in feet). A WKT whose
+    PROJECTION names no row but that carries the EPSG:3857 code is Web
+    Mercator. Geographic CRSes (no PROJECTION) and malformed / non-WKT
+    content → None, matching the reference's proj4 try/catch → no
+    transform. A *well-formed* PROJCS whose PROJECTION the engine lacks
+    raises instead of silently decoding projected meters as degrees — that
+    failure corrupted coordinates silently in round 1 (VERDICT 'What's
+    missing' #1)."""
     if not wkt or not isinstance(wkt, str):
         return None
     try:
-        # PROJCS linear unit (feet-based State Plane zones are common);
-        # false E/N are expressed in this unit, raw coordinates too
         unit = _wkt_linear_unit(wkt)
-        if re.search(r'PROJECTION\["?Lambert[_ ]?Conformal[_ ]?Conic',
-                     wkt, re.I):
-            p = _wkt_params(wkt)
-            a, inv_f = _wkt_spheroid(wkt)
-            lat0 = p.get("latitude_of_origin", p.get("latitude_of_center",
-                                                     0.0))
-            sp1 = p.get("standard_parallel_1", lat0)
-            sp2 = p.get("standard_parallel_2", sp1)   # absent → 1SP
-            return _with_unit(make_inv_lcc(
-                a, inv_f,
-                p.get("central_meridian", p.get("longitude_of_center", 0.0)),
-                lat0, sp1, sp2, p.get("scale_factor", 1.0),
-                p.get("false_easting", 0.0) * unit,
-                p.get("false_northing", 0.0) * unit), unit)
-        if re.search(r'PROJECTION\["?(Polar[_ ]?Stereographic'
-                     r'|Stereographic[_ ]?(North|South)[_ ]?Pole)',
-                     wkt, re.I):
-            p = _wkt_params(wkt)
-            a, inv_f = _wkt_spheroid(wkt)
-            lat_ts = p.get("standard_parallel_1",
-                           p.get("latitude_of_standard_parallel",
-                                 p.get("latitude_of_origin", 90.0)))
-            # south aspect: negative standard parallel / origin, or an
-            # explicit South_Pole projection name
-            south = (lat_ts < 0.0
-                     or bool(re.search(r"South[_ ]?Pole", wkt, re.I)))
-            return _with_unit(make_inv_polar_stereo(
-                a, inv_f,
-                p.get("central_meridian",
-                      p.get("longitude_of_origin",
-                            p.get("straight_vertical_longitude_from_pole",
-                                  0.0))),
-                lat_ts, p.get("scale_factor", 1.0),
-                p.get("false_easting", 0.0) * unit,
-                p.get("false_northing", 0.0) * unit,
-                south), unit)
-        if re.search(r'PROJECTION\["?(Oblique[_ ]?Stereographic'
-                     r'|Double[_ ]?Stereographic|Stereographic)',
-                     wkt, re.I):
-            p = _wkt_params(wkt)
-            a, inv_f = _wkt_spheroid(wkt)
-            lat0 = p.get("latitude_of_origin",
-                         p.get("latitude_of_center", 0.0))
-            if abs(lat0) >= 89.999999:   # plain name with a polar origin
-                return _with_unit(make_inv_polar_stereo(
-                    a, inv_f, p.get("central_meridian", 0.0), lat0,
-                    p.get("scale_factor", 1.0),
-                    p.get("false_easting", 0.0) * unit,
-                    p.get("false_northing", 0.0) * unit,
-                    lat0 < 0.0), unit)
-            return _with_unit(make_inv_oblique_stereo(
-                a, inv_f,
-                p.get("central_meridian", p.get("longitude_of_center", 0.0)),
-                lat0, p.get("scale_factor", 1.0),
-                p.get("false_easting", 0.0) * unit,
-                p.get("false_northing", 0.0) * unit), unit)
-        if re.search(r'PROJECTION\["?(Equirectangular'
-                     r'|Equidistant[_ ]?Cylindrical|Plate[_ ]?Carree)',
-                     wkt, re.I):
-            p = _wkt_params(wkt)
-            a, _ = _wkt_spheroid(wkt)
-            lat1 = math.radians(p.get("standard_parallel_1",
-                                      p.get("latitude_of_origin", 0.0)))
-            lon0 = p.get("central_meridian", 0.0)
-            fe = p.get("false_easting", 0.0) * unit
-            fn = p.get("false_northing", 0.0) * unit
-            cos1 = math.cos(lat1)
-
-            def inv_eqc(pts: np.ndarray) -> np.ndarray:
-                # spherical Plate-Carrée (Snyder eq. 12-5/12-6): the form
-                # web map servers and global rasters actually emit
-                lon = lon0 + np.degrees((pts[:, 0] - fe) / (a * cos1))
-                lat = np.degrees((pts[:, 1] - fn) / a)
-                return np.column_stack([lon, lat])
-
-            return _with_unit(inv_eqc, unit)
-        if re.search(r'PROJECTION\["?Lambert[_ ]?Azimuthal', wkt, re.I):
-            p = _wkt_params(wkt)
-            a, inv_f = _wkt_spheroid(wkt)
-            return _with_unit(make_inv_laea(
-                a, inv_f,
-                p.get("longitude_of_center", p.get("central_meridian", 0.0)),
-                p.get("latitude_of_center", p.get("latitude_of_origin", 0.0)),
-                p.get("false_easting", 0.0) * unit,
-                p.get("false_northing", 0.0) * unit), unit)
-        if re.search(r'PROJECTION\["?Albers', wkt, re.I):
-            p = _wkt_params(wkt)
-            a, inv_f = _wkt_spheroid(wkt)
-            lat0 = p.get("latitude_of_origin", p.get("latitude_of_center",
-                                                     0.0))
-            sp1 = p.get("standard_parallel_1", lat0)
-            return _with_unit(make_inv_albers(
-                a, inv_f,
-                p.get("central_meridian", p.get("longitude_of_center", 0.0)),
-                lat0, sp1, p.get("standard_parallel_2", sp1),
-                p.get("false_easting", 0.0) * unit,
-                p.get("false_northing", 0.0) * unit), unit)
-        if re.search(r'PROJECTION\["?Cassini', wkt, re.I):
-            p = _wkt_params(wkt)
-            a, inv_f = _wkt_spheroid(wkt)
-            return _with_unit(make_inv_cassini(
-                a, inv_f,
-                p.get("central_meridian", p.get("longitude_of_center", 0.0)),
-                p.get("latitude_of_origin", p.get("latitude_of_center",
-                                                  0.0)),
-                p.get("false_easting", 0.0) * unit,
-                p.get("false_northing", 0.0) * unit), unit)
-        if re.search(r'PROJECTION\["?Bonne', wkt, re.I):
-            p = _wkt_params(wkt)
-            a, inv_f = _wkt_spheroid(wkt)
-            return _with_unit(make_inv_bonne(
-                a, inv_f,
-                p.get("central_meridian", p.get("longitude_of_center", 0.0)),
-                p.get("standard_parallel_1",
-                      p.get("latitude_of_origin", 45.0)),
-                p.get("false_easting", 0.0) * unit,
-                p.get("false_northing", 0.0) * unit), unit)
-        if re.search(r'PROJECTION\["?Krovak', wkt, re.I):
-            p = _wkt_params(wkt)
-            a, inv_f = _wkt_spheroid(wkt)
-            return _with_unit(make_inv_krovak(
-                a, inv_f,
-                p.get("longitude_of_center", p.get("central_meridian", 0.0)),
-                p.get("latitude_of_center", p.get("latitude_of_origin",
-                                                  0.0)),
-                p.get("azimuth", 30.28813975277778),
-                p.get("pseudo_standard_parallel_1", 78.5),
-                p.get("scale_factor", 0.9999),
-                p.get("false_easting", 0.0) * unit,
-                p.get("false_northing", 0.0) * unit), unit)
-        if re.search(r'PROJECTION\["?(Hotine[_ ]?)?Oblique[_ ]?Mercator',
-                     wkt, re.I):
-            p = _wkt_params(wkt)
-            a, inv_f = _wkt_spheroid(wkt)
-            azi = p.get("azimuth", 90.0)
-            variant = ("B" if re.search(r"Azimuth[_ ]?Center", wkt, re.I)
-                       else "A")
-            return _with_unit(make_inv_hom(
-                a, inv_f,
-                p.get("longitude_of_center", p.get("central_meridian", 0.0)),
-                p.get("latitude_of_center", p.get("latitude_of_origin", 0.0)),
-                azi, p.get("rectified_grid_angle", azi),
-                p.get("scale_factor", 1.0),
-                p.get("false_easting", 0.0) * unit,
-                p.get("false_northing", 0.0) * unit, variant), unit)
-        if re.search(r'PROJECTION\["?Transverse[_ ]?Mercator', wkt, re.I):
-            p = _wkt_params(wkt)
-            a, inv_f = _wkt_spheroid(wkt)
-            return _with_unit(make_inv_tmerc(
-                a, inv_f,
-                p.get("central_meridian", p.get("longitude_of_center", 0.0)),
-                p.get("latitude_of_origin", p.get("latitude_of_center", 0.0)),
-                p.get("scale_factor", 1.0),
-                p.get("false_easting", 0.0) * unit,
-                p.get("false_northing", 0.0) * unit), unit)
-        if re.search(r'PROJECTION\["?Sinusoidal', wkt, re.I):
-            p = _wkt_params(wkt)
-            a, inv_f = _wkt_spheroid(wkt)
-            return _with_unit(make_inv_sinusoidal(
-                a, inv_f,
-                p.get("central_meridian", p.get("longitude_of_center", 0.0)),
-                p.get("false_easting", 0.0) * unit,
-                p.get("false_northing", 0.0) * unit), unit)
-        if re.search(r'PROJECTION\["?Eckert[_ ]?IV', wkt, re.I):
-            p = _wkt_params(wkt)
-            a, _inv_f = _wkt_spheroid(wkt)  # spherical-only: R = semimajor
-            return _with_unit(make_inv_eckert4(
-                a,
-                p.get("central_meridian", p.get("longitude_of_center", 0.0)),
-                p.get("false_easting", 0.0) * unit,
-                p.get("false_northing", 0.0) * unit), unit)
-        if re.search(r'PROJECTION\["?Robinson', wkt, re.I):
-            p = _wkt_params(wkt)
-            a, _inv_f = _wkt_spheroid(wkt)  # table-driven, spherical
-            return _with_unit(make_inv_robinson(
-                a,
-                p.get("central_meridian", p.get("longitude_of_center", 0.0)),
-                p.get("false_easting", 0.0) * unit,
-                p.get("false_northing", 0.0) * unit), unit)
-        if re.search(r'PROJECTION\["?Mollweide', wkt, re.I):
-            p = _wkt_params(wkt)
-            a, _inv_f = _wkt_spheroid(wkt)  # spherical-only: R = semimajor
-            return _with_unit(make_inv_mollweide(
-                a,
-                p.get("central_meridian", p.get("longitude_of_center", 0.0)),
-                p.get("false_easting", 0.0) * unit,
-                p.get("false_northing", 0.0) * unit), unit)
-        if re.search(r'PROJECTION\["?Miller', wkt, re.I):
-            p = _wkt_params(wkt)
-            a, _inv_f = _wkt_spheroid(wkt)  # spherical-only: R = semimajor
-            return _with_unit(make_inv_miller(
-                a,
-                p.get("central_meridian", p.get("longitude_of_center", 0.0)),
-                p.get("false_easting", 0.0) * unit,
-                p.get("false_northing", 0.0) * unit), unit)
-        if re.search(r'PROJECTION\["?Equal[_ ]?Earth', wkt, re.I):
-            p = _wkt_params(wkt)
-            a, _inv_f = _wkt_spheroid(wkt)  # spherical by definition
-            return _with_unit(make_inv_equalearth(
-                a,
-                p.get("central_meridian", p.get("longitude_of_center", 0.0)),
-                p.get("false_easting", 0.0) * unit,
-                p.get("false_northing", 0.0) * unit), unit)
-        if re.search(r'PROJECTION\["?Van[_ ]?der[_ ]?Grinten', wkt, re.I):
-            p = _wkt_params(wkt)
-            a, _inv_f = _wkt_spheroid(wkt)  # spherical-only: R = semimajor
-            return _with_unit(make_inv_vdg(
-                a,
-                p.get("central_meridian", p.get("longitude_of_center", 0.0)),
-                p.get("false_easting", 0.0) * unit,
-                p.get("false_northing", 0.0) * unit), unit)
-        if re.search(r'PROJECTION\["?(Lambert[_ ]?)?Cylindrical[_ ]?'
-                     r'Equal[_ ]?Area', wkt, re.I):
-            p = _wkt_params(wkt)
-            a, inv_f = _wkt_spheroid(wkt)
-            return _with_unit(make_inv_cea(
-                a, inv_f,
-                p.get("central_meridian", p.get("longitude_of_center", 0.0)),
-                p.get("standard_parallel_1",
-                      p.get("latitude_of_origin", 0.0)),
-                p.get("false_easting", 0.0) * unit,
-                p.get("false_northing", 0.0) * unit), unit)
-        if re.search(r'PROJECTION\["?(American[_ ]?)?Polyconic', wkt, re.I):
-            p = _wkt_params(wkt)
-            a, inv_f = _wkt_spheroid(wkt)
-            return _with_unit(make_inv_polyconic(
-                a, inv_f,
-                p.get("central_meridian", p.get("longitude_of_center", 0.0)),
-                p.get("latitude_of_origin", p.get("latitude_of_center",
-                                                  0.0)),
-                p.get("false_easting", 0.0) * unit,
-                p.get("false_northing", 0.0) * unit), unit)
-        if re.search(r'PROJECTION\["?Gnomonic', wkt, re.I):
-            p = _wkt_params(wkt)
-            a, inv_f = _wkt_spheroid(wkt)   # sphere-only: raises on e2>0
-            return _with_unit(make_inv_gnomonic(
-                a, inv_f,
-                p.get("central_meridian", p.get("longitude_of_center", 0.0)),
-                p.get("latitude_of_origin", p.get("latitude_of_center",
-                                                  0.0)),
-                p.get("false_easting", 0.0) * unit,
-                p.get("false_northing", 0.0) * unit), unit)
-        if re.search(r'PROJECTION\["?Orthographic', wkt, re.I):
-            p = _wkt_params(wkt)
-            a, inv_f = _wkt_spheroid(wkt)   # sphere-only: raises on e2>0
-            return _with_unit(make_inv_ortho(
-                a, inv_f,
-                p.get("central_meridian", p.get("longitude_of_center", 0.0)),
-                p.get("latitude_of_origin", p.get("latitude_of_center",
-                                                  0.0)),
-                p.get("false_easting", 0.0) * unit,
-                p.get("false_northing", 0.0) * unit), unit)
-        if re.search(r'PROJECTION\["?Azimuthal[_ ]?Equidistant', wkt, re.I):
-            p = _wkt_params(wkt)
-            a, inv_f = _wkt_spheroid(wkt)   # sphere-only: raises on e2>0
-            return _with_unit(make_inv_aeqd(
-                a, inv_f,
-                p.get("central_meridian", p.get("longitude_of_center", 0.0)),
-                p.get("latitude_of_origin", p.get("latitude_of_center",
-                                                  0.0)),
-                p.get("false_easting", 0.0) * unit,
-                p.get("false_northing", 0.0) * unit), unit)
-        if re.search(r'PROJECTION\["?Mercator', wkt, re.I) or "3857" in wkt:
-            # Real EPSG:3857 WKTs always carry a marker (authority code,
-            # Pseudo/Web-Mercator name, Auxiliary_Sphere projection, or a
-            # sphere PROJ4 extension) — those decode on the sphere. A plain
-            # Mercator_1SP/2SP on a true ellipsoid is the EPSG:3395 World
-            # Mercator family: the sphere approximation is off by up to
-            # ~20 km in latitude, so it gets the ellipsoidal inverse.
-            if ("3857" in wkt
-                    or re.search(r"Pseudo[-_ ]?Mercator|Web[_ ]?Mercator"
-                                 r"|Auxiliary[_ ]?Sphere"
-                                 r"|Popular[_ ]?Visualisation", wkt, re.I)
-                    or re.search(r"\+nadgrids=@null|\+b=6378137", wkt)):
-                return _with_unit(_inv_webmerc, unit)
-            p = _wkt_params(wkt)
-            a, inv_f = _wkt_spheroid(wkt)
-            return _with_unit(make_inv_mercator(
-                a, inv_f, p.get("central_meridian", 0.0),
-                p.get("scale_factor", 1.0),
-                p.get("standard_parallel_1",
-                      p.get("latitude_of_true_scale")),
-                p.get("false_easting", 0.0) * unit,
-                p.get("false_northing", 0.0) * unit), unit)
-        proj = re.search(r'PROJECTION\[\s*"([^"]+)"', wkt, re.I)
+        proj = re.search(r'PROJECTION\[\s*"?([^",\]]+)', wkt, re.I)
+        name = proj.group(1).strip() if proj else ""
+        for names, build in _PROJECTIONS:
+            if names.fullmatch(name):
+                return _with_unit(build(_Prj(wkt, unit)), unit)
+        if _EPSG_3857.search(wkt):
+            return _with_unit(_inv_webmerc, unit)
         if proj:
             raise ValueError(
                 f'unsupported PROJECTION "{proj.group(1)}" in .prj — '
                 f"refusing to decode projected coordinates as degrees")
-        # geographic (GEOGCS) or unrecognizable content → identity
-        return None
+        return None     # geographic (GEOGCS) or unrecognizable content
     except ValueError:
         raise
     except Exception:

@@ -245,8 +245,11 @@ def test_points_fast_unsupported_crs_modes(spark, tmp_path):
         'SPHEROID["WGS 84",6378137,298.257223563]]],'
         'PROJECTION["New_Zealand_Map_Grid"],UNIT["metre",1]]')
     glob = str(d) + "/*.shp"
-    with pytest.raises(Exception):           # default: loud failure
+    # default: loud failure that names the layer, through either reader
+    with pytest.raises(Exception, match="layer .*mix/bad: unsupported"):
         ingest.read_points_fast(spark, glob).collect()
+    with pytest.raises(Exception, match="layer .*mix/bad: unsupported"):
+        ingest.read_shapefiles(spark, str(d) + "/*").collect()
     skipped = ingest.read_points_fast(
         spark, glob, on_unsupported_crs="skip").collect()
     assert sorted((r.layer, r.lon, r.lat) for r in skipped) == [

@@ -7,6 +7,7 @@ coordinates and attribute rows.
 """
 
 import math
+import re
 from datetime import date
 
 import numpy as np
@@ -1921,3 +1922,124 @@ def test_projcs_without_projection_never_bare_shifts():
     d_m = np.hypot((out[0, 0] + 2.0) * 111320.0 * np.cos(np.radians(52)),
                    (out[0, 1] - 52.0) * 111320.0)
     assert 50.0 < d_m < 300.0
+
+
+def test_epsg_3857_is_a_code_not_digits():
+    """Only the EPSG code (AUTHORITY["EPSG","3857"], EPSG:3857) or the
+    Pseudo/Web-Mercator name markers select the Web-Mercator sphere; the
+    digits 3857 inside any other number select nothing."""
+    # a geographic CRS whose TOWGS84 holds the digits gets only its shift
+    geog = ('GEOGCS["GCS_X",DATUM["D_X",SPHEROID["WGS_1984",6378137.0,'
+            '298.257223563],TOWGS84[-0.3857,0,0,0,0,0,0]],'
+            'PRIMEM["Greenwich",0],UNIT["Degree",0.0174532925199433]]')
+    pt = np.array([[10.0, 50.0]])
+    shift = parser.make_datum_shift(6378137.0, 298.257223563,
+                                    (-0.3857, 0, 0, 0, 0, 0, 0))
+    assert np.array_equal(parser.projection_from_wkt(geog)(pt), shift(pt))
+    # an ellipsoidal Mercator whose false easting holds them keeps its
+    # false easting: 1,000 km east of the false origin is the same point
+    merc = ('PROJCS["M",GEOGCS["WGS 84",DATUM["WGS_1984",SPHEROID["WGS 84",'
+            '6378137,298.257223563]]],PROJECTION["Mercator_1SP"],'
+            'PARAMETER["central_meridian",0],'
+            'PARAMETER["false_easting",%s],UNIT["metre",1]]')
+    lons = [parser.projection_from_wkt(merc % fe)(
+        np.array([[fe + 1.0e6, 0.0]]))[0, 0] for fe in (385700.0, 4.0e5)]
+    assert lons[0] == lons[1] and abs(lons[0] - 8.983) < 1e-3
+    # the code itself, in either spelling, still selects the sphere
+    webmerc = parser.projection_from_wkt(writer.WEBMERC_WKT)
+    xy = np.array([[1.0e6, 5.0e6], [-2.0e6, -1.0e6]])
+    for marker in (',AUTHORITY["EPSG","3857"]]', ',EXTENSION["PROJ4",'
+                   '"+init=EPSG:3857"]]'):
+        wkt = (merc % 0.0)[:-1] + marker
+        assert np.array_equal(parser.projection_from_wkt(wkt)(xy),
+                              webmerc(xy))
+
+
+@pytest.mark.parametrize("name", [
+    "Transverse_Mercator_South_Orientated",
+    "Hotine_Oblique_Mercator_Two_Point_Natural_Origin",
+    "Bonne_South_Orientated", "Polar_Stereographic_Variant_C"])
+def test_projection_name_matches_whole(name):
+    """A PROJECTION name that only starts with a supported family's name
+    is another projection: it raises instead of decoding as that family
+    (Lo29's South-Orientated TM decoded mirrored into the wrong
+    hemisphere)."""
+    wkt = ('PROJCS["x",GEOGCS["WGS 84",DATUM["WGS_1984",SPHEROID["WGS 84",'
+           f'6378137,298.257223563]]],PROJECTION["{name}"],'
+           'PARAMETER["central_meridian",29],UNIT["metre",1]]')
+    with pytest.raises(ValueError, match=f'unsupported PROJECTION "{name}"'):
+        parser.projection_from_wkt(wkt)
+
+
+_EQC_WKT = ('PROJCS["x",GEOGCS["WGS 84",DATUM["WGS_1984",SPHEROID['
+            '"WGS 84",6378137,298.257223563]]],'
+            'PROJECTION["Equirectangular"],'
+            'PARAMETER["standard_parallel_1",30],'
+            'PARAMETER["central_meridian",10],UNIT["metre",1]]')
+
+
+# (base WKT: _EQC_WKT, writer.WEBMERC_WKT or a queries_shp constant;
+# canonical PROJECTION name; its aliases)
+_ALIASES = [
+    ("_LCC_WKT", "Lambert_Conformal_Conic_2SP",
+     ["Lambert_Conformal_Conic", "Lambert_Conformal_Conic_1SP",
+      "Lambert Conformal Conic 2SP"]),
+    ("_PST_WKT", "Polar_Stereographic",
+     ["Polar_Stereographic_Variant_A", "Polar_Stereographic_Variant_B",
+      "Stereographic_North_Pole", "Stereographic_South_Pole"]),
+    ("_RD_WKT", "Double_Stereographic",
+     ["Oblique_Stereographic", "Stereographic"]),
+    ("_EQC_WKT", "Equirectangular",
+     ["Equidistant_Cylindrical", "Plate_Carree"]),
+    ("_LAEA_WKT", "Lambert_Azimuthal_Equal_Area", []),
+    ("_ALBERS_WKT", "Albers_Conic_Equal_Area",
+     ["Albers", "Albers_Equal_Area"]),
+    ("_CAS_WKT", "Cassini", ["Cassini_Soldner"]),
+    ("_BONNE_WKT", "Bonne", []),
+    ("_KRO_WKT", "Krovak", ["Krovak_North_Orientated"]),
+    ("_HOM_WKT", "Hotine_Oblique_Mercator_Azimuth_Natural_Origin",
+     ["Hotine_Oblique_Mercator", "Oblique_Mercator"]),
+    ("_HOM_WKT", "Hotine_Oblique_Mercator_Azimuth_Center", []),
+    ("_UTM_WKT", "Transverse_Mercator", ["TRANSVERSE_MERCATOR"]),
+    ("_SINU_WKT", "Sinusoidal", []),
+    ("_ECK4_WKT", "Eckert_IV", []),
+    ("_ROBIN_WKT", "Robinson", []),
+    ("_MOLL_WKT", "Mollweide", []),
+    ("_MILLER_WKT", "Miller_Cylindrical", ["Miller"]),
+    ("_EE_WKT", "Equal_Earth", []),
+    ("_VDG_WKT", "Van_der_Grinten_I", ["Van_der_Grinten"]),
+    ("_CEA_WKT", "Lambert_Cylindrical_Equal_Area",
+     ["Cylindrical_Equal_Area"]),
+    ("_POLY_WKT", "Polyconic", ["American_Polyconic"]),
+    ("_GNOM_WKT", "Gnomonic", []),
+    ("_ORTHO_WKT", "Orthographic", []),
+    ("_AEQD_WKT", "Azimuthal_Equidistant", []),
+    ("_MERC3395_WKT", "Mercator_1SP",
+     ["Mercator", "Mercator_2SP", "Mercator_Variant_A",
+      "Mercator_Variant_B"]),
+    ("WEBMERC_WKT", "Mercator_1SP", ["Mercator_Auxiliary_Sphere"]),
+]
+
+
+@pytest.mark.parametrize("base,canonical,aliases", _ALIASES)
+def test_projection_aliases_match_canonical(base, canonical, aliases):
+    """Every accepted spelling of a family's PROJECTION name decodes a
+    fixed point grid bit for bit as the family's canonical name does."""
+    from spark_shp import queries_shp
+    src = ({"_EQC_WKT": _EQC_WKT, "WEBMERC_WKT": writer.WEBMERC_WKT}.get(base)
+           or getattr(queries_shp, base))
+    wkt = re.sub(r'PROJECTION\["[^"]*"\]', f'PROJECTION["{canonical}"]', src)
+    p = parser._wkt_params(wkt)
+    g = np.linspace(-1.0, 1.0, 9)
+    grid = np.array([(x, y) for x in g for y in g])
+    pts = np.concatenate([grid * s + (p.get("false_easting", 0.0),
+                                      p.get("false_northing", 0.0))
+                          for s in (1.0e3, 1.0e5, 2.0e6)])
+    with np.errstate(all="ignore"):
+        want = parser.projection_from_wkt(wkt)(pts)
+        assert np.isfinite(want).sum() > len(pts)
+        for alias in aliases:
+            got = parser.projection_from_wkt(
+                wkt.replace(f'PROJECTION["{canonical}"]',
+                            f'PROJECTION["{alias}"]'))(pts)
+            assert got.tobytes() == want.tobytes(), alias
