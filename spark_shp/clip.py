@@ -78,22 +78,36 @@ def _decode_rows(pdf: pd.DataFrame, ws: np.ndarray,
 
 def _span_sums(values: np.ndarray, sizes: np.ndarray) -> np.ndarray:
     """int64 sums of a flat array over consecutive spans of ``sizes``
-    elements, from one cumulative sum at the span offsets."""
-    c = np.concatenate(([0], np.cumsum(values, dtype=np.int64)))
-    return np.diff(c[np.concatenate(([0], np.cumsum(sizes)))])
+    elements: one ``np.add.reduceat`` at the starts of the non-empty spans
+    (it would give an empty span the element at its start), 0 for the
+    empty ones."""
+    out = np.zeros(len(sizes), dtype=np.int64)
+    full = sizes > 0
+    out[full] = np.add.reduceat(values, (np.cumsum(sizes) - sizes)[full],
+                                dtype=np.int64)
+    return out
 
 
 def raster_vector_clip(images: DataFrame, poly_edges: dict[int, np.ndarray],
                        poly_col: str = "poly_id",
                        deg_per_px: float = DEG_PER_PX) -> DataFrame:
     """B10: images already paired with a poly_id (e.g. via spatial_join) →
-    clipped re-encoded bytes + coverage stats. ``poly_edges`` is broadcast.
+    clipped bytes + coverage stats. ``poly_edges`` is broadcast.
+
+    ``clipped_bytes`` is the clipped image in the row's format (``qb``
+    rows come out as ``raw``). A raw or png image whose every pixel lies
+    inside (``n_inside == n_pixels > 0``) keeps its stored blob instead
+    of being re-encoded: for raw blobs and this engine's pngs those are
+    the bytes a re-encode gives, while a png from another writer (palette,
+    gray, RGBA, Adam7, another zlib level) comes back as stored, and still
+    decodes to the same RGB pixels. Every row is decoded and checked all
+    the same, since the mean needs its pixels.
 
     Per Arrow batch, one ``geom.scanline_parity`` call masks every pixel
     center of every image against its own polygon; the rows' decoded
     pixels, concatenated flat in the mask's order, are zeroed by it in one
-    operation, and ``n_inside`` and the pixel sums come from cumulative
-    sums at the image offsets. Only decode and re-encode run per row."""
+    operation, and ``n_inside`` and the pixel sums are span sums at the
+    image offsets. Only decode and re-encode run per row."""
     spark = images.sparkSession
     bc = spark.sparkContext.broadcast(poly_edges)
 
@@ -114,11 +128,15 @@ def raster_vector_clip(images: DataFrame, poly_edges: dict[int, np.ndarray],
             px[~mask] = 0
             n_in = _span_sums(mask, n_px)
             sums = _span_sums(px.reshape(-1), 3 * n_px)
-            clipped = [codecs.encode(p.reshape(h, w, 3),
+            fmts = pdf["fmt"].to_numpy()
+            whole = (n_in == n_px) & (n_px > 0) & np.isin(fmts, ("raw", "png"))
+            clipped = [blob if keep else
+                       codecs.encode(p.reshape(h, w, 3),
                                      "raw" if f == "qb" else f)
-                       for p, w, h, f in zip(
+                       for blob, keep, p, w, h, f in zip(
+                           pdf["bytes"], whole.tolist(),
                            np.split(px, np.cumsum(n_px)[:-1]), ws.tolist(),
-                           hs.tolist(), pdf["fmt"])]
+                           hs.tolist(), fmts)]
             mean = np.divide(sums, 3 * n_in, out=np.zeros(len(pdf)),
                              where=n_in > 0)
             yield pd.DataFrame({
@@ -189,8 +207,8 @@ def decode_stats(images: DataFrame) -> DataFrame:
     """B11 exercise path: decode every image, emit pixel stats (also the
     kernel the lineage bench uses for bytes-decoded metrics).
 
-    Per Arrow batch each row decodes once, and the pixel sums come from
-    one cumulative sum over the batch's decoded bytes."""
+    Per Arrow batch each row decodes once, and the pixel sums are span
+    sums over the batch's decoded bytes."""
 
     def work(batches):
         for pdf in batches:

@@ -252,8 +252,11 @@ def phash_many(pixels) -> np.ndarray:
         if not (bh and bw):
             raise ValueError(f"image {j} is {w}x{h} px: phash needs at "
                              "least 8x8")
+        # the rows of each block row in int32 (bh * 255 fits), then the
+        # 8 column blocks in int64
         sums[j] = (px[:8 * bh, :8 * bw].reshape(8, bh, 8, 3 * bw)
-                   .sum(axis=(1, 3), dtype=np.int64).ravel())
+                   .sum(axis=1, dtype=np.int32)
+                   .sum(axis=2, dtype=np.int64).ravel())
         block[j] = bh * bw
     total = sums.sum(axis=1, keepdims=True)
     margin = 64 * sums - total

@@ -129,10 +129,10 @@ def scanline_parity(lon, lat, w, h, pids, poly_edges,
     and ``xin`` are computed once, as :func:`crossings` computes them; the
     row's columns with ``px < xin`` are a prefix (``px`` is non-decreasing
     in x), whose length is guessed arithmetically and then corrected
-    against the pixel centres themselves. A toggle at the prefix end and
-    a reverse cumulative count along the row give each pixel's crossing
-    parity. Work and memory scale with Σ (rows x the image's own edges)
-    plus the pixels."""
+    against the pixel centres themselves. Toggles at the prefix's start
+    and one past its end, and one uint8 running count over the flat mask,
+    give each pixel's crossing parity. Work and memory scale with
+    Σ (rows x the image's own edges) plus the pixels."""
     lon = np.asarray(lon, dtype=np.float64)
     lat = np.asarray(lat, dtype=np.float64)
     w = np.asarray(w, dtype=np.int64)
@@ -172,18 +172,17 @@ def scanline_parity(lon, lat, w, h, pids, poly_edges,
         c -= fix
     while (fix := (c < wk) & below(c)).any():
         c += fix
-    # toggle the prefix's last pixel; parity = toggles at or after a
-    # pixel within its row (suffix count minus the suffix past row end)
+    # toggle at the prefix's row start and one past its end (c == w: the
+    # next row's start, which closes it there; c == 0: twice in one place);
+    # parity = toggles at or before a pixel, counted in uint8 (its wrap at
+    # 256 keeps the parity)
     row_w = np.repeat(w, h)
     row_start = np.cumsum(row_w) - row_w
-    row_id = (np.cumsum(h) - h)[img] + row
-    hit = c > 0
+    start = row_start[(np.cumsum(h) - h)[img] + row]
     n = int(row_w.sum())
-    toggles = np.bincount(row_start[row_id[hit]] + c[hit] - 1,
-                          minlength=n + 1)
-    after = np.cumsum(toggles[::-1])[::-1]
-    return ((after[:n] - np.repeat(after[row_start + row_w], row_w))
-            & 1).astype(bool)
+    toggles = np.bincount(np.concatenate((start, start + c)),
+                          minlength=n + 1).astype(np.uint8)
+    return (np.cumsum(toggles[:n], dtype=np.uint8) & 1).view(bool)
 
 
 def rings_to_edges(rings: list[np.ndarray]) -> np.ndarray:

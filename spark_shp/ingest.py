@@ -58,11 +58,26 @@ def normalize_rank4(geom: dict | None):
 
 
 def _geom_bbox(geom: dict | None):
+    """(xmin, ymin, xmax, ymax) of every position of ``geom`` (None for a
+    null geometry) as numpy's min and max over them as float64 give it.
+    Python's min and max give the same bounds on numbers, so numpy runs
+    only where they could differ: positions of mixed lengths (numpy
+    raises), non-numbers, a NaN (numpy propagates it; the sums catch it)
+    or a bound of ±0.0 (numpy picks the zero's sign by its own order)."""
     if geom is None:
         return None
-    import numpy as np
-    pts = np.array([p for a in normalize_rank4(geom) for b in a
-                    for p in b], dtype=float)
+    pts = [p for a in normalize_rank4(geom) for b in a for p in b]
+    try:
+        if len(set(map(len, pts))) == 1:
+            xs, ys = [p[0] for p in pts], [p[1] for p in pts]
+            box = (float(min(xs)), float(min(ys)),
+                   float(max(xs)), float(max(ys)))
+            total = sum(xs) + sum(ys)
+            if total == total and all(box):
+                return box
+    except (TypeError, ValueError):
+        pass
+    pts = np.array(pts, dtype=float)
     return (float(pts[:, 0].min()), float(pts[:, 1].min()),
             float(pts[:, 0].max()), float(pts[:, 1].max()))
 
@@ -391,8 +406,10 @@ def _points_from_blob(blob: bytes, trans, base: str) -> pd.DataFrame:
         rec_no = np.array(nos, dtype=np.int64)
         x = np.array([p[0] for p in pts], dtype=np.float64)
         y = np.array([p[1] for p in pts], dtype=np.float64)
+    # the arrays are fresh: copy=False keeps pandas from stacking lon/lat
+    # into one new block
     return pd.DataFrame({"layer": base, "rec_no": rec_no,
-                         "lon": x, "lat": y})
+                         "lon": x, "lat": y}, copy=False)
 
 
 def read_shp_sharded(spark: SparkSession, shp_path: str,

@@ -19,6 +19,14 @@ from .hashing import u01_sql
 N_SHP_PTS = 64
 
 
+def _sql_double(v: float) -> str:
+    """A float64 constant of an oracle as DuckDB SQL that reads back as
+    exactly ``v``. A bare literal parses as DECIMAL (whose arithmetic
+    overflows), and ``CAST(<literal> AS DOUBLE)`` comes back one ulp off
+    for some values; a string cast parses the repr as a double."""
+    return f"CAST('{v!r}' AS DOUBLE)"
+
+
 def _fx_points_shp() -> bytes:
     import numpy as np
     from .hashing import u01
@@ -371,7 +379,7 @@ def q_shp_zm_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     return files.mapInPandas(decode, schema)
 
 
-_PGZ_VALUES = ", ".join(f"({k}, {x!r}, {y!r})"
+_PGZ_VALUES = ", ".join(f"({k}, {_sql_double(x)}, {_sql_double(y)})"
                         for k, (x, y) in enumerate(_PGZ_XY))
 
 ORACLE_SHP_ZM = f"""
@@ -461,10 +469,7 @@ def _oracle_utm_sql(f: _Family) -> str:
     constants the engine kernel uses (parser.tmerc_constants) and with the
     SAME operation order — the only divergence left is libm ulps."""
     from .shp.parser import tmerc_constants
-    # CAST to DOUBLE: bare float literals parse as DECIMAL in DuckDB, and
-    # decimal arithmetic overflows (and would differ bitwise) — the decimal
-    # repr of a float64 round-trips exactly through CAST AS DOUBLE.
-    c = {k: f"CAST({v!r} AS DOUBLE)" for k, v in tmerc_constants(
+    c = {k: _sql_double(v) for k, v in tmerc_constants(
         6378137.0, 298.257223563, 15.0, 0.0, 0.9996,
         500000.0, 0.0).items()}
     return f"""
@@ -534,7 +539,7 @@ def _oracle_lcc_sql(f: _Family) -> str:
     from .shp.parser import lcc_constants
     cv = lcc_constants(6378137.0, 298.257223563, -118.0, 33.5,
                        34.03, 35.47, 1.0, 2000000.0, 500000.0)
-    c = {k: f"CAST({v!r} AS DOUBLE)" for k, v in cv.items()}
+    c = {k: _sql_double(v) for k, v in cv.items()}
     return f"""
 WITH {_src_cte(f)},
 s1 AS (
@@ -580,7 +585,7 @@ def _oracle_albers_sql(f: _Family) -> str:
     from .shp.parser import albers_constants
     cv = albers_constants(6378137.0, 298.257223563, -96.0, 23.0,
                           29.5, 45.5, 0.0, 0.0)
-    c = {k: f"CAST({v!r} AS DOUBLE)" for k, v in cv.items()}
+    c = {k: _sql_double(v) for k, v in cv.items()}
     return f"""
 WITH {_src_cte(f)},
 s1 AS (
@@ -622,7 +627,7 @@ def _oracle_stereo_sql(f: _Family) -> str:
     from .shp.parser import polar_stereo_constants
     cv = polar_stereo_constants(6378137.0, 298.257223563, 0.0, -71.0,
                                 1.0, 0.0, 0.0, True)
-    c = {k: (f"CAST({v!r} AS DOUBLE)" if isinstance(v, float) else v)
+    c = {k: (_sql_double(v) if isinstance(v, float) else v)
          for k, v in cv.items()}
     return f"""
 WITH {_src_cte(f)},
@@ -663,7 +668,7 @@ def _oracle_laea_sql(f: _Family) -> str:
     from .shp.parser import laea_constants
     cv = laea_constants(6378137.0, 298.257223563, 10.0, 52.0,
                         4321000.0, 3210000.0)
-    c = {k: (f"CAST({v!r} AS DOUBLE)" if isinstance(v, float) else v)
+    c = {k: (_sql_double(v) if isinstance(v, float) else v)
          for k, v in cv.items()}
     return f"""
 WITH {_src_cte(f)},
@@ -718,7 +723,7 @@ def _oracle_merc3395_sql(f: _Family) -> str:
     from .shp.parser import mercator_constants
     cv = mercator_constants(6378137.0, 298.257223563, 12.0, 1.0, None,
                             500000.0, 250000.0)
-    c = {k: (f"CAST({v!r} AS DOUBLE)" if isinstance(v, float) else v)
+    c = {k: (_sql_double(v) if isinstance(v, float) else v)
          for k, v in cv.items()}
     return f"""
 WITH {_src_cte(f)},
@@ -759,7 +764,7 @@ def _oracle_sinusoidal_sql(f: _Family) -> str:
     identical to the numpy kernel's."""
     from .shp.parser import tmerc_constants
     cv = tmerc_constants(6371007.181, 0.0, 0.0, 0.0, 1.0, 0.0, 0.0)
-    c = {k: (f"CAST({v!r} AS DOUBLE)" if isinstance(v, float) else v)
+    c = {k: (_sql_double(v) if isinstance(v, float) else v)
          for k, v in cv.items()}
     return f"""
 WITH {_src_cte(f)},
@@ -797,7 +802,7 @@ def _oracle_mollweide_sql(f: _Family) -> str:
     float64 constants the engine kernel uses (parser.mollweide_constants)."""
     from .shp.parser import mollweide_constants
     cv = mollweide_constants(6378137.0, 0.0, 0.0, 0.0)
-    c = {k: f"CAST({v!r} AS DOUBLE)" for k, v in cv.items()}
+    c = {k: _sql_double(v) for k, v in cv.items()}
     return f"""
 WITH {_src_cte(f)},
 s1 AS (
@@ -839,8 +844,8 @@ def _oracle_oblique_stereo_sql(f: _Family) -> str:
     from .shp.parser import oblique_stereo_constants
     import math
     cv = oblique_stereo_constants(*_RD_PARAMS)
-    c = {k: f"CAST({v!r} AS DOUBLE)" for k, v in cv.items()}
-    pi = f"CAST({math.pi!r} AS DOUBLE)"
+    c = {k: _sql_double(v) for k, v in cv.items()}
+    pi = _sql_double(math.pi)
     newton = (f"phi - (LN(TAN(phi / 2.0 + {pi} / 4.0)"
               f" * POW((1.0 - {c['e']} * SIN(phi))"
               f" / (1.0 + {c['e']} * SIN(phi)), {c['e']} / 2.0)) - psi)"
@@ -903,9 +908,9 @@ def _oracle_hom_sql(f: _Family) -> str:
     import math
     from .shp.parser import hom_constants
     cv = hom_constants(*_HOM_PARAMS)
-    c = {k: f"CAST({v!r} AS DOUBLE)" for k, v in cv.items()
+    c = {k: _sql_double(v) for k, v in cv.items()
          if isinstance(v, float)}
-    pi = f"CAST({math.pi!r} AS DOUBLE)"
+    pi = _sql_double(math.pi)
     return f"""
 WITH {_src_cte(f)},
 s1 AS (
@@ -968,11 +973,11 @@ def _datum_stage_sql(a: float, inv_f: float, p7, src_cte: str) -> str:
     (±0.0·y is exact, matching the kernel's own float ops)."""
     import math
     from .shp.parser import datum_constants
-    d = {k: f"CAST({v!r} AS DOUBLE)"
+    d = {k: _sql_double(v)
          for k, v in datum_constants(a, inv_f, p7).items()}
     # np.radians multiplies by the double nearest pi/180 — a single
     # constant multiply, NOT x*pi/180 (two roundings)
-    d2r = f"CAST({(math.pi / 180.0)!r} AS DOUBLE)"
+    d2r = _sql_double(math.pi / 180.0)
     return f"""
 g1 AS (
   SELECT rec_no, lon_s * {d2r} AS lam, lat_s * {d2r} AS phi
@@ -1018,10 +1023,10 @@ def _oracle_krovak_sql(f: _Family, datum_p7=None) -> str:
     import math
     from .shp.parser import krovak_constants
     cv = krovak_constants(*_KRO_PARAMS)
-    c = {k: f"CAST({v!r} AS DOUBLE)" for k, v in cv.items()}
-    ca = f"CAST({math.cos(cv['alpha'])!r} AS DOUBLE)"
-    sa = f"CAST({math.sin(cv['alpha'])!r} AS DOUBLE)"
-    pi = f"CAST({math.pi!r} AS DOUBLE)"
+    c = {k: _sql_double(v) for k, v in cv.items()}
+    ca = _sql_double(math.cos(cv['alpha']))
+    sa = _sql_double(math.sin(cv['alpha']))
+    pi = _sql_double(math.pi)
     step = (f"2.0 * (ATAN(base * POW((1.0 + {c['e']} * SIN(phi))"
             f" / (1.0 - {c['e']} * SIN(phi)), {c['e']} / 2.0)) - {pi} / 4.0)"
             " AS phi")
@@ -1093,7 +1098,7 @@ def _oracle_cassini_sql(f: _Family) -> str:
     """Cassini-Soldner inverse as DuckDB SQL, op-for-op the numpy kernel
     (same tmerc_constants float64 values, k0 = 1)."""
     from .shp.parser import tmerc_constants
-    c = {k: f"CAST({v!r} AS DOUBLE)" for k, v in tmerc_constants(
+    c = {k: _sql_double(v) for k, v in tmerc_constants(
         _CAS_PARAMS[0], _CAS_PARAMS[1], _CAS_PARAMS[2], _CAS_PARAMS[3],
         1.0, _CAS_PARAMS[4], _CAS_PARAMS[5]).items()}
     return f"""
@@ -1153,7 +1158,7 @@ def _oracle_bonne_sql(f: _Family) -> str:
     from .shp.parser import bonne_constants
     a, inv_f, lon0, lat1, fe, fn = _BONNE_PARAMS
     cc = bonne_constants(a, inv_f, lon0, lat1, fe, fn)
-    c = {k: f"CAST({v!r} AS DOUBLE)" for k, v in cc.items()}
+    c = {k: _sql_double(v) for k, v in cc.items()}
     return f"""
 WITH {_src_cte(f)},
 s1 AS (
@@ -1199,7 +1204,7 @@ _ECK4_WKT = (
 def _oracle_eckert4_sql(f: _Family) -> str:
     from .shp.parser import eckert4_constants
     cv = eckert4_constants(6378137.0, 10.0, 0.0, 0.0)
-    c = {k: f"CAST({v!r} AS DOUBLE)" for k, v in cv.items()}
+    c = {k: _sql_double(v) for k, v in cv.items()}
     return f"""
 WITH {_src_cte(f)},
 s1 AS (
@@ -1237,19 +1242,19 @@ def _oracle_robinson_sql(f: _Family) -> str:
                              ROBINSON_YS)
     a, lon0 = 6378137.0, -5.0
     import math
-    lam0d = f"CAST({math.degrees(math.radians(lon0))!r} AS DOUBLE)"
-    ys = f"CAST({ROBINSON_YS * a!r} AS DOUBLE)"
-    xs = f"CAST({ROBINSON_XS * a!r} AS DOUBLE)"
+    lam0d = _sql_double(math.degrees(math.radians(lon0)))
+    ys = _sql_double(ROBINSON_YS * a)
+    xs = _sql_double(ROBINSON_XS * a)
     seg = " ".join(
-        f"WHEN yy < CAST({ROBINSON_PDFE[k + 1]!r} AS DOUBLE) THEN {k}"
+        f"WHEN yy < {_sql_double(ROBINSON_PDFE[k + 1])} THEN {k}"
         for k in range(18))
     karms_t = " ".join(
-        f"WHEN {k} THEN (yy - CAST({ROBINSON_PDFE[k]!r} AS DOUBLE)) / "
-        f"CAST({ROBINSON_PDFE[k + 1] - ROBINSON_PDFE[k]!r} AS DOUBLE)"
+        f"WHEN {k} THEN (yy - {_sql_double(ROBINSON_PDFE[k])}) / "
+        f"{_sql_double(ROBINSON_PDFE[k + 1] - ROBINSON_PDFE[k])}"
         for k in range(18))
     karms_p = " ".join(
-        f"WHEN {k} THEN CAST({ROBINSON_PLEN[k]!r} AS DOUBLE) + t * "
-        f"CAST({ROBINSON_PLEN[k + 1] - ROBINSON_PLEN[k]!r} AS DOUBLE)"
+        f"WHEN {k} THEN {_sql_double(ROBINSON_PLEN[k])} + t * "
+        f"{_sql_double(ROBINSON_PLEN[k + 1] - ROBINSON_PLEN[k])}"
         for k in range(18))
     return f"""
 WITH {_src_cte(f)},
@@ -1281,7 +1286,7 @@ _MILLER_WKT = (
 def _oracle_miller_sql(f: _Family) -> str:
     from .shp.parser import miller_constants
     cv = miller_constants(6378137.0, 12.0, 0.0, 0.0)
-    c = {k: f"CAST({v!r} AS DOUBLE)" for k, v in cv.items()}
+    c = {k: _sql_double(v) for k, v in cv.items()}
     return f"""
 WITH {_src_cte(f)}
 SELECT rec_no,
@@ -1309,7 +1314,7 @@ _VDG_HALF = 0.65 * math.pi * 6378137.0
 def _oracle_vdg_sql(f: _Family) -> str:
     from .shp.parser import vdg_constants
     cv = vdg_constants(6378137.0, -7.0, 0.0, 0.0)
-    c = {k: f"CAST({v!r} AS DOUBLE)" for k, v in cv.items()}
+    c = {k: _sql_double(v) for k, v in cv.items()}
     return f"""
 WITH {_src_cte(f)},
 s1 AS (
@@ -1365,7 +1370,7 @@ def _oracle_equalearth_sql(f: _Family) -> str:
     numpy kernel's sequence, from the same equalearth_constants()."""
     from .shp.parser import _EE_ITERS, equalearth_constants
     cv = equalearth_constants(*_EE_PARAMS)
-    c = {k: f"CAST({v!r} AS DOUBLE)" for k, v in cv.items()}
+    c = {k: _sql_double(v) for k, v in cv.items()}
     newton = (
         "th - (th * ({a1} + {a2} * (th * th)"
         " + ((th * th) * (th * th) * (th * th))"
@@ -1423,7 +1428,7 @@ def _oracle_towgs84_sql(f: _Family) -> str:
     engine's degrees→radians roundtrip between the two stages), from the
     same tmerc_constants() and datum_constants() float64 values."""
     from .shp.parser import tmerc_constants
-    c = {k: f"CAST({v!r} AS DOUBLE)"
+    c = {k: _sql_double(v)
          for k, v in tmerc_constants(*_TOW_TM_PARAMS).items()}
     return f"""
 WITH {_src_cte(f)},
@@ -1491,7 +1496,7 @@ def _oracle_aeqd_sql(f: _Family) -> str:
     (same aeqd_constants float64 values, incl. the ±1 clip before ASIN)."""
     from .shp.parser import aeqd_constants
     a, lon0, lat0, fe, fn = _AEQD_PARAMS
-    c = {k: f"CAST({v!r} AS DOUBLE)"
+    c = {k: _sql_double(v)
          for k, v in aeqd_constants(a, lon0, lat0, fe, fn).items()}
     return f"""
 WITH {_src_cte(f, "xi", "yi")},
@@ -1531,7 +1536,7 @@ def _oracle_cea_sql(f: _Family) -> str:
     from .shp.parser import cea_constants
     a, inv_f, lon0, sp1, fe, fn = _CEA_PARAMS
     cv = cea_constants(a, inv_f, lon0, sp1, fe, fn)
-    c = {k: f"CAST({v!r} AS DOUBLE)" for k, v in cv.items()}
+    c = {k: _sql_double(v) for k, v in cv.items()}
     return f"""
 WITH {_src_cte(f, "xi", "yi")},
 s1 AS (
@@ -1569,7 +1574,7 @@ def _oracle_polyconic_sql(f: _Family) -> str:
     from .shp.parser import POLY_ITERS, polyconic_constants
     a, inv_f, lon0, lat0, fe, fn = _POLY_PARAMS
     cv = polyconic_constants(a, inv_f, lon0, lat0, fe, fn)
-    c = {k: f"CAST({v!r} AS DOUBLE)" for k, v in cv.items()}
+    c = {k: _sql_double(v) for k, v in cv.items()}
     ma = (f"({c['c0']} * phi - {c['c2']} * SIN(2.0 * phi) "
           f"+ {c['c4']} * SIN(4.0 * phi) - {c['c6']} * SIN(6.0 * phi))")
     mp = (f"({c['c0']} - 2.0 * {c['c2']} * COS(2.0 * phi) "
@@ -1629,7 +1634,7 @@ def _oracle_gnom_sql(f: _Family) -> str:
     kernel (same aeqd_constants float64 values)."""
     from .shp.parser import aeqd_constants
     a, lon0, lat0, fe, fn = _GNOM_PARAMS
-    c = {k: f"CAST({v!r} AS DOUBLE)"
+    c = {k: _sql_double(v)
          for k, v in aeqd_constants(a, lon0, lat0, fe, fn).items()}
     return f"""
 WITH {_src_cte(f, "xi", "yi")},
@@ -1668,7 +1673,7 @@ def _oracle_ortho_sql(f: _Family) -> str:
     kernel (same aeqd_constants float64 values, incl. the rho/R clip)."""
     from .shp.parser import aeqd_constants
     a, lon0, lat0, fe, fn = _ORTHO_PARAMS
-    c = {k: f"CAST({v!r} AS DOUBLE)"
+    c = {k: _sql_double(v)
          for k, v in aeqd_constants(a, lon0, lat0, fe, fn).items()}
     return f"""
 WITH {_src_cte(f, "xi", "yi")},
@@ -1723,9 +1728,9 @@ def _src_cte(f: _Family, x: str = "x", y: str = "y") -> str:
     :meth:`_Family.shp` recomputed in SQL."""
     def axis(mult, off, lo, span):
         u = u01_sql(f"i * {mult} + {off}")
-        span = f"CAST({span!r} AS DOUBLE)"
+        span = _sql_double(span)
         return (f"({u} - 0.5) * {span}" if lo is None
-                else f"CAST({lo!r} AS DOUBLE) + {u} * {span}")
+                else f"{_sql_double(lo)} + {u} * {span}")
 
     return f"""src AS (
   SELECT CAST(i + 1 AS INT) AS rec_no, {axis(*f.x)} AS {x},
@@ -2074,9 +2079,9 @@ def _oracle_zip_bundle() -> str:
     rows = []
     for layer in sorted(exp):
         n, sx, sy, sa = exp[layer]
-        sa_sql = "CAST(NULL AS DOUBLE)" if sa is None else f"CAST({sa!r} AS DOUBLE)"
-        rows.append(f"('{layer}', CAST({n} AS INT), CAST({sx!r} AS DOUBLE), "
-                    f"CAST({sy!r} AS DOUBLE), {sa_sql})")
+        sa_sql = "CAST(NULL AS DOUBLE)" if sa is None else _sql_double(sa)
+        rows.append(f"('{layer}', CAST({n} AS INT), {_sql_double(sx)}, "
+                    f"{_sql_double(sy)}, {sa_sql})")
     return ("SELECT * FROM (VALUES " + ", ".join(rows)
             + ") AS t(layer, n_features, sum_x, sum_y, sum_attr)")
 

@@ -97,7 +97,8 @@ def _xy(payload: bytes, count: int, offset: int, trans=None) -> np.ndarray:
 
 def _parse_parts(payload: bytes, has_z: bool, trans=None):
     """Shared PolyLine/Polygon body: bbox(32) numParts numPoints parts pts
-    [+ z-range + z per point]; M block (if trailing) ignored."""
+    [+ z-range + z per point]; M block (if trailing) ignored.
+    → (all points as one (n, 2|3) array, (start, end) of each part)."""
     num_parts = int(np.frombuffer(payload, "<i4", 1, 32)[0])
     num_points = int(np.frombuffer(payload, "<i4", 1, 36)[0])
     parts = np.frombuffer(payload, "<i4", num_parts, 40)
@@ -107,8 +108,8 @@ def _parse_parts(payload: bytes, has_z: bool, trans=None):
         z_off = pts_off + 16 * num_points + 16  # skip zmin/zmax
         z = np.frombuffer(payload, "<f8", num_points, z_off)
         pts = np.column_stack([pts, z])
-    bounds = list(parts[1:]) + [num_points]
-    return [pts[s:e] for s, e in zip(parts, bounds)]
+    starts = parts.tolist()
+    return pts, list(zip(starts, starts[1:] + [num_points]))
 
 
 def parse_record(rec_type: int, payload: bytes, trans=None):
@@ -136,22 +137,24 @@ def parse_record(rec_type: int, payload: bytes, trans=None):
             pts = np.column_stack([pts, z])
         return {"type": "MultiPoint", "coordinates": pts.tolist()}
 
+    # one tolist() per record; the parts are slices of that list
     if base_flat == 3:  # PolyLine / Z (A5, A8)
-        parts = _parse_parts(payload, has_z, trans)
+        pts, spans = _parse_parts(payload, has_z, trans)
+        flat = pts.tolist()
+        parts = [flat[s:e] for s, e in spans]
         if len(parts) == 1:
-            return {"type": "LineString", "coordinates": parts[0].tolist()}
-        return {"type": "MultiLineString",
-                "coordinates": [p.tolist() for p in parts]}
+            return {"type": "LineString", "coordinates": parts[0]}
+        return {"type": "MultiLineString", "coordinates": parts}
 
     if base_flat == 5:  # Polygon / Z (A6, A8)
-        rings = _parse_parts(payload, has_z, trans)
+        pts, spans = _parse_parts(payload, has_z, trans)
+        flat = pts.tolist()
         # Assembly decisions use xy winding only; assemble_rings consumes
         # rings in file order, so the full (xyz) rings map back positionally.
-        polys = assemble_rings([r[:, :2] for r in rings])
+        polys = assemble_rings([pts[s:e, :2] for s, e in spans])
         coords, pos = [], 0
         for poly in polys:
-            coords.append([rings[pos + i].tolist()
-                           for i in range(len(poly))])
+            coords.append([flat[s:e] for s, e in spans[pos:pos + len(poly)]])
             pos += len(poly)
         if len(coords) == 1:
             return {"type": "Polygon", "coordinates": coords[0]}

@@ -298,3 +298,100 @@ def test_clip_and_decode_stats_match_per_row_reference():
     want = frame(stats, clip.DECODE_STATS_SCHEMA,
                  (object, object, np.float64, np.int64))
     pd.testing.assert_frame_equal(out, want, check_exact=True)
+
+
+def test_scanline_parity_prefix_to_row_end():
+    # a prefix of the whole row (c == w) on the batch's last row closes
+    # one past the last pixel; on another image's last row it closes at
+    # the next image's first pixel
+    lon, lat, w, h = 10.0, 20.0, 5, 3
+    box = geom.rings_to_edges([np.array(
+        [(lon - 1.0, lat - 1.0), (lon - 1.0, lat + 1.0),
+         (lon + 1.0, lat + 1.0), (lon + 1.0, lat - 1.0)])])
+    y_last = lat + ((h / 2 - (h - 1)) - 0.5) * STEP
+    last_row = geom.rings_to_edges([np.array(
+        [(lon - 1.0, lat - 1.0), (lon - 1.0, y_last + STEP / 2),
+         (lon + 1.0, y_last + STEP / 2), (lon + 1.0, lat - 1.0)])])
+    edges = {0: box, 1: last_row}
+    mask = geom.scanline_parity([lon], [lat], [w], [h], [0], edges, STEP)
+    assert mask.all() and len(mask) == w * h
+    mask = geom.scanline_parity([lon], [lat], [w], [h], [1], edges, STEP)
+    assert mask.reshape(h, w).tolist() == ([[False] * w] * (h - 1)
+                                           + [[True] * w])
+    for pids in ([0, 1], [1, 0], [1, 1, 0]):
+        n = len(pids)
+        _check_batch(np.full(n, lon), np.full(n, lat), np.full(n, w),
+                     np.full(n, h), np.array(pids), edges)
+
+
+def test_span_sums_empty_and_zero_pixel_spans():
+    values = np.array([255, 255, 255, 1, 2, 3, 200, 7], dtype=np.uint8)
+    sizes = np.array([0, 3, 0, 0, 4, 1, 0], dtype=np.int64)
+    got = clip._span_sums(values, sizes)
+    assert got.dtype == np.int64
+    assert got.tolist() == [0, 765, 0, 0, 206, 7, 0]
+    mask = np.array([True, False, True, True], dtype=bool)
+    assert clip._span_sums(mask, np.array([2, 0, 2])).tolist() == [1, 0, 2]
+    assert clip._span_sums(np.empty(0, np.uint8),
+                           np.array([0, 0])).tolist() == [0, 0]
+    assert len(clip._span_sums(np.empty(0, np.uint8),
+                               np.empty(0, np.int64))) == 0
+
+
+def _png_level(px, level):
+    """An RGB png of ``px`` whose image data is zlib'd at ``level``."""
+    h, w, _ = px.shape
+    rows = np.pad(px.reshape(h, w * 3), ((0, 0), (1, 0)))
+    return (codecs._PNG_SIG
+            + codecs._chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2,
+                                                 0, 0, 0))
+            + codecs._chunk(b"IDAT", zlib.compress(rows.tobytes(), level))
+            + codecs._chunk(b"IEND", b""))
+
+
+def test_whole_images_return_their_stored_blob():
+    """A raw or png image whose every pixel is inside its polygon comes
+    back as its stored blob, foreign pngs included (palette + Adam7,
+    zlib level 1); the same images partly inside are re-encoded, and a
+    whole qb image comes back as raw."""
+    from tests.test_codecs import _png_build
+
+    rng = np.random.default_rng(5)
+    lon, lat, w, h = 10.0, 20.0, 12, 9
+    pal = rng.integers(0, 256, (16, 3)).astype(np.uint8)
+    idx = rng.integers(0, 16, (h, w, 1)).astype(np.uint8)
+    px = pal[idx[:, :, 0]]
+    blobs = {"palette_adam7": _png_build(idx, 3, pal, interlace=1),
+             "level1": _png_level(px, 1), "own_png": codecs.encode(px, "png"),
+             "raw": codecs.encode(px, "raw")}
+    assert blobs["palette_adam7"] != blobs["own_png"] != blobs["level1"]
+    whole = geom.rings_to_edges([np.array(
+        [(lon - 1.0, lat - 1.0), (lon - 1.0, lat + 1.0),
+         (lon + 1.0, lat + 1.0), (lon + 1.0, lat - 1.0)])])
+    west = geom.rings_to_edges([np.array(
+        [(lon - 1.0, lat - 1.0), (lon - 1.0, lat + 1.0),
+         (lon, lat + 1.0), (lon, lat - 1.0)])])
+    rows = [{"image_id": f"{name}_{p}", "bytes": blob,
+             "fmt": "raw" if name == "raw" else "png", "poly_id": p}
+            for p in (0, 1) for name, blob in blobs.items()]
+    qb = codecs.encode(px, "qb")
+    rows.append({"image_id": "qb_0", "bytes": qb, "fmt": "qb", "poly_id": 0})
+    pdf = pd.DataFrame(rows).assign(w=w, h=h, lon=lon, lat=lat)
+    fn = clip.raster_vector_clip(_Capture(), {0: whole, 1: west})
+    out = pd.concat(list(fn(iter([pdf])))).reset_index(drop=True)
+    cut = px * _brute_mask(lon, lat, w, h, west).reshape(h, w, 1)
+    for r, got in zip(rows, out.itertuples()):
+        n_in = got.n_inside
+        if r["fmt"] == "qb":
+            assert n_in == w * h
+            assert got.clipped_bytes == codecs.qb_decode(qb).tobytes()
+        elif r["poly_id"] == 0:
+            assert n_in == w * h and got.clipped_bytes == r["bytes"]
+        else:
+            assert 0 < n_in < w * h
+            assert got.clipped_bytes == codecs.encode(cut, r["fmt"])
+        assert np.array_equal(
+            codecs.decode(got.clipped_bytes, w, h,
+                          "raw" if r["fmt"] == "qb" else r["fmt"]),
+            codecs.qb_decode(qb) if r["fmt"] == "qb"
+            else (px if r["poly_id"] == 0 else cut))

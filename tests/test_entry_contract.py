@@ -40,6 +40,27 @@ def test_every_query_matches_its_duckdb_oracle(spark):
     assert not bad, bad
 
 
+def test_oracle_double_constants_read_back_exactly():
+    """Every numeric constant the shapefile oracles cast to DOUBLE is, as
+    DuckDB reads it, the float64 its text is the repr of. A bare literal
+    parses as DECIMAL, and its cast comes back one ulp off for some of the
+    projection constants."""
+    import re
+
+    import duckdb
+    from spark_shp import queries_shp
+
+    casts = sorted({m.group(0): m.group(2)
+                    for _, sql in queries_shp.QUERIES.values() if sql
+                    for m in re.finditer(r"CAST\(('?)(-?[0-9][0-9.e+-]*)\1"
+                                         r" AS DOUBLE\)", sql)}.items())
+    assert len(casts) > 274
+    got = duckdb.sql("SELECT * FROM (VALUES "
+                     + ", ".join(f"({c})" for c, _ in casts) + ")").fetchall()
+    bad = {c: g for (c, v), (g,) in zip(casts, got) if g != float(v)}
+    assert not bad, bad
+
+
 def test_iceberg_layout_roundtrip(spark, tmp_path):
     from spark_shp import iceberg_layout as ice
     from spark_shp.queries_spatial import _images_meta_df

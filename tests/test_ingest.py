@@ -307,3 +307,44 @@ def test_geojson_strings_reject_typed_geometry_without_coordinates():
         pa.array([pt, [], None], type=rank4))
     assert ok == ['{"type":"Point","coordinates":[1.5,2.5]}',
                   '{"type":"MultiPolygon","coordinates":[]}', "null"]
+
+
+def test_geom_bbox_is_numpys_min_and_max():
+    """The bbox equals numpy's min and max over the positions as float64
+    bit for bit: NaN anywhere propagates, the sign of a zero bound is
+    numpy's, ints convert, and positions of mixed lengths raise."""
+    import math
+    import struct
+
+    import pytest
+
+    def bits(t):
+        return [struct.pack("<d", v) for v in t]
+
+    def numpy_bbox(pts):
+        a = np.array(pts, dtype=float)
+        return (float(a[:, 0].min()), float(a[:, 1].min()),
+                float(a[:, 0].max()), float(a[:, 1].max()))
+
+    nan = math.nan
+    cases = [
+        [[0.0, 1.0], [-0.0, 2.0]], [[-0.0, 1.0], [0.0, 2.0]],
+        [[1.0, -0.0], [2.0, 0.0], [3.0, -0.0]], [[-0.0, -0.0]],
+        [[nan, 1.0], [2.0, 3.0]], [[1.0, 1.0], [nan, 3.0], [2.0, 0.5]],
+        [[1.0, 2.0], [3.0, nan]], [[1, 2], [3, -4]],
+        [[1.5, 2.5, 9.0], [-3.25, 4.0, 1.0]],
+        [[-1e308, 2.0], [1e308, -5e-324]],
+        [[math.inf, 1.0], [-math.inf, 2.0]],
+    ]
+    for pts in cases:
+        geom = {"type": "LineString", "coordinates": pts}
+        assert bits(ingest._geom_bbox(geom)) == bits(numpy_bbox(pts)), pts
+    poly = {"type": "MultiPolygon", "coordinates": [
+        [[[0.0, 0.0], [-0.0, 5.0], [5.0, 5.0], [0.0, 0.0]]],
+        [[[7.0, -0.0], [8.0, 1.0], [7.0, 0.0]]]]}
+    flat = [p for part in poly["coordinates"] for ring in part for p in ring]
+    assert bits(ingest._geom_bbox(poly)) == bits(numpy_bbox(flat))
+    assert ingest._geom_bbox(None) is None
+    with pytest.raises(ValueError):
+        ingest._geom_bbox({"type": "LineString",
+                           "coordinates": [[1.0, 2.0], [3.0, 4.0, 5.0]]})
