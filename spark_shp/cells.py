@@ -16,7 +16,12 @@ Properties that make this a drop-in for the H3/S2 contract:
     in int64 and, for level ≤ 13, below 2**52)
 
 Three implementations agree bit-for-bit: numpy kernels (this file), Spark SQL
-expression strings (``cell_sql``), DuckDB oracle SQL (same strings).
+expression strings (``cell_sql``), DuckDB oracle SQL (same strings). The
+SQL spreads each coordinate's bits with a shift-and-mask cascade; the numpy
+kernels look levels 0..16 up in one table of the 65,536 16-bit spreads
+(``_SPREAD_TABLE``, 512 KB) and keep the cascade for levels 17..26. Up to
+level 16 ``cell_encode`` allocates one buffer per axis: each quantizes in
+place, and the x buffer becomes the cell ids.
 
 Quantization (must be the *identical* IEEE-754 expression everywhere):
     ix = clamp(floor((lon + 180.0) / 360.0 * 2**level), 0, 2**level - 1)
@@ -51,6 +56,10 @@ def _spread(x: np.ndarray, level: int) -> np.ndarray:
     return x
 
 
+# the 16-bit spread of every index: 65,536 int64 entries, 512 KB
+_SPREAD_TABLE = _spread(np.arange(1 << 16), 16)
+
+
 def _compact(x: np.ndarray, level: int) -> np.ndarray:
     """Inverse of _spread: gather even-position bits back together."""
     x = np.asarray(x, dtype=np.int64)
@@ -70,18 +79,48 @@ def _compact(x: np.ndarray, level: int) -> np.ndarray:
     return x
 
 
+def _axis(v, shift: float, span: float, n: int) -> np.ndarray:
+    """clamp(floor((v + shift) / span * n), 0, n - 1) as int64, computed in
+    one buffer: the float steps in place, then the cast onto the same
+    memory (NaN casts to int64 min, as ``astype`` gives it)."""
+    v = np.asarray(v, dtype=np.float64)
+    t = np.add(v, shift, out=np.empty(v.shape))
+    t /= span
+    t *= n
+    np.floor(t, out=t)
+    np.clip(t, 0, n - 1, out=t)
+    out = t.view(np.int64)
+    np.copyto(out, t, casting="unsafe")
+    return out[()]
+
+
 def quantize(lon, lat, level: int):
     """lon/lat → (ix, iy) grid coordinates. Identical expression to SQL."""
     n = 1 << level
-    ix = np.floor((np.asarray(lon, dtype=np.float64) + 180.0) / 360.0 * n)
-    iy = np.floor((np.asarray(lat, dtype=np.float64) + 85.0) / 170.0 * n)
-    ix = np.clip(ix, 0, n - 1).astype(np.int64)
-    iy = np.clip(iy, 0, n - 1).astype(np.int64)
-    return ix, iy
+    return _axis(lon, 180.0, 360.0, n), _axis(lat, 85.0, 170.0, n)
+
+
+def _interleave(ix: np.ndarray, iy: np.ndarray, level: int) -> np.ndarray:
+    """morton of int64 ``ix``, ``iy``; up to level 16 it is computed in
+    ``ix``'s buffer and overwrites ``iy``. Each lookup reads index k before
+    it writes slot k, so it can write over its own indices; ``clip`` sends
+    NaN's int64 min (``quantize``) to entry 0, which is what the shift
+    cascade gives it."""
+    if level > 16:
+        return _spread(ix, level) | (_spread(iy, level) << 1)
+    np.take(_SPREAD_TABLE, ix, out=ix, mode="clip")
+    np.take(_SPREAD_TABLE, iy, out=iy, mode="clip")
+    iy <<= 1
+    ix |= iy
+    return ix
 
 
 def morton(ix, iy, level: int) -> np.ndarray:
-    return _spread(ix, level) | (_spread(iy, level) << 1)
+    """Interleave ``ix`` (even bits) and ``iy`` (odd bits), both in
+    [0, 2**level) or int64 min (a NaN coordinate, which interleaves as
+    0). Up to level 16 this is two lookups in one spread table."""
+    return _interleave(np.array(ix, dtype=np.int64),
+                       np.array(iy, dtype=np.int64), level)[()]
 
 
 def cell_encode(lon, lat, level: int) -> np.ndarray:
@@ -89,7 +128,10 @@ def cell_encode(lon, lat, level: int) -> np.ndarray:
     if not 0 <= level <= MAX_LEVEL:
         raise ValueError(f"level must be in 0..{MAX_LEVEL}, got {level}")
     ix, iy = quantize(lon, lat, level)
-    return (morton(ix, iy, level) << LEVEL_BITS) | level
+    m = _interleave(np.asarray(ix), np.asarray(iy), level)
+    m <<= LEVEL_BITS
+    m |= level
+    return m[()]
 
 
 def cell_level(cell) -> np.ndarray:
@@ -108,9 +150,12 @@ def cell_xy(cell):
 def cell_parent(cell, steps: int = 1) -> np.ndarray:
     """Ancestor ``steps`` levels up: drop 2 morton bits per step."""
     cell = np.asarray(cell, dtype=np.int64)
+    out = cell >> (LEVEL_BITS + 2 * steps)
+    out <<= LEVEL_BITS
     level = cell & ((1 << LEVEL_BITS) - 1)
-    m = cell >> LEVEL_BITS
-    return ((m >> (2 * steps)) << LEVEL_BITS) | (level - steps)
+    level -= steps
+    out |= level
+    return out
 
 
 def cell_children(cell) -> np.ndarray:

@@ -48,9 +48,10 @@ def shoelace(ring: np.ndarray) -> float:
 
 
 def is_clockwise(ring: np.ndarray) -> bool:
-    """Reference ``isClockWise`` with the zero-area translation tie-break."""
+    """Reference ``isClockWise`` with the zero-area translation tie-break.
+    An empty ring has no area and no midpoint: it is not clockwise."""
     s = shoelace(ring)
-    if s == 0.0:
+    if s == 0.0 and len(ring):
         ring = np.asarray(ring, dtype=np.float64)
         mid = (ring.min(axis=0) + ring.max(axis=0)) / 2.0
         s = shoelace(ring - mid)

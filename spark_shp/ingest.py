@@ -384,28 +384,12 @@ def _prj_wkts(spark: SparkSession, path_glob: str) -> dict[str, str]:
 
 
 def _points_from_blob(blob: bytes, trans, base: str) -> pd.DataFrame:
-    """One .shp buffer → flat point frame (columnar fast path, per-record
-    fallback; non-Point/null records → NULL coords)."""
+    """One .shp buffer → flat point frame (non-Point/null records → NULL
+    coords); rec_no comes from the record headers, since a sharded slice
+    starts mid-file and its records keep their original numbers."""
     from .shp import parser
 
-    fast = parser.parse_shp_points_columns(blob, trans)
-    if fast is not None:
-        rec_no, x, y = fast
-    else:
-        # rec_no must come from the record HEADERS, not enumeration — a
-        # sharded slice starts mid-file and its records keep their
-        # original numbers
-        header = parser.parse_header(blob)
-        parser._check_type(header["type"])
-        nos, pts = [], []
-        for no, rec_type, payload in parser.record_scan(blob):
-            g = parser.parse_record(rec_type, payload, trans)
-            nos.append(no)
-            pts.append((g["coordinates"][0], g["coordinates"][1])
-                       if g and g["type"] == "Point" else (np.nan, np.nan))
-        rec_no = np.array(nos, dtype=np.int64)
-        x = np.array([p[0] for p in pts], dtype=np.float64)
-        y = np.array([p[1] for p in pts], dtype=np.float64)
+    rec_no, x, y = parser.parse_shp_points(blob, trans)
     # the arrays are fresh: copy=False keeps pandas from stacking lon/lat
     # into one new block
     return pd.DataFrame({"layer": base, "rec_no": rec_no,

@@ -18,20 +18,24 @@ public ESRI Shapefile Technical Description and dBASE spec):
 * Reprojection (A12): .prj WKT → inverse transform to WGS84 at decode time;
   malformed/unknown WKT → identity (reference try/catch behavior).
 
-Coordinate decode is numpy ``frombuffer`` per record — the reference's
-per-coordinate DataView loop becomes one vectorized read (SURVEY §4.2).
+A .shp decodes column-wise (SURVEY §4.2): one walk over the record
+headers, then every count, part start and coordinate of the file is
+gathered by index arithmetic from zero-copy views of the buffer, the
+projection runs once over all points, and one ``tolist()`` builds the
+nested coordinate lists. The per-coordinate DataView loop of the reference
+becomes a handful of whole-file array operations.
 """
 
 from __future__ import annotations
 
 import math
 import re
+import struct
+from typing import NamedTuple
 
 import numpy as np
 
-from ..geom import assemble_rings
-
-_HAS_Z = {11, 13, 15, 18}
+from ..geom import is_clockwise
 
 
 def parse_header(buf: bytes) -> dict:
@@ -48,136 +52,285 @@ def parse_header(buf: bytes) -> dict:
                      float(bbox[2]), float(bbox[3]))}
 
 
-def record_scan(buf: bytes):
-    """A2: yield (rec_no, rec_type, payload) from offset 100.
+_REC_HEAD = struct.Struct(">ii")
+
+
+def _record_index(buf: bytes):
+    """A2: (rec_no, start, end) int64 arrays of the intact records from
+    offset 100; a record's content (shape type, then payload) is
+    ``buf[start + 8:end]``.
 
     Uses the real buffer length (not the header's), mirroring the
-    reference's guard against lying headers."""
-    import struct
-    be = struct.Struct(">ii").unpack_from
-    le = struct.Struct("<i").unpack_from
+    reference's guard against lying headers. The walk stops at the last
+    intact record when a header promises content shorter than the 4-byte
+    shape type (a non-positive length would stop the walk advancing, or
+    walk it backwards) or longer than what is left of the buffer (a
+    truncated trailing record)."""
+    head = _REC_HEAD.unpack_from
+    nos, starts, ends = [], [], []
     off, n = 100, len(buf)
     while off + 12 <= n:
-        rec_no, content_words = be(buf, off)
-        rec_type, = le(buf, off + 8)
-        content_len = content_words * 2
-        if content_len < 4 or off + 8 + content_len > n:
-            # content_len < 4: corrupt header — record content can never be
-            # smaller than the 4-byte shape type, and a non-positive length
-            # would stop `off` advancing (content_words=-4 made this loop
-            # spin forever) or walk backwards.
-            # off+8+content_len > n: truncated trailing record — the payload
-            # the header promises is not all there. Either way stop at the
-            # last intact record rather than handing garbage to the parsers.
-            return
-        payload = buf[off + 12: off + 8 + content_len]
-        yield rec_no, rec_type, payload
-        off += 8 + content_len
+        rec_no, content_words = head(buf, off)
+        end = off + 8 + 2 * content_words
+        if end < off + 12 or end > n:
+            break
+        nos.append(rec_no)
+        starts.append(off)
+        ends.append(end)
+        off = end
+    return (np.array(nos, dtype=np.int64), np.array(starts, dtype=np.int64),
+            np.array(ends, dtype=np.int64))
 
 
-def _check_type(num: int) -> tuple[int, bool]:
-    """A9/A11: M-fold and unknown-type error. → (base_type, had_m).
-
-    Only the spec's M codes (21/23/25/28) fold by −20; any other code —
-    including MultiPatch(31) — raises the reference's message with the
-    ORIGINAL number."""
-    is_m = num in (21, 23, 25, 28)
-    folded = num - 20 if is_m else num
-    if folded not in (0, 1, 3, 5, 8, 11, 13, 15, 18):
-        raise ValueError(f'I don\'t know shp type "{num}"')
-    return folded, is_m
+def record_scan(buf: bytes):
+    """A2: yield (rec_no, rec_type, payload) of every intact record."""
+    rec_no, start, end = _record_index(buf)
+    types = _gather(buf, "<i4", start + 8)[0]
+    for no, t, a, b in zip(rec_no.tolist(), types.tolist(),
+                           (start + 12).tolist(), end.tolist()):
+        yield no, t, buf[a:b]
 
 
-def _xy(payload: bytes, count: int, offset: int, trans=None) -> np.ndarray:
-    pts = np.frombuffer(payload, "<f8", count * 2, offset).reshape(count, 2)
-    if trans is not None:
-        pts = trans(pts)
-    return pts
-
-
-def _parse_parts(payload: bytes, has_z: bool, trans=None):
-    """Shared PolyLine/Polygon body: bbox(32) numParts numPoints parts pts
-    [+ z-range + z per point]; M block (if trailing) ignored.
-    → (all points as one (n, 2|3) array, (start, end) of each part)."""
-    num_parts = int(np.frombuffer(payload, "<i4", 1, 32)[0])
-    num_points = int(np.frombuffer(payload, "<i4", 1, 36)[0])
-    parts = np.frombuffer(payload, "<i4", num_parts, 40)
-    pts_off = 40 + 4 * num_parts
-    pts = _xy(payload, num_points, pts_off, trans)
-    if has_z:
-        z_off = pts_off + 16 * num_points + 16  # skip zmin/zmax
-        z = np.frombuffer(payload, "<f8", num_points, z_off)
-        pts = np.column_stack([pts, z])
-    starts = parts.tolist()
-    return pts, list(zip(starts, starts[1:] + [num_points]))
-
-
-def parse_record(rec_type: int, payload: bytes, trans=None):
-    """One record → GeoJSON-style dict or None (null shape).
-
-    ``trans``: optional (n,2)->(n,2) inverse-projection (A12)."""
-    if rec_type == 0:
-        return None
-    base, _ = _check_type(rec_type)
-    has_z = base in _HAS_Z
-    base_flat = base - 10 if has_z else base
-
-    if base_flat == 1:  # Point / PointZ (A3, A7)
-        pt = _xy(payload, 1, 0, trans)[0]
-        coords = [float(pt[0]), float(pt[1])]
-        if has_z:
-            coords.append(float(np.frombuffer(payload, "<f8", 1, 16)[0]))
-        return {"type": "Point", "coordinates": coords}
-
-    if base_flat == 8:  # MultiPoint / Z (A4, A8)
-        n = int(np.frombuffer(payload, "<i4", 1, 32)[0])
-        pts = _xy(payload, n, 36, trans)
-        if has_z:
-            z = np.frombuffer(payload, "<f8", n, 36 + 16 * n + 16)
-            pts = np.column_stack([pts, z])
-        return {"type": "MultiPoint", "coordinates": pts.tolist()}
-
-    # one tolist() per record; the parts are slices of that list
-    if base_flat == 3:  # PolyLine / Z (A5, A8)
-        pts, spans = _parse_parts(payload, has_z, trans)
-        flat = pts.tolist()
-        parts = [flat[s:e] for s, e in spans]
-        if len(parts) == 1:
-            return {"type": "LineString", "coordinates": parts[0]}
-        return {"type": "MultiLineString", "coordinates": parts}
-
-    if base_flat == 5:  # Polygon / Z (A6, A8)
-        pts, spans = _parse_parts(payload, has_z, trans)
-        flat = pts.tolist()
-        # Assembly decisions use xy winding only; assemble_rings consumes
-        # rings in file order, so the full (xyz) rings map back positionally.
-        polys = assemble_rings([pts[s:e, :2] for s, e in spans])
-        coords, pos = [], 0
-        for poly in polys:
-            coords.append([flat[s:e] for s, e in spans[pos:pos + len(poly)]])
-            pos += len(poly)
-        if len(coords) == 1:
-            return {"type": "Polygon", "coordinates": coords[0]}
-        return {"type": "MultiPolygon", "coordinates": coords}
-
-    raise AssertionError("unreachable")
-
-
-def parse_shp(buf: bytes, trans=None) -> list:
-    """A1+A2+A3..A11: full .shp buffer → list of geometries (None = null).
-
-    The HEADER type drives the M-fold/unknown check like the reference's
-    dispatch-table construction; per-record types 0 are emitted as null."""
-    header = parse_header(buf)
-    _check_type(header["type"])
-    out = []
-    for _rec_no, rec_type, payload in record_scan(buf):
-        out.append(parse_record(rec_type, payload, trans))
+def _gather(buf: bytes, dtype: str, at: np.ndarray, k: int = 1) -> np.ndarray:
+    """(k, len(at)) array: row j holds the ``dtype`` values at byte offsets
+    ``at + j * itemsize`` of ``buf``. Each byte phase present (offset mod
+    itemsize) reads through one zero-copy view of the buffer, so the
+    transient memory is one index per value, never one per byte. The
+    offsets must lie inside the buffer."""
+    size = np.dtype(dtype).itemsize
+    out = np.empty((k, len(at)), dtype)
+    phase = at % size
+    phases = np.flatnonzero(np.bincount(phase, minlength=size)).tolist()
+    for ph in phases:
+        view = np.frombuffer(buf, dtype, (len(buf) - ph) // size, ph)
+        sel = slice(None) if len(phases) == 1 else phase == ph
+        idx = (at[sel] - ph) // size
+        for j in range(k):
+            out[j, sel] = view[idx]
+            idx += 1
     return out
 
 
-_POINT_REC = np.dtype([("rec_no", ">i4"), ("len_words", ">i4"),
-                       ("shape", "<i4"), ("x", "<f8"), ("y", "<f8")])
+_M_TYPES = (21, 23, 25, 28)
+_BASE_TYPES = (0, 1, 3, 5, 8, 11, 13, 15, 18)
+
+
+def _check_type(num: int) -> None:
+    """A9/A11: only the spec's M codes (21/23/25/28) fold by −20 to a base
+    type; any other code — including MultiPatch(31) — raises the
+    reference's message with the ORIGINAL number."""
+    if num not in _BASE_TYPES and num not in _M_TYPES:
+        raise ValueError(f'I don\'t know shp type "{num}"')
+
+
+def _malformed(rec_no: np.ndarray, bad: np.ndarray, what: str):
+    """Raise ValueError naming the first record flagged in ``bad``."""
+    if bad.any():
+        raise ValueError(f"malformed .shp record {int(rec_no[bad][0])}: "
+                         f"{what}")
+
+
+class _Columns(NamedTuple):
+    """Every intact record of a .shp, column-wise. Record r has shape kind
+    ``kind[r]`` (0 null, 1 Point, 3 PolyLine, 5 Polygon, 8 MultiPoint;
+    Z and M folded) and its points are ``coords[:, first[r]:first[r] +
+    npts[r]]`` (rows x, y, and z where ``has_z[r]``). Its parts are
+    ``pfirst[r]:pfirst[r] + nparts[r]``; part j spans the points
+    ``lo[j]:hi[j]``."""
+    rec_no: np.ndarray
+    kind: np.ndarray
+    has_z: np.ndarray
+    first: np.ndarray
+    npts: np.ndarray
+    pfirst: np.ndarray
+    nparts: np.ndarray
+    lo: np.ndarray
+    hi: np.ndarray
+    coords: np.ndarray
+
+
+def _starts(counts: np.ndarray) -> np.ndarray:
+    """Where each of consecutive runs of ``counts`` items starts."""
+    return np.cumsum(counts) - counts
+
+
+def _decode(buf: bytes, trans=None) -> _Columns:
+    """A2–A11 column-wise: the records of ``_record_index``, each count,
+    part start and coordinate read by one gather per field, every check
+    on the file's own counts made before the gather that trusts them.
+
+    ``trans``: optional (n,2)->(n,2) inverse-projection (A12), called once
+    on all points with contiguous x and y columns."""
+    rec_no, start, end = _record_index(buf)
+    at = start + 12                      # payload (after the shape type)
+    size = end - at
+    code = _gather(buf, "<i4", start + 8)[0].astype(np.int64)
+    bad = ~np.isin(code, _BASE_TYPES + _M_TYPES)
+    if bad.any():
+        _check_type(int(code[bad][0]))
+    folded = np.where(code > 20, code - 20, code)
+    has_z = folded > 10
+    kind = np.where(has_z, folded - 10, folded)
+    point, multi = kind == 1, kind == 8
+    parted = (kind == 3) | (kind == 5)
+
+    # counts: MultiPoint numPoints at 32; PolyLine/Polygon numParts at 32
+    # and numPoints at 36
+    _malformed(rec_no, (multi & (size < 36)) | (parted & (size < 40)),
+               "content too short for its counts")
+    npts = point.astype(np.int64)
+    nparts = np.zeros(len(kind), dtype=np.int64)
+    npts[multi] = _gather(buf, "<i4", at[multi] + 32)[0]
+    nparts[parted], npts[parted] = _gather(buf, "<i4", at[parted] + 32, 2)
+    _malformed(rec_no, (npts < 0) | (nparts < 0), "negative count")
+    xy_at = at + np.where(multi, 36, np.where(parted, 40 + 4 * nparts, 0))
+    z_at = xy_at + 16 * npts + np.where(point, 0, 16)   # past zmin/zmax
+    need = np.where(has_z, z_at + 8 * npts, xy_at + 16 * npts)
+    _malformed(rec_no, need > end, "counts overrun its content length")
+
+    # part starts, each in 0..numPoints and no smaller than the one before
+    pfirst = _starts(nparts)
+    n_parts = int(nparts.sum())
+    part_rec = np.repeat(np.arange(len(kind)), nparts)
+    starts = _gather(buf, "<i4", 4 * np.arange(n_parts)
+                     + np.repeat(at + 40 - 4 * pfirst, nparts))[0]
+    starts = starts.astype(np.int64)
+    ends = np.empty(n_parts, dtype=np.int64)
+    ends[:-1] = starts[1:]
+    last = nparts > 0
+    ends[(pfirst + nparts - 1)[last]] = npts[last]
+    _malformed(rec_no[part_rec], (starts < 0) | (starts > ends),
+               "part start negative, decreasing or past numPoints")
+
+    first = _starts(npts)
+    n = int(npts.sum())
+    dims = 3 if has_z.any() else 2
+    coords = np.empty((dims, n))
+    coords[:2] = _gather(buf, "<f8", 16 * np.arange(n)
+                         + np.repeat(xy_at - 16 * first, npts), 2)
+    if dims == 3:
+        in_z = np.repeat(has_z, npts)
+        coords[2] = np.nan
+        coords[2, in_z] = _gather(buf, "<f8", (8 * np.arange(n)
+                                  + np.repeat(z_at - 8 * first, npts))[in_z])
+    if trans is not None and n:
+        xy = trans(coords[:2].T)
+        coords[0], coords[1] = xy[:, 0], xy[:, 1]
+    base = first[part_rec]
+    return _Columns(rec_no, kind, has_z, first, npts, pfirst, nparts,
+                    base + starts, base + ends, coords)
+
+
+def _clockwise(x: np.ndarray, y: np.ndarray, lo: np.ndarray,
+               hi: np.ndarray) -> np.ndarray:
+    """``geom.is_clockwise`` of every ring (points ``lo[k]:hi[k]`` of x, y)
+    at once; an empty ring is not clockwise.
+
+    ``geom.shoelace`` sums m floats p_i (each term plus its mirror) by
+    ``np.sum``; here a segmented sum Q adds the same p_i in another order.
+    Any order is within gamma_(m-1) * A of the exact sum T, where
+    A = sum |p_i| and gamma_k = k*u/(1-k*u), u = 2**-53. So when
+
+        |Q| > 3 * m * u * A' + 2**-1000      (A' the computed A)
+
+    T, and with it shoelace's sum, has Q's sign and a magnitude above
+    2**-1000, so shoelace's halved sum is not 0 and the translation
+    tie-break does not run: the ring is clockwise iff Q > 0. Every other
+    ring (within the bound, or with a NaN or infinite term) goes to
+    ``geom.is_clockwise`` itself, so the result is its result bit for bit.
+    """
+    m = hi - lo
+    cw = np.zeros(len(lo), dtype=bool)
+    ring = np.flatnonzero(m > 0)
+    if not len(ring):
+        return cw
+    lo, m = lo[ring], m[ring]
+    seg = _starts(m)                                # ring starts, packed
+    g = np.arange(int(m.sum()))
+    pt = g + np.repeat(lo - seg, m)
+    xr, yr = x[pt], y[pt]
+    prev = g - 1
+    prev[seg] = seg + m - 1                         # the wrap edge
+    mirror = np.repeat(2 * seg + m, m) - g
+    mirror[seg] = seg
+    with np.errstate(invalid="ignore", over="ignore"):
+        t = (xr - xr[prev]) * (yr + yr[prev])
+        p = t + t[mirror]
+        q = np.add.reduceat(p, seg)
+        bound = 3.0 * m * 2.0 ** -53 * np.add.reduceat(np.abs(p), seg)
+        sure = np.abs(q) > bound + 2.0 ** -1000
+    out = q > 0.0
+    for k in np.flatnonzero(~sure).tolist():
+        a, b = lo[k], lo[k] + m[k]
+        out[k] = is_clockwise(np.column_stack([x[a:b], y[a:b]]))
+    cw[ring] = out
+    return cw
+
+
+def parse_shp(buf: bytes, trans=None) -> list:
+    """A1+A2+A3..A11: full .shp buffer → list of GeoJSON-style geometry
+    dicts (None = null shape).
+
+    The HEADER type drives the M-fold/unknown check like the reference's
+    dispatch-table construction; per-record types 0 are emitted as null.
+    ``trans``: optional (n,2)->(n,2) inverse-projection (A12)."""
+    header = parse_header(buf)
+    _check_type(header["type"])
+    c = _decode(buf, trans)
+    rows = (c.coords[:2].T.tolist() if not c.has_z.all() else None,
+            c.coords.T.tolist() if c.has_z.any() else None)
+    polygon = np.repeat(c.kind == 5, c.nparts)
+    # a polygon's first ring, or any clockwise ring, opens a polygon
+    opens = iter(_clockwise(c.coords[0], c.coords[1], c.lo[polygon],
+                            c.hi[polygon]).tolist())
+    lo, hi = c.lo.tolist(), c.hi.tolist()
+    out = []
+    for kind, z, a, n, p, n_parts in zip(
+            c.kind.tolist(), c.has_z.tolist(), c.first.tolist(),
+            c.npts.tolist(), c.pfirst.tolist(), c.nparts.tolist()):
+        flat = rows[z]
+        if kind == 0:
+            out.append(None)
+        elif kind == 1:          # Point / PointZ (A3, A7)
+            out.append({"type": "Point", "coordinates": flat[a]})
+        elif kind == 8:          # MultiPoint / Z (A4, A8)
+            out.append({"type": "MultiPoint", "coordinates": flat[a:a + n]})
+        elif kind == 3:          # PolyLine / Z (A5, A8)
+            parts = [flat[lo[j]:hi[j]] for j in range(p, p + n_parts)]
+            out.append({"type": "LineString", "coordinates": parts[0]}
+                       if len(parts) == 1 else
+                       {"type": "MultiLineString", "coordinates": parts})
+        else:                    # Polygon / Z (A6, A8)
+            polys = []
+            for j in range(p, p + n_parts):
+                ring = flat[lo[j]:hi[j]]
+                if next(opens) or not polys:
+                    polys.append([ring])
+                else:
+                    polys[-1].append(ring)
+            out.append({"type": "Polygon", "coordinates": polys[0]}
+                       if len(polys) == 1 else
+                       {"type": "MultiPolygon", "coordinates": polys})
+    return out
+
+
+# the 28-byte record of a Point file: its 8-byte key is content length
+# 10 words (big-endian) and shape type 1 (little-endian)
+_POINT_REC = np.dtype({"names": ["rec_no", "key", "x", "y"],
+                       "formats": [">i4", "<u8", "<f8", "<f8"],
+                       "offsets": [0, 4, 12, 20], "itemsize": 28})
+_POINT_KEY = int.from_bytes(
+    (10).to_bytes(4, "big") + (1).to_bytes(4, "little"), "little")
+
+
+def _project(x: np.ndarray, y: np.ndarray, trans):
+    """x and y through ``trans`` when given, as contiguous float64 arrays;
+    ``trans`` reads an (n, 2) array whose columns are contiguous."""
+    if trans is None:
+        return (np.ascontiguousarray(x, dtype=np.float64),
+                np.ascontiguousarray(y, dtype=np.float64))
+    xy = trans(np.vstack([x, y]).T)
+    return np.ascontiguousarray(xy[:, 0]), np.ascontiguousarray(xy[:, 1])
 
 
 def parse_shp_points_columns(buf: bytes, trans=None):
@@ -186,10 +339,9 @@ def parse_shp_points_columns(buf: bytes, trans=None):
     dict loop). Returns (rec_no:int64, x:f64, y:f64) arrays, or None when
     the file is not a uniform fixed-stride type-1 file (mixed null shapes,
     irregular content lengths, other geometry) — callers fall back to
-    :func:`parse_shp`, whose per-record semantics stay the parity
-    reference. Validation is total (every record header checked), so the
-    fast path can never silently mis-decode a file the slow path would
-    reject or read differently."""
+    :func:`parse_shp_points`. Validation is total (every record header
+    checked), so the fast path can never silently mis-decode a file the
+    slow path would reject or read differently."""
     if len(buf) < 100:
         return None
     header = parse_header(buf)
@@ -200,14 +352,29 @@ def parse_shp_points_columns(buf: bytes, trans=None):
     if n == 0 or rem:
         return None
     arr = np.frombuffer(body, dtype=_POINT_REC)
-    if not (np.all(arr["len_words"] == 10) and np.all(arr["shape"] == 1)):
+    if not np.all(arr["key"] == _POINT_KEY):
         return None
-    x = arr["x"].astype(np.float64)
-    y = arr["y"].astype(np.float64)
-    if trans is not None:
-        pts = trans(np.column_stack([x, y]))
-        x, y = pts[:, 0], pts[:, 1]
-    return arr["rec_no"].astype(np.int64), x, y
+    return (arr["rec_no"].astype(np.int64),
+            *_project(arr["x"], arr["y"], trans))
+
+
+def parse_shp_points(buf: bytes, trans=None):
+    """(rec_no:int64, x:f64, y:f64) of every record of a .shp: the fast
+    path for a uniform Point file, else the Point records of
+    :func:`parse_shp`'s column-wise decode (NaN for a null or non-Point
+    record). rec_no comes from the record headers, so a slice of a file
+    that starts mid-file keeps its records' numbers."""
+    fast = parse_shp_points_columns(buf, trans)
+    if fast is not None:
+        return fast
+    _check_type(parse_header(buf)["type"])
+    c = _decode(buf)
+    point = c.kind == 1
+    x = np.full(len(point), np.nan)
+    y = np.full(len(point), np.nan)
+    x[point], y[point] = _project(c.coords[0, c.first[point]],
+                                  c.coords[1, c.first[point]], trans)
+    return c.rec_no, x, y
 
 
 # --- A12: .prj WKT → inverse transform --------------------------------------
@@ -216,10 +383,19 @@ _R_MERC = 6378137.0
 
 
 def _inv_webmerc(pts: np.ndarray) -> np.ndarray:
-    lon = pts[:, 0] / _R_MERC * (180.0 / math.pi)
-    lat = (2.0 * np.arctan(np.exp(pts[:, 1] / _R_MERC))
-           - math.pi / 2.0) * (180.0 / math.pi)
-    return np.column_stack([lon, lat])
+    """EPSG:3857 metres → lon/lat°, each column computed in place in one
+    buffer; the (n, 2) result's columns are contiguous."""
+    out = np.empty((2, len(pts)))
+    lon, lat = out
+    np.divide(pts[:, 0], _R_MERC, out=lon)
+    lon *= 180.0 / math.pi
+    np.divide(pts[:, 1], _R_MERC, out=lat)
+    np.exp(lat, out=lat)
+    np.arctan(lat, out=lat)
+    lat *= 2.0
+    lat -= math.pi / 2.0
+    lat *= 180.0 / math.pi
+    return out.T
 
 
 def _wkt_params(wkt: str) -> dict:

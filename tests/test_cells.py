@@ -87,3 +87,83 @@ def test_parent_sql_matches():
         f"SELECT {cells.cell_parent_sql('c', 3)} AS p FROM t"
     ).fetchnumpy()["p"].astype(np.int64)
     assert np.array_equal(got, cells.cell_parent(c, 3))
+
+
+# --- identity with a bit-at-a-time reference, every level --------------------
+
+def _ref_axis(v, shift, span, level):
+    n = 1 << level
+    with np.errstate(invalid="ignore"):
+        return np.clip(np.floor((v + shift) / span * n), 0, n - 1).astype(
+            np.int64)
+
+
+def _ref_morton(ix, iy, level):
+    """Interleave the low ``level`` bits one at a time."""
+    m = np.zeros(ix.shape, dtype=np.int64)
+    for b in range(level):
+        m |= ((ix >> b) & 1) << (2 * b)
+        m |= ((iy >> b) & 1) << (2 * b + 1)
+    return m
+
+
+def _ref_encode(lon, lat, level):
+    ix = _ref_axis(lon, 180.0, 360.0, level)
+    iy = _ref_axis(lat, 85.0, 170.0, level)
+    return (_ref_morton(ix, iy, level) << 5) | level
+
+
+def _adversarial_lonlat(level):
+    """Random, non-finite, out-of-range, signed-zero, and exact cell
+    boundary coordinates (with their neighbours one ulp either side)."""
+    n = 1 << level
+    rng = np.random.default_rng(level)
+    j = np.unique(np.concatenate([[0, 1, n // 2, n - 1, n],
+                                  rng.integers(0, n + 1, 50)]))
+    bx = -180.0 + j * (360.0 / n)
+    by = -85.0 + j * (170.0 / n)
+    bx = np.concatenate([bx, np.nextafter(bx, -np.inf),
+                         np.nextafter(bx, np.inf)])
+    by = np.concatenate([by, np.nextafter(by, -np.inf),
+                         np.nextafter(by, np.inf)])
+    odd = np.array([np.nan, np.inf, -np.inf, -0.0, 0.0, 1e300, -1e300,
+                    180.0, -180.0, 85.0, -85.0, 200.0, -200.0, 5e-324])
+    lon = np.concatenate([rng.uniform(-190.0, 190.0, 500), bx, odd,
+                          rng.permutation(odd)])
+    lat = np.concatenate([rng.uniform(-95.0, 95.0, 500), by,
+                          rng.permutation(odd), odd])
+    return lon, lat
+
+
+def test_cell_kernels_equal_bitwise_reference_at_every_level():
+    for level in range(cells.MAX_LEVEL + 1):
+        lon, lat = _adversarial_lonlat(level)
+        ix, iy = cells.quantize(lon, lat, level)
+        assert np.array_equal(ix, _ref_axis(lon, 180.0, 360.0, level))
+        assert np.array_equal(iy, _ref_axis(lat, 85.0, 170.0, level))
+        assert ix.dtype == iy.dtype == np.int64
+        assert np.array_equal(cells.morton(ix, iy, level),
+                              _ref_morton(ix, iy, level))
+        c = cells.cell_encode(lon, lat, level)
+        assert np.array_equal(c, _ref_encode(lon, lat, level))
+        for steps in range(level + 1):
+            assert np.array_equal(cells.cell_parent(c, steps),
+                                  _ref_encode(lon, lat, level - steps))
+        # the ring: every in-grid (dx, dy) neighbour of the cell's own
+        # grid position (NaN's cell is (0, 0)), -1 off the grid
+        cx = sum((((c >> (5 + 2 * b)) & 1) << b for b in range(level)),
+                 np.zeros_like(c))
+        cy = sum((((c >> (6 + 2 * b)) & 1) << b for b in range(level)),
+                 np.zeros_like(c))
+        k = 1
+        ring = cells.cell_ring(c, k)
+        col = 0
+        for dx in range(-k, k + 1):
+            for dy in range(-k, k + 1):
+                nx, ny = cx + dx, cy + dy
+                ok = (nx >= 0) & (ny >= 0) & (nx < 1 << level) & (
+                    ny < 1 << level)
+                want = np.where(ok, (_ref_morton(nx, ny, level) << 5)
+                                | level, -1)
+                assert np.array_equal(ring[:, col], want), (level, dx, dy)
+                col += 1

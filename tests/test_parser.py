@@ -2043,3 +2043,195 @@ def test_projection_aliases_match_canonical(base, canonical, aliases):
                 wkt.replace(f'PROJECTION["{canonical}"]',
                             f'PROJECTION["{alias}"]'))(pts)
             assert got.tobytes() == want.tobytes(), alias
+
+
+# --- column-wise decode: differential against the writer's input -------------
+
+import struct
+
+from spark_shp import geom, ingest
+
+_Z_TYPES = (writer.POINTZ, writer.POLYLINEZ, writer.POLYGONZ,
+            writer.MULTIPOINTZ)
+
+# shoelace cancels to exactly 0.0 at this magnitude, so the translation
+# tie-break of geom.is_clockwise decides the ring: clockwise
+TIE_CW = [(1e16, 1e16), (1e16, 1e16 - 2.0), (1e16 - 2.0, 1e16)]
+# zero area however translated: not clockwise
+FLAT = [(0.0, 0.0), (1.0, 1.0), (2.0, 2.0), (0.0, 0.0)]
+
+
+def _want(gtype, data):
+    """The geometry parse_shp must return for one writer record: M values
+    dropped, a missing Z written as 0.0, polygons grouped by
+    geom.assemble_rings on each ring's xy."""
+    if gtype == writer.NULL:
+        return None
+    base = writer._BASE_OF.get(gtype, gtype)
+    width = 3 if gtype in _Z_TYPES else 2
+
+    def pt(p):
+        return [float(v) for v in (list(p) + [0.0])[:width]]
+
+    if base == writer.POINT:
+        return {"type": "Point", "coordinates": pt(data)}
+    if base == writer.MULTIPOINT:
+        return {"type": "MultiPoint", "coordinates": [pt(p) for p in data]}
+    parts = [[pt(p) for p in part] for part in data]
+    if base == writer.POLYLINE:
+        return ({"type": "LineString", "coordinates": parts[0]}
+                if len(parts) == 1 else
+                {"type": "MultiLineString", "coordinates": parts})
+    rings = [np.array([p[:2] for p in part], dtype=float).reshape(-1, 2)
+             for part in data]
+    polys, k = [], 0
+    for poly in geom.assemble_rings(rings):
+        polys.append(parts[k:k + len(poly)])
+        k += len(poly)
+    return ({"type": "Polygon", "coordinates": polys[0]} if len(polys) == 1
+            else {"type": "MultiPolygon", "coordinates": polys})
+
+
+def _rev(ring):
+    return list(reversed(ring))
+
+
+def _near_degenerate(seed, n):
+    """Thin triangles far from the origin: shoelace sums within rounding
+    of 0, some exactly 0 (the tie-break decides), in both windings."""
+    rng = np.random.default_rng(seed)
+    out = []
+    for _ in range(n):
+        off = 10.0 ** rng.integers(6, 17)
+        step = rng.choice([0.5, 1.0, 2.0, 4.0])
+        out.append([tuple(p) for p in
+                    off + rng.integers(-3, 4, (3, 2)) * step])
+    return out
+
+
+_DIFF_CASES = {
+    "every_kind": [
+        (writer.POINT, (1.5, -2.0)), (writer.NULL, None),
+        (writer.POINTZ, (1.0, 2.0, 3.0, 4.0)),
+        (writer.POINTM, (5.0, 6.0, 7.0)),
+        (writer.MULTIPOINT, [(0.0, 0.0), (1.0, 1.0)]),
+        (writer.MULTIPOINTZ, [(0.0, 0.0, 1.0, 9.0), (2.0, 2.0)]),
+        (writer.MULTIPOINTM, [(1.0, 2.0, 3.0)]), (writer.NULL, None),
+        (writer.POLYLINE, [[(0.0, 0.0), (1.0, 1.0)]]),
+        (writer.POLYLINEZ, [[(0.0, 0.0, 1.0), (1.0, 1.0, 2.0)],
+                            [(5.0, 5.0, 3.0), (6.0, 6.0, 4.0)]]),
+        (writer.POLYLINEM, [[(0.0, 0.0, 7.0), (3.0, 3.0, 8.0)]]),
+        (writer.POLYGON, [CW, CCW_HOLE]),
+        (writer.POLYGONZ, [[(x, y, x + y) for x, y in CW], CCW_HOLE]),
+        (writer.POLYGONM, [CCW_HOLE, CW]), (writer.NULL, None)],
+    "holes_both_windings": [
+        (writer.POLYGON, [CW, CCW_HOLE, _rev(CCW_HOLE), _shift(CW, 20.0),
+                          _shift(CCW_HOLE, 20.0), _rev(_shift(CW, 40.0))]),
+        (writer.POLYGON, [_rev(CW), CCW_HOLE, _rev(CCW_HOLE)])],
+    "degenerate_rings": [
+        (writer.POLYGON, [CW, TIE_CW, FLAT, CCW_HOLE]),
+        (writer.POLYGON, [TIE_CW, _rev(TIE_CW), FLAT]),
+        (writer.POLYGONZ, [FLAT, TIE_CW, CW]),
+        (writer.POLYGON, _near_degenerate(1, 40)),
+        (writer.POLYGON, [CW] + _near_degenerate(2, 40))],
+    "empty_parts": [
+        (writer.POLYLINE, [[], [(0.0, 0.0), (1.0, 1.0)], []]),
+        (writer.POLYGON, [CW, [], CCW_HOLE, []]),
+        (writer.POLYGON, [[], CW])],
+}
+
+
+@pytest.mark.parametrize("case", sorted(_DIFF_CASES))
+def test_columnwise_decode_equals_writer_input(case):
+    recs = _DIFF_CASES[case]
+    buf = writer.write_shp(recs, header_type=writer.POLYGON)
+    assert parser.parse_shp(buf) == [_want(t, d) for t, d in recs]
+
+
+def _record_starts(buf):
+    off, out = 100, []
+    while off + 8 <= len(buf):
+        out.append(off)
+        off += 8 + 2 * struct.unpack_from(">i", buf, off + 4)[0]
+    return out
+
+
+def test_columnwise_decode_length_guards():
+    """The header's file length is ignored (here it lies both ways), and a
+    truncated trailing record ends the scan at the last intact one."""
+    recs = [r for rs in _DIFF_CASES.values() for r in rs]
+    buf = writer.write_shp(recs, header_type=writer.POLYGON)
+    want = [_want(t, d) for t, d in recs]
+    for words in (50, len(buf), 10 ** 6):
+        lie = bytearray(buf)
+        struct.pack_into(">i", lie, 24, words)
+        assert parser.parse_shp(bytes(lie)) == want
+    last = _record_starts(buf)[-2]             # the last non-null record
+    for cut in (last + 3, last + 12, last + 40):
+        assert parser.parse_shp(buf[:cut]) == want[:len(recs) - 2]
+
+
+def test_points_from_blob_mixed_file_keeps_header_rec_no():
+    """A mixed Point/null file takes the column-wise decoder: Point and
+    PointZ/M records give their x/y (projected), every other record NaN,
+    and rec_no is read from the record headers, also in a slice of the
+    file that starts mid-file."""
+    recs = [(writer.POINT, (1.0e6, 2.0e6)), (writer.NULL, None),
+            (writer.POINTZ, (-3.0e6, 4.0e6, 5.0)),
+            (writer.MULTIPOINT, [(1.0, 1.0)]),
+            (writer.POINTM, (7.0e5, -8.0e5, 9.0)), (writer.NULL, None)]
+    buf = bytearray(writer.write_shp(recs, header_type=writer.POINT))
+    starts = _record_starts(buf)
+    for k, at in enumerate(starts):
+        struct.pack_into(">i", buf, at, 100 + 3 * k)
+    buf = bytes(buf)
+    assert parser.parse_shp_points_columns(buf) is None
+    trans = parser.projection_from_wkt(writer.WEBMERC_WKT)
+    xy = trans(np.array([(1.0e6, 2.0e6), (-3.0e6, 4.0e6), (7.0e5, -8.0e5)]))
+    nan = float("nan")
+    for blob, first in ((buf, 0), (buf[:100] + buf[starts[2]:], 2)):
+        df = ingest._points_from_blob(blob, trans, "mixed")
+        assert df["rec_no"].tolist() == [100 + 3 * k
+                                         for k in range(first, len(recs))]
+        assert df["lon"].dtype == df["lat"].dtype == np.float64
+        want = [xy[0], (nan, nan), xy[1], (nan, nan), xy[2], (nan, nan)]
+        np.testing.assert_array_equal(
+            np.column_stack([df["lon"], df["lat"]]),
+            np.array(want[first:], dtype=float))
+
+
+# --- malformed part tables raise, naming the record --------------------------
+
+def _patched(recs, patches, rec_no=7):
+    """One-record file with record number ``rec_no`` and the int32 fields
+    at the given payload offsets (after the shape type) overwritten."""
+    buf = bytearray(writer.write_shp(recs))
+    struct.pack_into(">i", buf, 100, rec_no)
+    for at, v in patches.items():
+        struct.pack_into("<i", buf, 112 + at, v)
+    return bytes(buf)
+
+
+_LINE5 = [[(0.0, 0.0), (1.0, 1.0), (2.0, 0.0)], [(3.0, 3.0), (4.0, 4.0)]]
+
+
+@pytest.mark.parametrize("recs,patches", [
+    # PolyLine: second part starts at 9 of 5 points
+    ([(writer.POLYLINE, _LINE5)], {44: 9}),
+    # Polygon: second ring starts past numPoints (10)
+    ([(writer.POLYGON, [CW, CCW_HOLE])], {44: 12}),
+    # negative and decreasing part starts
+    ([(writer.POLYLINE, _LINE5)], {40: -1}),
+    ([(writer.POLYLINE, _LINE5)], {40: 4}),
+    # negative counts
+    ([(writer.POLYLINE, _LINE5)], {32: -1}),
+    ([(writer.POLYGON, [CW])], {36: -5}),
+    ([(writer.MULTIPOINT, [(1.0, 2.0), (3.0, 4.0)])], {32: -1}),
+    # counts that overrun the record's content length
+    ([(writer.POLYLINE, _LINE5)], {36: 6}),
+    ([(writer.POLYGON, [CW])], {32: 1000}),
+    ([(writer.MULTIPOINTZ, [(1.0, 2.0, 3.0)])], {32: 3}),
+])
+def test_malformed_part_table_names_its_record(recs, patches):
+    with pytest.raises(ValueError, match=r"record 7\b"):
+        parser.parse_shp(_patched(recs, patches))

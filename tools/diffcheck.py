@@ -10,6 +10,7 @@ Usage: python tools/diffcheck.py [sf_dir] [name_filter...]
 from __future__ import annotations
 
 import math
+import pathlib
 import sys
 import time
 
@@ -106,7 +107,8 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     filters = sys.argv[2:]
 
-    sys.path.insert(0, "/root/repo")
+    # this checkout first, not whichever copy is installed
+    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
     from spark_shp.session import get_spark
 
     spark = get_spark(cpus=16)

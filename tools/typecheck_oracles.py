@@ -14,6 +14,7 @@ Usage: python tools/typecheck_oracles.py [sf_dir] [name_filter...]
 
 from __future__ import annotations
 
+import pathlib
 import sys
 
 # canonical vocabulary both engines map into
@@ -59,7 +60,8 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     filters = sys.argv[2:]
 
-    sys.path.insert(0, "/root/repo")
+    # this checkout first, not whichever copy is installed
+    sys.path.insert(0, str(pathlib.Path(__file__).resolve().parents[1]))
     from spark_shp.session import get_spark
     from tools.diffcheck import every_query, oracle_connection
 
