@@ -84,8 +84,9 @@ class ShapefileReader(DataSourceReader):
         trans = None
         if "prj" in fs:
             with open(fs["prj"], "rb") as fh:
-                trans = parser.projection_from_wkt(
-                    fh.read().decode("ascii", "replace"))
+                trans = parser.layer_projection(
+                    fh.read().decode("ascii", "replace"),
+                    fs["prj"].rsplit(".", 1)[0])
         geoms = parser.parse_shp(shp, trans)
         rows = []
         if "dbf" in fs:

@@ -4,8 +4,8 @@ The north rule targets "Iceberg tables of image + caption pairs". No
 ``iceberg-spark-runtime`` jar exists in this offline sandbox [SURVEY §0], so
 this module writes the same physical shape — partitioned parquet data files
 plus a ``metadata/`` directory with snapshot manifests (schema, partition
-spec, per-file row counts & column bounds) — and exposes read/write behind
-ONE seam. On a real cluster, replace these functions with
+spec, per-file row and byte counts) — and exposes read/write behind ONE
+seam. On a real cluster, replace these functions with
 ``df.writeTo("catalog.db.tbl")`` / ``spark.table(...)``; nothing else in the
 engine touches table layout.
 
@@ -46,8 +46,6 @@ def _current_version(root: str) -> int:
 def write_table(df: DataFrame, root: str, partition_by: str | None = None,
                 mode: str = "overwrite",
                 cluster_by: str | None = None,
-                cluster_partitions: int | None = None,
-                carry_files: list | None = None,
                 properties: dict | None = None) -> dict:
     """Write data + commit a new snapshot manifest. Returns the manifest.
 
@@ -60,10 +58,11 @@ def write_table(df: DataFrame, root: str, partition_by: str | None = None,
     ``cluster_by``: range-repartition + sort the data by this column before
     writing (Iceberg's sort-order / Z-order role for a single key — a
     space-filling cell id IS the interleaved-bit key, so sorting by it
-    clusters spatially). Each file then covers a tight value range, and the
-    per-file min/max recorded in the manifest lets :func:`scan_table` skip
-    files wholesale — the data-skipping mechanic that turns a 100 TB
-    spatial range query into a few-file read."""
+    clusters spatially). Each file then covers a tight value range, which
+    parquet's own row-group statistics record for a filtered scan to skip.
+    ``properties`` are stored inside the manifest, atomic with the commit."""
+    if mode not in ("overwrite", "append"):
+        raise ValueError(f"mode must be 'overwrite' or 'append', not {mode!r}")
     meta_dir = os.path.join(root, "metadata")
     os.makedirs(meta_dir, exist_ok=True)
     # Never reuse a version that already has a committed manifest — a crash
@@ -78,12 +77,7 @@ def write_table(df: DataFrame, root: str, partition_by: str | None = None,
         if os.path.isdir(stale):
             shutil.rmtree(stale)
     if cluster_by:
-        # explicit cluster_partitions pins the output file count (AQE
-        # otherwise coalesces small tables into one file — no skipping)
-        args = ([cluster_partitions, cluster_by]
-                if cluster_partitions else [cluster_by])
-        df = (df.repartitionByRange(*args)
-              .sortWithinPartitions(cluster_by))
+        df = df.repartitionByRange(cluster_by).sortWithinPartitions(cluster_by)
     w = df.write.mode("error")           # snapshot dirs are write-once
     if partition_by:
         w = w.partitionBy(partition_by)
@@ -91,70 +85,12 @@ def write_table(df: DataFrame, root: str, partition_by: str | None = None,
     os.rename(tmp_dir, snap_dir)         # atomic publish of the data dir
 
     import pyarrow.parquet as pq
-    stat_cols = [f.name for f in df.schema.fields
-                 if f.dataType.simpleString() in
-                 ("bigint", "int", "smallint", "tinyint", "double", "float",
-                  "date", "string")]
-    files = []
-    for p in sorted(glob.glob(os.path.join(snap_dir, "**", "*.parquet"),
-                              recursive=True)):
-        md = pq.read_metadata(p)
-        entry = {"path": os.path.relpath(p, root),
-                 "rows": md.num_rows,
-                 "bytes": os.path.getsize(p)}
-        # per-file column bounds from parquet row-group stats (Iceberg
-        # manifest lower_bounds/upper_bounds) — the data-skipping source
-        bounds: dict[str, list] = {}
-        schema_names = md.schema.names
-        for rg in range(md.num_row_groups):
-            grp = md.row_group(rg)
-            for ci in range(grp.num_columns):
-                col = grp.column(ci)
-                name = col.path_in_schema
-                st = col.statistics
-                if (name not in stat_cols or st is None
-                        or not st.has_min_max):
-                    continue
-                lo, hi = st.min, st.max
-                if name in bounds:
-                    bounds[name] = [min(bounds[name][0], lo),
-                                    max(bounds[name][1], hi)]
-                else:
-                    bounds[name] = [lo, hi]
-        # Hive partition columns are not physical in the file, so parquet
-        # stats never cover them — record their path values as [v, v]
-        # bounds (Iceberg's manifest partition tuple). This is what makes
-        # PARTITION-SPEC EVOLUTION prunable: files written under an older
-        # spec carry that spec's column bounds, files under the new spec
-        # carry the new one's, and scan_table keeps any file with no
-        # bounds for the probed column (necessary-condition fallback).
-        types = {f.name: f.dataType.simpleString()
-                 for f in df.schema.fields}
-        for seg in entry["path"].split("/")[:-1]:
-            if "=" not in seg:
-                continue
-            pcol, _, pval = seg.partition("=")
-            if pcol in bounds or pcol not in types:
-                continue
-            t = types[pcol]
-            if t in ("bigint", "int", "smallint", "tinyint"):
-                v = int(pval)
-            elif t in ("double", "float"):
-                v = float(pval)
-            else:
-                v = pval
-            bounds[pcol] = [v, v]
-        if bounds:
-            entry["bounds"] = {k: [_json_safe(v) for v in b]
-                               for k, b in bounds.items()}
-        # Iceberg data sequence number: equality-delete files apply only to
-        # data files with a STRICTLY LOWER sequence, so rows re-inserted
-        # after a delete survive it (merge-on-read semantics). Carried
-        # entries keep their original seq; legacy entries without one read
-        # as 0 (oldest — every delete applies).
-        entry["seq"] = version
-        files.append(entry)
-    delete_files: list = []
+    files = [{"path": os.path.relpath(p, root),
+              "rows": pq.read_metadata(p).num_rows,
+              "bytes": os.path.getsize(p)}
+             for p in sorted(glob.glob(os.path.join(snap_dir, "**",
+                                                    "*.parquet"),
+                                       recursive=True))]
     if mode == "append" and version > 1:
         # Iceberg semantics: a snapshot names the table's FULL file set, so
         # an append snapshot = parent's files + the files this commit added.
@@ -166,20 +102,10 @@ def write_table(df: DataFrame, root: str, partition_by: str | None = None,
         parent = max((v for v in _retained_versions(root) if v < version),
                      default=0)
         if parent:
-            pstats = table_stats(root, parent)
-            files = pstats["files"] + files
-            # merge-on-read delete files ride along until compaction folds
-            # them; they keep their own seq, so the rows appended by THIS
-            # commit (higher seq) are not affected by them.
-            delete_files = list(pstats.get("delete_files") or [])
-    elif carry_files is not None:
-        # merge commit: untouched parent files carried by name, zero I/O
-        files = list(carry_files) + files
+            files = _data_files(table_stats(root, parent)) + files
     snapshot = {"snapshot_id": version, "ts_ms": int(time.time() * 1000),
                 "operation": mode, "files": files,
                 "total_rows": sum(f["rows"] for f in files)}
-    if delete_files:
-        snapshot["delete_files"] = delete_files
     if properties:
         # commit-level properties (e.g. the streaming micro-batch id) live
         # INSIDE the manifest so they are atomic with the snapshot itself
@@ -204,51 +130,6 @@ def write_table(df: DataFrame, root: str, partition_by: str | None = None,
     return snapshot
 
 
-def _json_safe(v):
-    """Parquet stats → JSON-serializable (bytes = UTF-8 string stats)."""
-    import datetime
-    if isinstance(v, bytes):
-        return v.decode("utf-8", "replace")
-    if isinstance(v, (datetime.date, datetime.datetime)):
-        return v.isoformat()
-    return v
-
-
-def scan_table(spark: SparkSession, root: str, col: str,
-               lo, hi, snapshot_id: int | None = None) -> tuple[DataFrame,
-                                                                dict]:
-    """Range scan with manifest-level file skipping: read ONLY the data
-    files whose recorded [min, max] bounds for ``col`` overlap [lo, hi],
-    with the residual ``col BETWEEN lo AND hi`` filter applied on top (file
-    bounds are necessary, not sufficient). Returns (DataFrame, report) —
-    report = {"files_total", "files_read", "files_skipped"}.
-
-    With :func:`write_table`'s ``cluster_by`` on the same column, bounds
-    are tight and disjoint, so a cell-range query over a 100 TB table
-    plans as a scan of the few files that actually cover that range —
-    Iceberg data skipping without the runtime jar. A file written before
-    bounds were recorded is always read (safe fallback)."""
-    from pyspark.sql import functions as F
-
-    snap = table_stats(root, snapshot_id)
-    keep, skipped = [], 0
-    for f in snap["files"]:
-        b = f.get("bounds", {}).get(col)
-        if b is not None and (b[0] > hi or b[1] < lo):
-            skipped += 1
-            continue
-        keep.append(f)
-    report = {"files_total": len(snap["files"]), "files_read": len(keep),
-              "files_skipped": skipped}
-    if not keep:
-        df = read_table(spark, root, snapshot_id).limit(0)
-    else:
-        # merge-on-read delete files still apply to the skipped-down set
-        df = _read_with_deletes(spark, root, keep,
-                                snap.get("delete_files") or [])
-    return df.where(F.col(col).between(lo, hi)), report
-
-
 def _retained_versions(root: str) -> list[int]:
     """Snapshot ids whose manifest still exists (not yet expired)."""
     return sorted(
@@ -257,62 +138,45 @@ def _retained_versions(root: str) -> list[int]:
                                         "snap-*.manifest.json")))
 
 
+def _data_files(snap: dict) -> list:
+    """The snapshot's data-file entries. Tables written by earlier versions
+    of this module could carry merge-on-read equality deletes
+    (``delete_files``); reading or appending past them without applying
+    them would bring deleted rows back, so such a snapshot is refused."""
+    if snap.get("delete_files"):
+        raise ValueError(
+            f"snapshot {snap['snapshot_id']} carries merge-on-read delete "
+            "files, which this table layer no longer applies; rewrite the "
+            "table from a snapshot without them")
+    return snap["files"]
+
+
 def read_table(spark: SparkSession, root: str,
                snapshot_id: int | None = None) -> DataFrame:
     """Read a snapshot — the manifest's exact file list, not a directory
     listing, so readers see a consistent committed file set (stray or
     in-flight files are invisible) and ``snapshot_id`` gives time travel
-    to any retained version.
-
-    A snapshot may span several per-commit ``data/snap-N`` directories
-    (appends); partition-column inference needs one basePath per such
-    directory, so the scan is a union of one read per referenced commit
-    dir — bounded by the snapshot count, and Catalyst plans it as plain
-    parallel scans."""
-    version = snapshot_id or _current_version(root)
-    if version == 0:
-        raise FileNotFoundError(f"no committed snapshot under {root}")
-    snap = table_stats(root, version)
-    return _read_with_deletes(spark, root, snap["files"],
-                              snap.get("delete_files") or [])
-
-
-def _read_with_deletes(spark: SparkSession, root: str, file_entries: list,
-                       dels: list) -> DataFrame:
-    """Scan manifest data-file entries, applying merge-on-read equality
-    deletes: a delete file applies to data files with a STRICTLY LOWER
-    data sequence number (so re-inserted rows survive older deletes).
-    Data files group by seq — bounded by the snapshot count, not the file
-    count — and each group anti-joins the union of the delete keys that
-    outrank it. The delete side is CDC-sized, so it broadcasts; the data
-    side never shuffles."""
-    if not dels:
-        return _read_file_list(spark, root,
-                               [f["path"] for f in file_entries])
-    from pyspark.sql import functions as F
-    groups: dict[int, list[str]] = {}
-    for f in file_entries:
-        groups.setdefault(int(f.get("seq", 0)), []).append(f["path"])
-    parts = []
-    for seq, paths in sorted(groups.items()):
-        df = _read_file_list(spark, root, paths)
-        by_key: dict[str, list[str]] = {}
-        for d in dels:
-            if int(d["seq"]) > seq:
-                by_key.setdefault(d["key"], []).append(d["path"])
-        for k, dpaths in sorted(by_key.items()):
-            keys = _read_file_list(spark, root, dpaths).select(k).distinct()
-            df = df.join(F.broadcast(keys), k, "left_anti")
-        parts.append(df)
-    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
-                  parts)
+    to any retained version. A snapshot with no data files (an empty
+    partitioned write) reads as an empty frame of its recorded schema."""
+    snap = table_stats(root, snapshot_id)
+    files = _data_files(snap)
+    if not files:
+        from pyspark.sql.types import StructType
+        with open(os.path.join(root, "metadata",
+                               f"v{snap['snapshot_id']}.metadata.json")) as f:
+            schema = StructType.fromJson(json.load(f)["schema"])
+        return spark.createDataFrame([], schema)
+    return _read_file_list(spark, root, [f["path"] for f in files])
 
 
 def _read_file_list(spark: SparkSession, root: str,
                     rel_paths: list[str]) -> DataFrame:
-    """Scan an explicit manifest file list, one basePath per commit dir so
-    hive partition columns survive (legacy pre-snapshot-dir layout keeps
-    basePath at data/)."""
+    """Scan an explicit manifest file list. A snapshot may span several
+    per-commit ``data/snap-N`` directories (appends); partition-column
+    inference needs one basePath per such directory, so the scan is a
+    union of one read per referenced commit dir — bounded by the snapshot
+    count, and Catalyst plans it as plain parallel scans (legacy
+    pre-snapshot-dir layout keeps basePath at data/)."""
     by_dir: dict[str, list[str]] = {}
     for rel in rel_paths:
         parts = rel.split("/")                # data/snap-N/.../file.parquet
@@ -329,267 +193,9 @@ def _read_file_list(spark: SparkSession, root: str,
                   reads)
 
 
-def read_incremental(spark: SparkSession, root: str, from_snapshot: int,
-                     to_snapshot: int | None = None,
-                     strict: bool = True) -> DataFrame:
-    """Incremental append scan (Iceberg's ``incremental read``): the rows
-    ADDED strictly after ``from_snapshot``, up to and including
-    ``to_snapshot`` (default: current) — the CDC primitive a downstream
-    consumer polls instead of re-reading the table.  Pure manifest
-    file-set diff: carried files cost zero I/O, only the added files are
-    scanned.
-
-    ``strict=True`` replicates Iceberg's contract: a non-append snapshot
-    (overwrite / merge / compact) inside the range makes a file diff
-    row-inaccurate (files may have been removed or rewritten), so it
-    raises instead of silently returning wrong rows."""
-    to = to_snapshot if to_snapshot is not None else _current_version(root)
-    retained = _retained_versions(root)
-    for v, tag in ((from_snapshot, "from_snapshot"), (to, "to_snapshot")):
-        if v not in retained:
-            raise FileNotFoundError(
-                f"{tag} {v} is not a retained snapshot of {root} "
-                f"(retained: {retained})")
-    if to < from_snapshot:
-        raise ValueError(
-            f"to_snapshot {to} precedes from_snapshot {from_snapshot}")
-    if strict:
-        for v in retained:
-            if from_snapshot < v <= to:
-                op = table_stats(root, v).get("operation", "overwrite")
-                if op != "append":
-                    raise ValueError(
-                        f"snapshot {v} is '{op}', not 'append' — a file "
-                        "diff is not row-accurate across it; read the "
-                        "full snapshot instead (or pass strict=False for "
-                        "added-files semantics)")
-    old = {f["path"] for f in table_stats(root, from_snapshot)["files"]}
-    added = [f["path"] for f in table_stats(root, to)["files"]
-             if f["path"] not in old]
-    if not added:
-        return read_table(spark, root, to).limit(0)
-    return _read_file_list(spark, root, added)
-
-
-def compact(spark: SparkSession, root: str, target_file_mb: int = 256,
-            partition_by: str | None = None,
-            cluster_by: str | None = None) -> dict:
-    """Iceberg ``rewriteDataFiles``: fold the current snapshot's file set
-    into ~``target_file_mb`` files as a NEW snapshot (prior snapshots stay
-    time-travelable until :func:`expire_snapshots`). The small-files
-    problem is the classic operational failure at 100 TB — a streaming or
-    per-batch writer leaves thousands of KB-files whose open/footer
-    overhead dominates scans; periodic compaction restores scan-sized
-    files and (with ``cluster_by``) re-tightens bounds for data skipping."""
-    snap = table_stats(root)
-    total_bytes = sum(f["bytes"] for f in snap["files"])
-    n_out = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
-    df = read_table(spark, root)
-    # With merge-on-read delete files, the manifest's data-file row total
-    # overcounts live rows; compaction FOLDS the deletes (read_table
-    # applies them, the rewrite drops them), so assert against the live
-    # count instead.
-    expected = (df.count() if snap.get("delete_files")
-                else snap["total_rows"])
-    if cluster_by is None:
-        df = df.coalesce(n_out)      # narrow — no shuffle to merge files
-    new = write_table(df, root, partition_by=partition_by,
-                      cluster_by=cluster_by, mode="overwrite")
-    assert new["total_rows"] == expected, \
-        f'compaction changed row count: {expected} -> ' \
-        f'{new["total_rows"]}'
-    return {"snapshot_id": new["snapshot_id"],
-            "files_before": len(snap["files"]),
-            "files_after": len(new["files"]),
-            "bytes": total_bytes}
-
-
-MERGE_KEYSET_CAP = 1_000_000  # update keys held driver-side for exact skip
-
-
-def merge_table(spark: SparkSession, root: str, updates: DataFrame,
-                key: str, partition_by: str | None = None,
-                cluster_by: str | None = None) -> dict:
-    """Iceberg copy-on-write MERGE (upsert): rows in ``updates`` replace
-    same-``key`` rows of the current snapshot, new keys are inserted; the
-    result is a NEW snapshot (prior versions stay time-travelable).
-
-    Only data files whose manifest [min, max] bounds for ``key`` contain at
-    least one update key are rewritten; every other file is carried into
-    the new snapshot BY NAME — zero read, zero write. A CDC batch into a
-    100 TB table therefore costs O(touched files), not O(table). File
-    selection is exact set membership when the update-key set fits
-    driver-side (sorted array + binary search per file, capped at
-    MERGE_KEYSET_CAP — ~8 MB of int64), degrading to [min, max] range
-    overlap above the cap; a file without recorded bounds is always
-    rewritten (safe fallback). The rewrite itself is one anti-join of the
-    touched files against the (broadcast) update keys, unioned with the
-    updates — Spark's own MERGE INTO physical shape for copy-on-write.
-
-    ``updates`` must be key-unique (the caller's CDC compaction contract);
-    duplicate update keys raise. Returns a report dict."""
-    from pyspark.sql import functions as F
-
-    snap = table_stats(root)
-    if snap.get("delete_files"):
-        raise ValueError(
-            "table has merge-on-read delete files; run compact() to fold "
-            "them before a copy-on-write merge (carried-by-name files "
-            "would otherwise resurrect deleted rows)")
-    n_updates = updates.count()
-    if n_updates == 0:
-        return {"snapshot_id": snap["snapshot_id"], "noop": True,
-                "files_rewritten": 0, "files_carried": len(snap["files"])}
-    dup = n_updates - updates.select(key).distinct().count()
-    if dup:
-        raise ValueError(f"updates contain {dup} duplicate '{key}' keys")
-
-    if n_updates <= MERGE_KEYSET_CAP:
-        import numpy as np
-        keys = np.sort(updates.select(key).toPandas()[key].to_numpy())
-
-        def overlaps(lo, hi) -> bool:
-            i = int(np.searchsorted(keys, lo, side="left"))
-            return i < keys.size and keys[i] <= hi
-    else:
-        row = updates.agg(F.min(key), F.max(key)).first()
-        klo, khi = row[0], row[1]
-
-        def overlaps(lo, hi) -> bool:
-            return not (lo > khi or hi < klo)
-
-    touched, carried = [], []
-    for f in snap["files"]:
-        b = f.get("bounds", {}).get(key)
-        if b is None or overlaps(b[0], b[1]):
-            touched.append(f)
-        else:
-            carried.append(f)
-
-    if touched:
-        old = _read_file_list(spark, root, [f["path"] for f in touched])
-        upd_keys = updates.select(key)
-        if n_updates <= MERGE_KEYSET_CAP:   # broadcast only CDC-sized sides
-            upd_keys = F.broadcast(upd_keys)
-        kept = old.join(upd_keys, key, "left_anti")
-        new_data = kept.unionByName(updates.select(*old.columns))
-    else:
-        new_data = updates
-    new = write_table(new_data, root, partition_by=partition_by,
-                      mode="merge", cluster_by=cluster_by,
-                      carry_files=carried)
-    return {"snapshot_id": new["snapshot_id"],
-            "files_rewritten": len(touched),
-            "files_carried": len(carried),
-            "update_rows": n_updates,
-            "total_rows": new["total_rows"]}
-
-
-def delete_where(spark: SparkSession, root: str, keys_df: DataFrame,
-                 key: str) -> dict:
-    """Iceberg merge-on-read EQUALITY DELETE: commit a delete file of
-    ``key`` values as a new snapshot WITHOUT touching any data file — the
-    O(delete-batch) write path for CDC deletes into a 100 TB table
-    (copy-on-write :func:`merge_table` is the O(touched-files) path;
-    choose per workload exactly as Iceberg's write.delete.mode does).
-
-    Readers apply the delete file as a broadcast anti-join, but only to
-    data files with a strictly LOWER data sequence number, so keys
-    re-inserted by a later append survive older deletes (Iceberg sequence
-    semantics). Delete files accumulate across appends and further
-    deletes until :func:`compact` folds them into a clean overwrite
-    snapshot. Crash-safe under the same tmp-dir + atomic-rename + never-
-    reuse-a-committed-version protocol as :func:`write_table`."""
-    meta_dir = os.path.join(root, "metadata")
-    parent_versions = _retained_versions(root)
-    if not parent_versions:
-        raise FileNotFoundError(f"no committed snapshot under {root}")
-    version = max([_current_version(root)] + parent_versions) + 1
-    parent = max(v for v in parent_versions if v < version)
-    pstats = table_stats(root, parent)
-
-    snap_dir = os.path.join(root, "data", f"snap-{version}")
-    tmp_dir = os.path.join(root, "data", f".snap-{version}.inprogress")
-    for stale in (tmp_dir, snap_dir):
-        if os.path.isdir(stale):
-            shutil.rmtree(stale)
-    keys_df.select(key).distinct().coalesce(1) \
-        .write.mode("error").parquet(tmp_dir)
-    os.rename(tmp_dir, snap_dir)         # atomic publish
-
-    import pyarrow.parquet as pq
-    del_entries = []
-    for p in sorted(glob.glob(os.path.join(snap_dir, "*.parquet"))):
-        del_entries.append({"path": os.path.relpath(p, root),
-                            "rows": pq.read_metadata(p).num_rows,
-                            "bytes": os.path.getsize(p),
-                            "key": key, "seq": version})
-    snapshot = {"snapshot_id": version, "ts_ms": int(time.time() * 1000),
-                "operation": "delete",
-                "files": pstats["files"],            # carried by name
-                "delete_files": (pstats.get("delete_files") or [])
-                + del_entries,
-                # data-file row total (live rows need the anti-join; same
-                # convention as Iceberg's total-records summary)
-                "total_rows": pstats["total_rows"]}
-    with open(os.path.join(meta_dir, f"snap-{version}.manifest.json"),
-              "w") as f:
-        json.dump(snapshot, f, indent=1)
-    with open(os.path.join(meta_dir, f"v{parent}.metadata.json")) as f:
-        pmeta = json.load(f)
-    retained = _retained_versions(root)
-    metadata = dict(pmeta)
-    metadata["current-snapshot-id"] = version
-    metadata["snapshots"] = [f"snap-{v}.manifest.json"
-                             for v in sorted(retained)]
-    with open(os.path.join(meta_dir, f"v{version}.metadata.json"),
-              "w") as f:
-        json.dump(metadata, f, indent=1)
-    tmp = os.path.join(meta_dir, ".version-hint.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(version))
-    os.replace(tmp, os.path.join(meta_dir, "version-hint.text"))
-    return snapshot
-
-
-def rollback_to(root: str, snapshot_id: int) -> dict:
-    """Iceberg ``rollback``: make ``snapshot_id``'s state current again by
-    committing a NEW snapshot that names the old snapshot's exact file set
-    (data + delete files, with their original sequence numbers) — zero
-    data I/O, pure metadata. History is preserved: the rolled-back-over
-    snapshots stay time-travelable until :func:`expire_snapshots`, and
-    the rollback itself appears in the log as operation ``rollback``."""
-    old = table_stats(root, snapshot_id)          # raises if expired
-    meta_dir = os.path.join(root, "metadata")
-    version = max([_current_version(root)] + _retained_versions(root)) + 1
-    snapshot = {"snapshot_id": version, "ts_ms": int(time.time() * 1000),
-                "operation": "rollback", "rolled_back_to": snapshot_id,
-                "files": old["files"],
-                "total_rows": old["total_rows"]}
-    if old.get("delete_files"):
-        snapshot["delete_files"] = old["delete_files"]
-    with open(os.path.join(meta_dir, f"snap-{version}.manifest.json"),
-              "w") as f:
-        json.dump(snapshot, f, indent=1)
-    with open(os.path.join(meta_dir,
-                           f"v{snapshot_id}.metadata.json")) as f:
-        pmeta = json.load(f)
-    metadata = dict(pmeta)
-    metadata["current-snapshot-id"] = version
-    metadata["snapshots"] = [f"snap-{v}.manifest.json"
-                             for v in _retained_versions(root)]
-    with open(os.path.join(meta_dir, f"v{version}.metadata.json"),
-              "w") as f:
-        json.dump(metadata, f, indent=1)
-    tmp = os.path.join(meta_dir, ".version-hint.tmp")
-    with open(tmp, "w") as f:
-        f.write(str(version))
-    os.replace(tmp, os.path.join(meta_dir, "version-hint.text"))
-    return snapshot
-
-
 def table_stats(root: str, snapshot_id: int | None = None) -> dict:
-    version = snapshot_id or _current_version(root)
+    """The manifest of ``snapshot_id`` (default: the current snapshot)."""
+    version = _current_version(root) if snapshot_id is None else snapshot_id
     path = os.path.join(root, "metadata", f"snap-{version}.manifest.json")
     if not os.path.exists(path):
         raise FileNotFoundError(
@@ -610,7 +216,10 @@ def expire_snapshots(root: str, keep_last: int = 1) -> dict:
     expired = [v for v in retained_all if v not in keep]
     if not expired:
         return {"expired": [], "deleted_files": 0}
+
     def _all_files(v: int) -> list:
+        # manifests of earlier versions may name delete files: collect
+        # those too
         s = table_stats(root, v)
         return s["files"] + (s.get("delete_files") or [])
 

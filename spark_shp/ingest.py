@@ -241,16 +241,6 @@ def read_geojson_seq(spark: SparkSession, path: str) -> DataFrame:
     return txt.mapInPandas(decode, GEOM_SCHEMA)
 
 
-def _layer_projection(wkt, stem: str):
-    """parser.projection_from_wkt of one layer's .prj; a .prj it refuses
-    raises a ValueError that names the layer by its path stem."""
-    from .shp import parser
-    try:
-        return parser.projection_from_wkt(wkt)
-    except ValueError as ex:
-        raise ValueError(f"layer {stem}: {ex}") from ex
-
-
 def read_shapefiles(spark: SparkSession, path_glob: str) -> DataFrame:
     """binaryFile scan → per-layer decode (parser kernels) → geometry DF.
 
@@ -279,7 +269,7 @@ def read_shapefiles(spark: SparkSession, path_glob: str) -> DataFrame:
             else:
                 kinds[ext.lower()] = bytes(content)
         if "shp" in kinds:
-            trans = _layer_projection(
+            trans = parser.layer_projection(
                 kinds["prj"].decode("ascii", "replace")
                 if "prj" in kinds else None, path.rsplit(".", 1)[0])
             geoms = parser.parse_shp(kinds["shp"], trans)
@@ -332,6 +322,7 @@ def read_points_fast(spark: SparkSession, path_glob: str,
     _UNSUPPORTED = object()
 
     def decode(batches):
+        from .shp import parser
         cache: dict[str, object] = {}
         for pdf in batches:
             for path, content in zip(pdf["path"], pdf["content"]):
@@ -343,7 +334,7 @@ def read_points_fast(spark: SparkSession, path_glob: str,
                 if stem not in cache:
                     wkt = bc_prjs.value.get(stem)
                     try:
-                        cache[stem] = _layer_projection(wkt, stem)
+                        cache[stem] = parser.layer_projection(wkt, stem)
                     except ValueError:
                         if on_unsupported_crs == "raise":
                             raise
@@ -448,7 +439,9 @@ def read_shp_sharded(spark: SparkSession, shp_path: str,
                       "end": [r[1] for r in ranges]}))
 
     def decode(batches):
-        trans = _layer_projection(trans_wkt, shp_path.rsplit(".", 1)[0])
+        from .shp import parser
+        trans = parser.layer_projection(trans_wkt,
+                                        shp_path.rsplit(".", 1)[0])
         for pdf in batches:
             for start, end in zip(pdf["start"], pdf["end"]):
                 with open(shp_path, "rb") as fh:

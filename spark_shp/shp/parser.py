@@ -1776,6 +1776,15 @@ def projection_from_wkt(wkt) -> "callable | None":
     return f
 
 
+def layer_projection(wkt, layer: str):
+    """:func:`projection_from_wkt` of one layer's .prj, as every reader
+    calls it: a .prj it refuses raises a ValueError that names the layer."""
+    try:
+        return projection_from_wkt(wkt)
+    except ValueError as ex:
+        raise ValueError(f"layer {layer}: {ex}") from ex
+
+
 class _Prj:
     """What a projection row reads from its .prj, once it has matched:
     PARAMETERs, spheroid, and the origin, scale and false E/N most rows

@@ -54,9 +54,9 @@ def parse_zip(buf: bytes, whitelist: tuple = ()):
     for name in sorted(layers):
         kinds = layers[name]
         if "shp" in kinds:
-            trans = parser.projection_from_wkt(
+            trans = parser.layer_projection(
                 kinds["prj"].decode("ascii", "replace")
-                if "prj" in kinds else None)
+                if "prj" in kinds else None, name)
             geoms = parser.parse_shp(kinds["shp"], trans)
             enc = parser.parse_cpg(kinds.get("cpg"))
             rows = parser.parse_dbf(kinds["dbf"], enc) if "dbf" in kinds else []
