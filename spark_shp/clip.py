@@ -142,7 +142,7 @@ def raster_vector_clip(images: DataFrame, poly_edges: dict[int, np.ndarray],
             yield pd.DataFrame({
                 "image_id": pdf["image_id"].to_numpy(), "poly_id": pids,
                 "clipped_bytes": clipped, "n_inside": n_in, "n_pixels": n_px,
-                "mean_inside": mean})
+                "mean_inside": mean}, copy=False)
 
     cols = ["image_id", "bytes", "w", "h", "fmt", "lon", "lat", poly_col]
     return images.select(*cols).mapInPandas(work, CLIP_SCHEMA)
@@ -189,7 +189,7 @@ def phash_verify(images: DataFrame) -> DataFrame:
                 "phash_computed": computed,
                 "match": np.where(np.isin(fmts, ("raw", "png")),
                                   ham == 0, ham <= 4),
-                "hamming": ham})
+                "hamming": ham}, copy=False)
 
     return (images.select("image_id", "bytes", "w", "h", "fmt", "phash")
             .mapInPandas(work, PHASH_SCHEMA))
@@ -222,7 +222,7 @@ def decode_stats(images: DataFrame) -> DataFrame:
             yield pd.DataFrame({
                 "image_id": pdf["image_id"].to_numpy(),
                 "fmt": pdf["fmt"].to_numpy(), "mean_px": sums / size,
-                "bytes_decoded": size})
+                "bytes_decoded": size}, copy=False)
 
     return (images.select("image_id", "bytes", "w", "h", "fmt")
             .mapInPandas(work, DECODE_STATS_SCHEMA))

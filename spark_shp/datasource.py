@@ -76,7 +76,8 @@ class ShapefileReader(DataSourceReader):
         fs = partition.files
         if "zip" in fs:
             with open(fs["zip"], "rb") as fh:
-                for lname, feats in zipio.parse_zip(fh.read()):
+                for lname, feats in zipio.parse_zip(fh.read(),
+                                                    path=fs["zip"]):
                     yield from emit(lname, feats)
             return
         with open(fs["shp"], "rb") as fh:

@@ -33,6 +33,7 @@ import time
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def _current_version(root: str) -> int:
@@ -110,9 +111,10 @@ def write_table(df: DataFrame, root: str, partition_by: str | None = None,
         # commit-level properties (e.g. the streaming micro-batch id) live
         # INSIDE the manifest so they are atomic with the snapshot itself
         snapshot["properties"] = dict(properties)
-    with open(os.path.join(meta_dir, f"snap-{version}.manifest.json"),
-              "w") as f:
-        json.dump(snapshot, f, indent=1)
+    # the metadata (the schema readers apply to this commit's files) goes
+    # first: the manifest commits the snapshot, so every committed snapshot
+    # has its metadata, and a crash before the manifest leaves a version
+    # the next commit reuses
     retained = _retained_versions(root) + [version]
     metadata = {
         "format-version": 2, "table-root": root,
@@ -123,6 +125,9 @@ def write_table(df: DataFrame, root: str, partition_by: str | None = None,
     }
     with open(os.path.join(meta_dir, f"v{version}.metadata.json"), "w") as f:
         json.dump(metadata, f, indent=1)
+    with open(os.path.join(meta_dir, f"snap-{version}.manifest.json"),
+              "w") as f:
+        json.dump(snapshot, f, indent=1)
     tmp = os.path.join(meta_dir, ".version-hint.tmp")
     with open(tmp, "w") as f:
         f.write(str(version))
@@ -161,22 +166,29 @@ def read_table(spark: SparkSession, root: str,
     snap = table_stats(root, snapshot_id)
     files = _data_files(snap)
     if not files:
-        from pyspark.sql.types import StructType
-        with open(os.path.join(root, "metadata",
-                               f"v{snap['snapshot_id']}.metadata.json")) as f:
-            schema = StructType.fromJson(json.load(f)["schema"])
-        return spark.createDataFrame([], schema)
-    return _read_file_list(spark, root, [f["path"] for f in files])
+        return spark.createDataFrame([], _schema(root, snap["snapshot_id"]))
+    return _read_file_list(spark, root, [f["path"] for f in files],
+                           snap["snapshot_id"])
 
 
-def _read_file_list(spark: SparkSession, root: str,
-                    rel_paths: list[str]) -> DataFrame:
-    """Scan an explicit manifest file list. A snapshot may span several
-    per-commit ``data/snap-N`` directories (appends); partition-column
-    inference needs one basePath per such directory, so the scan is a
-    union of one read per referenced commit dir — bounded by the snapshot
-    count, and Catalyst plans it as plain parallel scans (legacy
-    pre-snapshot-dir layout keeps basePath at data/)."""
+def _schema(root: str, version: int) -> StructType:
+    """The schema commit ``version`` recorded in its metadata."""
+    with open(os.path.join(root, "metadata",
+                           f"v{version}.metadata.json")) as f:
+        return StructType.fromJson(json.load(f)["schema"])
+
+
+def _read_file_list(spark: SparkSession, root: str, rel_paths: list[str],
+                    version: int) -> DataFrame:
+    """Scan an explicit manifest file list of snapshot ``version``. A
+    snapshot may span several per-commit ``data/snap-N`` directories
+    (appends); partition discovery needs one basePath per such directory,
+    so the scan is a union of one read per referenced commit dir — bounded
+    by the snapshot count, and Catalyst plans it as plain parallel scans
+    (legacy pre-snapshot-dir layout keeps basePath at data/). Each dir
+    reads with the schema its commit recorded, so a partition column keeps
+    its written type instead of one inferred from the directory names
+    ('007' stays a string, a bigint stays a bigint)."""
     by_dir: dict[str, list[str]] = {}
     for rel in rel_paths:
         parts = rel.split("/")                # data/snap-N/.../file.parquet
@@ -184,7 +196,11 @@ def _read_file_list(spark: SparkSession, root: str,
                if len(parts) > 1 and parts[1].startswith("snap-")
                else parts[0])
         by_dir.setdefault(key, []).append(os.path.join(root, rel))
-    reads = [spark.read.option("basePath", os.path.join(root, d))
+    # data/snap-N holds commit N's files; a legacy data/ dir reads with the
+    # snapshot's own schema
+    reads = [spark.read.schema(_schema(
+                 root, int(d[len("data/snap-"):]) if "/" in d else version))
+             .option("basePath", os.path.join(root, d))
              .parquet(*sorted(paths))
              for d, paths in sorted(by_dir.items())]
     # allowMissingColumns: snapshots written before a column was added

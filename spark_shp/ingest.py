@@ -59,17 +59,23 @@ def normalize_rank4(geom: dict | None):
 
 def _geom_bbox(geom: dict | None):
     """(xmin, ymin, xmax, ymax) of every position of ``geom`` (None for a
-    null geometry) as numpy's min and max over them as float64 give it.
-    Python's min and max give the same bounds on numbers, so numpy runs
-    only where they could differ: positions of mixed lengths (numpy
+    null geometry); see :func:`_coords_bbox`."""
+    return _coords_bbox(normalize_rank4(geom))
+
+
+def _coords_bbox(coords):
+    """(xmin, ymin, xmax, ymax) of every position of rank-4 ``coords``
+    (None for a null geometry) as numpy's min and max over them as float64
+    give it. Python's min and max give the same bounds on numbers, so numpy
+    runs only where they could differ: positions of mixed lengths (numpy
     raises), non-numbers, a NaN (numpy propagates it; the sums catch it)
     or a bound of ±0.0 (numpy picks the zero's sign by its own order)."""
-    if geom is None:
+    if coords is None:
         return None
-    pts = [p for a in normalize_rank4(geom) for b in a for p in b]
+    pts = [p for a in coords for b in a for p in b]
     try:
         if len(set(map(len, pts))) == 1:
-            xs, ys = [p[0] for p in pts], [p[1] for p in pts]
+            xs, ys, *_ = zip(*pts)
             box = (float(min(xs)), float(min(ys)),
                    float(max(xs)), float(max(ys)))
             total = sum(xs) + sum(ys)
@@ -86,12 +92,13 @@ def features_to_records(layer: str, features: list[dict]) -> list[dict]:
     rows = []
     for i, f in enumerate(features):
         g = f["geometry"]
+        coords = normalize_rank4(g)
         rows.append({
             "feature_id": i,
             "layer": layer,
             "geom_type": g["type"] if g else None,
-            "coordinates": normalize_rank4(g),
-            "bbox": _geom_bbox(g),
+            "coordinates": coords,
+            "bbox": _coords_bbox(coords),
             "is_null": g is None,
             "properties": {k: (None if v is None else str(v))
                            for k, v in f["properties"].items()},
@@ -227,12 +234,13 @@ def read_geojson_seq(spark: SparkSession, path: str) -> DataFrame:
             for layer, line in zip(pdf["layer"], pdf["value"]):
                 f = json.loads(line)
                 g = f["geometry"]
+                coords = normalize_rank4(g)
                 out.append({
                     "feature_id": f.get("id"),
                     "layer": layer,
                     "geom_type": g["type"] if g else None,
-                    "coordinates": normalize_rank4(g),
-                    "bbox": _geom_bbox(g),
+                    "coordinates": coords,
+                    "bbox": _coords_bbox(coords),
                     "is_null": g is None,
                     "properties": f.get("properties") or {},
                 })
@@ -264,7 +272,8 @@ def read_shapefiles(spark: SparkSession, path_glob: str) -> DataFrame:
             fname = path.rsplit("/", 1)[-1]
             base, ext = fname.rsplit(".", 1)
             if ext.lower() == "zip":
-                for lname, feats in zipio.parse_zip(bytes(content)):
+                for lname, feats in zipio.parse_zip(bytes(content),
+                                                    path=path):
                     out.extend(features_to_records(lname, feats))
             else:
                 kinds[ext.lower()] = bytes(content)

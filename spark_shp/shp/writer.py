@@ -94,9 +94,8 @@ def write_shp(records: list[tuple[int, object]],
               header_type: int | None = None) -> bytes:
     """records: [(geom_type, data), ...] → .shp file bytes."""
     payloads = [_record_payload(t, d) for t, d in records]
-    body = b""
-    for i, p in enumerate(payloads):
-        body += struct.pack(">ii", i + 1, len(p) // 2) + p
+    body = b"".join(struct.pack(">ii", i + 1, len(p) // 2) + p
+                    for i, p in enumerate(payloads))
     if header_type is None:
         header_type = next((t for t, _ in records if t != NULL), POINT)
     all_pts = [pt for t, d in records if t != NULL
@@ -117,10 +116,11 @@ def write_shp(records: list[tuple[int, object]],
 
 def write_shx(records: list[tuple[int, object]]) -> bytes:
     payloads = [_record_payload(t, d) for t, d in records]
-    off, body = 50, b""
+    heads, off = [], 50
     for p in payloads:
-        body += struct.pack(">ii", off, len(p) // 2)
+        heads.append(struct.pack(">ii", off, len(p) // 2))
         off += 4 + len(p) // 2
+    body = b"".join(heads)
     header = struct.pack(">i", 9994) + b"\x00" * 20
     header += struct.pack(">i", (100 + len(body)) // 2)
     header += struct.pack("<ii", 1000, POINT)

@@ -42,11 +42,13 @@ def group_layers(members: dict[str, bytes],
     return layers
 
 
-def parse_zip(buf: bytes, whitelist: tuple = ()):
+def parse_zip(buf: bytes, whitelist: tuple = (), path: str | None = None):
     """A16–A18+A20: zip → list of (layer_name, features|geojson obj).
 
     Each .shp layer is decoded with its sidecars; .json members are parsed
-    (A20). Raises the reference's 'no layers founds' when neither exists."""
+    (A20). Raises the reference's 'no layers founds' when neither exists.
+    A refused .prj names its layer ``<path>!<member>`` when the zip's
+    ``path`` is given, else by its member name."""
     from . import parser
 
     layers = group_layers(zip_demux(buf), whitelist)
@@ -56,7 +58,8 @@ def parse_zip(buf: bytes, whitelist: tuple = ()):
         if "shp" in kinds:
             trans = parser.layer_projection(
                 kinds["prj"].decode("ascii", "replace")
-                if "prj" in kinds else None, name)
+                if "prj" in kinds else None,
+                f"{path}!{name}" if path else name)
             geoms = parser.parse_shp(kinds["shp"], trans)
             enc = parser.parse_cpg(kinds.get("cpg"))
             rows = parser.parse_dbf(kinds["dbf"], enc) if "dbf" in kinds else []

@@ -291,6 +291,30 @@ def test_iceberg_null_partition_values(spark, tmp_path):
         assert got == rows, (col, got)
 
 
+def test_iceberg_partition_columns_keep_their_written_type(spark, tmp_path):
+    """A partition column reads back with the type and value it was
+    written with, not one inferred from the directory names: string codes
+    keep their leading zeros and a bigint stays a bigint, across an
+    append and in time travel."""
+    from pyspark.sql import types as T
+
+    from spark_shp import iceberg_layout as ice
+    df = spark.createDataFrame([(1, "007", 3), (2, "010", 4)],
+                               "id long, code string, region long")
+    for col in ("code", "region"):
+        root = str(tmp_path / col)
+        ice.write_table(df.limit(1), root, partition_by=col)
+        ice.write_table(df.where("id = 2"), root, partition_by=col,
+                        mode="append")
+        for snap, rows in ((2, [(1, "007", 3), (2, "010", 4)]),
+                           (1, [(1, "007", 3)])):
+            back = ice.read_table(spark, root, snapshot_id=snap)
+            assert back.schema[col].dataType == df.schema[col].dataType
+            assert isinstance(back.schema["region"].dataType, T.LongType)
+            got = sorted((r.id, r.code, r.region) for r in back.collect())
+            assert got == rows, (col, snap, got)
+
+
 def test_iceberg_empty_partitioned_snapshot_reads_empty(spark, tmp_path):
     """An empty partitioned write commits a snapshot with no data files;
     it reads as an empty frame with the schema the commit recorded, and an

@@ -254,18 +254,21 @@ def test_points_fast_unsupported_crs_modes(spark, tmp_path):
     spark.dataSource.register(ShapefileDataSource)
     with pytest.raises(Exception, match="layer .*mix/bad: unsupported"):
         spark.read.format("shapefile").load(str(d)).collect()
-    # the same layer inside a zip is named by its member name
+    # the same layer inside a zip is named by the zip's path and its
+    # member name, so two zips that each hold a bad.shp tell apart
     import io
     import zipfile
-    z = tmp_path / "zipped"
-    z.mkdir()
-    bio = io.BytesIO()
-    with zipfile.ZipFile(bio, "w") as zf:
-        for ext in ("shp", "prj"):
-            zf.writestr(f"bad.{ext}", (d / f"bad.{ext}").read_bytes())
-    (z / "bundle.zip").write_bytes(bio.getvalue())
-    with pytest.raises(Exception, match="layer bad: unsupported"):
-        ingest.read_shapefiles(spark, str(z) + "/*").collect()
+    for zname in ("bundle", "other"):
+        z = tmp_path / zname
+        z.mkdir()
+        bio = io.BytesIO()
+        with zipfile.ZipFile(bio, "w") as zf:
+            for ext in ("shp", "prj"):
+                zf.writestr(f"bad.{ext}", (d / f"bad.{ext}").read_bytes())
+        (z / f"{zname}.zip").write_bytes(bio.getvalue())
+        with pytest.raises(Exception, match=f"layer [^ ]*{zname}/{zname}"
+                           r"\.zip!bad: unsupported"):
+            ingest.read_shapefiles(spark, str(z) + "/*").collect()
     skipped = ingest.read_points_fast(
         spark, glob, on_unsupported_crs="skip").collect()
     assert sorted((r.layer, r.lon, r.lat) for r in skipped) == [
