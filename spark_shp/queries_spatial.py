@@ -234,13 +234,13 @@ def q_knn_events_nations(spark, sf_dir):
 
 def q_knn_events_nations_cells(spark, sf_dir):
     """B8 scale path under the driver gate: identical contract to
-    q_knn_events_nations but via certify-or-repair cell-ring expansion
+    q_knn_events_nations but via the certify-or-repair cell ring
     (knn_join_cells_exact). level=3 / max_ring=1 is DELIBERATELY too
-    tight for the plain ring join — many points' true neighbors fall
-    outside one ring — so this query exercises both the ring candidate
-    path and the per-point coverage proof + brute-force repair, and the
-    oracle (the same global-kNN SQL as the broadcast path) verifies the
-    composition is still exactly the global kNN."""
+    tight for the plain ring: at sf0.01, 25 of the 1,000 points are
+    certified from their ring candidates and the other 975 go to the
+    brute-force repair (with max_ring=2, 325 are certified), so the query
+    exercises both halves, and the oracle (the same global-kNN SQL as the
+    broadcast path) verifies the composition is exactly the global kNN."""
     pts = _event_points(spark, sf_dir).where(F.col("event_id") % 10 == 0)
     n = _t(spark, sf_dir, "nation")
     dims = n.selectExpr("n_nationkey",

@@ -17,13 +17,13 @@ Design (Spark-first, scale-first):
   every polygon fits one row, a summed crossing count per (point,
   polygon) when wide polygons split into edge chunks. No Python runs
   between the candidate join and the output.
-* kNN ships three functions: ``knn_join_broadcast``, brute-force top-k
-  over a broadcast build side (the RIGHT plan when it is a small dimension
-  — Catalyst keeps it a single stage); ``knn_join_cells``, cell-ring
-  expansion (the scale path when both sides are large, exact when each
-  point's k NNs lie within ``max_ring`` cells); and
-  ``knn_join_cells_exact``, the cell-ring join with a coverage check that
-  repairs uncovered points by brute force.
+* kNN has one candidate mechanism, all SQL: a point fans out to the
+  (2r + 1)**2 grid cells around its own and equi-joins the dims on their
+  cell, as ``distance_join_cells`` does at r = 1. ``knn_join_broadcast``
+  is the brute-force reference; ``knn_join_cells`` the ring top-k, which
+  ``knn_join_cells_exact`` certifies per point in one window, repairing
+  the rest by brute force. A point or dim with a NULL or NaN coordinate
+  is in no pair, on every route.
 
 Reference parity: ring-hole semantics of the PIP match shapefile-js's
 polygon assembly (geom.assemble_rings / even-odd parity; SURVEY §2.B B6).
@@ -31,9 +31,11 @@ polygon assembly (geom.assemble_rings / even-odd parity; SURVEY §2.B B6).
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from . import cells, geom
 
@@ -386,57 +388,86 @@ def spatial_join(points: DataFrame, polys: DataFrame, lon_col: str,
             .select(*pt_cols, "poly_id"))
 
 
+def _d2(lon_a: str, lat_a: str, lon_b: str, lat_b: str):
+    """Squared euclidean degree distance in plain products (not POWER), as
+    the SQL oracles write it; NULL or NaN when a coordinate is."""
+    dx = F.col(lon_a) - F.col(lon_b)
+    dy = F.col(lat_a) - F.col(lat_b)
+    return dx * dx + dy * dy
+
+
+def _top_k(pairs: DataFrame, d2, k: int, point_id: str,
+           dim_id: str) -> DataFrame:
+    """The k rows of ``pairs`` per ``point_id`` of least ``_d2`` (the
+    column ``d2``), ties broken by ``dim_id``, ranked ``knn_rank`` from 1.
+    A pair whose ``_d2`` is not finite (a NULL or NaN coordinate) is
+    dropped first."""
+    w = Window.partitionBy(point_id).orderBy("_d2", dim_id)
+    return (pairs.withColumn("_d2", d2).where(F.col("_d2") < float("inf"))
+            .withColumn("knn_rank", F.row_number().over(w))
+            .where(F.col("knn_rank") <= k))
+
+
+def _ring_reach(level: int, r: int) -> float:
+    """A distance whose computed square is below the computed ``_d2`` of
+    every pair whose cells at ``level`` lie more than ``r`` apart.
+
+    ``cells.quantize_sql`` rounds ``x + shift`` and ``/ span`` (``* n``,
+    n = 2**level, is exact): inside the grid the computed fraction is
+    within 3un of the exact one (u = 2**-53), outside both clamp to the
+    same edge. Indices more than r apart need clamped fractions more than
+    r apart, and clamping only brings fractions closer (the borders need
+    no special case), so the pair's exact gap on that axis exceeds ``(r -
+    6un) * span / n`` and its distance D exceeds ``rho = r * 170 / n -
+    2160u``. ``_d2`` is at least ``D**2 * (1 - u)**4`` (five roundings);
+    the value returned, squared with its three roundings, is below
+    ``rho**2 * (1 - u)**4``: ``2**-40 = 8192u`` covers the 2160u, and
+    ``1 - 2**-40`` the relative 4.5u."""
+    return r * (170.0 / (1 << level)) * (1 - 2.0 ** -40) - 2.0 ** -40
+
+
+def _ring_join(a: DataFrame, b: DataFrame, a_lon: str, a_lat: str,
+               b_lon: str, b_lat: str, level: int, r: int) -> DataFrame:
+    """``a`` joined to the rows of ``b`` whose ``cells.quantize_sql`` cell
+    lies within ``r`` cells (Chebyshev) of its own: ``a`` fans out to the
+    (2r + 1)**2 cells ``(ix + dx, iy + dy)``, dx, dy in [-r, r], and meets
+    ``b`` on its own cell. A pair meets in at most one cell, and a cell off
+    the grid meets nothing."""
+    if r < 0:
+        raise ValueError(f"ring radius must be >= 0, got {r}")
+    ax, ay = cells.quantize_sql(a_lon, a_lat, level)
+    bx, by = cells.quantize_sql(b_lon, b_lat, level)
+    ring = "explode(sequence({0} - {1}, {0} + {1}))"
+    fan = (a.withColumn("_ix", F.expr(ring.format(ax, r)))
+           .withColumn("_iy", F.expr(ring.format(ay, r))))
+    own = b.withColumn("_ix", F.expr(bx)).withColumn("_iy", F.expr(by))
+    return fan.join(own, ["_ix", "_iy"]).drop("_ix", "_iy")
+
+
 def knn_join_broadcast(points: DataFrame, dims: DataFrame, k: int,
                        lon_col: str, lat_col: str,
                        dim_lon: str, dim_lat: str, dim_id: str,
                        point_id: str) -> DataFrame:
-    """B8 (small build side): broadcast cross-join + windowed top-k by
-    squared euclidean degree distance (deterministic — pure arithmetic, no
-    trig; ties broken by dim id)."""
-    from pyspark.sql import Window as W
-    d2 = ((F.col(lon_col) - F.col(dim_lon)) ** 2
-          + (F.col(lat_col) - F.col(dim_lat)) ** 2)
-    j = points.join(F.broadcast(dims)).withColumn("_d2", d2)
-    w = W.partitionBy(point_id).orderBy(F.col("_d2").asc(), F.col(dim_id).asc())
-    return (j.withColumn("knn_rank", F.row_number().over(w))
-             .where(F.col("knn_rank") <= k).drop("_d2"))
+    """B8 brute force: every point against every dim of a broadcast build
+    side, then the top-k (:func:`_top_k`). The reference the other routes
+    must equal, and the repair path of :func:`knn_join_cells_exact`."""
+    return _top_k(points.join(F.broadcast(dims)),
+                  _d2(lon_col, lat_col, dim_lon, dim_lat), k, point_id,
+                  dim_id).drop("_d2")
 
 
 def knn_join_cells(points: DataFrame, dims: DataFrame, k: int,
                    lon_col: str, lat_col: str, dim_lon: str, dim_lat: str,
                    dim_id: str, point_id: str, level: int = 4,
                    max_ring: int = 4, keep_dist: bool = False) -> DataFrame:
-    """B8 (scale path): cell-ring expansion kNN.
-
-    Both sides tile-assigned at ``level``; candidate pairs = points joined to
-    dims whose cell lies within Chebyshev ring ``r`` of the point's cell,
-    expanding r until every point has ≥ k candidates whose worst-case
-    distance is covered, then exact top-k.  Implemented as: explode each
-    point's ring-``max_ring`` neighborhood (static upper bound — keeps the
-    plan a single equi-join), equi-join on dim cell, exact windowed top-k.
-    Correct whenever each point's k NNs lie within ``max_ring`` cells;
-    callers size (level, max_ring) from dim density (see tests for the
-    brute-force cross-check)."""
-    from pyspark.sql import Window as W
-
-    ring_schema = T.ArrayType(T.LongType())
-
-    @F.pandas_udf(ring_schema)
-    def ring_udf(cell: pd.Series) -> pd.Series:
-        r = cells.cell_ring(cell.to_numpy(), max_ring)
-        return pd.Series([row[row >= 0].tolist() for row in r])
-
-    pts = tile_assign(points, lon_col, lat_col, level, "_knn_cell")
-    pts = pts.withColumn("_nbr", F.explode(ring_udf(F.col("_knn_cell"))))
-    dms = tile_assign(dims, dim_lon, dim_lat, level, "_nbr")
-    j = pts.join(dms, "_nbr", "inner").drop("_nbr", "_knn_cell")
-    d2 = ((F.col(lon_col) - F.col(dim_lon)) ** 2
-          + (F.col(lat_col) - F.col(dim_lat)) ** 2)
-    w = W.partitionBy(point_id).orderBy(F.col("_d2").asc(), F.col(dim_id).asc())
-    out = (j.withColumn("_d2", d2)
-           .withColumn("knn_rank", F.row_number().over(w))
-           .where(F.col("knn_rank") <= k)
-           .dropDuplicates([point_id, dim_id]))
+    """B8 ring candidates: each point's top-k among the dims whose cell at
+    ``level`` lies within ``max_ring`` cells of its own (:func:`_ring_join`).
+    The ring is static, so a point whose k nearest dims are not all in it
+    gets fewer or farther rows: this is the candidate step of
+    :func:`knn_join_cells_exact`. ``keep_dist`` keeps ``_d2``."""
+    out = _top_k(_ring_join(points, dims, lon_col, lat_col, dim_lon,
+                            dim_lat, level, max_ring),
+                 _d2(lon_col, lat_col, dim_lon, dim_lat), k, point_id, dim_id)
     return out if keep_dist else out.drop("_d2")
 
 
@@ -445,24 +476,15 @@ def knn_join_cells_exact(points: DataFrame, dims: DataFrame, k: int,
                          dim_lat: str, dim_id: str, point_id: str,
                          level: int | None = None,
                          max_ring: int = 2) -> DataFrame:
-    """B8, always-exact scale path: cell-ring kNN plus a per-point coverage
-    guarantee with brute-force repair.
+    """B8 scale path, exact on every input: :func:`knn_join_cells`' ring
+    top-k, certified per point, the rest repaired by brute force.
 
-    ``knn_join_cells`` is exact only when each point's k NNs lie within
-    ``max_ring`` cells — a sizing contract the caller had to get right.
-    This wrapper (a) auto-sizes ``level`` from the dim count so a ring
-    holds ~8k dims in expectation (one count() job, uniformity
-    assumption), and (b) PROVES exactness per point: a ring of radius r
-    is guaranteed to contain every dim within euclidean distance
-    (r-1)·min(cell_w, cell_h) of the point, so any point whose kth
-    candidate lies within that reach (and that found ≥ k candidates) has
-    a certified-correct top-k. The residual points — sparse-region
-    stragglers, typically a vanishing fraction — re-run through the
-    broadcast brute-force join. Output = certified rows ∪ repaired rows,
-    exactly equal to the brute-force join on every input.
-    """
-    import math
-
+    ``level=None`` sizes the grid from the dim count (one count() job) so
+    a ring holds about 8k evenly spread dims. Every dim outside a point's
+    ring is farther than :func:`_ring_reach`, so a point with k ring
+    candidates, the kth within that reach, has the global top-k: one
+    window gives each point its candidate count and kth ``_d2``. The other
+    points go through :func:`knn_join_broadcast` (``dims`` broadcast)."""
     if level is None:
         n_dims = dims.count()
         cells_target = max(1.0, n_dims * (2 * max_ring + 1) ** 2
@@ -471,74 +493,51 @@ def knn_join_cells_exact(points: DataFrame, dims: DataFrame, k: int,
     got = knn_join_cells(points, dims, k, lon_col, lat_col, dim_lon,
                          dim_lat, dim_id, point_id, level=level,
                          max_ring=max_ring, keep_dist=True)
-    cell_w = 360.0 / (1 << level)
-    cell_h = 170.0 / (1 << level)
-    reach = max(max_ring - 1, 0) * min(cell_w, cell_h)
-    per = (got.groupBy(point_id)
-           .agg(F.count(F.lit(1)).alias("_n"),
-                F.max("_d2").alias("_maxd2")))
-    # certify (not flag): a point with ZERO ring candidates has no row in
-    # `per` at all, so selecting the provably-good set and anti-joining
-    # catches it, where a bad-set join would silently drop it
-    good_ids = per.where((F.col("_n") >= k)
-                         & (F.col("_maxd2") <= reach * reach)
-                         ).select(point_id)
-    certified = got.join(good_ids, point_id, "left_semi").drop("_d2")
-    # repair set: usually empty/tiny; brute force assumes dims is
-    # broadcastable (it is whenever the broadcast path was an option)
-    repair_pts = points.join(good_ids, point_id, "left_anti")
-    repaired = knn_join_broadcast(repair_pts, dims, k, lon_col, lat_col,
-                                  dim_lon, dim_lat, dim_id, point_id)
+    reach = _ring_reach(level, max_ring)
+    w = Window.partitionBy(point_id)
+    certified = (got.withColumn("_n", F.count(F.lit(1)).over(w))
+                 .withColumn("_kth", F.max("_d2").over(w))
+                 .where((F.col("_n") >= k) & F.lit(reach > 0)
+                        & (F.col("_kth") <= reach * reach))
+                 .drop("_d2", "_n", "_kth"))
+    repaired = knn_join_broadcast(
+        points.join(certified.select(point_id), point_id, "left_anti"),
+        dims, k, lon_col, lat_col, dim_lon, dim_lat, dim_id, point_id)
     return certified.unionByName(repaired.select(*certified.columns))
 
 
 def range_join(points: DataFrame, dims: DataFrame, radius: float,
                lon_col: str, lat_col: str, dim_lon: str, dim_lat: str) -> DataFrame:
-    """B9: pairs within euclidean-degree ``radius`` (broadcast dims)."""
-    d2 = ((F.col(lon_col) - F.col(dim_lon)) ** 2
-          + (F.col(lat_col) - F.col(dim_lat)) ** 2)
-    return points.join(F.broadcast(dims)).where(d2 <= radius * radius)
+    """B9: pairs within euclidean-degree ``radius`` (broadcast dims); a
+    NULL or NaN coordinate is in no pair."""
+    if not radius >= 0:
+        raise ValueError(f"radius must be a number >= 0, got {radius!r}")
+    return points.join(F.broadcast(dims)).where(
+        _d2(lon_col, lat_col, dim_lon, dim_lat) <= radius * radius)
 
 
 def distance_join_cells(left: DataFrame, right: DataFrame, radius: float,
                         lon_l: str = "lon", lat_l: str = "lat",
                         lon_r: str = "lon", lat_r: str = "lat") -> DataFrame:
     """Big-big distance join (all pairs within euclidean-degree
-    ``radius``): grid both sides at a level whose cell size ≥ radius, fan
-    the LEFT side out to its 3×3 neighbor cells, equi-join on the cell
-    key, refine with the exact distance — entirely DataFrame ops, one
-    shuffle keyed on the grid cell, 9× left duplication. This is the
-    shape that survives when NEITHER side fits a broadcast (use
-    :func:`range_join` when the dims side is small).
+    ``radius``): grid both sides at the finest level whose 3×3 ring
+    reaches ``radius`` (:func:`_ring_reach`), fan the LEFT side out to it
+    (:func:`_ring_join`), refine with the exact distance — one shuffle
+    keyed on the grid cell, 9× left duplication: the shape that survives
+    when NEITHER side fits a broadcast (else :func:`range_join`). A NULL
+    or NaN coordinate is in no pair.
 
     Every output column of ``left`` is prefixed ``l_`` and of ``right``
     ``r_`` (like :func:`spatial_join`'s pair output)."""
-    import math as _math
-
-    # cell must be at least radius wide in BOTH axes (lat span 170 is the
-    # binding constraint) so candidates are confined to the 3x3 ring
-    level = max(0, min(cells.MAX_LEVEL,
-                       int(_math.floor(_math.log2(170.0 / radius)))))
-    ixl, iyl = cells.quantize_sql(lon_l, lat_l, level)
-    ixr, iyr = cells.quantize_sql(lon_r, lat_r, level)
-    l2 = (left.select(*[F.col(c).alias(f"l_{c}") for c in left.columns],
-                      F.expr(ixl).alias("_ix0"), F.expr(iyl).alias("_iy0"))
-          .withColumn("_dx", F.explode(F.array(F.lit(-1), F.lit(0),
-                                               F.lit(1))))
-          .withColumn("_dy", F.explode(F.array(F.lit(-1), F.lit(0),
-                                               F.lit(1))))
-          .withColumn("_ix", F.col("_ix0") + F.col("_dx"))
-          .withColumn("_iy", F.col("_iy0") + F.col("_dy"))
-          .drop("_ix0", "_iy0", "_dx", "_dy"))
-    r2 = right.select(*[F.col(c).alias(f"r_{c}") for c in right.columns],
-                      F.expr(ixr).alias("_ix"), F.expr(iyr).alias("_iy"))
-    dx = F.col(f"l_{lon_l}") - F.col(f"r_{lon_r}")
-    dy = F.col(f"l_{lat_l}") - F.col(f"r_{lat_r}")
-    # plain multiplication (not POWER) so a SQL oracle reproduces the
-    # float64 sequence exactly
-    return (l2.join(r2, ["_ix", "_iy"])
-            .where(dx * dx + dy * dy <= radius * radius)
-            .drop("_ix", "_iy"))
+    if not radius >= 0:
+        raise ValueError(f"radius must be a number >= 0, got {radius!r}")
+    level = next((lv for lv in range(cells.MAX_LEVEL, 0, -1)
+                  if _ring_reach(lv, 1) >= radius), 0)
+    l2 = left.select(*[F.col(c).alias(f"l_{c}") for c in left.columns])
+    r2 = right.select(*[F.col(c).alias(f"r_{c}") for c in right.columns])
+    ll, rl = (f"l_{lon_l}", f"l_{lat_l}"), (f"r_{lon_r}", f"r_{lat_r}")
+    return (_ring_join(l2, r2, *ll, *rl, level, 1)
+            .where(_d2(*ll, *rl) <= radius * radius))
 
 
 def salt_hot_cells(df: DataFrame, cell_col: str, top_n: int = 8,

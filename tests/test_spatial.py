@@ -145,6 +145,26 @@ def test_explain_spatial_join_inline_is_pure_jvm(spark, points_df):
         assert banned not in plan2, f"Python stage {banned} in chunked join"
 
 
+def test_explain_knn_and_distance_join_are_pure_jvm(spark, points_df):
+    """The kNN ring and the distance join fan out in SQL: no Python
+    operator in either plan, and the exact kNN certifies from one window,
+    with no dropDuplicates or per-point groupBy aggregate."""
+    import pandas as pd
+    dims = spark.createDataFrame(pd.DataFrame({
+        "fid": np.arange(25), "dlon": np.linspace(-170.0, 170.0, 25),
+        "dlat": np.linspace(-80.0, 80.0, 25)}))
+    knn = spatial.knn_join_cells_exact(points_df, dims, 3, "lon", "lat",
+                                       "dlon", "dlat", "fid", "pid",
+                                       level=3, max_ring=1)
+    pairs = spatial.distance_join_cells(points_df, points_df, 2.0)
+    for name, df in (("knn", knn), ("distance", pairs)):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        for banned in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+            assert banned not in plan, f"Python stage {banned} in {name}"
+        if name == "knn":
+            assert "HashAggregate" not in plan
+
+
 def test_distributed_inline_join_matches_broadcast(spark, points_df,
                                                    monkeypatch):
     """Both placements and both refines produce identical pairs: broadcast
@@ -487,6 +507,59 @@ def test_distance_join_cells_empty_and_tiny_radius(spark):
     # only self-pairs at distance 0 survive a tiny radius
     assert sorted((r.l_id, r.r_id) for r in tiny.collect()) == [(0, 0),
                                                                 (1, 1)]
+
+
+def test_null_and_nan_coordinates_join_nothing(spark):
+    """A point or dim with a NULL or NaN coordinate is in no pair, on
+    every kNN route and in both distance joins; the other rows get the
+    brute force over finite distances."""
+    from tests.test_knn_differential import knn_brute, local_df
+    nan = float("nan")
+    pts = [(0, 0.0, 0.0), (1, 3.0, 1.0), (2, None, 5.0), (3, 2.0, nan)]
+    dims = [(0, None, 0.0), (1, 1.0, nan), (2, 2.0, 2.0), (3, 1.0, 0.0),
+            (4, -4.0, 1.0)]
+    p = local_df(spark, pts, ("pid", "lon", "lat"))
+    d = local_df(spark, dims, ("did", "dlon", "dlat"))
+    args = (p, d, 2, "lon", "lat", "dlon", "dlat", "did", "pid")
+    want = knn_brute(pts, dims, 2)
+    assert {r[0] for r in want} == {0, 1}
+    routes = {"broadcast": spatial.knn_join_broadcast(*args),
+              "cells": spatial.knn_join_cells(*args, level=2, max_ring=2),
+              "exact": spatial.knn_join_cells_exact(*args, level=2,
+                                                    max_ring=1)}
+    for name, df in routes.items():
+        rows = df.collect()
+        assert {(r.pid, r.did, r.knn_rank) for r in rows} == want, name
+        assert len(rows) == len(want), name
+    near = spatial.range_join(p, d, 1e9, "lon", "lat", "dlon", "dlat")
+    assert {(r.pid, r.did) for r in near.collect()} == {
+        (i, j) for i in (0, 1) for j in (2, 3, 4)}
+    dj = spatial.distance_join_cells(p, d.toDF("pid", "lon", "lat"), 1e9)
+    assert {(r.l_pid, r.r_pid) for r in dj.collect()} == {
+        (i, j) for i in (0, 1) for j in (2, 3, 4)}
+
+
+def test_radius_is_validated_and_zero_keeps_coincident_pairs(spark):
+    """A negative or NaN radius raises a ValueError naming it (range_join
+    used to return the pairs within |radius|; distance_join_cells raised
+    ZeroDivisionError or a math domain error); radius 0 returns exactly
+    the coincident pairs."""
+    import math
+    p = spark.createDataFrame([(0, 1.0, 2.0), (1, 1.0, 2.0),
+                               (2, 1.0, 2.0 + 1e-12), (3, -3.0, 4.0)],
+                              "id bigint, lon double, lat double")
+    for bad in (-1.0, math.nan):
+        with pytest.raises(ValueError, match="radius"):
+            spatial.range_join(p, p.toDF("j", "dlon", "dlat"), bad,
+                               "lon", "lat", "dlon", "dlat")
+        with pytest.raises(ValueError, match="radius"):
+            spatial.distance_join_cells(p, p, bad)
+    want = {(0, 0), (0, 1), (1, 0), (1, 1), (2, 2), (3, 3)}
+    zero = spatial.range_join(p, p.toDF("j", "dlon", "dlat"), 0.0,
+                              "lon", "lat", "dlon", "dlat")
+    assert {(r.id, r.j) for r in zero.collect()} == want
+    zero = spatial.distance_join_cells(p, p, 0.0)
+    assert {(r.l_id, r.r_id) for r in zero.collect()} == want
 
 
 def test_auto_route_bounds_the_broadcast_cover_bytes(spark, points_df,
